@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.ops.Scope
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and the reference's write-path probe
@@ -16,19 +16,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Env.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
+    // every timed run is its own scope: a repeat never reuses the
+    // previous repeat's intermediates
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime()
-      try body catch { case e: Throwable =>
+      try Scope(body) catch { case e: Throwable =>
         System.err.println(s"[bench] failed: ${e.getMessage}"); return -1.0 }
       (System.nanoTime() - t0) / 1e9
     }
@@ -64,30 +59,16 @@ object Bench {
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))
          if probesOnly.isEmpty || only.nonEmpty) {
-      val runs = Seq.fill(repeats) {
+      // one GC per query, not per repeat (see Env.isolated; a full GC
+      // on this heap costs seconds, and the median already absorbs a
+      // stray GC landing inside one of the repeats)
+      val runs = Env.isolated(Seq.fill(repeats) {
         time {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-      }
+      })
       mins(name) =
         if (runs.forall(_ < 0)) -1.0 else runs.filter(_ >= 0).min
-      // untimed, ONCE per query (not per repeat — a full GC on this
-      // heap costs seconds, and the median already absorbs a stray GC
-      // landing inside one of the repeats): drop any cache/persist
-      // state the query left behind (the sampling ops pin a narrow
-      // layout frame; without eviction those entries accumulate and
-      // block-manager pressure bleeds into later queries — r8 judge
-      // measured 4-8x in-run inflation), then reclaim dead checkpoint/
-      // broadcast/cache garbage NOW. The ContextCleaner is GC-driven;
-      // without this a long run accumulates until a stop-the-world
-      // full GC lands inside a later query's timed section — observed
-      // 5x noise on late queries.
-      graft.ops.Dedup.clearMaterializedSlots() // before the RDD sweep!
-      graft.ops.Sample.releaseLayouts()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
       results(name) =
         if (runs.exists(_ < 0)) -1.0 else runs.sorted.apply(repeats / 2)
     }
@@ -149,39 +130,39 @@ object Bench {
     if (only.isEmpty) {
     val e = Testbed.env(spark, sfDir)
     e.createTables()
-    val batch = e.view("lineitem",
+    val wv = e.view("bench_scratch", Seq("code", "ts", "n", "x"))
+    Scope {
+    val batch = Scope.cache(e.view("lineitem",
       Seq("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")).read()
       .limit(100000)
       .select(
         concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("code"),
         col("l_shipdate").as("ts"),
         col("l_orderkey").cast("int").as("n"),
-        col("l_quantity").cast("double").as("x"))
-      .cache()
+        col("l_quantity").cast("double").as("x")))
     batch.count() // materialize outside the timed sections
-    val wv = e.view("bench_scratch", Seq("code", "ts", "n", "x"))
     // delete-all (untimed) before each rep keeps the insert an insert
     probeSetup("write_100k_insert")(wv.delete())(wv.write(batch))
     // re-updating the same batch is idempotent work: repeatable
     probe("write_100k_update")(wv.write(batch))
-    batch.unpersist()
+    }
 
     // Pruned-merge probe: load the full lineitem keyspace into a
     // 64-bucket table, then upsert 1k keys — the bucketed manifest
     // rewrites only the touched buckets, so the update should cost a
     // small fraction of the load (the 100-TB merge story, measured).
-    val allRows = e.view("lineitem", Seq("l_orderkey", "l_linenumber", "l_quantity"))
-      .read()
+    Scope {
+    val allRows = Scope.cache(e.view("lineitem",
+        Seq("l_orderkey", "l_linenumber", "l_quantity")).read()
       .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("code"),
-        col("l_quantity").cast("double").as("x"))
-      .cache()
+        col("l_quantity").cast("double").as("x")))
     allRows.count()
     val bv = e.view("bench_bucketed", Seq("code", "x"))
     // delete-all per rep so every load is a cold full load
     probeSetup("bucketed_load_full")(bv.delete())(bv.write(allRows))
     // batch confined to 2 of 64 buckets -> only those rewrite
-    val small = allRows
-      .filter(pmod(hash(col("code")), lit(64)) < 2).limit(1000).cache()
+    val small = Scope.cache(allRows
+      .filter(pmod(hash(col("code")), lit(64)) < 2).limit(1000))
     small.count()
     probe("bucketed_update_1k")(bv.write(small))
     // read-side bucket pruning: a 3-key IN-list read should cost a
@@ -190,22 +171,23 @@ object Bench {
       e.view("bench_bucketed", Seq("code", "x"))
         .read(Seq(graft.view.FilterExpr("""(in code "1-1" "2-1" "3-1")""")))
         .write.format("noop").mode("overwrite").save())
-    allRows.unpersist(); small.unpersist()
+    }
 
     // BRIN probe: archive events into the range-clustered zoned table,
     // then (a) merge a narrow recent-key batch — only overlapping
     // zones rewrite — and (b) read a narrow key range — zone dirs
     // prune driver-side. Both should cost a small fraction of the
     // full load / full scan.
-    val ev = e.view("events", Seq("event_id", "ts", "event_type", "value"))
-      .read().cache()
+    Scope {
+    val ev = Scope.cache(e.view("events", Seq("event_id", "ts", "event_type", "value"))
+      .read())
     ev.count()
     val av = e.view("event_archive", Seq("event_id", "ts", "event_type", "value"))
     probeSetup("brin_load_full")(av.delete())(av.write(ev))
-    val recent = ev.orderBy(col("event_id").desc).limit(1000).cache()
+    val recent = Scope.cache(ev.orderBy(col("event_id").desc).limit(1000))
     recent.count()
     probe("brin_update_recent_1k")(av.write(recent))
-    ev.unpersist(); recent.unpersist()
+    }
     val rv = e.view("event_archive", Seq("event_id", "event_type", "value"))
     probe("brin_scan_full")(
       rv.read().write.format("noop").mode("overwrite").save())
@@ -224,14 +206,15 @@ object Bench {
       Seq("l_orderkey", "l_linenumber", "l_quantity")).read()
       .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("c0"),
         col("l_quantity").cast("double").as("x"))
-    val li10 = (0 until 10).map(k =>
+    Scope {
+    val li10 = Scope.cache((0 until 10).map(k =>
         li1.select(concat_ws("-", lit(k), col("c0")).as("code"), col("x")))
-      .reduce(_ unionByName _).cache()
+      .reduce(_ unionByName _))
     li10.count()
     val sv = e.view("bench_sf1", Seq("code", "x"))
     // delete-all per rep keeps every round-trip a cold full write
     probeSetup("sf1_write_roundtrip")(sv.delete())(sv.write(li10))
-    li10.unpersist()
+    }
     // whole-warehouse backup at this point covers bench_scratch +
     // bench_bucketed + event_archive + the 10x bench_sf1 table — the
     // executor-parallel (distcp-shape) copy path, measured; healthy =
@@ -248,17 +231,18 @@ object Bench {
     // snapshot on the source; the timed refresh must copy THAT delta
     // only — healthy = a small fraction of sf1_backup, tracking the
     // delta, not the warehouse
-    val inc1k = e.view("lineitem",
+    Scope {
+    val inc1k = Scope.cache(e.view("lineitem",
       Seq("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")).read()
       .limit(1000)
       .select(concat_ws("-", col("l_orderkey"), col("l_linenumber")).as("code"),
         col("l_shipdate").as("ts"),
         col("l_orderkey").cast("int").as("n"),
-        col("l_quantity").cast("double").as("x")).cache()
+        col("l_quantity").cast("double").as("x")))
     inc1k.count()
     probeSetup("sf1_backup_incremental")(wv.write(inc1k))(
       e.warehouse.backup(bkDir, incremental = true))
-    inc1k.unpersist()
+    }
     try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(bkDir))
     catch { case _: Exception => }
     // integrity audit over the same (sf1-bearing) warehouse: fsck is
@@ -275,28 +259,16 @@ object Bench {
           // (measured: 103s vs the ~4s a linear scale-up costs)
           translate(col("text"), abc, abc.drop(k) + abc.take(k)).as("text")))
       .reduce(_ unionByName _)
-    // cold baseline at 1x: the median-of-3 dedup_minhash_pairs entry
-    // reuses the miner's slot cache on repeats 2-3, which would
-    // overstate the sf1 ratio ~3x — so every rep clears the slots
-    // INSIDE the timed body (the clear is microseconds) and measures
-    // a true cold run, now repeatable for the drift sentinel
-    probe("dedup_minhash_pairs_cold") {
-      graft.ops.Dedup.clearMaterializedSlots()
-      graft.ops.Dedup.minhashPairs(docs1, "doc_id", "text", threshold = 0.2)
-        .write.format("noop").mode("overwrite").save()
-    }
     probe("sf1_dedup_minhash_pairs") {
-      graft.ops.Dedup.clearMaterializedSlots()
       graft.ops.Dedup.minhashPairs(docs10, "doc_id", "text", threshold = 0.2)
         .write.format("noop").mode("overwrite").save()
     }
-    graft.ops.Dedup.clearMaterializedSlots()
 
     // Incremental-ingest probe: index the 10x corpus ONCE, then gate
     // a 1x batch against it — the batch-proportional claim behind
     // curateDocuments' cross_dedup stage, measured at scale. Healthy =
-    // the probe tracks the 1x cold miner, NOT sf1_dedup_minhash_pairs
-    // (probing a 10x corpus must not cost 10x).
+    // the probe tracks the 1x miner (dedup_minhash_pairs), NOT
+    // sf1_dedup_minhash_pairs (probing a 10x corpus must not cost 10x).
     val incIdx = java.nio.file.Files
       .createTempDirectory("bench-mhidx-").toString
     probeSetup("sf1_curate_index_build") {
@@ -305,13 +277,11 @@ object Bench {
       catch { case _: Exception => }
     }(graft.ops.Dedup.buildMinhashIndex(docs10, "doc_id", "text", incIdx))
     probe("sf1_dedup_incremental_batch") {
-      graft.ops.Dedup.clearMaterializedSlots()
       graft.ops.Dedup.dedupAgainstIndex(
         docs1.select((col("doc_id") + 99000000L).as("doc_id"), col("text")),
         "doc_id", "text", incIdx, threshold = 0.8)
         .write.format("noop").mode("overwrite").save()
     }
-    graft.ops.Dedup.clearMaterializedSlots()
 
     // WARC crawl-archive source at 10x: export once per rep (untimed
     // dir wipe, timed gzip-member write), then the streaming read +
@@ -363,18 +333,15 @@ object Bench {
     val mdHash = (t: org.apache.spark.sql.Column) =>
       graft.functions.TextKernels.md5Prefix60(t)
     probe("dedup_simhash_cold") {
-      graft.ops.Dedup.clearMaterializedSlots()
       graft.ops.Dedup.simhashPairs(docs1, "doc_id", "text", maxHamming = 3,
         numBits = 60, tokenHash = mdHash)
         .write.format("noop").mode("overwrite").save()
     }
     probe("sf1_dedup_simhash") {
-      graft.ops.Dedup.clearMaterializedSlots()
       graft.ops.Dedup.simhashPairs(shifted(docs1), "doc_id", "text",
         maxHamming = 3, numBits = 60, tokenHash = mdHash)
         .write.format("noop").mode("overwrite").save()
     }
-    graft.ops.Dedup.clearMaterializedSlots()
     val prof1 = e.view("documents",
       Seq("doc_id", "lang", "source", "n_chars", "text")).read()
     val prof10 = (0 until 10).map(k =>
@@ -400,7 +367,6 @@ object Bench {
       graft.ops.Sample.topFractionPerStratum(skewed, Seq("src"),
         "n_chars", "doc_id", 0.25)
         .write.format("noop").mode("overwrite").save()
-      graft.ops.Sample.releaseLayouts()
     }
 
     // sf1 probes for the round-10 vector ops. The 10x embedding corpus
@@ -420,12 +386,10 @@ object Bench {
           rolled.as("embedding"), col("label"))
       }.reduce(_ unionByName _)
     probe("sf1_dedup_semantic") {
-      graft.ops.Dedup.clearMaterializedSlots()
       graft.ops.Similarity.semanticDedup(emb10, "embedding", "vec_id",
         "label", threshold = 0.95)
         .write.format("noop").mode("overwrite").save()
     }
-    graft.ops.Dedup.clearMaterializedSlots()
     val q10 = emb1.filter(col("vec_id") === 0).head().getSeq[Float](1)
     val pqDir = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft-bench-sf1pq-${ProcessHandle.current().pid()}").getAbsolutePath
@@ -442,9 +406,6 @@ object Bench {
     }
     try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(pqDir))
     catch { case _: Exception => }
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
     }
 
     // ---- output. The driver's capture records only the LAST ~2000

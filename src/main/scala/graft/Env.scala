@@ -202,6 +202,15 @@ object Env {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
 
+  /** One harness query (Bench, Verify, Plans, Profile): `body` runs
+    * in its own [[graft.ops.Scope]], so whatever it materialized is
+    * released on return or throw. Then a GC lets the ContextCleaner,
+    * which is GC-driven, reclaim the query's dead shuffle and broadcast
+    * state now, before a stop-the-world collection can land inside a
+    * later query's timed section. */
+  def isolated[T](body: => T): T =
+    try graft.ops.Scope(body) finally System.gc()
+
   def apply(spark: SparkSession, registry: Registry, root: String): Env =
     new Env(spark, registry, new Warehouse(spark, root, registry))
 

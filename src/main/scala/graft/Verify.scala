@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,14 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Env.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // dev convenience, same contract as Bench: a comma-separated
@@ -24,34 +16,14 @@ object Verify {
       .map(_.split(",").map(_.trim).toSet)
     SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1)))
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Env.isolated(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // evict whatever the query pinned (sampling layout frames, miner
-      // checkpoints) so 80+ dumps don't accumulate block-manager state;
-      // slots MUST drop first or the sweep strands their checkpoints
-      graft.ops.Dedup.clearMaterializedSlots()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.view.Json.write(SparkEntry.oracleSql))
     spark.stop()
   }
 }

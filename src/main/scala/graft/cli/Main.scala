@@ -203,7 +203,9 @@ object Main {
       case None => // auto mode: introspect the warehouse
         Env(spark, Warehouse.introspect(spark, whRoot), whRoot)
     }
-    dispatch(o, env, out)
+    // one scope per command: its materialized intermediates are
+    // released once the command's output is written
+    graft.ops.Scope(dispatch(o, env, out))
   }
 
   def dispatch(o: Opts, env: Env, out: Writer): Unit = o.action match {
@@ -411,7 +413,6 @@ object Main {
           .sortWithinPartitions(org.apache.spark.sql.functions.col("shard"),
             org.apache.spark.sql.functions.col("pos"))
           .write.mode("overwrite").partitionBy("shard").parquet(dir)
-        graft.ops.Sample.releaseLayouts()
         out.write(s"wrote ${o.shards} curriculum shard(s) of ${o.table} " +
           s"by ${o.score} to $dir\n")
       } else {
@@ -437,7 +438,6 @@ object Main {
       packed.repartition(sc)
         .sortWithinPartitions(sc, org.apache.spark.sql.functions.col(idc))
         .write.mode("overwrite").partitionBy("shard").parquet(dir)
-      graft.ops.Sample.releaseLayouts()
       out.write(s"packed ${o.table} by ${o.weight} into $dir\n")
 
     // extension: consistent whole-warehouse backup — the single-file

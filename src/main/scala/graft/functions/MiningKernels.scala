@@ -27,8 +27,8 @@ import org.apache.spark.sql.types._
   * `sum`/`min` skip null rows) — pinned by OpsSpec golden tests.
   *
   * All coefficient/centroid constants are carried as structural
-  * `IndexedSeq` case-class fields (plan canonicalization and the
-  * one-slot plan caches compare them by VALUE), flattened to primitive
+  * `IndexedSeq` case-class fields (plan canonicalization compares
+  * them by VALUE), flattened to primitive
   * arrays once per plan via transient lazy vals and shipped to
   * generated code as codegen reference objects.
   */

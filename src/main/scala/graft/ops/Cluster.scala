@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Algorithm: iterative min-label propagation with a pointer-jumping
   * shortcut each round (label(u) ← min over neighbours of label, then
   * label(u) ← label(label(u))), lineage truncated per round with
-  * `localCheckpoint`. Pointer jumping halves the distance to each
+  * [[Scope.checkpoint]]. Pointer jumping halves the distance to each
   * component's minimum every round, so convergence is O(log diameter)
   * rounds — and near-dup graphs from banded mining are unions of
   * bucket cliques and star fans whose diameter is tiny, so in practice
@@ -28,40 +28,39 @@ object Cluster {
     * emitted — join the result back to the corpus with a left join and
     * `coalesce(component, id)` for a total assignment. */
   def components(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col("idA").as("a"), col("idB").as("b"))
-      .unionByName(pairs.select(col("idB").as("a"), col("idA").as("b")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var labels = edges.select(col("a").as("id")).distinct()
-        .withColumn("comp", col("id"))
-        .localCheckpoint()
-      var it = 0
-      var done = false
-      while (!done && it < maxIter) {
-        // min over neighbours' labels (plus own): one shuffle on id
-        val viaNbr = edges
-          .join(labels.withColumnRenamed("id", "b"), Seq("b"))
-          .select(col("a").as("id"), col("comp"))
-        val propagated = labels.unionByName(viaNbr)
-          .groupBy("id").agg(min(col("comp")).as("comp"))
-        // pointer jumping: comp is itself a vertex with a label — hop
-        // to ITS label, halving chain lengths (comp only decreases, so
-        // the left join always hits and coalesce is pure defensiveness)
-        val next = propagated
-          .join(propagated.select(col("id").as("comp"), col("comp").as("__cc")),
-            Seq("comp"), "left")
-          .select(col("id"), coalesce(col("__cc"), col("comp")).as("comp"))
-          .localCheckpoint()
-        done = next.join(labels.withColumnRenamed("comp", "__old"), Seq("id"))
-          .filter(col("comp") =!= col("__old"))
-          .isEmpty
-        labels = next
-        it += 1
-      }
-      require(done, s"components did not converge in $maxIter rounds")
-      labels.select(col("id"), col("comp").as("component"))
-    } finally edges.unpersist(false): Unit
+    // checkpointed, not cached: the returned labels are built on the
+    // round checkpoints, so every intermediate here lives in the
+    // caller's scope (an own scope would release the result with it)
+    val edges = Scope.checkpoint(
+      pairs.select(col("idA").as("a"), col("idB").as("b"))
+        .unionByName(pairs.select(col("idB").as("a"), col("idA").as("b")))
+        .distinct())
+    var labels = Scope.checkpoint(edges.select(col("a").as("id")).distinct()
+      .withColumn("comp", col("id")))
+    var it = 0
+    var done = false
+    while (!done && it < maxIter) {
+      // min over neighbours' labels (plus own): one shuffle on id
+      val viaNbr = edges
+        .join(labels.withColumnRenamed("id", "b"), Seq("b"))
+        .select(col("a").as("id"), col("comp"))
+      val propagated = labels.unionByName(viaNbr)
+        .groupBy("id").agg(min(col("comp")).as("comp"))
+      // pointer jumping: comp is itself a vertex with a label — hop
+      // to ITS label, halving chain lengths (comp only decreases, so
+      // the left join always hits and coalesce is pure defensiveness)
+      val next = Scope.checkpoint(propagated
+        .join(propagated.select(col("id").as("comp"), col("comp").as("__cc")),
+          Seq("comp"), "left")
+        .select(col("id"), coalesce(col("__cc"), col("comp")).as("comp")))
+      done = next.join(labels.withColumnRenamed("comp", "__old"), Seq("id"))
+        .filter(col("comp") =!= col("__old"))
+        .isEmpty
+      labels = next
+      it += 1
+    }
+    require(done, s"components did not converge in $maxIter rounds")
+    labels.select(col("id"), col("comp").as("component"))
   }
 
   /** Cluster-aware dedup: keep one representative (the smallest id)

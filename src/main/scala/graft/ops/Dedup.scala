@@ -8,129 +8,14 @@ import org.apache.spark.sql.functions._
   * content-hash, MinHash+LSH, SimHash — all bucketed (candidate pairs
   * come from hash-bucket joins, never an all-pairs product), so each
   * stage is one shuffle keyed on something that stays small at 100 TB.
+  *
+  * Expensive mining intermediates are materialized with
+  * [[Scope.checkpoint]]. The pair and survivor frames these ops return
+  * are built on them, so they stay valid until the caller's scope
+  * closes; outside any scope the ContextCleaner reclaims them once the
+  * frames are unreachable.
   */
 object Dedup {
-
-  /** One-slot materialization registry for expensive mining
-    * intermediates. Returns an EAGER `localCheckpoint` of `df` —
-    * computed now, lineage SEVERED — reusing the slot's existing
-    * checkpoint when the incoming plan is `sameResult` with the one
-    * that produced it (so a session mining the same corpus twice pays
-    * once).
-    *
-    * Why checkpoint instead of `persist`: these frames fan out into
-    * many downstream branches (posting/taint/fallback joins), and a
-    * cached-but-unmaterialized plan segment gets recomputed by every
-    * concurrently-scheduled consumer stage; worse, each consumer
-    * carries the full nested lineage (the 128-aggregate signature
-    * subplan, several joins deep), which AQE re-optimizes and the SQL
-    * CacheManager re-canonicalizes per stage per lookup — measured
-    * 15+ seconds of pure DRIVER time on the minhash miner at sf0.1.
-    * After the checkpoint, downstream plans see one leaf.
-    *
-    * Replaced checkpoints are reclaimed by the ContextCleaner once
-    * unreferenced (RDD persists are weakly tracked, unlike SQL cache
-    * entries). At cluster scale a long pipeline would land these in a
-    * real intermediate table instead; the reuse window here is one
-    * driver session.
-    *
-    * INVARIANT: slot plans must read IMMUTABLE paths. Reuse keys on
-    * plan `sameResult`, and a materialized slot can never refresh — if
-    * the files under a canonically-equal plan mutated, the slot would
-    * serve stale data. Current call sites honor this: snapshot paths
-    * change on every write, and index probes construct a fresh
-    * FileIndex (distinct plan) per `spark.read`.
-    *
-    * CLUSTER MODE — `spark.graft.scratchDir`: when set, slots
-    * materialize as parquet under that directory (write + read-back)
-    * instead of `localCheckpoint`. A localCheckpoint lives in
-    * executor-local block storage with NO lineage to recompute from —
-    * one lost executor kills the whole mining job; the scratch table
-    * survives executor loss, spills to durable storage, and is exactly
-    * the "land intermediates in a real table" shape a 100-TB pipeline
-    * wants. Scratch dirs are reclaimed by [[clearMaterializedSlots]]. */
-  private[ops] def cacheSwap(
-      slot: java.util.concurrent.atomic.AtomicReference[
-        (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)],
-      df: DataFrame): DataFrame = {
-    val plan = df.queryExecution.analyzed
-    val prev = slot.get()
-    if ((prev ne null) && prev._1.sameResult(plan)) prev._2
-    else {
-      val spark = df.sparkSession
-      val cp = spark.conf.getOption("spark.graft.scratchDir") match {
-        case Some(dir) =>
-          val path = dir.stripSuffix("/") +
-            s"/slot-${java.util.UUID.randomUUID().toString.take(12)}"
-          df.write.mode("overwrite").parquet(path)
-          scratchPaths.synchronized { scratchPaths += path }
-          // explicit schema: a zero-row intermediate writes no part
-          // files, and downstream still needs the columns
-          spark.read.schema(df.schema).parquet(path)
-        case None => df.localCheckpoint()
-      }
-      // CAS so concurrent callers can't interleave get-then-set; if
-      // another thread won the race, its entry stays (both
-      // materializations are valid — ours is still returned for this
-      // caller's use)
-      slot.compareAndSet(prev, (plan, cp))
-      cp
-    }
-  }
-
-  /** Scratch dirs written by [[cacheSwap]] in scratchDir mode, pending
-    * reclamation. */
-  private val scratchPaths = scala.collection.mutable.ArrayBuffer[String]()
-  private[ops] type Slot = java.util.concurrent.atomic.AtomicReference[
-    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
-  private val allSlots = scala.collection.mutable.ArrayBuffer[Slot]()
-  private[ops] def newSlot(): Slot = {
-    val s = new java.util.concurrent.atomic.AtomicReference[
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)](null)
-    allSlots.synchronized { allSlots += s }
-    s
-  }
-  /** Drop every materialized mining intermediate (all [[cacheSwap]]
-    * slots, across ops). The checkpoint blocks themselves are then
-    * reclaimable — by the GC-driven ContextCleaner, or eagerly by a
-    * caller sweeping `sparkContext.getPersistentRDDs`. Harness hygiene
-    * for multi-query drivers (Verify/Bench): NEVER sweep persistent
-    * RDDs without calling this first — a slot still referencing a
-    * swept checkpoint serves a frame whose blocks are gone
-    * (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND), because a localCheckpoint
-    * has no lineage to recompute from. */
-  def clearMaterializedSlots(): Unit = {
-    allSlots.synchronized { allSlots.foreach(_.set(null)) }
-    // reclaim scratch-mode spill dirs (same safe-point contract as the
-    // checkpoint sweep: no un-materialized frame may still reference
-    // them). Needs an active session for the Hadoop conf; without one
-    // the dirs stay until the next call from a live session.
-    val session = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-    scratchPaths.synchronized {
-      session.foreach { s =>
-        val conf = s.sparkContext.hadoopConfiguration
-        scratchPaths.foreach { p =>
-          try {
-            val hp = new org.apache.hadoop.fs.Path(p)
-            hp.getFileSystem(conf).delete(hp, true): Unit
-          } catch { case _: Exception => () }
-        }
-        scratchPaths.clear()
-      }
-    }
-  }
-  private val minhashPairsSlot = newSlot()
-  private val simhashSlot = newSlot()
-  private val crossDedupSlot = newSlot()
-  private val jaccardPairsSlot = newSlot()
-  private val jaccardDocsSlot = newSlot()
-  private val minhashDocsSlot = newSlot()
-  private val minhashVerifySlot = newSlot()
-  private val crossVerifySlot = newSlot()
-  private val crossCandsSlot = newSlot()
-  private val verifyLeftSlot = newSlot()
-  private val verifyRightSlot = newSlot()
 
   /** Exact dedup on a set of columns: keeps the row with the smallest
     * `idCol` per group. One hash-partition shuffle. */
@@ -390,7 +275,7 @@ object Dedup {
     * intersection pairs are dropped, not scored). */
   private def verifyPairsByCount(pairs: DataFrame, left: DataFrame,
       right: DataFrame, threshold: Double, maxDf: Int,
-      ordered: Boolean, slot: Slot): DataFrame = {
+      ordered: Boolean): DataFrame = {
     // Adaptive: for a SMALL checkpointed candidate set the direct
     // array verify is one broadcast join + a per-pair intersect —
     // cheaper than the ~10-stage counting pipeline whose fixed AQE
@@ -408,8 +293,8 @@ object Dedup {
     // big-candidate path only: materialize the hash-set frames, which
     // fan out into the posting, taint and fallback branches below
     // (the array path above reads each exactly once)
-    val leftCp = cacheSwap(verifyLeftSlot, left)
-    val rightCp = cacheSwap(verifyRightSlot, right)
+    val leftCp = Scope.checkpoint(left)
+    val rightCp = Scope.checkpoint(right)
     val pa = leftCp.select(col("idA"), explode(col("__ha")).as("__h"),
       size(col("__ha")).as("__szA"))
     val pb = rightCp.select(col("idB"), explode(col("__hb")).as("__h"),
@@ -432,7 +317,7 @@ object Dedup {
       .select(col("idB")).distinct().withColumn("__tB", lit(true))
     // cached: the clean and dirty branches below both filter this
     // frame — without the cache the counting join runs once per branch
-    val marked = cacheSwap(slot, pairs.join(cnt, Seq("idA", "idB"), "left")
+    val marked = Scope.checkpoint(pairs.join(cnt, Seq("idA", "idB"), "left")
       .join(taintA, Seq("idA"), "left").join(taintB, Seq("idB"), "left"))
     val bothTainted = col("__tA").isNotNull && col("__tB").isNotNull
     val clean = marked.filter(!bothTainted).filter(col("__i").isNotNull)
@@ -466,10 +351,10 @@ object Dedup {
       shingleSize: Int = 3, maxBucket: Int = 1000): DataFrame = {
     val banded = bandedSignatures(df, idCol, textCol, numHashes, numBands,
       shingleSize)
-    // persisted: referenced by the verify join AND by the candidate-id
-    // semi-join below — without the cache each reference re-executes
+    // checkpointed: referenced by the verify join AND by the candidate-id
+    // semi-join below — without it each reference re-executes
     // the whole mining subplan (Spark plans share no common subtrees)
-    val pairs = cacheSwap(minhashPairsSlot,
+    val pairs = Scope.checkpoint(
       bucketPairs(banded, Seq("__band", "__bsig"), maxBucket))
     // verify with true jaccard over per-doc precomputed hash sets,
     // hashed only for docs that appear in a candidate pair (semi-join
@@ -479,14 +364,14 @@ object Dedup {
       .unionByName(pairs.select(col("idB").as(idCol))).distinct()
     // cached: the count verify references the candidate hash sets from
     // its posting, taint and array-fallback branches
-    val docsH = cacheSwap(minhashDocsSlot,
+    val docsH = Scope.checkpoint(
       df.join(candIds, Seq(idCol), "left_semi")
         .select(col(idCol).as("__vid"),
           shingleHashes(col(textCol), shingleSize).as("__hs")))
     verifyPairsByCount(pairs,
       docsH.select(col("__vid").as("idA"), col("__hs").as("__ha")),
       docsH.select(col("__vid").as("idB"), col("__hs").as("__hb")),
-      threshold, maxDf = maxBucket, ordered = true, minhashVerifySlot)
+      threshold, maxDf = maxBucket, ordered = true)
   }
 
   /** Near-dedup: drop every document that is the larger id of a
@@ -540,7 +425,7 @@ object Dedup {
       threshold: Double = 0.8, shingleSize: Int = 3,
       maxDf: Int = 1000): DataFrame = {
     // cached: referenced by the posting/df chain and the array verify
-    val docsH = cacheSwap(jaccardDocsSlot,
+    val docsH = Scope.checkpoint(
       Par.spread(df).select(col(idCol).as("__id"),
         shingleHashes(col(textCol), shingleSize).as("__hs")))
     val posting = docsH.select(col("__id"), explode(col("__hs")).as("__h"),
@@ -581,7 +466,7 @@ object Dedup {
       .filter(col("__id") =!= col("__minId"))
       .select(col("__minId").as("idA"), col("__id").as("idB")).distinct()
     // cached: clean + dirty branches both filter this frame
-    val marked = cacheSwap(jaccardPairsSlot, cnt
+    val marked = Scope.checkpoint(cnt
       .join(tainted.withColumnRenamed("__id", "idA")
         .withColumnRenamed("__t", "__tA"), Seq("idA"), "left")
       .join(tainted.withColumnRenamed("__id", "idB")
@@ -630,10 +515,9 @@ object Dedup {
     // store (written verbatim) and the banded signatures (derived by
     // exploding them) — without the persist the corpus is parsed and
     // hashed twice, the single most expensive map stage of the build.
-    val docsH = Par.spread(df).select(col(idCol).as("__id"),
-        shingleHashes(col(textCol), shingleSize).as("__hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
+        shingleHashes(col(textCol), shingleSize).as("__hs")))
       docsH.write.mode("overwrite")
         .parquet(new org.apache.hadoop.fs.Path(path, "docs").toString)
       val banded = bandedFromHashSets(docsH, numHashes, numBands)
@@ -645,7 +529,7 @@ object Dedup {
         Map("kind" -> "minhash", "numHashes" -> numHashes,
           "numBands" -> numBands, "shingleSize" -> shingleSize,
           "buckets" -> buckets))
-    } finally docsH.unpersist(false): Unit
+    }
   }
 
   /** Incrementally add documents to a [[buildMinhashIndex]] corpus
@@ -664,10 +548,9 @@ object Dedup {
     val (numHashes, numBands, shingleSize, buckets) =
       (meta("numHashes").toString.toInt, meta("numBands").toString.toInt,
         meta("shingleSize").toString.toInt, meta("buckets").toString.toInt)
-    val docsH = Par.spread(df).select(col(idCol).as("__id"),
-        shingleHashes(col(textCol), shingleSize).as("__hs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
+        shingleHashes(col(textCol), shingleSize).as("__hs")))
       docsH.write.mode("append")
         .parquet(new org.apache.hadoop.fs.Path(path, "docs").toString)
       bandedFromHashSets(docsH, numHashes, numBands)
@@ -675,7 +558,7 @@ object Dedup {
         .repartition(col("__bp"))
         .write.mode("append").partitionBy("__bp")
         .parquet(new org.apache.hadoop.fs.Path(path, "bands").toString)
-    } finally docsH.unpersist(false): Unit
+    }
   }
 
   /** The banded-signature frame `(__id, __band, __bsig)` shared by
@@ -739,7 +622,7 @@ object Dedup {
     val (numHashes, numBands, shingleSize, buckets) =
       (meta("numHashes").toString.toInt, meta("numBands").toString.toInt,
         meta("shingleSize").toString.toInt, meta("buckets").toString.toInt)
-    val newBanded = cacheSwap(crossDedupSlot,
+    val newBanded = Scope.checkpoint(
       bandedSignatures(newDf, idCol, textCol, numHashes, numBands, shingleSize)
         .withColumn("__bp", pmod(col("__bsig"), lit(buckets.toLong))))
     // driver-side bucket pruning: ≤`buckets` longs
@@ -756,7 +639,7 @@ object Dedup {
     // both hash-set semi-joins (and counted for the adaptive verify) —
     // materialize it; the hash-set frames are left lazy, the verify
     // materializes them itself only on the big-candidate path
-    val cands = cacheSwap(crossCandsSlot, newBanded
+    val cands = Scope.checkpoint(newBanded
       .join(idx.select(col("__id").as("__cid"), col("__band"), col("__bsig")),
         Seq("__band", "__bsig"))
       .select(col("__id"), col("__cid")).distinct())
@@ -773,8 +656,7 @@ object Dedup {
     // spaces, so ordered = false (equal values are distinct docs)
     val doomed = verifyPairsByCount(
       cands.select(col("__id").as("idA"), col("__cid").as("idB")),
-      newH, corpusH, threshold, maxDf = 1000, ordered = false,
-      crossVerifySlot)
+      newH, corpusH, threshold, maxDf = 1000, ordered = false)
       .select(col("idA").as(idCol)).distinct()
     newDf.join(doomed, Seq(idCol), "left_anti")
   }
@@ -830,9 +712,9 @@ object Dedup {
     val hashed = Par.spread(df).select(col(idCol).as("__id"),
       transform(split(lower(trim(col(textCol))), "\\s+"),
         t => tokenHash(t)).as("__th"))
-    // persisted (one-slot swap): the banded self-join below references
+    // checkpointed: the banded self-join below references
     // this frame on both sides; the cache is 16 bytes/doc
-    val sh = cacheSwap(simhashSlot, hashed.select(col("__id"),
+    val sh = Scope.checkpoint(hashed.select(col("__id"),
       graft.functions.MiningKernels.simhashBits(col("__th"), numBits)
         .as("__sh")))
     val banded = sh.select(col("__id"),

@@ -25,7 +25,10 @@ import org.apache.spark.sql.functions.col
   *    is deleted once the next lands (`keepSpills = true` retains all
   *    of them for stage-by-stage debugging / restart);
   *  - the returned frame is a lazy read of the LAST spill, ready for
-  *    [[Sample.writeShards]] or [[graft.sources.Corpus.exportJsonl]].
+  *    [[Sample.writeShards]] or [[graft.sources.Corpus.exportJsonl]];
+  *  - each stage runs in its own [[Scope]], so everything the stage's
+  *    ops materialized is released once its spill is written (or the
+  *    stage throws).
   *
   * At 100 TB the spill is the safety trade: one extra sequential
   * write+read per stage (columnar, so narrow projections stay cheap)
@@ -64,7 +67,7 @@ object Pipeline {
     stages.zipWithIndex.foreach { case (st, i) =>
       val t0 = System.nanoTime()
       val dir = new Path(scratch, f"stage-${base + i}%02d-${st.name}")
-      st.f(cur).write.mode("overwrite").parquet(dir.toString)
+      Scope(st.f(cur).write.mode("overwrite").parquet(dir.toString))
       val spilled = spark.read.parquet(dir.toString)
       // footer-count over the spill just written: cheap, and it IS the
       // audit number (count of the materialized survivors, not of a

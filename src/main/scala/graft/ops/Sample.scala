@@ -10,31 +10,13 @@ import org.apache.spark.sql.types.LongType
   * partitioning-dependent output) — rerunning a sample over the same
   * corpus on any cluster size selects the same rows, which is what
   * makes ablations and held-out splits auditable.
+  *
+  * The rank-based ops materialize one narrow layout frame each with
+  * [[Scope.checkpoint]]; the frames they return read it, so it lives
+  * until the caller's scope closes (outside any scope, until the
+  * ContextCleaner reclaims it).
   */
 object Sample {
-
-  /** Layout frames pinned by [[packByBudget]] / [[mixture]]: their
-    * `spark_partition_id()` stamps must come from the one materialized
-    * copy the driver computed offsets against, so they stay persisted
-    * until the caller is done. Call [[releaseLayouts]] AFTER
-    * materializing the returned frames — each layout is narrow (~16
-    * bytes/row) but a long-lived driver running many packs would
-    * otherwise accumulate cache entries without bound. (The bench
-    * harness's per-query `spark.catalog.clearCache()` is the blunt
-    * equivalent.) */
-  private val pinnedLayouts = new scala.collection.mutable.ArrayBuffer[DataFrame]()
-
-  private def pin(df: DataFrame): Unit =
-    pinnedLayouts.synchronized { pinnedLayouts += df }
-
-  /** Unpersist every pinned layout frame. Only call once frames
-    * returned by [[packByBudget]] / [[mixture]] have been materialized
-    * (written, collected, or checkpointed): a recompute after release
-    * could sample different range boundaries. */
-  def releaseLayouts(): Unit = pinnedLayouts.synchronized {
-    pinnedLayouts.foreach(_.unpersist(false))
-    pinnedLayouts.clear()
-  }
 
   /** 32-bit Knuth multiplicative hash of a non-negative id, as a
     * Column: `((id mod 2³¹) * 2654435761) mod 2³²`. Folded to 2³¹
@@ -205,10 +187,8 @@ object Sample {
     *
     * `kOf` maps the per-stratum row count to its keep-count; a stratum
     * whose keep-count is ≤ 0 has no boundary row and drops entirely
-    * (the inner join). The layout persists (partition stamps must be
-    * stable across the two jobs — see [[packByBudget]]) and is pinned;
-    * callers running many selections call [[releaseLayouts]] after
-    * materializing results. */
+    * (the inner join). The layout is checkpointed (partition stamps
+    * must be stable across the two jobs — see [[packByBudget]]). */
   private def keepUpToStratumBoundary(df: DataFrame, strataCols: Seq[String],
       keyCols: Seq[org.apache.spark.sql.Column],
       kOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame = {
@@ -248,11 +228,9 @@ object Sample {
     // keys against the layout-derived boundary struct
     def key = struct(keyCols.zipWithIndex.map { case (c, i) =>
       c.as(s"k$i") }: _*)
-    val layout = df.select(sCols :+ key.as("__key"): _*)
+    val layout = Scope.checkpoint(df.select(sCols :+ key.as("__key"): _*)
       .repartitionByRange(sCols :+ col("__key"): _*)
-      .withColumn("__p", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(layout)
+      .withColumn("__p", spark_partition_id()))
     val nS = strataCols.length
     val stats = layout.groupBy(col("__p") +: sCols: _*)
       .agg(count(lit(1)).as("__c")).collect()
@@ -402,23 +380,22 @@ object Sample {
     * plans as a SINGLE-partition WindowExec — the whole corpus through
     * one task. Instead: a NARROW layout frame of just (id, weight) is
     * range-repartitioned on id, stamped with `spark_partition_id()`
-    * and persisted (the only materialization — ~16 bytes/row, the
+    * and checkpointed (the only materialization — ~16 bytes/row, the
     * payload never persists); one long per partition reaches the
-    * driver for a prefix sum; the payload then hash-joins the pinned
-    * layout on id, broadcast-joins the per-partition offsets, and a
-    * PARTITION-LOCAL running-sum window (grouped by the stamped
-    * partition id, so no group ever exceeds one layout partition)
-    * yields the global cumulative. Fully columnar and LAZY on the
-    * payload side — every stage codegen'd Tungsten, no checkpoint, no
-    * payload persist; driver traffic stays one long per partition.
+    * driver for a prefix sum; the payload then hash-joins the
+    * checkpointed layout on id, broadcast-joins the per-partition
+    * offsets, and a PARTITION-LOCAL running-sum window (grouped by
+    * the stamped partition id, so no group ever exceeds one layout
+    * partition) yields the global cumulative. Fully columnar and LAZY on the
+    * payload side — every stage codegen'd Tungsten, no payload
+    * materialization; driver traffic stays one long per partition.
     *
-    * The layout frame stays persisted: the returned frame's partition
-    * stamps must come from that materialized copy (a recompute could
-    * sample different range boundaries). It is narrow by construction;
-    * callers running many packs call [[releaseLayouts]] after
-    * materializing results. Duplicate ids are rejected (checked inside
-    * the subtotal job): they would fan out the payload join and
-    * silently mis-assign shards. */
+    * The returned frame's partition stamps come from that one
+    * materialized copy (a recompute could sample different range
+    * boundaries), so it reads the layout [[Scope.checkpoint]], which
+    * lives until the caller's scope closes. Duplicate ids are
+    * rejected (checked inside the subtotal job): they would fan out
+    * the payload join and silently mis-assign shards. */
   /** CURRICULUM sharding: rank every row by (`scoreCol` asc, `idCol`
     * tie-break — pass a negated score for hardest-first) and assign
     * `shard = rank % nShards`, `position = rank / nShards`. A
@@ -439,11 +416,9 @@ object Sample {
     require(nShards > 0, s"nShards must be positive, got $nShards")
     val spark = df.sparkSession
     val key = struct(col(scoreCol).as("k0"), col(idCol).as("k1"))
-    val layout = df.select(col(idCol), key.as("__key"))
+    val layout = Scope.checkpoint(df.select(col(idCol), key.as("__key"))
       .repartitionByRange(col("__key"))
-      .withColumn("__p", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(layout)
+      .withColumn("__p", spark_partition_id()))
     val stats = layout.groupBy("__p").agg(count(lit(1)).as("__n")).collect()
     val perPart = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
     // the layout range-partitions by (score, id), so duplicate ids with
@@ -480,13 +455,11 @@ object Sample {
       budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
     val spark = df.sparkSession
-    val layout = df
+    val layout = Scope.checkpoint(df
       .select(col(idCol),
         coalesce(col(weightCol).cast("long"), lit(0L)).as("__w"))
       .repartitionByRange(col(idCol))
-      .withColumn("__p", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(layout)
+      .withColumn("__p", spark_partition_id()))
     // duplicate ids would fan out the payload hash-join below and
     // silently inflate the cumulative sums — reject them. Piggybacked
     // on the subtotal job (no extra pass); exact, because the range
@@ -619,28 +592,26 @@ object Sample {
     * sources. Instead, the [[packByBudget]] two-phase prefix sum
     * generalized per source: a NARROW layout frame of (id, source,
     * weight, md5-key) is range-partitioned on (source, md5), stamped
-    * with `spark_partition_id()` and persisted (the only
+    * with `spark_partition_id()` and checkpointed (the only
     * materialization — the document payload never persists);
     * per-partition per-source subtotals (one row per pair) reach the
-    * driver; the payload hash-joins the pinned layout on id,
+    * driver; the payload hash-joins the layout on id,
     * broadcast-joins the offsets on (partition, source), and a
     * partition-local running-sum window yields the global per-source
     * cumulative — columnar end to end, LAZY on the payload side,
     * window groups bounded by one layout partition. Driver traffic is
-    * #partitions × #sources longs. The layout frame stays persisted
-    * (it pins the partition stamps the offsets were computed against
-    * — see [[packByBudget]]). */
+    * #partitions × #sources longs. The layout checkpoint pins the
+    * partition stamps the offsets were computed against (see
+    * [[packByBudget]]). */
   def mixture(df: DataFrame, idCol: String, weightCol: String,
       sourceCol: String, budgets: Map[String, Long]): DataFrame = {
     val spark = df.sparkSession
-    val layout = df
+    val layout = Scope.checkpoint(df
       .select(col(idCol), col(sourceCol),
         coalesce(col(weightCol).cast("long"), lit(0L)).as("__w"),
         md5(col(idCol).cast("string")).as("__k"))
       .repartitionByRange(col(sourceCol), col("__k"))
-      .withColumn("__p", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pin(layout)
+      .withColumn("__p", spark_partition_id()))
     // duplicate (id, source) pairs would fan out the payload join —
     // reject them (piggybacked on the subtotal job; exact, because the
     // range partitioner keeps one (source, md5(id)) in one partition).

@@ -20,7 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  private val cosinePairsSlot = Dedup.newSlot()
 
   // per-row scalars (norms, maxima) referenced inside element lambdas
   // are let-bound via Hof.bind — embedded free subtrees re-evaluate
@@ -507,9 +506,8 @@ object Similarity {
     // narrow (id, centroid) frame, referenced by the write join AND
     // the per-centroid tally below — persist so the 64-aggregate
     // assignment pipeline runs once
-    val asg = assignToCentroids(df, vecCol, idCol, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val asg = Scope.cache(assignToCentroids(df, vecCol, idCol, cents))
       // tally BEFORE the write: committing an append to `path` fires
       // refreshByPath(path), which invalidates any cached plan whose
       // lineage reads the index — exactly the dedupe-then-append loop,
@@ -538,7 +536,7 @@ object Similarity {
       // indexes (no baseline) never auto-retrain
       if (trained > 0 && appended.sum > retrainAt * trained)
         retrainIvfIndex(spark, path, vecCol, idCol)
-    } finally { asg.unpersist(false): Unit }
+    }
   }
 
   /** Recluster a drifted IVF index in place: read the index's own
@@ -774,7 +772,6 @@ object Similarity {
         query, k)
   }
 
-  private val vecCrossBandedSlot = Dedup.newSlot()
 
   /** Dedup a new batch of vectors AGAINST a persisted [[buildIndex]]
     * LSH index — the embedding twin of [[Dedup.dedupAgainstIndex]]:
@@ -799,10 +796,10 @@ object Similarity {
     val (dims, numPlanes, bandBits, buckets, seed) =
       (meta("dims").toInt, meta("numPlanes").toInt, meta("bandBits").toInt,
         meta("buckets").toInt, meta("seed"))
-    // cached (one-slot swap): referenced by the driver-side bucket
+    // checkpointed: referenced by the driver-side bucket
     // collect AND the candidate join; its lineage is the full explode +
     // 64-aggregate signature pipeline
-    val banded = Dedup.cacheSwap(vecCrossBandedSlot,
+    val banded = Scope.checkpoint(
       signatures(newDf, vecCol, idCol, dims, numPlanes, bandBits, seed)
         .select(col("__id"), explode(col("__bands")).as("__band"))
         .withColumn("__bp", pmod(col("__band"), lit(buckets.toLong))))
@@ -899,10 +896,10 @@ object Similarity {
       bandBits: Int = 16, maxBucket: Int = 1000, seed: Long = 42L): DataFrame = {
     val banded = signatures(df, vecCol, idCol, dims, numPlanes, bandBits, seed)
       .select(col("__id"), explode(col("__bands")).as("__band"))
-    // persisted (one-slot swap, see Dedup.cacheSwap): joined twice
+    // checkpointed (see Scope): joined twice
     // below (idA and idB vector lookups); the candidate frame is tiny
     // and its lineage is the banding subplan
-    val pairs = Dedup.cacheSwap(cosinePairsSlot,
+    val pairs = Scope.checkpoint(
       Dedup.bucketPairs(banded, Seq("__band"), maxBucket))
     val vecs = df.select(col(idCol).as("__vid"),
       col(vecCol).cast("array<double>").as("__v"))
@@ -1208,9 +1205,8 @@ object Similarity {
     requireDims(df, vecCol, dims)
     val cents = centroidsOf(meta)
     val codebooks = codebooksOf(meta)
-    val asg = assignToCentroids(df, vecCol, idCol, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val asg = Scope.cache(assignToCentroids(df, vecCol, idCol, cents))
       // tally BEFORE the write (see appendToIvfIndex: the commit's
       // refreshByPath would invalidate a batch whose lineage reads
       // this index, and a post-write re-evaluation self-collides)
@@ -1235,7 +1231,7 @@ object Similarity {
       clearTallyJournals(spark, journals :+ myJournal)
       if (trained > 0 && appended.sum > retrainAt * trained)
         retrainIvfPqIndex(spark, path, idCol)
-    } finally { asg.unpersist(false): Unit }
+    }
   }
 
   /** Recluster a drifted IVF-PQ index in place, crash-safe like
@@ -1294,8 +1290,6 @@ object Similarity {
 
   // ------------------------------------------------------ semantic dedup
 
-  private val semanticPairsSlot = Dedup.newSlot()
-  private val semanticAssignSlot = Dedup.newSlot()
 
   /** SemDeDup-style near-duplicate pairs WITHIN caller-assigned
     * clusters (Abbas et al. 2023, arXiv:2303.09540: cluster the
@@ -1320,7 +1314,7 @@ object Similarity {
     // the whole within-cluster bound)
     val keyed = df.filter(col(clusterCol).isNotNull)
       .select(col(idCol).as("__id"), col(clusterCol).as("__k"))
-    val pairs = Dedup.cacheSwap(semanticPairsSlot,
+    val pairs = Scope.checkpoint(
       Dedup.bucketPairs(keyed, Seq("__k"), maxCluster))
     val vecs = df.select(col(idCol).as("__vid"),
       col(vecCol).cast("array<double>").as("__v"))
@@ -1362,10 +1356,10 @@ object Similarity {
     val feat = Par.spread(df).withColumn("__nvtmp", l2Normalize(col(vecCol)))
     val (sample, _) = LocalKMeans.sampleVectors(feat, "__nvtmp", seed)
     val centroids = LocalKMeans.fit(sample, k, maxIter, seed)
-    // slot-cached (see Dedup.cacheSwap): the assigned frame feeds the
+    // checkpointed (see Scope): the assigned frame feeds the
     // pair keying AND both vector lookups in semanticPairs — without
     // it each reference replays the normalize+assign over the scan
-    val assigned = Dedup.cacheSwap(semanticAssignSlot,
+    val assigned = Scope.checkpoint(
       feat.withColumn("__semcluster",
           graft.functions.MiningKernels.nearestCentroid(col("__nvtmp"),
             centroids.toSeq))
@@ -1375,7 +1369,6 @@ object Similarity {
       .drop("__semcluster")
   }
 
-  private val semanticBatchSlot = Dedup.newSlot()
 
   /** Persist the SemDeDup clustering as an index, so semantic dedup
     * gets the same incremental cross-corpus story the exact / minhash /
@@ -1433,9 +1426,8 @@ object Similarity {
     requireDims(df, vecCol, meta("dims").toString.toInt)
     val cents = centroidsOf(meta)
     val norm = df.select(col(idCol), l2Normalize(col(vecCol)).as("__nv"))
-    val asg = assignToCentroids(norm, "__nv", idCol, cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    Scope {
+      val asg = Scope.cache(assignToCentroids(norm, "__nv", idCol, cents))
       // tally BEFORE the write (see appendToIvfIndex: the commit's
       // refreshByPath would invalidate a batch whose lineage reads
       // this index — the standard dedupe-survivors-then-append loop —
@@ -1458,7 +1450,7 @@ object Similarity {
       clearTallyJournals(spark, journals :+ myJournal)
       if (trained > 0 && appended.sum > retrainAt * trained)
         retrainSemanticIndex(spark, path, idCol)
-    } finally { asg.unpersist(false): Unit }
+    }
   }
 
   /** Recluster a drifted semantic index from its own stored normalized
@@ -1513,10 +1505,10 @@ object Similarity {
     val cents = centroidsOf(meta)
     val norm = newDf.select(col(idCol).as("__bid"),
       l2Normalize(col(vecCol)).as("__nv"))
-    // cached (one-slot swap): the assigned batch feeds the driver-side
+    // checkpointed: the assigned batch feeds the driver-side
     // cluster collect AND the verify join; its lineage is the
     // normalize + 64-aggregate assignment pipeline
-    val asgv = Dedup.cacheSwap(semanticBatchSlot,
+    val asgv = Scope.checkpoint(
       norm.join(assignToCentroids(norm, "__nv", "__bid", cents)
         .withColumnRenamed("__id", "__bid"), Seq("__bid")))
     val probed = asgv.select("__c").distinct()

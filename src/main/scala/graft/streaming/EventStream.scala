@@ -181,13 +181,16 @@ object EventStream {
         "streaming deduped-merge sink invoked inside a transaction: its " +
           "table write would buffer into a transaction the sink never " +
           "commits, while the index append still lands")
-      val fresh = graft.ops.Dedup.dedupAgainstIndex(
-        batch, idCol, textCol, indexPath, threshold)
-      val kept = graft.ops.Dedup.minhashDedup(fresh, idCol, textCol, threshold)
-        .localCheckpoint() // two consumers below; also pins the decision
-      if (!kept.isEmpty) {
-        env.view(table, fields).write(kept)
-        graft.ops.Dedup.appendToMinhashIndex(kept, idCol, textCol, indexPath)
+      graft.ops.Scope {
+        val fresh = graft.ops.Dedup.dedupAgainstIndex(
+          batch, idCol, textCol, indexPath, threshold)
+        // two consumers below; also pins the decision
+        val kept = graft.ops.Scope.checkpoint(
+          graft.ops.Dedup.minhashDedup(fresh, idCol, textCol, threshold))
+        if (!kept.isEmpty) {
+          env.view(table, fields).write(kept)
+          graft.ops.Dedup.appendToMinhashIndex(kept, idCol, textCol, indexPath)
+        }
       }
     }
 
@@ -214,7 +217,7 @@ object EventStream {
 
   /** The [[vectorDedupedMergeInto]] batch sink (same ambient-
     * transaction guard as [[dedupedMergeSink]], for the same
-    * lost-forever reason). The localCheckpoint pins the survivor set
+    * lost-forever reason). The checkpoint pins the survivor set
     * BEFORE the index append: the append's commit invalidates cached
     * plans reading the index, and an unpinned survivor frame
     * re-evaluated afterwards would self-collide with the rows it just
@@ -236,16 +239,18 @@ object EventStream {
           "the sink never commits, while the index append still lands")
       val dims = graft.ops.Similarity.indexDims(batch.sparkSession, indexPath)
       val vecs = batch.filter(col(vecCol).isNotNull)
-      val fresh = graft.ops.Similarity.semanticDedupAgainstIndex(
-        vecs, vecCol, idCol, indexPath, threshold)
-      val kept = graft.ops.Similarity.cosineDedup(fresh, vecCol, idCol,
-        threshold, dims).localCheckpoint()
-      val all = kept.unionByName(batch.filter(col(vecCol).isNull))
-      if (!all.isEmpty) {
-        env.view(table, fields).write(all)
-        if (!kept.isEmpty)
-          graft.ops.Similarity.appendToSemanticIndex(kept, vecCol, idCol,
-            indexPath)
+      graft.ops.Scope {
+        val fresh = graft.ops.Similarity.semanticDedupAgainstIndex(
+          vecs, vecCol, idCol, indexPath, threshold)
+        val kept = graft.ops.Scope.checkpoint(graft.ops.Similarity.cosineDedup(
+          fresh, vecCol, idCol, threshold, dims))
+        val all = kept.unionByName(batch.filter(col(vecCol).isNull))
+        if (!all.isEmpty) {
+          env.view(table, fields).write(all)
+          if (!kept.isEmpty)
+            graft.ops.Similarity.appendToSemanticIndex(kept, vecCol, idCol,
+              indexPath)
+        }
       }
     }
 }

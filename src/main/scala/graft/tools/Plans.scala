@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.SparkEntry
+import graft.{Env, SparkEntry}
 
 /** Dump `.explain("formatted")` for SparkEntry queries to files — the
   * plan evidence for the optimization rounds.
@@ -26,19 +25,12 @@ object Plans {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Env.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(out).mkdirs()
     for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)
          if only.forall(_.contains(name))) {
-      try {
+      try Env.isolated {
         val df = fn(spark, dir)
         val plan = df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -48,10 +40,6 @@ object Plans {
       } catch { case e: Throwable =>
         System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }
-      graft.ops.Dedup.clearMaterializedSlots()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
     spark.stop()
   }

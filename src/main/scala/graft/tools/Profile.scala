@@ -1,8 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import graft.SparkEntry
+import graft.{Env, SparkEntry}
 
 /** Stage-level profiler for any `SparkEntry` query: prints one line
   * per completed stage (submission offset, wall, task CPU) plus the
@@ -21,14 +20,7 @@ object Profile {
     val only = sys.env.getOrElse("SPARK_GRAFT_PROFILE_Q", "q1_agg")
       .split(",").map(_.trim).filter(_.nonEmpty)
     val reps = sys.env.get("SPARK_GRAFT_PROFILE_REPS").map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Env.session("local[32]", 32)
     spark.sparkContext.setLogLevel("WARN")
 
     val epoch = System.currentTimeMillis()
@@ -47,19 +39,13 @@ object Profile {
     spark.range(1000).selectExpr("sum(id)").collect() // JIT/codegen warmup
     for (q <- only; rep <- 1 to reps) {
       val t0 = System.nanoTime()
-      try {
+      try Env.isolated {
         SparkEntry.queries(q)(spark, dir)
           .write.format("noop").mode("overwrite").save()
         println(f"[profile] $q rep=$rep total ${(System.nanoTime() - t0) / 1e9}%.2f s")
       } catch { case e: Throwable =>
         System.err.println(s"[profile] $q failed: ${e.getMessage}")
       }
-      graft.ops.Dedup.clearMaterializedSlots()
-      graft.ops.Sample.releaseLayouts()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
     }
     spark.stop()
   }

@@ -8,6 +8,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import graft.Env
 import graft.expr.{Args, QueryBuilder}
+import graft.ops.Scope
 import graft.schema.{ColType, ColumnDef}
 
 /** The write path: normalization → coercion → FK resolution → merge
@@ -220,22 +221,20 @@ object Write {
 
   /** Normalized, coerced, FK-resolved, key-checked, key-deduped batch.
     * All violations (unknown FK values, null key columns) surface via
-    * a single Spark action. */
-  /** Returns (deduped batch, the persisted resolved frame backing it —
-    * caller unpersists when done). The staging+FK-resolve subplan is
-    * computed ONCE: the validation probe below is the cache's
+    * a single Spark action. The resolved frame behind it is cached in
+    * the caller's [[graft.ops.Scope]], so the staging+FK-resolve
+    * subplan is computed ONCE: the validation probe below is the cache's
     * materializing action, and the dedupe plus every downstream
     * reference (bucket set, write filters, merge join, insert
     * anti-join) read from the cache instead of re-running staging
     * (previously the validation action ran the full resolve subplan
     * and the batch's first consumer ran it AGAIN — two passes over
     * the raw batch per write; guide §1.2). */
-  private def prepare(v: View, groups: Seq[Group], data: Any)
-      : (DataFrame, DataFrame) = {
+  private def prepare(v: View, groups: Seq[Group], data: Any): DataFrame = {
     val env = v.env
     val keyCols = v.keyCols
     val (resolved0, checks) = resolve(env, v, groups, stage(env, v, data))
-    val resolved = resolved0.persist()
+    val resolved = Scope.cache(resolved0)
     // Violations: unknown FKs (view.py:700-711) + null key values (tmp
     // key columns are NOT NULL, view.py:306-318) — one action for all
     // (validation is PRE-dedupe, as in the reference: a bad row raises
@@ -262,11 +261,10 @@ object Write {
     // aggregable hash aggregate instead of a shuffle + full sort.
     val payload = resolved.columns
       .filter(cn => cn != "__vflags" && cn != "__vsamples" && cn != "__seq")
-    val deduped = resolved
+    resolved
       .groupBy(keyCols.map(c): _*)
       .agg(max_by(struct(payload.map(c): _*), c("__seq")).as("__r"))
       .select(payload.map(cn => col(s"__r.`$cn`").as(cn)): _*)
-    (deduped, resolved)
   }
 
   // -------------------------------------------------------- write filters
@@ -318,12 +316,11 @@ object Write {
     * high-water mark (maxId + batch size).
     */
   private def assignIds(env: Env, df: DataFrame, keyCols: Seq[String],
-      maxId: Long): (DataFrame, Long, org.apache.spark.rdd.RDD[Row]) = {
-    // persist the sorted RDD: it is consumed twice (count pass + assign
+      maxId: Long): (DataFrame, Long) = {
+    // cache the sorted RDD: it is consumed twice (count pass + assign
     // pass) and the range-partition shuffle + sort should run once
-    val rdd = df.repartitionByRange(keyCols.map(c): _*)
-      .sortWithinPartitions(keyCols.map(c): _*)
-      .rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = Scope.cache(df.repartitionByRange(keyCols.map(c): _*)
+      .sortWithinPartitions(keyCols.map(c): _*).rdd)
     val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
       Iterator((i, it.size.toLong))
     }.collect().sortBy(_._1).map(_._2)
@@ -334,7 +331,7 @@ object Write {
     }
     val schema = StructType(df.schema.fields :+
       StructField("id", LongType, nullable = false))
-    (env.spark.createDataFrame(withIds, schema), maxId + offsets.last, rdd)
+    (env.spark.createDataFrame(withIds, schema), maxId + offsets.last)
   }
 
   /** Encoded [min, max] of every batch key column, or None for an
@@ -357,9 +354,12 @@ object Write {
 
   // --------------------------------------------------------------- write
 
+  /** Upsert `data` into `v`'s table. Every intermediate the write
+    * caches lives in one [[graft.ops.Scope]], released when the write
+    * returns or throws. */
   def run(v: View, data: Any, purge: Boolean, insert: Boolean, update: Boolean,
       filters: Seq[Filter], args: Seq[Any], kwargs: Map[String, Any],
-      disableAcl: Boolean): WriteResult = {
+      disableAcl: Boolean): WriteResult = Scope {
     val env = v.env
     val t = v.table
     require(t.external.isEmpty, s"Table '${t.name}' is external (read-only)")
@@ -369,8 +369,7 @@ object Write {
     val keyCols = v.keyCols
     val argv = Args(env, args, kwargs)
 
-    val (prepared, resolvedCache) = prepare(v, groups, data)
-    var b = prepared.persist()
+    var b = Scope.cache(prepare(v, groups, data))
 
     // Bucket pruning: when the table is key-hash bucketed and the
     // merge is keyed on the natural key (and purge doesn't need the
@@ -407,10 +406,10 @@ object Write {
     var filtered = 0L
     if (allFilters.nonEmpty) {
       val total = b.count()
-      val kept = oldPass(v, newPass(v, b, cur, mapped, keyCols, allFilters, argv),
-        cur, keyCols, allFilters, argv).persist()
+      val kept = Scope.cache(oldPass(v,
+        newPass(v, b, cur, mapped, keyCols, allFilters, argv),
+        cur, keyCols, allFilters, argv))
       filtered = total - kept.count()
-      b.unpersist()
       b = kept
     }
 
@@ -429,7 +428,7 @@ object Write {
             .select(keyCols.map(k => col(s"${t.name}.`$k`").as(k)): _*).distinct()
             .join(bKeys, keyCols, "left_anti")
         }
-      val doomed = doomed0.persist()
+      val doomed = Scope.cache(doomed0)
       deleted = doomed.count()
       base = cur.join(doomed, keyCols, "left_anti")
     }
@@ -454,7 +453,6 @@ object Write {
     // The high-water mark comes from Warehouse.maxId — manifest-
     // tracked, so no full scan per batch.
     var newMaxId = -1L
-    var sortedCache: Option[org.apache.spark.rdd.RDD[Row]] = None
     val result =
       if (!insert) updated
       else {
@@ -463,9 +461,8 @@ object Write {
           if (mapped("id")) newRows0
           else {
             val maxId = env.warehouse.maxId(t.name)
-            val (assigned, hwm, cache) = assignIds(env, newRows0, keyCols, maxId)
+            val (assigned, hwm) = assignIds(env, newRows0, keyCols, maxId)
             newMaxId = hwm
-            sortedCache = Some(cache)
             assigned
           }
         val insCols = t.physical.map { cd =>
@@ -492,86 +489,79 @@ object Write {
         val hwm = if (newMaxId >= 0 && deleted == 0) Some(newMaxId) else None
         env.warehouse.write(t.name, result, hwm)
     }
-    b.unpersist()
-    resolvedCache.unpersist(blocking = false)
-    sortedCache.foreach(_.unpersist(blocking = false))
     WriteResult(filtered, deleted)
   }
 
   // -------------------------------------------------------------- delete
 
+  /** Delete rows of `v`'s table by key batch or by filter; returns the
+    * number removed. Its cached intermediates live in one
+    * [[graft.ops.Scope]], like [[run]]'s. */
   def delete(v: View, filters: Seq[Filter], data: Any, args: Seq[Any],
+      kwargs: Map[String, Any], swap: Boolean): Long =
+    Scope(deleteRows(v, filters, data, args, kwargs, swap))
+
+  private def deleteRows(v: View, filters: Seq[Filter], data: Any, args: Seq[Any],
       kwargs: Map[String, Any], swap: Boolean): Long = {
     val env = v.env
     val t = v.table
     require(t.external.isEmpty, s"Table '${t.name}' is external (read-only)")
-    val cur = env.warehouse.read(t.name).persist()
-    var resolvedCache: Option[DataFrame] = None
-    try {
-      val total = cur.count()
-      if (data == null && filters.isEmpty) {
-        // delete all (tanker view.py:257-259)
-        env.warehouse.write(t.name, env.warehouse.empty(t))
-        return total
-      }
-      if (data != null && filters.nonEmpty)
-        throw new IllegalArgumentException(
-          "Deletion by both data and filter not supported")
-
-      val remaining =
-        if (data != null) {
-          val groups = groupFields(v)
-          validateKey(v, groups.map(_.col.name).toSet)
-          val keyCols = v.keyCols
-          val (preparedKeys, rc) = prepare(v, groups, data)
-          resolvedCache = Some(rc)
-          val bKeys = preparedKeys.select(keyCols.map(c): _*)
-          // bucket-pruned delete: only buckets holding batch keys can
-          // lose rows (not with swap — that deletes everywhere else)
-          if (t.buckets > 0 && !swap && keyCols == t.key) {
-            val bs = bKeys.select(env.warehouse.bucketExpr(t).as("__bk"))
-              .distinct().collect().map(_.getInt(0)).toSet
-            val slice = env.warehouse.readBuckets(t.name, Some(bs)).persist()
-            val keptSlice = slice.join(bKeys, keyCols, "left_anti").persist()
-            val removed = slice.count() - keptSlice.count()
-            env.warehouse.writeBuckets(t.name, keptSlice, bs,
-              env.warehouse.maxId(t.name))
-            keptSlice.unpersist(); slice.unpersist()
-            return removed
-          }
-          // zone-pruned delete: only zones overlapping the batch's key
-          // range can lose rows (not with swap — that deletes the rest)
-          if (t.useIndex.equalsIgnoreCase("brin") && t.buckets == 0 &&
-              !swap && keyCols == t.key) {
-            batchKeyBounds(bKeys, t.key) match {
-              case Some(zb) =>
-                val slice = env.warehouse.readZones(t.name, Some(zb)).persist()
-                val keptSlice = slice.join(bKeys, keyCols, "left_anti").persist()
-                val removed = slice.count() - keptSlice.count()
-                env.warehouse.writeZones(t.name, keptSlice, zb,
-                  env.warehouse.maxId(t.name))
-                keptSlice.unpersist(); slice.unpersist()
-                return removed
-              case None => return 0L // empty batch deletes nothing
-            }
-          }
-          cur.join(bKeys, keyCols, if (swap) "left_semi" else "left_anti")
-        } else {
-          val qb = QueryBuilder(env, t, v.fieldEnv)
-          val argv = Args(env, args, kwargs)
-          val cond = filters.map(f => v.compileFilter(qb, f, argv)).reduce(_ && _)
-          val doomedIds = qb.wideFrame().filter(strictTrue(cond))
-            .select(col(s"${t.name}.id").as("id")).distinct()
-          cur.join(doomedIds, Seq("id"), if (swap) "left_semi" else "left_anti")
-        }
-      val rem = remaining.persist()
-      val kept = rem.count()
-      env.warehouse.write(t.name, rem)
-      rem.unpersist()
-      total - kept
-    } finally {
-      cur.unpersist()
-      resolvedCache.foreach(_.unpersist(blocking = false))
+    val cur = Scope.cache(env.warehouse.read(t.name))
+    val total = cur.count()
+    if (data == null && filters.isEmpty) {
+      // delete all (tanker view.py:257-259)
+      env.warehouse.write(t.name, env.warehouse.empty(t))
+      return total
     }
+    if (data != null && filters.nonEmpty)
+      throw new IllegalArgumentException(
+        "Deletion by both data and filter not supported")
+
+    val remaining =
+      if (data != null) {
+        val groups = groupFields(v)
+        validateKey(v, groups.map(_.col.name).toSet)
+        val keyCols = v.keyCols
+        val bKeys = prepare(v, groups, data).select(keyCols.map(c): _*)
+        // bucket-pruned delete: only buckets holding batch keys can
+        // lose rows (not with swap — that deletes everywhere else)
+        if (t.buckets > 0 && !swap && keyCols == t.key) {
+          val bs = bKeys.select(env.warehouse.bucketExpr(t).as("__bk"))
+            .distinct().collect().map(_.getInt(0)).toSet
+          val slice = Scope.cache(env.warehouse.readBuckets(t.name, Some(bs)))
+          val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
+          val removed = slice.count() - keptSlice.count()
+          env.warehouse.writeBuckets(t.name, keptSlice, bs,
+            env.warehouse.maxId(t.name))
+          return removed
+        }
+        // zone-pruned delete: only zones overlapping the batch's key
+        // range can lose rows (not with swap — that deletes the rest)
+        if (t.useIndex.equalsIgnoreCase("brin") && t.buckets == 0 &&
+            !swap && keyCols == t.key) {
+          batchKeyBounds(bKeys, t.key) match {
+            case Some(zb) =>
+              val slice = Scope.cache(env.warehouse.readZones(t.name, Some(zb)))
+              val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
+              val removed = slice.count() - keptSlice.count()
+              env.warehouse.writeZones(t.name, keptSlice, zb,
+                env.warehouse.maxId(t.name))
+              return removed
+            case None => return 0L // empty batch deletes nothing
+          }
+        }
+        cur.join(bKeys, keyCols, if (swap) "left_semi" else "left_anti")
+      } else {
+        val qb = QueryBuilder(env, t, v.fieldEnv)
+        val argv = Args(env, args, kwargs)
+        val cond = filters.map(f => v.compileFilter(qb, f, argv)).reduce(_ && _)
+        val doomedIds = qb.wideFrame().filter(strictTrue(cond))
+          .select(col(s"${t.name}.id").as("id")).distinct()
+        cur.join(doomedIds, Seq("id"), if (swap) "left_semi" else "left_anti")
+      }
+    val rem = Scope.cache(remaining)
+    val kept = rem.count()
+    env.warehouse.write(t.name, rem)
+    total - kept
   }
 }

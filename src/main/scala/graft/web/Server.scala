@@ -72,8 +72,10 @@ final class Server(env: Env, port: Int = 0) {
   private val reserved = Set("fields", "filter", "limit", "offset", "order")
 
   private def handle(ex: HttpExchange): Unit = {
+    // one scope per request: everything the request materialized is
+    // released before the response goes out
     val (code, body) =
-      try {
+      try graft.ops.Scope {
         val path = ex.getRequestURI.getPath.stripPrefix("/").stripSuffix("/")
         if (path == "_txn") {
           if (ex.getRequestMethod != "POST")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Dedup, Multimodal, Similarity, Text}
+import graft.ops.{Dedup, Multimodal, Scope, Similarity, Text}
 
 /** LLM-pipeline operator tests: planted-duplicate recall for the LSH
   * paths, exactness of the brute-force baselines, multimodal
@@ -45,32 +45,28 @@ class OpsSpec extends SparkSpec {
   }
 
   test("scratchDir spill mode: identical miner output, dirs reclaimed") {
-    // spark.graft.scratchDir swaps slot materialization from
+    // spark.graft.scratchDir swaps a scoped checkpoint from
     // localCheckpoint (executor-local, dies with an executor) to a
     // parquet scratch write + read-back — the fault-tolerant
     // intermediate a cluster-scale pipeline lands in a real table
     val base = "the quick brown fox jumps over the lazy dog and runs far away " * 5
     val df = docsDf(Seq((1L, base), (2L, base.replace("lazy", "sleepy")),
       (3L, "completely different content about spark query engines " * 5)))
-    Dedup.clearMaterializedSlots()
     val viaCheckpoint = rows(Dedup.minhashPairs(df, "doc_id", "text", 0.5))
-    Dedup.clearMaterializedSlots()
     val dir = java.nio.file.Files.createTempDirectory("graft-scratch-").toString
+    def slotDirs = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("slot-")).toSeq
     s.conf.set("spark.graft.scratchDir", dir)
     try {
-      val viaScratch = rows(Dedup.minhashPairs(df, "doc_id", "text", 0.5))
-      assert(viaScratch.toSet == viaCheckpoint.toSet,
-        s"scratch-mode pairs differ: $viaScratch vs $viaCheckpoint")
-      val spilled = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("slot-"))
-      assert(spilled.nonEmpty, "scratch mode wrote no slot directories")
-      Dedup.clearMaterializedSlots()
-      val after = new java.io.File(dir).listFiles()
-        .filter(_.getName.startsWith("slot-"))
-      assert(after.isEmpty, s"scratch dirs not reclaimed: ${after.toSeq}")
+      Scope {
+        val viaScratch = rows(Dedup.minhashPairs(df, "doc_id", "text", 0.5))
+        assert(viaScratch.toSet == viaCheckpoint.toSet,
+          s"scratch-mode pairs differ: $viaScratch vs $viaCheckpoint")
+        assert(slotDirs.nonEmpty, "scratch mode wrote no slot directories")
+      }
+      assert(slotDirs.isEmpty, s"scratch dirs not reclaimed: $slotDirs")
     } finally {
       s.conf.unset("spark.graft.scratchDir")
-      Dedup.clearMaterializedSlots()
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
   }

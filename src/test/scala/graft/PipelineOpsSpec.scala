@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Cluster, Dedup, Profile, Sample, Text}
+import graft.ops.{Cluster, Dedup, Profile, Sample, Scope, Text}
 
 /** Round-7 pipeline operators: connected-component clustering,
   * deterministic sampling / sharding, PII scrubbing, TF-IDF, and
@@ -180,7 +180,6 @@ class PipelineOpsSpec extends SparkSpec {
       df, Seq("src"), "score", "id", Seq(0.6, 0.2)))
     intercept[IllegalArgumentException](Sample.byScoreBuckets(
       df, Seq("src"), "score", "id", Seq(0.5), Seq(1.0)))
-    Sample.releaseLayouts()
   }
 
   test("splitByComponents: near-dup clusters never straddle the split") {
@@ -380,6 +379,22 @@ class PipelineOpsSpec extends SparkSpec {
       Seq(0.5))).isEmpty)
   }
 
+  test("a scope releases its ops' intermediates on return and on throw") {
+    val df = s.createDataFrame((1L to 40L).map(i => (i, i % 7))).toDF("doc_id", "w")
+    val dir = java.nio.file.Files.createTempDirectory("scoped-pack-")
+    try {
+      assertReleases("scoped pack")(Scope {
+        Sample.packByBudget(df, "doc_id", "w", 20L)
+          .write.mode("overwrite").parquet(dir.toString)
+      })
+      assert(s.read.parquet(dir.toString).count() == 40L)
+      // the layout is checkpointed before the duplicate-id check throws
+      val dup = df.unionByName(df.limit(1))
+      assertReleases("failed pack")(intercept[IllegalArgumentException](
+        Scope(Sample.packByBudget(dup, "doc_id", "w", 20L))))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("packByBudget and mixture reject duplicate ids loudly") {
     // duplicate ids would fan out the payload join and silently
     // mis-assign shards / inflate per-source totals — must raise
@@ -405,7 +420,6 @@ class PipelineOpsSpec extends SparkSpec {
     val got = rows(Sample.mixture(crossSrc, "doc_id", "ntok", "source",
       Map("web" -> 100L, "code" -> 100L)))
     assert(got.size == 3, got.toString)
-    Sample.releaseLayouts()
   }
 
   // --------------------------------------------------------------- PII
@@ -915,8 +929,8 @@ class PipelineOpsSpec extends SparkSpec {
       // (no index yet), index_update bootstraps the build
       val b1 = mk(Seq((1L, base),
         (2L, "completely different content about spark engines " * 5)))
-      val (out1, rep1) = Pipeline.run(b1, stages,
-        dir.resolve("s1").toString)
+      val (out1, rep1) = assertReleases("bootstrap run")(Pipeline.run(b1, stages,
+        dir.resolve("s1").toString))
       assert(rep1.map(_.rowsOut) == Seq(2L, 2L, 2L, 2L), rep1)
       assert(out1.count() == 2L)
       val indexed1 = s.read.parquet(s"$idx/docs").count()
@@ -926,8 +940,8 @@ class PipelineOpsSpec extends SparkSpec {
       // appends
       val b2 = mk(Seq((10L, base.replace("lazy", "sleepy")),
         (11L, "entirely novel vocabulary about cooking pasta " * 5)))
-      val (out2, rep2) = Pipeline.run(b2, stages,
-        dir.resolve("s2").toString)
+      val (out2, rep2) = assertReleases("cross-dedup run")(Pipeline.run(b2, stages,
+        dir.resolve("s2").toString))
       val byStage = rep2.map(r => r.stage -> r.rowsOut).toMap
       assert(byStage("near_dedup") == 2L && byStage("cross_dedup") == 1L,
         rep2)

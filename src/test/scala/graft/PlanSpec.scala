@@ -261,7 +261,7 @@ class PlanSpec extends SparkSpec {
   test("semanticPairs plan: cluster stage shuffles (id, cluster) longs, not vectors") {
     val env = Testbed.env(spark, "/root/testdata/sf0.001")
     val emb = env.view("embeddings", Seq("vec_id", "embedding", "label")).read()
-    // the candidate-generation stage (what the slot cache
+    // the candidate-generation stage (what Scope.checkpoint
     // materializes) shuffles on the cluster key and must not carry
     // embeddings; vectors only join in for the exact verify of
     // candidate ids
@@ -331,7 +331,6 @@ class PlanSpec extends SparkSpec {
       df, Seq("src"), "score", "id", Seq(0.25, 0.75)))
     val win3 = p3.linesIterator.filter(_.contains("Window ")).toSeq
     assert(win3.nonEmpty && win3.forall(_.contains("__p#")), p3)
-    graft.ops.Sample.releaseLayouts()
   }
 
   test("decontaminateBloom plan: hinted shuffle-hash verify, no nested loops") {
@@ -410,6 +409,5 @@ class PlanSpec extends SparkSpec {
     assert(wins.nonEmpty, p)
     wins.foreach(l => assert(l.contains("__p#"),
       s"window not partition-stamp-bounded: $l"))
-    graft.ops.Sample.releaseLayouts()
   }
 }

@@ -79,4 +79,17 @@ abstract class SparkSpec extends AnyFunSuite {
   }
 
   def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
+
+  /** Run `op` and assert it left nothing materialized: no persistent
+    * RDD created while it ran survives it, and the SQL CacheManager is
+    * empty. RDDs are compared by id, because the suites of one test
+    * group share the JVM and its SparkContext. */
+  def assertReleases[T](what: String)(op: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = op
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"$what left persistent RDDs ${left.toSeq.sorted}")
+    assert(spark.sharedState.cacheManager.isEmpty, s"$what left SQL cache entries")
+    out
+  }
 }

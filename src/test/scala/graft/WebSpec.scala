@@ -364,6 +364,30 @@ class WebSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("one long-lived server releases what every request materialized") {
+    val env = freshEnv(seedTeams = false)
+    env.view("member", Seq("registration_code", "name")).write(Seq(
+      Seq("A", "alpha beta gamma delta"), Seq("B", "alpha beta gamma delta"),
+      Seq("C", "one two three four"), Seq("D", "red green blue cyan")))
+    val srv = new graft.web.Server(env)
+    val port = srv.start()
+    try {
+      // run 1 bootstraps the corpus index, run 2 cross-dedups against it
+      for (run <- Seq("leak1", "leak2")) {
+        val (code, body) = assertReleases(s"curate $run")(post(port,
+          "/_curate/member", s"""{"scratch": "$run", "id_col": "registration_code",
+            | "text_col": "name", "index": "leaks"}""".stripMargin))
+        assert(code == 200 && body.contains("cross_dedup"), body)
+      }
+      val (wc, wb) = assertReleases("write")(post(port, "/_write/member",
+        """{"fields": ["registration_code", "name"],
+          | "rows": [["E", "purple"]]}""".stripMargin))
+      assert(wc == 200, wb)
+      val (rc, rb) = assertReleases("read")(get(port, "/member?fields=name"))
+      assert(rc == 200 && rb.contains("purple"), rb)
+    } finally srv.stop()
+  }
+
   test("error paths: unknown table 404, bad expression 400") {
     val env = freshEnv()
     val srv = new graft.web.Server(env)

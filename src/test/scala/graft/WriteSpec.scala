@@ -123,6 +123,25 @@ class WriteSpec extends SparkSpec {
     assert(e.getMessage.contains("not known in table"))
   }
 
+  test("a purge write releases everything it cached") {
+    val env = freshEnv()
+    val v = env.view("team", Seq("name", "country.name"))
+    val cnt = assertReleases("purge write")(
+      v.write(Seq(Seq("Blue", "France")), purge = true))
+    assert(cnt.deleted == 2)
+  }
+
+  test("a rejected write releases everything it cached") {
+    val env = freshEnv()
+    val v = env.view("team", Seq("name", "country.name"))
+    val fk = assertReleases("unknown-FK write")(
+      intercept[IllegalArgumentException](v.write(Seq(Seq("Pink", "Narnia")))))
+    assert(fk.getMessage.contains("not known in table"), fk.getMessage)
+    val nk = assertReleases("null-key write")(
+      intercept[IllegalArgumentException](v.write(Seq(Seq("Pink", null)))))
+    assert(nk.getMessage.contains("Null value in key column"), nk.getMessage)
+  }
+
   test("write from maps and single map") { // view.py:398-416
     val env = freshEnv()
     env.view("country", Seq("name")).write(Seq(Map("name" -> "Italy")))
