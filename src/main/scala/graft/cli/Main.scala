@@ -628,14 +628,7 @@ object Main {
           // ops run on float32, so the column normalizes on read
           val idCol = o.fields.headOption.getOrElse("vec_id")
           val vecCol = o.fields.drop(1).headOption.getOrElse("embedding")
-          // first NON-null vector sizes the model (a leading null row
-          // would otherwise read size = -1/null and blow up here)
-          val dims = input
-            .filter(org.apache.spark.sql.functions.col(vecCol).isNotNull)
-            .select(org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.col(vecCol))).head(1).headOption
-            .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
-              s"no non-null vectors in ${o.table} to derive dims from"))
+          val dims = graft.ops.Similarity.vectorDims(input, vecCol)
           // --bench <table> adds the semantic eval-overlap gate: its
           // vector column is --bench-field when given, else this
           // table's vector column name
@@ -713,8 +706,8 @@ object Main {
     //   tk index recall  <table> <id> <vec> --path d [--k] [--queries]
     //                    [--nprobe] [--probe-level]    (per-query recall rows)
     //   tk index info    --path d                      (meta, arrays summarized)
-    // Vector dims derive from the table's first row at build; append /
-    // retrain dispatch on the index's own metadata.
+    // Vector dims derive from the table's first non-null vector at
+    // build; append / retrain dispatch on the index's own metadata.
     // extension: model-free hashed embeddings — Text.hashEmbed turns
     // a text table into an L2-normalized vector table ready for
     // `tk index build` / `tk curate --embeddings`. Positionals name
@@ -754,27 +747,27 @@ object Main {
       }
       // graft's `float` column type is double-precision (like the
       // reference); the ANN families operate on float32 vectors, so
-      // the lifecycle normalizes the vector column once on read
-      def vecs(t: String, id: String, v: String) =
-        env.view(t, Seq(id, v)).read(o.filters.map(FilterExpr.apply))
-          .withColumn(v, org.apache.spark.sql.functions.col(v)
-            .cast("array<float>"))
+      // the lifecycle normalizes a vector column once on read (a text
+      // column, for a minhash index, passes through)
+      def rows(t: String, id: String, v: String) = {
+        val df = env.view(t, Seq(id, v)).read(o.filters.map(FilterExpr.apply))
+        if (!df.schema(v).dataType.isInstanceOf[
+            org.apache.spark.sql.types.ArrayType]) df
+        else df.withColumn(v, org.apache.spark.sql.functions.col(v)
+          .cast("array<float>"))
+      }
+      def kind() = graft.ops.IndexDir.read(env.spark, path()).kind
       o.table match {
         // --kind minhash: the TEXT corpus index (Dedup.buildMinhashIndex)
         // — third positional is the text column, no dims to derive
         case "build" if o.kind == "minhash" =>
           val (t, id, tc) = tiv()
-          graft.ops.Dedup.buildMinhashIndex(
-            env.view(t, Seq(id, tc)).read(o.filters.map(FilterExpr.apply)),
-            id, tc, path())
+          graft.ops.Dedup.buildMinhashIndex(rows(t, id, tc), id, tc, path())
           out.write(s"built minhash index at ${o.path}\n")
         case "build" =>
           val (t, id, v) = tiv()
-          val df = vecs(t, id, v)
-          val dims = df.select(org.apache.spark.sql.functions.size(
-              org.apache.spark.sql.functions.col(v))).head(1).headOption
-            .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
-              s"no rows in $t to derive vector dims from"))
+          val df = rows(t, id, v)
+          val dims = Similarity.vectorDims(df, v)
           o.kind match {
             case "lsh" => Similarity.buildIndex(df, v, id, path(), dims)
             case "ivf" => Similarity.buildIvfIndex(df, v, id, path(), dims,
@@ -789,45 +782,24 @@ object Main {
           out.write(s"built ${o.kind} index at ${o.path} ($dims dims)\n")
         case "append" =>
           val (t, id, v) = tiv()
-          val kind = Similarity.indexKind(env.spark, path())
-          kind match {
-            case "minhash" => graft.ops.Dedup.appendToMinhashIndex(
-              env.view(t, Seq(id, v)).read(o.filters.map(FilterExpr.apply)),
-              id, v, o.path)
-            case "lsh" => Similarity.appendToIndex(vecs(t, id, v), v, id, o.path)
-            case "ivf" => Similarity.appendToIvfIndex(vecs(t, id, v), v, id, o.path)
-            case "ivfpq" => Similarity.appendToIvfPqIndex(vecs(t, id, v), v, id, o.path)
-            case "semantic" =>
-              Similarity.appendToSemanticIndex(vecs(t, id, v), v, id, o.path)
-            case other => throw new IllegalArgumentException(
-              s"index at ${o.path} has unsupported kind '$other' " +
-                "(minhash|lsh|ivf|ivfpq|semantic)")
-          }
-          out.write(s"appended into $kind index at ${o.path}\n")
+          Similarity.appendToIndex(rows(t, id, v), v, id, path())
+          out.write(s"appended into ${kind()} index at ${o.path}\n")
         case "retrain" =>
           if (o.fields.size < 2) throw new IllegalArgumentException(
             "index retrain needs <idField> <vecField>")
           val (id, v) = (o.fields.head, o.fields(1))
-          val kind = Similarity.indexKind(env.spark, path())
-          kind match {
-            case "ivf" => Similarity.retrainIvfIndex(env.spark, o.path, v, id)
-            case "ivfpq" => Similarity.retrainIvfPqIndex(env.spark, o.path, id)
-            case "semantic" =>
-              Similarity.retrainSemanticIndex(env.spark, o.path, id)
-            case other => throw new IllegalArgumentException(
-              s"'$other' indexes have no retrain (data-independent hashing)")
-          }
-          out.write(s"retrained $kind index at ${o.path}\n")
+          Similarity.retrainIndex(env.spark, path(), v, id)
+          out.write(s"retrained ${kind()} index at ${o.path}\n")
         case "recall" =>
           val (t, id, v) = tiv()
-          emit(Similarity.recallAtK(env.spark, path(), vecs(t, id, v), v, id,
+          emit(Similarity.recallAtK(env.spark, path(), rows(t, id, v), v, id,
             k = if (o.kOpt > 0) o.kOpt else 10, nQueries = o.queries,
             nprobe = o.nprobe, probeLevel = o.probeLevel), o, out)
         case "info" =>
-          Similarity.indexMeta(env.spark, path()).toSeq.sortBy(_._1)
+          graft.ops.IndexDir.read(env.spark, path()).fields.sortBy(_._1)
             .foreach { case (k, v) =>
               val shown = v match {
-                case l: java.util.List[_] => s"[${l.size()} entries]"
+                case l: Seq[_] => s"[${l.size} entries]"
                 case other => String.valueOf(other)
               }
               out.write(s"$k: $shown\n")

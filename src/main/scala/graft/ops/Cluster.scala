@@ -53,8 +53,8 @@ object Cluster {
         .join(propagated.select(col("id").as("comp"), col("comp").as("__cc")),
           Seq("comp"), "left")
         .select(col("id"), coalesce(col("__cc"), col("comp")).as("comp")))
-      done = next.join(labels.withColumnRenamed("comp", "__old"), Seq("id"))
-        .filter(col("comp") =!= col("__old"))
+      done = next.join(labels.withColumnRenamed("comp", "__prev"), Seq("id"))
+        .filter(col("comp") =!= col("__prev"))
         .isEmpty
       labels = next
       it += 1

@@ -505,7 +505,7 @@ object Dedup {
     *    in;
     *  - `docs/`  — (id, shingle-hash set) for the verify stage, read
     *    column-pruned and semi-joined to candidates only;
-    *  - `_graft_index_meta.json` — the LSH parameters, so probes can
+    *  - the [[IndexDir]] meta — the LSH parameters, so probes can
     *    never silently mismatch the stored signatures.
     */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
@@ -525,29 +525,22 @@ object Dedup {
         .repartition(col("__bp"))
       banded.write.mode("overwrite").partitionBy("__bp")
         .parquet(new org.apache.hadoop.fs.Path(path, "bands").toString)
-      Similarity.writeIndexMeta(df.sparkSession, path,
-        Map("kind" -> "minhash", "numHashes" -> numHashes,
-          "numBands" -> numBands, "shingleSize" -> shingleSize,
-          "buckets" -> buckets))
+      IndexDir.write(df.sparkSession, path,
+        IndexDir.MinhashMeta(numHashes, numBands, shingleSize, buckets))
     }
   }
 
   /** Incrementally add documents to a [[buildMinhashIndex]] corpus
-    * index: signatures are computed with the INDEX's stored
-    * parameters, appended into the same bucket-partition layout —
-    * no rebuild, cost scales with the batch. The caller owns
-    * id-uniqueness across batches; appends are at-least-once safe
-    * (a replayed append duplicates signature rows, which costs bytes
-    * but never changes a dedup decision — candidates dedupe on id). */
-  def appendToMinhashIndex(df: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val spark = df.sparkSession
-    val meta = Similarity.readIndexMeta(spark, path)
-    require(meta.get("kind").map(_.toString).contains("minhash"),
-      s"$path is not a minhash corpus index")
-    val (numHashes, numBands, shingleSize, buckets) =
-      (meta("numHashes").toString.toInt, meta("numBands").toString.toInt,
-        meta("shingleSize").toString.toInt, meta("buckets").toString.toInt)
+    * index (through [[Similarity.appendToIndex]], which reads the meta):
+    * signatures are computed with the INDEX's stored parameters,
+    * appended into the same bucket-partition layout — no rebuild, cost
+    * scales with the batch. The caller owns id-uniqueness across
+    * batches; appends are at-least-once safe (a replayed append
+    * duplicates signature rows, which costs bytes but never changes a
+    * dedup decision — candidates dedupe on id). */
+  private[ops] def appendToMinhashIndex(df: DataFrame, idCol: String,
+      textCol: String, path: String, meta: IndexDir.MinhashMeta): Unit = {
+    val IndexDir.MinhashMeta(numHashes, numBands, shingleSize, buckets) = meta
     Scope {
       val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
         shingleHashes(col(textCol), shingleSize).as("__hs")))
@@ -616,23 +609,17 @@ object Dedup {
   def dedupAgainstIndex(newDf: DataFrame, idCol: String, textCol: String,
       path: String, threshold: Double = 0.8): DataFrame = {
     val spark = newDf.sparkSession
-    val meta = Similarity.readIndexMeta(spark, path)
-    require(meta.get("kind").map(_.toString).contains("minhash"),
-      s"$path is not a minhash corpus index")
-    val (numHashes, numBands, shingleSize, buckets) =
-      (meta("numHashes").toString.toInt, meta("numBands").toString.toInt,
-        meta("shingleSize").toString.toInt, meta("buckets").toString.toInt)
+    val IndexDir.MinhashMeta(numHashes, numBands, shingleSize, buckets) =
+      IndexDir.readAs[IndexDir.MinhashMeta](spark, path, "a minhash corpus index")
     val newBanded = Scope.checkpoint(
       bandedSignatures(newDf, idCol, textCol, numHashes, numBands, shingleSize)
         .withColumn("__bp", pmod(col("__bsig"), lit(buckets.toLong))))
     // driver-side bucket pruning: ≤`buckets` longs
     val probed = newBanded.select("__bp").distinct()
       .collect().map(_.getLong(0)).toSet
-    val bandsRoot = new org.apache.hadoop.fs.Path(path, "bands")
-    val fs = bandsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = probed.toSeq.sorted
-      .map(b => new org.apache.hadoop.fs.Path(bandsRoot, s"__bp=$b"))
-      .filter(fs.exists(_)).map(_.toString)
+    val dirs = IndexDir.partitions(spark,
+      new org.apache.hadoop.fs.Path(path, "bands").toString, "__bp",
+      probed.toSeq.sorted)
     if (dirs.isEmpty) return newDf
     val idx = spark.read.parquet(dirs: _*)
     // the candidate frame is referenced by the verify's pair set and

@@ -135,9 +135,11 @@ object Pipeline {
     * at that path, and a final `index_update` stage folds this run's
     * survivors back in — append when the index exists, full build on
     * the bootstrap run (when `cross_dedup` passes everything
-    * through). Batch cost scales with the batch, never the corpus —
-    * the continuous-ingestion shape, batch twin of the streaming
-    * minhash-filtered sink. */
+    * through). Existence is asked of [[IndexDir.exists]], which first
+    * heals a swap a crash left half done, so an index sitting aside is
+    * appended to, never rebuilt over from one batch. Batch cost scales
+    * with the batch, never the corpus — the continuous-ingestion shape,
+    * batch twin of the streaming minhash-filtered sink. */
   def curateDocuments(idCol: String = "doc_id", textCol: String = "text",
       urlCol: Option[String] = None, nearThreshold: Double = 0.2,
       minQuality: Double = 0.0, bench: Option[DataFrame] = None,
@@ -153,12 +155,6 @@ object Pipeline {
       corpusIndex: Option[String] = None,
       indexThreshold: Double = 0.8): Seq[Stage] = {
     val b = Seq.newBuilder[Stage]
-    def indexExists(df: DataFrame): Boolean = {
-      val meta = new org.apache.hadoop.fs.Path(corpusIndex.get,
-        "_graft_index_meta.json")
-      meta.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .exists(meta)
-    }
     // HTML extraction FIRST of all when the corpus is raw crawl
     // markup (Warc payloads): every later stage — normalize,
     // fingerprints, shingles, quality — must see visible text, not
@@ -194,7 +190,7 @@ object Pipeline {
     // from this run's survivors.
     corpusIndex.foreach { p =>
       b += Stage("cross_dedup", df =>
-        if (indexExists(df))
+        if (IndexDir.exists(df.sparkSession, p))
           Dedup.dedupAgainstIndex(df, idCol, textCol, p, indexThreshold)
         else df)
     }
@@ -226,10 +222,11 @@ object Pipeline {
     // The side effect runs while the stage materializes (the input is
     // the previous stage's spill, so a crash mid-append re-runs from
     // a durable point; appends are at-least-once safe by the
-    // appendToMinhashIndex contract).
+    // minhash appendToIndex contract).
     corpusIndex.foreach { p =>
       b += Stage("index_update", df => {
-        if (indexExists(df)) Dedup.appendToMinhashIndex(df, idCol, textCol, p)
+        if (IndexDir.exists(df.sparkSession, p))
+          Similarity.appendToIndex(df, textCol, idCol, p)
         else Dedup.buildMinhashIndex(df, idCol, textCol, p)
         df
       })
@@ -251,12 +248,6 @@ object Pipeline {
       bench: Option[DataFrame] = None, benchVecCol: String = "embedding",
       decontamThreshold: Double = 0.9,
       corpusIndex: Option[String] = None): Seq[Stage] = {
-    def indexExists(df: DataFrame): Boolean = {
-      val meta = new org.apache.hadoop.fs.Path(corpusIndex.get,
-        "_graft_index_meta.json")
-      meta.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-        .exists(meta)
-    }
     Seq(
       Stage("exact_dedup", df => Dedup.exact(df, Seq(vecCol), idCol)),
       Stage("near_dedup", df =>
@@ -268,7 +259,7 @@ object Pipeline {
     // cluster index — the document recipe's cross_dedup twin:
     // pass-through on the bootstrap run, probe after
     corpusIndex.map(p => Stage("cross_dedup", df =>
-      if (indexExists(df))
+      if (IndexDir.exists(df.sparkSession, p))
         Similarity.semanticDedupAgainstIndex(df, vecCol, idCol, p,
           semanticThreshold)
       else df)) ++
@@ -280,8 +271,8 @@ object Pipeline {
     // LAST: released survivors fold into the cluster index (bootstrap
     // build with semanticK clusters, append + drift retrain after)
     corpusIndex.map(p => Stage("index_update", df => {
-      if (indexExists(df))
-        Similarity.appendToSemanticIndex(df, vecCol, idCol, p)
+      if (IndexDir.exists(df.sparkSession, p))
+        Similarity.appendToIndex(df, vecCol, idCol, p)
       else Similarity.buildSemanticIndex(df, vecCol, idCol, p, k = semanticK)
       df
     }))

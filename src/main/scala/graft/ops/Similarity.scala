@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -286,378 +285,235 @@ object Similarity {
       // owning task
       .repartition(col("__bp"))
       .write.mode("overwrite").partitionBy("__bp").parquet(path)
-    writeMeta(df.sparkSession, path,
-      Map("kind" -> "lsh", "dims" -> dims, "numPlanes" -> numPlanes,
-        "bandBits" -> bandBits, "buckets" -> buckets, "seed" -> seed))
+    IndexDir.write(df.sparkSession, path,
+      IndexDir.LshMeta(dims, numPlanes, bandBits, buckets, seed))
   }
 
-  private[ops] def writeIndexMeta(spark: SparkSession, path: String,
-      m: Map[String, Any]): Unit = writeMeta(spark, path, m)
-  private[ops] def readIndexMeta(spark: SparkSession, path: String): Map[String, Any] =
-    readMetaRaw(spark, path)
-
-  /** Vector dimensionality recorded in an index's metadata — the
-    * authoritative contract for callers (e.g. streaming sinks) that
-    * size batch vectors against a persisted index: reads one tiny
-    * sidecar file instead of probing the batch's first row, which
-    * costs a job per micro-batch and dies on a leading null vector. */
-  def indexDims(spark: SparkSession, path: String): Int =
-    readMetaRaw(spark, path)("dims").toString.toInt
-
-  /** Index family recorded in the metadata (`lsh` when absent — the
-    * pre-kind LSH layout), for callers dispatching on a persisted
-    * index without knowing how it was built (the CLI lifecycle). */
-  def indexKind(spark: SparkSession, path: String): String =
-    readMetaRaw(spark, path).get("kind").map(_.toString).getOrElse("lsh")
-
-  /** The full metadata sidecar, read-only — build parameters, drift
-    * tallies, centroids/codebooks — for observability surfaces. */
-  def indexMeta(spark: SparkSession, path: String): Map[String, Any] =
-    readMetaRaw(spark, path)
-
-  /** Build-time LSH parameters, persisted next to the index so a query
-    * can never silently probe with mismatched parameters (which would
-    * read the wrong partitions and return near-zero recall). */
-  private def writeMeta(spark: SparkSession, path: String, m: Map[String, Any]): Unit = {
-    val f = new Path(path, "_graft_index_meta.json")
-    val out = f.getFileSystem(spark.sparkContext.hadoopConfiguration).create(f, true)
-    try out.write(graft.view.Json.write(m).getBytes("UTF-8")) finally out.close()
-  }
-
-  /** Heal a crashed [[retrainIvfIndex]] swap: the swap renames the
-    * live index aside (`path__old`) before renaming the rebuilt
-    * scratch into place, so a crash between the two renames leaves
-    * `path` missing with the COMPLETE old index at `path__old` —
-    * unambiguous (a healthy index always exists at `path`), so any
-    * entry point that opens the index rolls the rename back first. */
-  private def healSwap(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val live = new Path(path)
-    val old = new Path(path.stripSuffix("/") + "__old")
-    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
-      throw new java.io.IOException(s"Failed to restore $old to $live")
-  }
-
-  private def readMetaRaw(spark: SparkSession, path: String): Map[String, Any] = {
-    val f = new Path(path, "_graft_index_meta.json")
-    val fs = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healSwap(fs, path)
-    require(fs.exists(f), s"No index metadata at $f — was this directory " +
-      "written by Similarity.buildIndex/buildIvfIndex?")
-    val in = fs.open(f)
-    val text = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    import scala.jdk.CollectionConverters._
-    new org.yaml.snakeyaml.Yaml().load[java.util.Map[String, Object]](text)
-      .asScala.toMap
-  }
-
-  /** Append-tally durability journal. A crash between an append's
-    * parquet commit and its meta update would silently drop the
-    * batch's mass from `appendedCounts`, making drift retrain fire
-    * late. So each append writes its per-cell tally delta to a
-    * uniquely-named sidecar BEFORE the data append and removes it only
-    * AFTER the folded counts are durable in the meta — surviving
-    * journals are therefore exactly the deltas whose meta fold is
-    * unconfirmed, and the next append folds them in
-    * ([[pendingTallies]]). Re-folding can only OVERcount (crash before
-    * the data append itself, or a caller retrying a whole append —
-    * whose duplicate members the dedup semantics tolerate as extra
-    * candidates), which at worst retrains EARLY — always safe, a
-    * retrain rebuilds exact state from the stored vectors — never
-    * silently late. Journals ride inside the index directory
-    * (underscore prefix: invisible to parquet readers, like the meta
-    * sidecar) and vanish with it on a retrain swap, whose rebuild
-    * resets the tallies anyway. */
-  private def writeTallyJournal(spark: SparkSession, path: String,
-      delta: Map[Int, Long]): Path = {
-    val f = new Path(path,
-      s"_graft_tally_journal_${java.util.UUID.randomUUID}.json")
-    val out = f.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(f, false)
-    try out.write(graft.view.Json.write(
-      delta.map { case (c, n) => c.toString -> n }).getBytes("UTF-8"))
-    finally out.close()
-    f
-  }
-
-  /** Unconfirmed tally deltas left by crashed or retried appends (see
-    * [[writeTallyJournal]]): the journal files to clear once folded,
-    * and their summed per-cell delta. */
-  private def pendingTallies(spark: SparkSession,
-      path: String): (Seq[Path], Map[Int, Long]) = {
-    val dir = new Path(path)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(fs.globStatus(
-      new Path(dir, "_graft_tally_journal_*.json")))
-      .getOrElse(Array.empty).toSeq.map(_.getPath)
-    import scala.jdk.CollectionConverters._
-    val sums = scala.collection.mutable.Map[Int, Long]().withDefaultValue(0L)
-    files.foreach { f =>
-      val in = fs.open(f)
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      new org.yaml.snakeyaml.Yaml().load[java.util.Map[String, Object]](text)
-        .asScala.foreach { case (k, v) => sums(k.toInt) += v.toString.toLong }
-    }
-    (files, sums.toMap)
-  }
-
-  private def clearTallyJournals(spark: SparkSession,
-      files: Seq[Path]): Unit =
-    files.headOption.foreach { h =>
-      val fs = h.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      files.foreach(fs.delete(_, false))
-    }
-
-  private def readMeta(spark: SparkSession, path: String): Map[String, Long] =
-    readMetaRaw(spark, path).collect {
-      case (k, v: Number) => k -> v.longValue()
-      case (k, v: String) if v.forall(c => c.isDigit || c == '-') => k -> v.toLong
-    }
-
-  /** Incrementally add vectors to an existing persisted index — LSH
-    * ([[buildIndex]]) or IVF ([[buildIvfIndex]]), dispatched on the
-    * index's own metadata. Signatures/assignments are computed with
-    * the INDEX's stored parameters (never the caller's), and the new
-    * rows are appended into the same partition layout — no rebuild,
-    * cost scales with the new batch. The caller owns id-uniqueness
-    * across batches (duplicate ids would surface as duplicate
-    * candidates; queries dedupe on id, so recall is unaffected but
-    * bytes are wasted). */
+  /** Incrementally add rows to a persisted index of any family,
+    * dispatched on the index's own metadata: minhash
+    * ([[Dedup.buildMinhashIndex]]; `vecCol` names the TEXT column), lsh
+    * ([[buildIndex]]) or a centroid index (ivf, ivfpq, semantic).
+    * Signatures and assignments use the INDEX's stored parameters, never
+    * the caller's, and rows land in the existing partition layout: no
+    * rebuild, cost scales with the batch. The caller owns id-uniqueness
+    * across batches (duplicate ids surface as duplicate candidates;
+    * queries dedupe on id, so recall is unaffected but bytes are
+    * wasted).
+    *
+    * A centroid index assigns each row to its nearest STORED centroid
+    * (squared Euclidean argmin, first-index tie-break, the rule Spark
+    * ML's k-means prediction applies), encodes it the family's way and
+    * appends it into that `__c=` cell. Queries stay correct because
+    * probe ranking, row assignment and PQ tables use the same frozen
+    * centroids and codebooks, but recall decays when appended data
+    * drifts from the training distribution (a centroid attracting most
+    * of the new mass becomes one huge probe list; for semantic dedup,
+    * which compares only within a cluster, a poorly separated cluster
+    * loses candidates). So appends are tallied per cell, crash-durably
+    * ([[IndexDir.appendTallied]]), and once the appended mass exceeds
+    * `retrainAt` × the trained mass the index reclusters itself
+    * ([[retrainIndex]]); a meta without a trained baseline never
+    * auto-retrains. `retrainAt = Double.MaxValue` keeps centroids frozen
+    * (reproducible probe sets); the default 0.5 keeps recall-healing on,
+    * since an index silently degrading to 50% recall is a worse surprise
+    * than a recluster. */
   def appendToIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String, retrainAt: Double = 0.5): Unit = {
-    val spark = df.sparkSession
-    val kind = readMetaRaw(spark, path).get("kind").map(_.toString)
-    kind match {
-      case Some("ivf") => appendToIvfIndex(df, vecCol, idCol, path, retrainAt)
-      case Some("ivfpq") =>
-        appendToIvfPqIndex(df, vecCol, idCol, path, retrainAt)
-      case Some("semantic") =>
-        appendToSemanticIndex(df, vecCol, idCol, path, retrainAt)
-      case Some("lsh") | None => appendToLshIndex(df, vecCol, idCol, path)
-      case Some(other) => throw new IllegalArgumentException(
-        s"$path is a $other index; appendToIndex supports lsh, ivf, " +
-          "ivfpq and semantic")
+      path: String, retrainAt: Double = 0.5): Unit =
+    IndexDir.read(df.sparkSession, path) match {
+      case m: IndexDir.MinhashMeta =>
+        Dedup.appendToMinhashIndex(df, idCol, vecCol, path, m)
+      case m: IndexDir.LshMeta => appendToLshIndex(df, vecCol, idCol, path, m)
+      case m: IndexDir.CentroidMeta =>
+        appendToCentroidIndex(df, vecCol, idCol, path, m, retrainAt)
     }
-  }
+
+  /** Recluster a centroid index in place from its own stored rows: the
+    * seed-fixed build re-runs with the index's stored parameters into
+    * the swap scratch, which then replaces the live directory
+    * ([[IndexDir.rebuild]]; crash-safe). The stored vectors are the raw
+    * `vecCol` (dequantized from `__qv` for an int8 IVF), IVF-PQ's `__v`
+    * or semantic's normalized `__nv`. IVF-PQ trains from the TRUE
+    * vectors, not code reconstructions: appended residuals outside the
+    * trained codebooks' range clamp to the nearest code, so
+    * reconstructions of drifted data collapse back toward the stale
+    * centroids. The rebuild reads the live directory lazily, but every
+    * read completes before the swap (the sample and the partitioned
+    * write are both eager). Tallies reset: `trainedCount` becomes the
+    * full reclustered mass. */
+  def retrainIndex(spark: SparkSession, path: String, vecCol: String,
+      idCol: String): Unit =
+    IndexDir.read(spark, path) match {
+      case m: IndexDir.CentroidMeta => retrain(spark, path, vecCol, idCol, m)
+      case m => throw new IllegalArgumentException(
+        s"'${m.kind}' indexes have no retrain (data-independent hashing)")
+    }
 
   private def appendToLshIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String): Unit = {
-    val spark = df.sparkSession
-    val meta = readMeta(spark, path)
-    val (dims, numPlanes, bandBits, buckets, seed) =
-      (meta("dims").toInt, meta("numPlanes").toInt, meta("bandBits").toInt,
-        meta("buckets").toInt, meta("seed"))
+      path: String, m: IndexDir.LshMeta): Unit = {
     // dimension mismatch must fail loudly, not append wrong-band rows
-    requireDims(df, vecCol, dims)
-    val sigs = signatures(df, vecCol, idCol, dims, numPlanes, bandBits, seed)
+    requireDims(df, vecCol, m.dims)
+    val sigs = signatures(df, vecCol, idCol, m.dims, m.numPlanes, m.bandBits,
+      m.seed)
     val banded = sigs.select(col("__id").as(idCol),
       explode(col("__bands")).as("__band"))
     banded.join(df.select(col(idCol), col(vecCol)), Seq(idCol))
-      .withColumn("__bp", pmod(col("__band"), lit(buckets.toLong)))
+      .withColumn("__bp", pmod(col("__band"), lit(m.buckets.toLong)))
       .repartition(col("__bp"))
       .write.mode("append").partitionBy("__bp").parquet(path)
   }
 
-  private def requireDims(df: DataFrame, vecCol: String, dims: Int): Unit =
-    df.select(size(col(vecCol)).as("__d")).head(1).foreach { r =>
-      require(r.getInt(0) == dims,
-        s"Batch vectors have ${r.getInt(0)} dims; index was built with $dims")
-    }
+  /** Width of the first non-null `vecCol` vector; None for an empty or
+    * all-null frame. Nulls are skipped before sizing: with ANSI off,
+    * Spark sizes a null array as -1. */
+  private def firstDims(df: DataFrame, vecCol: String): Option[Int] =
+    df.filter(col(vecCol).isNotNull).select(size(col(vecCol))).head(1)
+      .headOption.map(_.getInt(0))
 
-  /** Incrementally add vectors to a [[buildIvfIndex]] index: each new
-    * vector is assigned to its nearest STORED centroid (squared
-    * Euclidean argmin, first-index tie-break — the same rule Spark
-    * ML's k-means prediction applies) and appended into the matching
-    * `__c=` partition. Queries stay correct across appends because
-    * probe ranking and row assignment use the same frozen centroid
-    * set — but recall decays if appended data drifts from the
-    * training distribution (a centroid that attracts most of the new
-    * mass turns into one huge probe list). So appends are COUNTED:
-    * per-centroid append tallies persist in the index meta, and once
-    * total appended mass exceeds `retrainAt` × the trained mass the
-    * index reclusters itself ([[retrainIvfIndex]] — a full seed-fixed
-    * k-means rebuild over the index's own rows). Tallies are
-    * crash-durable through a sidecar journal ([[writeTallyJournal]]):
-    * a kill between the data append and the meta update cannot lose
-    * the batch's mass, and a blind caller retry at worst double-counts
-    * toward an EARLY retrain (its duplicate members are tolerated as
-    * extra dedup candidates until the retrain rebuilds exact state).
-    * Pass `retrainAt = Double.MaxValue` to keep centroids frozen forever.
-    * The default (0.5) keeps recall-healing ON — a deliberate choice
-    * now that the retrain swap is crash-safe: an IVF index that
-    * silently degrades to 50% recall is a worse surprise than a
-    * background recluster; callers needing frozen centroids (e.g.
-    * reproducible probe sets) opt out explicitly. */
-  def appendToIvfIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String, retrainAt: Double = 0.5): Unit = {
+  /** The vector width of `df`, from its first non-null vector: what a
+    * build records as the index dims. */
+  def vectorDims(df: DataFrame, vecCol: String): Int =
+    firstDims(df, vecCol).getOrElse(throw new IllegalArgumentException(
+      s"no non-null '$vecCol' vectors to derive dims from"))
+
+  private def requireDims(df: DataFrame, vecCol: String, dims: Int): Unit =
+    firstDims(df, vecCol).foreach(d => require(d == dims,
+      s"Batch vectors have $d dims; index was built with $dims"))
+
+  // ------------------------------------------------ centroid lifecycle
+  //
+  // IVF, IVF-PQ and semantic indexes share one lifecycle: a seed-fixed
+  // driver-local k-means over a bounded sample ([[LocalKMeans]]), each
+  // row written into its nearest centroid's `__c=` cell, journaled
+  // appends through the stored centroids, drift retrains. Only the
+  // stored row differs ([[encoded]]).
+
+  /** `(idCol, v)`, the vectors a family assigns: semantic indexes
+    * cluster the L2-normalized `__nv` (Euclidean k-means on the unit
+    * sphere clusters by direction, the cosine geometry of the dedup
+    * threshold), the others the raw `vecCol`. */
+  private def prepared(df: DataFrame, vecCol: String, idCol: String,
+      normalize: Boolean): (DataFrame, String) =
+    if (normalize) (Par.spread(df).select(col(idCol),
+      l2Normalize(col(vecCol)).as("__nv")), "__nv")
+    else (Par.spread(df).select(col(idCol), col(vecCol)), vecCol)
+
+  /** Nearest-centroid assignment `__c` as a map-only codegen kernel
+    * projection ([[graft.functions.MiningKernels.nearestCentroid]]; a
+    * strict-< argmin, so ties pick the lowest centroid id like Spark
+    * ML). Rows whose vector is null, empty or mis-sized are dropped. */
+  private def assigned(frame: DataFrame, v: String,
+      centroids: Seq[Array[Double]]): DataFrame =
+    frame.withColumn("__c",
+        graft.functions.MiningKernels.nearestCentroid(col(v), centroids))
+      .filter(col("__c").isNotNull)
+
+  /** The stored rows `(idCol, payload…, __c)` of a prepared frame. The
+    * payload is the vector itself (raw or normalized `__nv`); int8 `__qv`
+    * for a quantized IVF (~4× less index IO, scored in place by the
+    * probe); for IVF-PQ the residual codes `__code` plus the source
+    * vector `__v`, which probes never read (parquet is columnar) while
+    * retrain and rerank get true vectors without a corpus join. */
+  private def encoded(frame: DataFrame, v: String, idCol: String,
+      meta: IndexDir.CentroidMeta): DataFrame = {
+    val payload = meta match {
+      case m: IndexDir.IvfMeta if m.quantized =>
+        Seq(quantizeInt8(col(v)).as("__qv"))
+      case m: IndexDir.IvfPqMeta => Seq(
+        graft.functions.MiningKernels.pqCodes(col(v), col("__c"),
+          m.centroids, m.codebooks).as("__code"),
+        col(v).as("__v"))
+      case _ => Seq(col(v))
+    }
+    assigned(frame, v, meta.centroids)
+      .select((col(idCol) +: payload) :+ col("__c"): _*)
+  }
+
+  /** Rows are clustered by cell before the partitioned write; otherwise
+    * every map task opens a writer per cell it touches. */
+  private def writeCells(rows: DataFrame, path: String, mode: String): Unit =
+    rows.repartition(col("__c"))
+      .write.mode(mode).partitionBy("__c").parquet(path)
+
+  /** The one build tail: sample the prepared vectors, let the family
+    * train its meta from the sample and the full count (the drift
+    * baseline), write every row into its cell, meta last. One
+    * sample/count pass plus one distributed write over the corpus. */
+  private def buildCentroidIndex(df: DataFrame, vecCol: String,
+      idCol: String, path: String, normalize: Boolean, seed: Long)(
+      train: (Array[Array[Double]], Long) => IndexDir.CentroidMeta): Unit = {
+    val (frame, v) = prepared(df, vecCol, idCol, normalize)
+    val (sample, total) = LocalKMeans.sampleVectors(frame, v, seed)
+    val meta = train(sample, total)
+    writeCells(encoded(frame, v, idCol, meta), path, "overwrite")
+    IndexDir.write(df.sparkSession, path, meta)
+  }
+
+  private def appendToCentroidIndex(df: DataFrame, vecCol: String,
+      idCol: String, path: String, meta: IndexDir.CentroidMeta,
+      retrainAt: Double): Unit = {
     val spark = df.sparkSession
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("ivf"),
-      s"$path is not an IVF index")
-    val dims = meta("dims").toString.toInt
-    requireDims(df, vecCol, dims)
-    val cents = centroidsOf(meta)
-    val (payload, payloadName) =
-      if (meta.get("quantized").exists(_.toString.toBoolean))
-        (quantizeInt8(col(vecCol)).as("__qv"), "__qv")
-      else (col(vecCol), vecCol)
-    // narrow (id, centroid) frame, referenced by the write join AND
-    // the per-centroid tally below — persist so the 64-aggregate
-    // assignment pipeline runs once
+    requireDims(df, vecCol, meta.dims)
+    val (frame, v) = prepared(df, vecCol, idCol,
+      meta.isInstanceOf[IndexDir.SemanticMeta])
     Scope {
-      val asg = Scope.cache(assignToCentroids(df, vecCol, idCol, cents))
+      // read by the per-cell tally AND the write
+      val rows = Scope.cache(encoded(frame, v, idCol, meta))
       // tally BEFORE the write: committing an append to `path` fires
       // refreshByPath(path), which invalidates any cached plan whose
       // lineage reads the index — exactly the dedupe-then-append loop,
-      // where the batch is the survivor frame of dedupAgainstIndex.
-      // Collected after the write, the tally would re-evaluate the
-      // batch against the already-grown index (self-collision -> zero)
-      val batch = asg.groupBy("__c").agg(count(lit(1)).as("__n"))
+      // where the batch is the survivor frame of a dedup against this
+      // index. Collected after the write, the tally would re-evaluate
+      // the batch against the grown index (self-collision -> zero)
+      val batch = rows.groupBy("__c").agg(count(lit(1)))
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // durability: journal this batch's delta BEFORE the data append,
-      // fold any unconfirmed deltas from crashed/retried appends, and
-      // clear journals only once the fold is durable in the meta
-      val (journals, pending) = pendingTallies(spark, path)
-      val myJournal = writeTallyJournal(spark, path, batch)
-      asg.join(df.select(col(idCol), payload), col("__id") === col(idCol))
-        .select(col(idCol), col(payloadName), col("__c"))
-        .repartition(col("__c"))
-        .write.mode("append").partitionBy("__c").parquet(path)
-      val prev = appendedCountsOf(meta, cents.size)
-      val appended = cents.indices.map(c =>
-        prev(c) + batch.getOrElse(c, 0L) + pending.getOrElse(c, 0L))
-      val trained = meta.get("trainedCount").map(_.toString.toLong).getOrElse(0L)
-      writeMeta(spark, path, cleanIvfMeta(meta) +
-        ("appendedCounts" -> appended))
-      clearTallyJournals(spark, journals :+ myJournal)
-      // retrain on DRIFT, not on every big append: pre-trainedCount
-      // indexes (no baseline) never auto-retrain
-      if (trained > 0 && appended.sum > retrainAt * trained)
-        retrainIvfIndex(spark, path, vecCol, idCol)
+      val next = IndexDir.appendTallied(spark, path, meta, batch) {
+        writeCells(rows, path, "append")
+      }
+      if (next.trainedCount > 0 &&
+          next.appendedCounts.sum > retrainAt * next.trainedCount)
+        retrain(spark, path, vecCol, idCol, next)
     }
   }
 
-  /** Recluster a drifted IVF index in place: read the index's own
-    * rows (dequantizing if stored int8), re-run the seed-fixed
-    * k-means build into a sibling scratch directory, then swap it
-    * over the old one. The scratch build reads the old directory
-    * lazily but every read completes before the swap (the k-means fit
-    * and the partitioned write are both eager), so no materialization
-    * of the corpus is needed. Append tallies reset — the new meta's
-    * `trainedCount` is the full reclustered mass.
-    *
-    * The swap is crash-safe: the live index is renamed ASIDE
-    * (`path__old`), the scratch renamed into place, then the old copy
-    * deleted — at every instant a complete index exists at `path` or
-    * at `path__old`, and every entry point rolls a half-finished swap
-    * back ([[healSwap]]). A crash mid-rebuild leaves the live index
-    * untouched (the scratch is simply overwritten next time). */
-  def retrainIvfIndex(spark: SparkSession, path: String,
-      vecCol: String, idCol: String): Unit = {
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("ivf"),
-      s"$path is not an IVF index")
-    val dims = meta("dims").toString.toInt
-    val nlist = meta("nlist").toString.toInt
-    val seed = meta("seed").toString.toLong
-    val quantized = meta.get("quantized").exists(_.toString.toBoolean)
-    val idx = spark.read.parquet(path)
-    val vecs =
-      if (quantized) idx.select(col(idCol), dequantizeInt8(col("__qv")).as(vecCol))
-      else idx.select(col(idCol), col(vecCol))
-    val scratch = path.stripSuffix("/") + "__retrain"
-    buildIvfIndex(vecs, vecCol, idCol, scratch, dims, nlist = nlist,
-      seed = seed, quantized = quantized)
-    installRebuilt(spark, path, scratch)
-  }
-
-  /** Crash-safe install of a rebuilt index over the live one: live →
-    * `path__old`, scratch → live, delete old. At every instant a
-    * complete index exists at `path` or `path__old` ([[healSwap]]). */
-  private def installRebuilt(spark: SparkSession, path: String,
-      scratch: String): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(path)
-    val old = new Path(path.stripSuffix("/") + "__old")
-    // leftover from a crash AFTER a completed swap: live is healthy,
-    // the old copy is garbage
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(s"Failed to move $live aside for retrain")
-    if (!fs.rename(new Path(scratch), live)) {
-      // restore rather than leave the index headless
-      fs.rename(old, live)
-      throw new java.io.IOException(s"Failed to install retrained index at $live")
+  private def retrain(spark: SparkSession, path: String, vecCol: String,
+      idCol: String, meta: IndexDir.CentroidMeta): Unit =
+    IndexDir.rebuild(spark, path) { scratch =>
+      val idx = spark.read.parquet(path)
+      meta match {
+        case ivf: IndexDir.IvfMeta =>
+          val vec = if (ivf.quantized) dequantizeInt8(col("__qv")) else col(vecCol)
+          buildIvfIndex(idx.select(col(idCol), vec.as(vecCol)), vecCol, idCol,
+            scratch, ivf.dims, nlist = ivf.nlist, seed = ivf.seed,
+            quantized = ivf.quantized)
+        case pq: IndexDir.IvfPqMeta =>
+          buildIvfPqIndex(idx.select(col(idCol), col("__v")), "__v", idCol,
+            scratch, pq.dims, nlist = pq.nlist, m = pq.m, codeK = pq.codeK,
+            seed = pq.seed, trainFraction = pq.trainFraction)
+        // __nv is already normalized; re-normalizing is idempotent
+        case sem: IndexDir.SemanticMeta =>
+          buildSemanticIndex(idx.select(col(idCol), col("__nv")), "__nv",
+            idCol, scratch, k = sem.k, seed = sem.seed)
+      }
     }
-    fs.delete(old, true)
-  }
-
-  /** Stored per-centroid append tallies, zero-filled for fresh or
-    * pre-tally indexes. */
-  private def appendedCountsOf(meta: Map[String, Any], nlist: Int): Seq[Long] =
-    meta.get("appendedCounts") match {
-      case Some(l: java.util.List[_]) =>
-        import scala.jdk.CollectionConverters._
-        val s = l.asScala.toSeq.map(_.toString.toLong)
-        if (s.size == nlist) s else Seq.fill(nlist)(0L)
-      case _ => Seq.fill(nlist)(0L)
-    }
-
-  /** Meta map with scala-typed values only (snakeyaml round-trips
-    * lists as java.util.List, which the JSON writer doesn't take). */
-  private def cleanIvfMeta(meta: Map[String, Any]): Map[String, Any] =
-    Map("kind" -> "ivf",
-      "dims" -> meta("dims").toString.toInt,
-      "nlist" -> meta("nlist").toString.toInt,
-      "seed" -> meta("seed").toString.toLong,
-      "quantized" -> meta.get("quantized").exists(_.toString.toBoolean),
-      "trainedCount" -> meta.get("trainedCount").map(_.toString.toLong).getOrElse(0L),
-      "centroids" -> centroidsOf(meta).map(_.toSeq))
-
-  /** Nearest-centroid assignment `(__id, __c)` as a MAP-ONLY kernel
-    * projection ([[graft.functions.MiningKernels.nearestCentroid]]):
-    * the full strict-< argmin scan runs in one whole-stage-codegen
-    * loop per row — no posexplode, no `nlist`-aggregate groupBy, no
-    * shuffle (r14 optimization, guide §2.4/§4; the previous explode +
-    * ≤64-aggregate shape paid one exchange of dims×rows exploded
-    * elements per assignment — per append batch, per semantic probe).
-    * Ties pick the lowest centroid id, matching Spark ML's strict-<
-    * scan; rows whose vector is null/empty/mis-sized are dropped,
-    * matching the explode pipeline emitting no group for them. */
-  private def assignToCentroids(df: DataFrame, vecCol: String, idCol: String,
-      centroids: Seq[Array[Double]]): DataFrame =
-    Par.spread(df).select(col(idCol).as("__id"),
-        graft.functions.MiningKernels.nearestCentroid(col(vecCol), centroids)
-          .as("__c"))
-      .filter(col("__c").isNotNull)
 
   /** ANN top-k against a persisted [[buildIndex]] index: reads ONLY
     * the partition directories the probe set hashes into (driver-side
     * path selection — no full-table scan, no signature recompute),
     * filters to exact probed bands, dedupes candidates on id, exact
-    * cosine on what's left. Build-time LSH parameters are loaded from
-    * the index's own `_graft_index_meta.json`, so probes can never
-    * silently mismatch the signatures they query. */
+    * cosine on what's left. Build-time LSH parameters come from the
+    * index's own meta, so probes can never silently mismatch the
+    * signatures they query. */
   def annTopKIndexed(spark: SparkSession, path: String, vecCol: String,
       idCol: String, query: Seq[Float], k: Int,
       probeLevel: Int = 1): DataFrame = {
-    val kind = readMetaRaw(spark, path).get("kind").map(_.toString)
-    require(kind.forall(_ == "lsh"), // absent = pre-kind LSH index
-      s"$path is a ${kind.getOrElse("?")} index; use the matching query API")
-    val meta = readMeta(spark, path)
-    val (numPlanes, bandBits, buckets, seed) =
-      (meta("numPlanes").toInt, meta("bandBits").toInt,
-        meta("buckets").toInt, meta("seed"))
-    require(query.size == meta("dims").toInt,
-      s"Query vector has ${query.size} dims; index was built with ${meta("dims")}")
-    val probes = queryProbes(query, query.size, numPlanes, bandBits, seed, probeLevel)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = probes.map(bucketOf(_, buckets)).distinct
-      .map(b => new Path(root, s"__bp=$b"))
-      .filter(fs.exists(_)).map(_.toString)
+    val m = IndexDir.readAs[IndexDir.LshMeta](spark, path,
+      "lsh; use the matching query API")
+    require(query.size == m.dims,
+      s"Query vector has ${query.size} dims; index was built with ${m.dims}")
+    val probes = queryProbes(query, query.size, m.numPlanes, m.bandBits,
+      m.seed, probeLevel)
+    val dirs = IndexDir.partitions(spark, path, "__bp",
+      probes.map(bucketOf(_, m.buckets)).distinct)
     val idx =
       if (dirs.isEmpty) spark.read.parquet(path).filter(lit(false))
       else spark.read.parquet(dirs: _*)
@@ -675,103 +531,78 @@ object Similarity {
     * and tunable collision rates; IVF wins on recall per probed byte
     * for clustered data (probe lists follow the data distribution).
     *
-    * Centroids are persisted next to the index (driver-readable — they
+    * Centroids are persisted in the index meta (driver-readable — they
     * are `nlist × dims` doubles), so queries rank probe lists without
     * any Spark job. Training is a driver-local seeded k-means over a
     * BOUNDED sample ([[LocalKMeans]] — r14 optimization, guide §1.2:
     * the previous Spark-ML fit paid init + maxIter full Spark jobs to
-    * cluster a training set that is small by design); assignment is a
-    * map-only codegen kernel projection, one clustered partitioned
-    * write. The whole build is now sample-collect + count + ONE
-    * distributed pass over the corpus. */
+    * cluster a training set that is small by design). `quantized`
+    * stores per-vector symmetric int8 (scale + tinyints) instead of the
+    * float array: ~4× less index IO per probe at unchanged recall shape
+    * (the usual asymmetric scheme: full-precision query, quantized
+    * corpus). */
   def buildIvfIndex(df: DataFrame, vecCol: String, idCol: String, path: String,
       dims: Int, nlist: Int = 64, maxIter: Int = 10, seed: Long = 42L,
-      quantized: Boolean = false): Unit = {
-    val proj = Par.spread(df).select(col(idCol), col(vecCol))
-    val (sample, total) = LocalKMeans.sampleVectors(proj, vecCol, seed)
-    val centroids = LocalKMeans.fit(sample, nlist, maxIter, seed)
-    val assigned = proj.withColumn("__c",
-        graft.functions.MiningKernels.nearestCentroid(col(vecCol),
-          centroids.toSeq))
-      .filter(col("__c").isNotNull)
-    // quantized: store per-vector symmetric int8 (scale + tinyints)
-    // instead of the float array — ~4× less index IO per probe at
-    // unchanged recall shape; scoring dequantizes on read (the usual
-    // asymmetric scheme: full-precision query, quantized corpus)
-    val stored = if (quantized)
-      assigned.select(col(idCol), quantizeInt8(col(vecCol)).as("__qv"),
-        col("__c"))
-    else assigned
-    stored.repartition(col("__c"))
-      .write.mode("overwrite").partitionBy("__c").parquet(path)
-    writeMeta(df.sparkSession, path,
-      Map("kind" -> "ivf", "dims" -> dims, "nlist" -> nlist, "seed" -> seed,
-        "quantized" -> quantized,
-        // trained mass + per-centroid append tallies: the drift
-        // baseline appendToIvfIndex's retrain trigger compares against
-        // (the full corpus count, not the training-sample size)
-        "trainedCount" -> total,
-        "appendedCounts" -> Seq.fill(nlist)(0L),
-        "centroids" -> centroids.map(_.toSeq).toSeq))
-  }
+      quantized: Boolean = false): Unit =
+    buildCentroidIndex(df, vecCol, idCol, path, normalize = false, seed) {
+      (sample, total) =>
+        IndexDir.IvfMeta(dims, nlist, seed, quantized,
+          LocalKMeans.fit(sample, nlist, maxIter, seed).toSeq, total,
+          Seq.fill(nlist)(0L))
+    }
 
-  /** Centroids from an IVF index's metadata map.
-    * toString.toDouble, not Number cast: snakeyaml's YAML-1.1 float
-    * resolver types "1.23E7" (no signed exponent) as a String. */
-  private def centroidsOf(meta: Map[String, Any]): Seq[Array[Double]] = {
-    import scala.jdk.CollectionConverters._
-    meta("centroids").asInstanceOf[java.util.List[java.util.List[Object]]]
-      .asScala.toSeq.map(_.asScala.map(_.toString.toDouble).toArray)
+  /** The `nprobe` cells whose centroids are nearest the query (squared
+    * Euclidean), ranked on the driver: the centroids ride in the meta. */
+  private def nearestCells(meta: IndexDir.CentroidMeta, query: Seq[Float],
+      nprobe: Int): Seq[Int] = {
+    require(query.size == meta.dims,
+      s"Query vector has ${query.size} dims; index was built with ${meta.dims}")
+    val qd = query.map(_.toDouble).toArray
+    meta.centroids.zipWithIndex.map { case (c, i) =>
+      var d = 0.0; var j = 0
+      while (j < c.length) { val x = c(j) - qd(j); d += x * x; j += 1 }
+      (i, d)
+    }.sortBy(_._2).take(math.max(1, nprobe)).map(_._1)
   }
 
   /** ANN top-k against a [[buildIvfIndex]] index: ranks centroids
-    * against the query ON THE DRIVER (centroids ride in the index
-    * meta), reads only the `nprobe` nearest centroid partitions, exact
-    * cosine on those lists. A [[buildSemanticIndex]] index probes
-    * through the same path (pass `vecCol = "__nv"`): its layout IS an
-    * unquantized IVF over stored L2-normalized vectors, and cosine is
-    * normalization-invariant — this is what makes semantic-index
-    * recall measurable ([[recallAtK]]). */
+    * against the query ON THE DRIVER, reads only the `nprobe` nearest
+    * centroid partitions, exact cosine on those lists. A
+    * [[buildSemanticIndex]] index probes through the same path (pass
+    * `vecCol = "__nv"`): its layout IS an unquantized IVF over stored
+    * L2-normalized vectors, and cosine is normalization-invariant —
+    * this is what makes semantic-index recall measurable
+    * ([[recallAtK]]). */
   def ivfTopK(spark: SparkSession, path: String, vecCol: String,
       idCol: String, query: Seq[Float], k: Int, nprobe: Int = 4): DataFrame = {
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString)
-        .exists(Set("ivf", "semantic")),
-      s"$path is not an IVF-layout (ivf/semantic) index")
-    require(query.size == meta("dims").toString.toInt,
-      s"Query vector has ${query.size} dims; index was built with ${meta("dims")}")
-    val centroids = centroidsOf(meta)
-    val qd = query.map(_.toDouble).toArray
-    val probed = centroids.zipWithIndex
-      .map { case (c, i) =>
-        var d = 0.0; var j = 0
-        while (j < c.length) { val x = c(j) - qd(j); d += x * x; j += 1 }
-        (i, d)
-      }
-      .sortBy(_._2).take(math.max(1, nprobe)).map(_._1)
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = probed.map(c => new Path(root, s"__c=$c"))
-      .filter(fs.exists(_)).map(_.toString)
+    val meta: IndexDir.CentroidMeta = IndexDir.read(spark, path) match {
+      case m: IndexDir.IvfMeta => m
+      case m: IndexDir.SemanticMeta => m
+      case _ => throw new IllegalArgumentException(
+        s"$path is not an IVF-layout (ivf/semantic) index")
+    }
+    val dirs = IndexDir.partitions(spark, path, "__c",
+      nearestCells(meta, query, nprobe))
     val idx =
       if (dirs.isEmpty) spark.read.parquet(path).filter(lit(false))
-      else spark.read.parquet(dirs.toSeq: _*)
-    if (meta.get("quantized").exists(_.toString.toBoolean)) {
-      // int8 direct scoring ([[graft.functions.VectorKernels.cosineI8]]):
-      // cosine is invariant under the quantizer's per-vector positive
-      // scale, so the probe ranks against the raw tinyint codes in
-      // place — no dequantize multiply, no cast, no per-row array
-      // allocation in the hot loop (the probe's inner kernel at scale)
-      val q = array(query.map(v => lit(v.toDouble)): _*)
-      Par.spread(idx).select(col(idCol),
-          graft.functions.VectorKernels.cosineI8(q,
-            col("__qv").getField("q")).as("sim"))
-        .orderBy(col("sim").desc, col(idCol)).limit(k)
-    } else
-      bruteForceTopK(idx.select(col(idCol), col(vecCol)), vecCol, idCol,
-        query, k)
+      else spark.read.parquet(dirs: _*)
+    meta match {
+      case m: IndexDir.IvfMeta if m.quantized =>
+        // int8 direct scoring ([[graft.functions.VectorKernels.cosineI8]]):
+        // cosine is invariant under the quantizer's per-vector positive
+        // scale, so the probe ranks against the raw tinyint codes in
+        // place — no dequantize multiply, no cast, no per-row array
+        // allocation in the hot loop (the probe's inner kernel at scale)
+        val q = array(query.map(v => lit(v.toDouble)): _*)
+        Par.spread(idx).select(col(idCol),
+            graft.functions.VectorKernels.cosineI8(q,
+              col("__qv").getField("q")).as("sim"))
+          .orderBy(col("sim").desc, col(idCol)).limit(k)
+      case _ =>
+        bruteForceTopK(idx.select(col(idCol), col(vecCol)), vecCol, idCol,
+          query, k)
+    }
   }
-
 
   /** Dedup a new batch of vectors AGAINST a persisted [[buildIndex]]
     * LSH index — the embedding twin of [[Dedup.dedupAgainstIndex]]:
@@ -789,27 +620,19 @@ object Similarity {
   def dedupAgainstIndex(newDf: DataFrame, vecCol: String, idCol: String,
       path: String, threshold: Double): DataFrame = {
     val spark = newDf.sparkSession
-    val kind = readMetaRaw(spark, path).get("kind").map(_.toString)
-    require(kind.forall(_ == "lsh"), // absent = pre-kind LSH index
-      s"$path is a ${kind.getOrElse("?")} index; dedupAgainstIndex probes lsh")
-    val meta = readMeta(spark, path)
-    val (dims, numPlanes, bandBits, buckets, seed) =
-      (meta("dims").toInt, meta("numPlanes").toInt, meta("bandBits").toInt,
-        meta("buckets").toInt, meta("seed"))
+    val m = IndexDir.readAs[IndexDir.LshMeta](spark, path,
+      "lsh (dedupAgainstIndex probes lsh)")
     // checkpointed: referenced by the driver-side bucket
     // collect AND the candidate join; its lineage is the full explode +
     // 64-aggregate signature pipeline
     val banded = Scope.checkpoint(
-      signatures(newDf, vecCol, idCol, dims, numPlanes, bandBits, seed)
+      signatures(newDf, vecCol, idCol, m.dims, m.numPlanes, m.bandBits, m.seed)
         .select(col("__id"), explode(col("__bands")).as("__band"))
-        .withColumn("__bp", pmod(col("__band"), lit(buckets.toLong))))
+        .withColumn("__bp", pmod(col("__band"), lit(m.buckets.toLong))))
     // driver-side bucket pruning: ≤`buckets` longs
     val probed = banded.select("__bp").distinct()
       .collect().map(_.getLong(0)).toSet
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = probed.toSeq.sorted.map(b => new Path(root, s"__bp=$b"))
-      .filter(fs.exists(_)).map(_.toString)
+    val dirs = IndexDir.partitions(spark, path, "__bp", probed.toSeq.sorted)
     if (dirs.isEmpty) return newDf
     val idx = spark.read.parquet(dirs: _*)
     val cands = banded.join(
@@ -919,7 +742,7 @@ object Similarity {
     * deterministically-sampled corpus vectors. The QA gate a pipeline
     * runs after building or appending to an index — recall decaying
     * across appends is how index drift (the thing
-    * [[retrainIvfIndex]] heals) first shows up in production.
+    * [[retrainIndex]] heals) first shows up in production.
     * Returns one row per sampled query: (query_id, recall).
     *
     * Probe knobs per index kind: `nprobe` = coarse cells probed for
@@ -937,18 +760,23 @@ object Similarity {
       vecCol: String, idCol: String, k: Int, nQueries: Int = 10,
       nprobe: Int = 4, probeLevel: Int = 1): DataFrame = {
     require(k > 0 && nQueries > 0, "recallAtK needs k > 0 and nQueries > 0")
-    // dispatch is closed over the known index families: an unknown
-    // kind must refuse here, not fall through to the LSH prober and
-    // die on a missing meta key. A SEMANTIC index measures
+    // dispatch is closed over the index families (an unknown kind
+    // refuses at the meta read). A SEMANTIC index measures
     // within-probed-cluster recall — the number that bounds its dedup
     // miss rate (SemDeDup only compares within a cluster) — by
     // probing its IVF-shaped layout over the stored normalized
     // vectors.
-    val kind = readMetaRaw(spark, path).get("kind").map(_.toString)
-      .getOrElse("lsh")
-    require(Set("lsh", "ivf", "ivfpq", "semantic")(kind),
-      s"recallAtK supports lsh/ivf/ivfpq/semantic indexes; " +
-        s"$path is kind '$kind'")
+    val probe: Seq[Float] => DataFrame = IndexDir.read(spark, path) match {
+      case _: IndexDir.IvfMeta => ivfTopK(spark, path, vecCol, idCol, _, k, nprobe)
+      case _: IndexDir.IvfPqMeta => ivfPqTopK(spark, path, idCol, _, k, nprobe)
+      case _: IndexDir.SemanticMeta =>
+        ivfTopK(spark, path, "__nv", idCol, _, k, nprobe)
+      case _: IndexDir.LshMeta =>
+        annTopKIndexed(spark, path, vecCol, idCol, _, k, probeLevel)
+      case m => throw new IllegalArgumentException(
+        s"recallAtK supports lsh/ivf/ivfpq/semantic indexes; " +
+          s"$path is kind '${m.kind}'")
+    }
     val sample = corpus.select(col(idCol).cast("long"), col(vecCol))
       .orderBy(xxhash64(col(idCol).cast("string")), col(idCol))
       .limit(nQueries).collect()
@@ -958,13 +786,8 @@ object Similarity {
       // warehouse `float` type is double-precision) samples queries
       // just as well as array<float>
       val qv = r.getSeq[Number](1).map(_.floatValue())
-      val approx = (kind match {
-        case "ivf" => ivfTopK(spark, path, vecCol, idCol, qv, k, nprobe)
-        case "ivfpq" => ivfPqTopK(spark, path, idCol, qv, k, nprobe)
-        case "semantic" => ivfTopK(spark, path, "__nv", idCol, qv, k, nprobe)
-        case _ => annTopKIndexed(spark, path, vecCol, idCol, qv, k,
-          probeLevel)
-      }).select(col(idCol).cast("long")).collect().map(_.getLong(0)).toSet
+      val approx = probe(qv).select(col(idCol).cast("long")).collect()
+        .map(_.getLong(0)).toSet
       val exact = bruteForceTopK(corpus, vecCol, idCol, qv, k)
         .select(col(idCol).cast("long")).collect().map(_.getLong(0)).toSet
       (qid, if (exact.isEmpty) 1.0
@@ -1013,7 +836,6 @@ object Similarity {
     require(dims % m == 0, s"dims=$dims not divisible by m=$m subspaces")
     require(codeK >= 2 && codeK <= 256, s"codeK=$codeK must fit one byte")
     val dsub = dims / m
-    val proj = Par.spread(df).select(col(idCol), col(vecCol))
     // Coarse quantizer AND all m codebooks train DRIVER-LOCAL on one
     // bounded sample (r14 optimization, guide §1.2). Codebook training
     // is a SMALL-DATA problem by design (PQ papers train on 1e5-1e6
@@ -1025,63 +847,33 @@ object Similarity {
     // never persisted, and the encode is ONE map-only projection
     // through the fused residual→codes kernel
     // ([[graft.functions.MiningKernels.pqCodes]]).
-    val (sample0, total) = LocalKMeans.sampleVectors(proj, vecCol, seed)
-    val sample =
-      if (trainFraction >= 1.0) sample0
-      else {
-        val rnd = new scala.util.Random(seed)
-        val s = sample0.filter(_ => rnd.nextDouble() < trainFraction)
-        if (s.nonEmpty) s else sample0.take(1)
-      }
-    val centroids = LocalKMeans.fit(sample, nlist, maxIter, seed)
-    // residuals of the training sample w.r.t. their coarse cell,
-    // computed locally — no distributed residual frame at all
-    val residuals = sample.map { p =>
-      val c = centroids(LocalKMeans.nearest(p, centroids))
-      val r = new Array[Double](dims)
-      var i = 0
-      while (i < dims) { r(i) = p(i) - c(i); i += 1 }
-      r
+    buildCentroidIndex(df, vecCol, idCol, path, normalize = false, seed) {
+      (sample0, total) =>
+        val sample =
+          if (trainFraction >= 1.0) sample0
+          else {
+            val rnd = new scala.util.Random(seed)
+            val s = sample0.filter(_ => rnd.nextDouble() < trainFraction)
+            if (s.nonEmpty) s else sample0.take(1)
+          }
+        val centroids = LocalKMeans.fit(sample, nlist, maxIter, seed)
+        // residuals of the training sample w.r.t. their coarse cell,
+        // computed locally — no distributed residual frame at all
+        val residuals = sample.map { p =>
+          val c = centroids(LocalKMeans.nearest(p, centroids))
+          val r = new Array[Double](dims)
+          var i = 0
+          while (i < dims) { r(i) = p(i) - c(i); i += 1 }
+          r
+        }
+        val codebooks = (0 until m).map { j =>
+          val sub = residuals.map(r =>
+            java.util.Arrays.copyOfRange(r, j * dsub, (j + 1) * dsub))
+          LocalKMeans.fit(sub, codeK, maxIter, seed + j).toSeq
+        }
+        IndexDir.IvfPqMeta(dims, nlist, m, codeK, seed, trainFraction,
+          centroids.toSeq, codebooks, total, Seq.fill(nlist)(0L))
     }
-    val codebooks: Seq[Seq[Array[Double]]] = (0 until m).map { j =>
-      val sub = residuals.map(r =>
-        java.util.Arrays.copyOfRange(r, j * dsub, (j + 1) * dsub))
-      LocalKMeans.fit(sub, codeK, maxIter, seed + j).toSeq
-    }
-    // `__v` carries the source vector NEXT TO the codes: parquet is
-    // columnar, so probes (which select only id/__code/__c) never read
-    // it — the in-RAM/ADC story stays m bytes per vector — while
-    // drift retrain ([[retrainIvfPqIndex]]) and exact re-rank get the
-    // true vectors without a corpus join. Same store-the-vector trade
-    // the LSH and IVF indexes already make.
-    val cSeq = centroids.toSeq
-    proj.withColumn("__c",
-        graft.functions.MiningKernels.nearestCentroid(col(vecCol), cSeq))
-      .filter(col("__c").isNotNull)
-      .select(col(idCol),
-        graft.functions.MiningKernels.pqCodes(col(vecCol), col("__c"),
-          cSeq, codebooks).as("__code"),
-        col(vecCol).as("__v"), col("__c"))
-      .repartition(col("__c"))
-      .write.mode("overwrite").partitionBy("__c").parquet(path)
-    writeMeta(df.sparkSession, path,
-      Map("kind" -> "ivfpq", "dims" -> dims, "nlist" -> nlist, "m" -> m,
-        "codeK" -> codeK, "seed" -> seed,
-        "trainFraction" -> trainFraction,
-        // drift baseline, same contract as buildIvfIndex: trained mass
-        // + per-coarse-cell append tallies for the retrain trigger
-        "trainedCount" -> total,
-        "appendedCounts" -> Seq.fill(nlist)(0L),
-        "centroids" -> centroids.map(_.toSeq).toSeq,
-        "codebooks" -> codebooks.map(_.map(_.toSeq))))
-  }
-
-  private def codebooksOf(meta: Map[String, Any]): Seq[Seq[Array[Double]]] = {
-    import scala.jdk.CollectionConverters._
-    meta("codebooks").asInstanceOf[java.util.List[Any]].asScala.toSeq
-      .map(_.asInstanceOf[java.util.List[Any]].asScala.toSeq
-        .map(_.asInstanceOf[java.util.List[Any]].asScala
-          .map(_.toString.toDouble).toArray))
   }
 
   /** ANN top-k against a [[buildIvfPqIndex]] index: probe the
@@ -1110,45 +902,30 @@ object Similarity {
     * when no probed cell directory exists. */
   private def pqProbedWithAdc(spark: SparkSession, path: String,
       query: Seq[Float], nprobe: Int): Option[(DataFrame, Column)] = {
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("ivfpq"),
-      s"$path is not an IVF-PQ index")
-    val dims = meta("dims").toString.toInt
-    val m = meta("m").toString.toInt
-    require(query.size == dims,
-      s"Query vector has ${query.size} dims; index was built with $dims")
-    val dsub = dims / m
-    val centroids = centroidsOf(meta)
-    val codebooks = codebooksOf(meta)
+    val meta = IndexDir.readAs[IndexDir.IvfPqMeta](spark, path, "IVF-PQ")
+    val (m, dsub) = (meta.m, meta.dims / meta.m)
+    val probed = nearestCells(meta, query, nprobe)
     val qd = query.map(_.toDouble).toArray
-    val probed = centroids.zipWithIndex.map { case (c, i) =>
-      var d = 0.0; var j = 0
-      while (j < c.length) { val x = c(j) - qd(j); d += x * x; j += 1 }
-      (i, d)
-    }.sortBy(_._2).take(math.max(1, nprobe)).map(_._1)
     // ADC tables per probed cell: residual of q w.r.t. THAT cell
     val tables: Seq[Seq[Seq[Double]]] = probed.map { c =>
-      val cent = centroids(c)
+      val cent = meta.centroids(c)
       (0 until m).map { j =>
-        codebooks(j).map { code =>
+        meta.codebooks(j).map { code =>
           var d = 0.0; var t = 0
           while (t < dsub) {
             val x = (qd(j * dsub + t) - cent(j * dsub + t)) - code(t)
             d += x * x; t += 1
           }
           d
-        }.toSeq
+        }
       }
     }
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = probed.map(c => new Path(root, s"__c=$c"))
-      .filter(fs.exists(_)).map(_.toString)
+    val dirs = IndexDir.partitions(spark, path, "__c", probed)
     if (dirs.isEmpty) return None
     // basePath keeps the __c partition column alive when reading
     // specific cell directories (each row needs it to pick its cell's
     // ADC table)
-    val idx = spark.read.option("basePath", path).parquet(dirs.toSeq: _*)
+    val idx = spark.read.option("basePath", path).parquet(dirs: _*)
     // row's probe position (cells are few: a literal when-chain)
     val probePos = probed.zipWithIndex.tail.foldLeft(
         when(col("__c") === probed.head, lit(0))) { case (acc, (c, i)) =>
@@ -1161,105 +938,6 @@ object Similarity {
           element_at(col("__code"), j + 1).cast("int") + 128 + 1))
         .reduce(_ + _))
     Some((idx, adc))
-  }
-
-  /** Meta map with scala-typed values only (the ivfpq twin of
-    * [[cleanIvfMeta]]). */
-  private def cleanPqMeta(meta: Map[String, Any]): Map[String, Any] =
-    Map("kind" -> "ivfpq",
-      "dims" -> meta("dims").toString.toInt,
-      "nlist" -> meta("nlist").toString.toInt,
-      "m" -> meta("m").toString.toInt,
-      "codeK" -> meta("codeK").toString.toInt,
-      "seed" -> meta("seed").toString.toLong,
-      "trainFraction" -> meta.get("trainFraction")
-        .map(_.toString.toDouble).getOrElse(1.0),
-      "trainedCount" -> meta.get("trainedCount")
-        .map(_.toString.toLong).getOrElse(0L),
-      "centroids" -> centroidsOf(meta).map(_.toSeq),
-      "codebooks" -> codebooksOf(meta).map(_.map(_.toSeq)))
-
-  /** Incrementally add vectors to a [[buildIvfPqIndex]] index: assign
-    * each new vector to its nearest STORED coarse centroid, encode its
-    * residual through the STORED per-subspace codebooks (the fused
-    * residual→codes codegen kernel
-    * [[graft.functions.MiningKernels.pqCodes]] — r14 optimization:
-    * the previous per-row HOF fold ran interpreted, re-slicing the
-    * codebook literal per code; the kernel runs the same strict-<
-    * argmin inside whole-stage codegen, and build and append now
-    * encode through IDENTICAL arithmetic),
-    * and append into the matching `__c=` partition — queries stay
-    * correct across appends because probe ranking, row assignment and
-    * ADC tables all use the same frozen centroids/codebooks. Appends
-    * are tallied per cell exactly like [[appendToIvfIndex]]; once the
-    * appended mass exceeds `retrainAt` × the trained mass the index
-    * reclusters itself ([[retrainIvfPqIndex]]). Pass
-    * `retrainAt = Double.MaxValue` to keep it frozen forever. */
-  def appendToIvfPqIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String, retrainAt: Double = 0.5): Unit = {
-    val spark = df.sparkSession
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("ivfpq"),
-      s"$path is not an IVF-PQ index")
-    val dims = meta("dims").toString.toInt
-    requireDims(df, vecCol, dims)
-    val cents = centroidsOf(meta)
-    val codebooks = codebooksOf(meta)
-    Scope {
-      val asg = Scope.cache(assignToCentroids(df, vecCol, idCol, cents))
-      // tally BEFORE the write (see appendToIvfIndex: the commit's
-      // refreshByPath would invalidate a batch whose lineage reads
-      // this index, and a post-write re-evaluation self-collides)
-      val batch = asg.groupBy("__c").agg(count(lit(1)).as("__n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // durability journal — see appendToIvfIndex
-      val (journals, pending) = pendingTallies(spark, path)
-      val myJournal = writeTallyJournal(spark, path, batch)
-      asg.join(df.select(col(idCol), col(vecCol)), col("__id") === col(idCol))
-        .select(col(idCol),
-          graft.functions.MiningKernels.pqCodes(col(vecCol), col("__c"),
-            cents, codebooks).as("__code"),
-          col(vecCol).as("__v"), col("__c"))
-        .repartition(col("__c"))
-        .write.mode("append").partitionBy("__c").parquet(path)
-      val prev = appendedCountsOf(meta, cents.size)
-      val appended = cents.indices.map(c =>
-        prev(c) + batch.getOrElse(c, 0L) + pending.getOrElse(c, 0L))
-      val trained = meta.get("trainedCount").map(_.toString.toLong).getOrElse(0L)
-      writeMeta(spark, path, cleanPqMeta(meta) +
-        ("appendedCounts" -> appended))
-      clearTallyJournals(spark, journals :+ myJournal)
-      if (trained > 0 && appended.sum > retrainAt * trained)
-        retrainIvfPqIndex(spark, path, idCol)
-    }
-  }
-
-  /** Recluster a drifted IVF-PQ index in place, crash-safe like
-    * [[retrainIvfIndex]]: read the index's own stored `__v` vectors,
-    * re-run the full seed-fixed build (coarse k-means + codebook
-    * fits + re-encode) into a sibling scratch, swap it over the live
-    * one. Training from the TRUE vectors — not code reconstructions —
-    * matters precisely in the drift case this exists for: appended
-    * residuals outside the trained codebooks' range clamp to the
-    * nearest code, so reconstructions of drifted data collapse back
-    * toward the stale centroids and a reconstruction-trained rebuild
-    * could never find the new mass. */
-  def retrainIvfPqIndex(spark: SparkSession, path: String,
-      idCol: String): Unit = {
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("ivfpq"),
-      s"$path is not an IVF-PQ index")
-    val idx = spark.read.parquet(path)
-    val scratch = path.stripSuffix("/") + "__retrain"
-    buildIvfPqIndex(idx.select(col(idCol), col("__v")), "__v", idCol,
-      scratch, dims = meta("dims").toString.toInt,
-      nlist = meta("nlist").toString.toInt,
-      m = meta("m").toString.toInt,
-      codeK = meta("codeK").toString.toInt,
-      seed = meta("seed").toString.toLong,
-      trainFraction = meta.get("trainFraction")
-        .map(_.toString.toDouble).getOrElse(1.0))
-    installRebuilt(spark, path, scratch)
   }
 
   /** Exact re-rank over PQ candidates — the standard two-stage ANN
@@ -1373,113 +1051,23 @@ object Similarity {
   /** Persist the SemDeDup clustering as an index, so semantic dedup
     * gets the same incremental cross-corpus story the exact / minhash /
     * LSH-cosine families have: seed-fixed k-means over the
-    * L2-NORMALIZED embeddings (Euclidean k-means on the unit sphere
-    * clusters by direction — the cosine geometry the dedup threshold
-    * lives in), members written as `(idCol, __nv normalized vector,
-    * __c)` partitioned by cluster, centroids persisted in the index
-    * meta so batch assignment needs no Spark-side model object. */
+    * L2-NORMALIZED embeddings, members written as `(idCol, __nv
+    * normalized vector, __c)` partitioned by cluster, centroids
+    * persisted in the index meta so batch assignment needs no
+    * Spark-side model object. Grown by [[appendToIndex]] (the write
+    * half of the incremental loop: dedupe a batch against the index,
+    * append the survivors so the NEXT batch dedupes against them too),
+    * with the centroid lifecycle's retrain on drift. */
   def buildSemanticIndex(df: DataFrame, vecCol: String, idCol: String,
       path: String, k: Int = 64, maxIter: Int = 10, seed: Long = 42L): Unit = {
-    // driver-local seeded fit over a bounded normalized sample +
-    // map-only kernel assignment (r14 optimization — see
-    // [[LocalKMeans]]); the whole build is sample/count + one
-    // distributed pass over the corpus
-    val dims = df.select(size(col(vecCol))).head().getInt(0)
-    val feat = Par.spread(df).select(col(idCol),
-        l2Normalize(col(vecCol)).as("__nv"))
-    val (sample, total) = LocalKMeans.sampleVectors(feat, "__nv", seed)
-    val centroids = LocalKMeans.fit(sample, k, maxIter, seed)
-    feat.withColumn("__c",
-        graft.functions.MiningKernels.nearestCentroid(col("__nv"),
-          centroids.toSeq))
-      .filter(col("__c").isNotNull)
-      .select(col(idCol), col("__nv"), col("__c"))
-      .repartition(col("__c"))
-      .write.mode("overwrite").partitionBy("__c").parquet(path)
-    writeMeta(df.sparkSession, path,
-      Map("kind" -> "semantic", "dims" -> dims, "k" -> k, "seed" -> seed,
-        // drift baseline for appendToSemanticIndex's retrain trigger
-        // (the full corpus count, not the training-sample size)
-        "trainedCount" -> total,
-        "appendedCounts" -> Seq.fill(k)(0L),
-        "centroids" -> centroids.map(_.toSeq).toSeq))
-  }
-
-  /** Grow a [[buildSemanticIndex]] index with a new batch — the write
-    * half of the incremental loop (dedupe the batch against the index,
-    * then append the survivors so the NEXT batch dedupes against them
-    * too): rows normalize and assign to the STORED centroids, append
-    * into the matching `__c=` partitions, and per-cluster tallies
-    * drive the same retrain-on-drift contract as the IVF family —
-    * once appended mass exceeds `retrainAt` × the trained mass, the
-    * clustering refits from the index's own stored normalized vectors
-    * (crash-safe scratch build + swap). Drift matters here as RECALL:
-    * semantic dedup only compares within a cluster, so a batch
-    * distribution the trained centroids don't separate well degrades
-    * candidate quality until a retrain re-partitions the sphere. */
-  def appendToSemanticIndex(df: DataFrame, vecCol: String, idCol: String,
-      path: String, retrainAt: Double = 0.5): Unit = {
-    val spark = df.sparkSession
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("semantic"),
-      s"$path is not a semantic index (buildSemanticIndex)")
-    requireDims(df, vecCol, meta("dims").toString.toInt)
-    val cents = centroidsOf(meta)
-    val norm = df.select(col(idCol), l2Normalize(col(vecCol)).as("__nv"))
-    Scope {
-      val asg = Scope.cache(assignToCentroids(norm, "__nv", idCol, cents))
-      // tally BEFORE the write (see appendToIvfIndex: the commit's
-      // refreshByPath would invalidate a batch whose lineage reads
-      // this index — the standard dedupe-survivors-then-append loop —
-      // and a post-write re-evaluation self-collides to zero)
-      val batch = asg.groupBy("__c").agg(count(lit(1)).as("__n"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      // durability journal — see appendToIvfIndex
-      val (journals, pending) = pendingTallies(spark, path)
-      val myJournal = writeTallyJournal(spark, path, batch)
-      asg.join(norm, col("__id") === col(idCol))
-        .select(col(idCol), col("__nv"), col("__c"))
-        .repartition(col("__c"))
-        .write.mode("append").partitionBy("__c").parquet(path)
-      val prev = appendedCountsOf(meta, cents.size)
-      val appended = cents.indices.map(c =>
-        prev(c) + batch.getOrElse(c, 0L) + pending.getOrElse(c, 0L))
-      val trained = meta.get("trainedCount").map(_.toString.toLong).getOrElse(0L)
-      writeMeta(spark, path, cleanSemanticMeta(meta) +
-        ("appendedCounts" -> appended))
-      clearTallyJournals(spark, journals :+ myJournal)
-      if (trained > 0 && appended.sum > retrainAt * trained)
-        retrainSemanticIndex(spark, path, idCol)
+    val dims = vectorDims(df, vecCol)
+    buildCentroidIndex(df, vecCol, idCol, path, normalize = true, seed) {
+      (sample, total) =>
+        IndexDir.SemanticMeta(dims, k, seed,
+          LocalKMeans.fit(sample, k, maxIter, seed).toSeq, total,
+          Seq.fill(k)(0L))
     }
   }
-
-  /** Recluster a drifted semantic index from its own stored normalized
-    * vectors, crash-safe like [[retrainIvfIndex]]. */
-  def retrainSemanticIndex(spark: SparkSession, path: String,
-      idCol: String): Unit = {
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("semantic"),
-      s"$path is not a semantic index (buildSemanticIndex)")
-    val idx = spark.read.parquet(path)
-    val scratch = path.stripSuffix("/") + "__retrain"
-    // __nv is already L2-normalized; buildSemanticIndex re-normalizes,
-    // which is idempotent on unit vectors
-    buildSemanticIndex(idx.select(col(idCol), col("__nv")), "__nv", idCol,
-      scratch, k = meta("k").toString.toInt,
-      seed = meta("seed").toString.toLong)
-    installRebuilt(spark, path, scratch)
-  }
-
-  /** Meta map with scala-typed values only (the semantic twin of
-    * [[cleanIvfMeta]]). */
-  private def cleanSemanticMeta(meta: Map[String, Any]): Map[String, Any] =
-    Map("kind" -> "semantic",
-      "dims" -> meta("dims").toString.toInt,
-      "k" -> meta("k").toString.toInt,
-      "seed" -> meta("seed").toString.toLong,
-      "trainedCount" -> meta.get("trainedCount")
-        .map(_.toString.toLong).getOrElse(0L),
-      "centroids" -> centroidsOf(meta).map(_.toSeq))
 
   /** Cross-corpus SemDeDup: drop batch rows whose cosine with an
     * indexed corpus member of the SAME k-means cluster reaches
@@ -1490,33 +1078,25 @@ object Similarity {
     *
     * Scale shape (batch-proportional, corpus never re-clustered or
     * re-scanned): batch vectors normalize and assign to the STORED
-    * centroids through the same 64-aggregate pipeline the IVF family
-    * uses, the probe reads ONLY the `__c=` partition directories the
-    * batch assigned into (driver-side path selection over ≤ k ints),
-    * and the exact-cosine verify joins batch×members within matching
-    * clusters only — the n²/k candidate bound. */
+    * centroids through the centroid lifecycle's kernel assignment, the
+    * probe reads ONLY the `__c=` partition directories the batch
+    * assigned into (driver-side path selection over ≤ k ints), and the
+    * exact-cosine verify joins batch×members within matching clusters
+    * only — the n²/k candidate bound. */
   def semanticDedupAgainstIndex(newDf: DataFrame, vecCol: String,
       idCol: String, path: String, threshold: Double): DataFrame = {
     val spark = newDf.sparkSession
-    val meta = readMetaRaw(spark, path)
-    require(meta.get("kind").map(_.toString).contains("semantic"),
-      s"$path is not a semantic index (buildSemanticIndex)")
-    requireDims(newDf, vecCol, meta("dims").toString.toInt)
-    val cents = centroidsOf(meta)
-    val norm = newDf.select(col(idCol).as("__bid"),
-      l2Normalize(col(vecCol)).as("__nv"))
+    val meta = IndexDir.readAs[IndexDir.SemanticMeta](spark, path,
+      "semantic (buildSemanticIndex)")
+    requireDims(newDf, vecCol, meta.dims)
+    val (norm, v) = prepared(newDf.withColumnRenamed(idCol, "__bid"), vecCol,
+      "__bid", normalize = true)
     // checkpointed: the assigned batch feeds the driver-side
-    // cluster collect AND the verify join; its lineage is the
-    // normalize + 64-aggregate assignment pipeline
-    val asgv = Scope.checkpoint(
-      norm.join(assignToCentroids(norm, "__nv", "__bid", cents)
-        .withColumnRenamed("__id", "__bid"), Seq("__bid")))
+    // cluster collect AND the verify join
+    val asgv = Scope.checkpoint(assigned(norm, v, meta.centroids))
     val probed = asgv.select("__c").distinct()
       .collect().map(_.getInt(0)).toSet
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = probed.toSeq.sorted.map(c => new Path(root, s"__c=$c"))
-      .filter(fs.exists(_)).map(_.toString)
+    val dirs = IndexDir.partitions(spark, path, "__c", probed.toSeq.sorted)
     if (dirs.isEmpty) return newDf
     // basePath keeps __c alive for the within-cluster join condition
     val idx = spark.read.option("basePath", path).parquet(dirs: _*)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import graft.ops.IndexDir
 import graft.schema.{ColType, ColumnDef, Registry, TableDef}
 import graft.view.Json
 
@@ -1110,11 +1111,11 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * with cluster width, not file count — a sequential driver loop
     * over a 100-TB warehouse would run for days.
     *
-    * Persisted ANN/text index directories (marked by their
-    * `_graft_index_meta.json` sidecar) are not part of the catalog's
-    * transactional state; with `includeIndexes = true` every index
-    * dir found under the warehouse root is copied too (meta sidecar
-    * written LAST so a torn index copy is never silently probed).
+    * Persisted ANN/text index directories ([[graft.ops.IndexDir]]) are
+    * not part of the catalog's transactional state; with
+    * `includeIndexes = true` every index dir found under the warehouse
+    * root is copied too (meta sidecar written LAST so a torn index copy
+    * is never silently probed).
     * Returns the index directories LEFT BEHIND — callers print them
     * loudly so a later restore's full-corpus re-bootstrap is never a
     * surprise. Indexes living outside the root cannot be discovered
@@ -1137,12 +1138,15 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * whole directory; tally appends rewrite the meta sidecar in
     * place), so neither the same-length skip nor the divergence guard
     * applies to them: an incremental refresh always recopies each
-    * index dir in full, staged into a `.inc-tmp-*` sibling and
-    * rename-swapped in — a standby prober mid-refresh sees the old
-    * index or the new one, never a torn mix of the two. */
+    * index dir in full, staged into its swap scratch and installed
+    * with the index swap ([[graft.ops.IndexDir.install]]) — a standby
+    * prober mid-refresh sees the old index or the new one, never a
+    * torn mix of the two. Like a journaled commit, an index swap a
+    * crash left half done is rolled back before the copy. */
   def backup(destRoot: String, includeIndexes: Boolean = false,
       incremental: Boolean = false): Seq[String] = {
     recoverTransactions() // fold any journaled commit before pinning
+    indexWalk()._2.foreach { case (_, live) => IndexDir.heal(fs(live), live) }
     val destP = new Path(destRoot)
     val dfs = fs(destP)
     require(incremental || !dfs.exists(new Path(destP, "_ROOT")),
@@ -1209,22 +1213,21 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       }
     }
     // INDEX dirs: never skipped, never divergence-checked (retrains
-    // and tally appends mutate them legitimately). A fresh backup
-    // copies them in place (meta sidecar LAST, split out below); an
-    // incremental refresh stages the full recopy in a temp sibling
-    // and rename-swaps it in, so the standby's old index serves until
-    // the new one lands whole.
+    // and tally appends mutate them legitimately). A first copy goes in
+    // place (meta LAST, split out below); a refresh over an existing
+    // copy stages the full recopy in the swap scratch and installs it,
+    // so the standby's old index serves until the new one lands whole.
     val idxSwaps = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
     val idxFilePairs = idxPairs.flatMap { case (src, dst) =>
       val srcFiles = listFilesUnder(src)
       if (srcFiles.isEmpty) throw new java.io.IOException(
         s"backup copy failed: index dir '$src' vanished mid-backup " +
           "(concurrent retrain swap?) — re-run")
+      IndexDir.heal(dfs, dst)
       val stageTo =
-        if (!incremental) dst
+        if (!incremental || !dfs.exists(dst)) dst
         else {
-          val tmp = new Path(dst.getParent,
-            dst.getName + s".inc-tmp-${System.nanoTime()}")
+          val tmp = IndexDir.scratch(dfs, dst)
           idxSwaps += ((tmp, dst))
           tmp
         }
@@ -1232,11 +1235,11 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         (f.toString, new Path(stageTo, relativize(src, f)).toString) }
     }
     // meta-last applies only to in-place index copies; files staged
-    // into a swap sibling are invisible until the rename, so they
+    // into a swap scratch are invisible until the install, so they
     // ride the bulk job whole
     val (metaFiles, bulkFiles) = (snapFilePairs ++ idxFilePairs)
-      .partition(p => p._1.endsWith("/_graft_index_meta.json") &&
-        !idxSwaps.exists { case (tmp, _) => p._2.startsWith(tmp.toString) })
+      .partition(p => IndexDir.isMetaFile(new Path(p._1)) &&
+        !idxSwaps.exists { case (tmp, _) => p._2.startsWith(s"$tmp/") })
     parallelCopy(bulkFiles)
     snapDirs.foreach { case (_, dst) => dfs.mkdirs(dst) } // zero-file snaps
     metaFiles.foreach { case (s, d) => // meta LAST: torn index ≠ probeable
@@ -1245,18 +1248,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
           false, hadoopConf))
         throw new java.io.IOException(s"backup copy failed: $s")
     }
-    idxSwaps.foreach { case (tmp, dst) => // old-or-new, never torn
-      if (dfs.exists(dst)) {
-        val old = new Path(dst.getParent,
-          dst.getName + s".inc-old-${System.nanoTime()}")
-        if (!dfs.rename(dst, old))
-          throw new java.io.IOException(s"failed to retire old index $dst")
-        if (!dfs.rename(tmp, dst))
-          throw new java.io.IOException(s"failed to swap index dir $dst")
-        dfs.delete(old, true)
-      } else if (!dfs.rename(tmp, dst))
-        throw new java.io.IOException(s"failed to swap index dir $dst")
-    }
+    idxSwaps.foreach { case (_, dst) => IndexDir.install(dfs, dst) }
     pinned.foreach { case (t, ptr) =>
       atomicWrite(dfs, new Path(new Path(destP, t), "_CURRENT"),
         ptr.getBytes(StandardCharsets.UTF_8))
@@ -1353,32 +1345,35 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     }
   }
 
-  /** Persisted index directories under the warehouse root, found by
-    * the `_graft_index_meta.json` sidecar every index family writes
-    * (MinHash corpus, LSH/IVF/IVF-PQ/semantic). Bounded walk: three
-    * levels, skipping snapshot dirs and `_`-prefixed internals. */
-  def discoverIndexDirs(): Seq[Path] = {
+  /** Persisted index directories under the warehouse root
+    * ([[graft.ops.IndexDir.isIndex]]: MinHash corpus, LSH/IVF/IVF-PQ/
+    * semantic). Swap siblings are mid-swap state, not live indexes. */
+  def discoverIndexDirs(): Seq[Path] = indexWalk()._1
+
+  /** Index directories under the root, and the swap siblings of index
+    * directories with their live paths. Bounded walk: three levels,
+    * skipping snapshot dirs and `_`-prefixed internals. */
+  private def indexWalk(): (Seq[Path], Seq[(Path, Path)]) = {
     val rootP = new Path(root)
     val fsys = fs(rootP)
-    if (!fsys.exists(rootP)) return Nil
-    def scan(dir: Path, depth: Int): Seq[Path] = {
+    val dirs = mutable.ArrayBuffer.empty[Path]
+    val siblings = mutable.ArrayBuffer.empty[(Path, Path)]
+    def scan(dir: Path, depth: Int): Unit = {
       val st =
-        try fsys.listStatus(dir)
-        catch { case _: java.io.FileNotFoundException => return Nil }
-      if (st.exists(s => s.isFile &&
-          s.getPath.getName == "_graft_index_meta.json")) Seq(dir)
-      else if (depth >= 3) Nil
-      else st.toSeq
-        .filter(s => s.isDirectory &&
-          !s.getPath.getName.startsWith("snap-") &&
-          !s.getPath.getName.startsWith("_") &&
-          // incremental-refresh staging/retired siblings hold a meta
-          // sidecar too but are mid-swap state, not live indexes
-          !s.getPath.getName.contains(".inc-tmp-") &&
-          !s.getPath.getName.contains(".inc-old-"))
-        .flatMap(s => scan(s.getPath, depth + 1))
+        try fsys.listStatus(dir).toSeq
+        catch { case _: java.io.FileNotFoundException => return }
+      if (IndexDir.isIndex(st)) dirs += dir
+      else if (depth < 3) st.foreach { s =>
+        val n = s.getPath.getName
+        if (s.isDirectory && !n.startsWith("snap-") && !n.startsWith("_"))
+          IndexDir.swapLive(fsys, s.getPath) match {
+            case Some(live) => siblings += (s.getPath -> live)
+            case None => scan(s.getPath, depth + 1)
+          }
+      }
     }
-    scan(rootP, 0)
+    if (fsys.exists(rootP)) scan(rootP, 0)
+    (dirs.toSeq, siblings.toSeq)
   }
 
   /** Retained snapshot names for a managed table, oldest first. GC
@@ -1399,7 +1394,10 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * reads WILL fail), `orphan-snapshot` / `stale-tmp` (reclaimable
     * garbage, `bytes` = its size), `unapplied-journal` (a crash before
     * the root swap; the next open rolls it forward), `foreign-lease`
-    * (another live writer). */
+    * (another live writer), `index-meta` (an index meta that does not
+    * parse or breaks its family's invariants), `interrupted-swap` (an
+    * index waiting aside for its missing live dir; the next open heals
+    * it). */
   final case class FsckIssue(table: String, kind: String, path: String,
       detail: String, bytes: Long)
 
@@ -1419,7 +1417,8 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     *
     * `reclaim = true` deletes what is provably garbage — orphan
     * snapshots (same never-the-2-newest grace as gc) and stale tmp
-    * files — and never touches journals, leases, or referenced state.
+    * files — heals interrupted index swaps, and never touches journals,
+    * leases, or referenced state.
     * Returns the findings; empty = clean. */
   def fsck(reclaim: Boolean = false): Seq[FsckIssue] = {
     val issues = scala.collection.mutable.ArrayBuffer.empty[FsckIssue]
@@ -1443,26 +1442,24 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         if (reclaim) rfs.delete(st.getPath, false)
       }
     }
-    // crashed incremental index-refresh staging/retired dirs — same
-    // bounded depth as discoverIndexDirs (they are siblings of index
-    // dirs); provably garbage: a completed refresh deletes both
-    def sweepStaging(dir: Path, depth: Int): Unit = {
-      val st = try rfs.listStatus(dir)
-        catch { case _: java.io.FileNotFoundException => return }
-      st.foreach { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory && (n.contains(".inc-tmp-") ||
-            n.contains(".inc-old-"))) {
-          issues += FsckIssue("", "stale-tmp", s.getPath.toString,
-            "crashed incremental index-refresh staging dir",
-            rfs.getContentSummary(s.getPath).getLength)
-          if (reclaim) rfs.delete(s.getPath, true)
-        } else if (s.isDirectory && depth < 3 &&
-            !n.startsWith("snap-") && !n.startsWith("_"))
-          sweepStaging(s.getPath, depth + 1)
+    // index swap leftovers (a crashed retrain or incremental-backup
+    // refresh): an aside whose live dir is missing is the only complete
+    // copy, so it is healed, never deleted; anything else is garbage
+    val (indexDirs, siblings) = indexWalk()
+    siblings.foreach { case (sib, live) =>
+      if (IndexDir.isAside(sib) && !rfs.exists(live)) {
+        issues += FsckIssue("", "interrupted-swap", sib.toString,
+          "index swap crashed between its renames; the complete index " +
+            s"waits here for $live (the next open or --reclaim restores it)",
+          0L)
+        if (reclaim) IndexDir.heal(rfs, live)
+      } else {
+        issues += FsckIssue("", "stale-tmp", sib.toString,
+          "crashed index swap leftover (retrain or backup index-refresh)",
+          rfs.getContentSummary(sib).getLength)
+        if (reclaim) rfs.delete(sib, true)
       }
     }
-    sweepStaging(rootP, 0)
     val leaseF = new Path(rootP, "_LEASE")
     try {
       val st = rfs.getFileStatus(leaseF)
@@ -1524,83 +1521,13 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         }
       }
     }
-    // persisted index dirs: the meta sidecar must parse AND satisfy
-    // each family's cheap structural invariants (dims present,
-    // centroid count == nlist/k, codebook shape) — a half-written or
-    // hand-edited meta is caught at audit time, not at first probe
-    discoverIndexDirs().foreach { d =>
-      val mf = new Path(d, "_graft_index_meta.json")
-      val ifs = fs(mf)
-      try {
-        val in = ifs.open(mf)
-        val text = try new String(org.apache.commons.io.IOUtils
-          .toByteArray(in), StandardCharsets.UTF_8) finally in.close()
-        val m = new org.yaml.snakeyaml.Yaml()
-          .load[java.util.Map[String, Object]](text)
-        if (m == null)
-          issues += FsckIssue("", "index-meta", mf.toString,
-            "index metadata is empty", 0L)
-        else {
-          def bad(msg: String): Unit =
-            issues += FsckIssue("", "index-meta", mf.toString, msg, 0L)
-          def intOf(k: String): Option[Int] = Option(m.get(k))
-            .flatMap(v => scala.util.Try(v.toString.toInt).toOption)
-          def vecsOf(k: String): Option[Seq[Int]] = m.get(k) match {
-            // the outer list's per-entry SIZES (each entry a vector)
-            case l: java.util.List[_] => Some(l.asScala.toSeq.map {
-              case e: java.util.List[_] => e.size
-              case _ => -1
-            })
-            case _ => None
-          }
-          val dims = intOf("dims")
-          def needCentroids(expectKey: String): Unit =
-            (vecsOf("centroids"), intOf(expectKey)) match {
-              case (None, _) => bad("centroids missing or not a list")
-              case (_, None) => bad(s"'$expectKey' missing")
-              case (Some(cs), Some(n)) =>
-                if (cs.size != n)
-                  bad(s"centroid count ${cs.size} != $expectKey $n")
-                if (dims.exists(dd => cs.exists(_ != dd)))
-                  bad(s"a centroid's width differs from dims ${dims.get}")
-            }
-          Option(m.get("kind")).map(_.toString) match {
-            case None => bad("missing 'kind'")
-            case Some("minhash") =>
-              if (!intOf("numHashes").exists(_ > 0))
-                bad("minhash meta: numHashes missing or non-positive")
-              if (!intOf("numBands").exists(_ > 0))
-                bad("minhash meta: numBands missing or non-positive")
-            case Some("lsh") =>
-              if (!dims.exists(_ > 0)) bad("lsh meta: dims missing")
-              if (!intOf("numPlanes").exists(_ > 0))
-                bad("lsh meta: numPlanes missing or non-positive")
-            case Some("ivf") =>
-              if (!dims.exists(_ > 0)) bad("ivf meta: dims missing")
-              needCentroids("nlist")
-            case Some("semantic") =>
-              if (!dims.exists(_ > 0)) bad("semantic meta: dims missing")
-              needCentroids("k")
-            case Some("ivfpq") =>
-              if (!dims.exists(_ > 0)) bad("ivfpq meta: dims missing")
-              needCentroids("nlist")
-              (vecsOf("codebooks"), intOf("m"), dims) match {
-                case (None, _, _) => bad("codebooks missing or not a list")
-                case (_, None, _) => bad("'m' missing")
-                case (Some(cb), Some(mm), dd) =>
-                  if (cb.size != mm)
-                    bad(s"codebook count ${cb.size} != m $mm")
-                  if (dd.exists(_ % math.max(mm, 1) != 0))
-                    bad(s"dims ${dd.get} not divisible by m $mm")
-              }
-            case Some(k0) => bad(s"unknown index kind '$k0'")
-          }
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          issues += FsckIssue("", "index-meta", mf.toString,
-            s"index metadata unreadable: ${e.getMessage}", 0L)
-      }
+    // persisted index dirs: the meta must parse AND satisfy its
+    // family's structural invariants (IndexDir.parse, the check every
+    // open applies) — a half-written or hand-edited meta is caught at
+    // audit time, not at first probe
+    indexDirs.foreach { d =>
+      IndexDir.problems(fs(d), d).foreach(p =>
+        issues += FsckIssue("", "index-meta", d.toString, p, 0L))
     }
     issues.toSeq
   }

@@ -189,7 +189,7 @@ object EventStream {
           graft.ops.Dedup.minhashDedup(fresh, idCol, textCol, threshold))
         if (!kept.isEmpty) {
           env.view(table, fields).write(kept)
-          graft.ops.Dedup.appendToMinhashIndex(kept, idCol, textCol, indexPath)
+          graft.ops.Similarity.appendToIndex(kept, textCol, idCol, indexPath)
         }
       }
     }
@@ -237,7 +237,8 @@ object EventStream {
         "streaming vector-deduped-merge sink invoked inside a " +
           "transaction: its table write would buffer into a transaction " +
           "the sink never commits, while the index append still lands")
-      val dims = graft.ops.Similarity.indexDims(batch.sparkSession, indexPath)
+      val dims = graft.ops.IndexDir.readAs[graft.ops.IndexDir.SemanticMeta](
+        batch.sparkSession, indexPath, "semantic").dims
       val vecs = batch.filter(col(vecCol).isNotNull)
       graft.ops.Scope {
         val fresh = graft.ops.Similarity.semanticDedupAgainstIndex(
@@ -248,8 +249,7 @@ object EventStream {
         if (!all.isEmpty) {
           env.view(table, fields).write(all)
           if (!kept.isEmpty)
-            graft.ops.Similarity.appendToSemanticIndex(kept, vecCol, idCol,
-              indexPath)
+            graft.ops.Similarity.appendToIndex(kept, vecCol, idCol, indexPath)
         }
       }
     }

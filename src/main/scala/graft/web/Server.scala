@@ -301,10 +301,7 @@ final class Server(env: Env, port: Int = 0) {
         val vecCol = str("vec_col", "embedding")
         val input = env.view(table, Seq(idCol, vecCol)).read()
           .filter(org.apache.spark.sql.functions.col(vecCol).isNotNull)
-        val dims = input.select(org.apache.spark.sql.functions.size(
-            org.apache.spark.sql.functions.col(vecCol))).head(1).headOption
-          .map(_.getInt(0)).getOrElse(throw new IllegalArgumentException(
-            s"no non-null vectors in '$table' to derive dims from"))
+        val dims = graft.ops.Similarity.vectorDims(input, vecCol)
         val benchField = str("bench_field", vecCol)
         val bench = Some(str("bench", "")).filter(_.nonEmpty)
           .map(t => env.view(t, Seq(benchField)).read()

@@ -943,10 +943,10 @@ class CliSpec extends SparkSpec {
     val o = run(conf.toString, "backup", "-f", bdir,
       "--indexes", "--incremental")
     assert(o.contains("backed up"), o)
-    // the swap cleaned up after itself — no staging/retired siblings
+    // the swap cleaned up after itself — no scratch or retired siblings
     val leftovers = java.nio.file.Files.list(java.nio.file.Paths.get(bdir))
       .iterator().asScala.map(_.getFileName.toString)
-      .filter(n => n.contains(".inc-tmp-") || n.contains(".inc-old-")).toSeq
+      .filter(n => n.endsWith("__retrain") || n.endsWith("__old")).toSeq
     assert(leftovers.isEmpty, leftovers.toString)
     // the operator story end-to-end on the standby: fsck --reclaim,
     // then a table read AND an index probe against the refreshed root

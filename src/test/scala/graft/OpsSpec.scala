@@ -467,7 +467,7 @@ class OpsSpec extends SparkSpec {
       val kept1 = Similarity.semanticDedupAgainstIndex(fresh, "embedding",
         "vec_id", dir, threshold = 0.95)
       assert(rows(kept1).map(_.head) == Seq(6000L))
-      Similarity.appendToSemanticIndex(kept1, "embedding", "vec_id", dir,
+      Similarity.appendToIndex(kept1, "embedding", "vec_id", dir,
         retrainAt = Double.MaxValue)
       // batch 2: a near-copy of the APPENDED vector must now be caught
       // (the grown index covers it), a near-copy of an original corpus
@@ -496,7 +496,7 @@ class OpsSpec extends SparkSpec {
       // retrained index still dedupes near-copies of appended rows
       val big = emb.filter(col("vec_id") >= 200 && col("vec_id") < 350)
         .select((col("vec_id") + 9000L).as("vec_id"), col("embedding"))
-      Similarity.appendToSemanticIndex(big, "embedding", "vec_id", dir)
+      Similarity.appendToIndex(big, "embedding", "vec_id", dir)
       assert(meta().get("trainedCount").toString.toLong == 351L,
         meta().toString)
       assert(meta().get("appendedCounts")
@@ -509,7 +509,7 @@ class OpsSpec extends SparkSpec {
         "vec_id", dir, threshold = 0.95)).isEmpty)
       // wrong kind refuses
       intercept[IllegalArgumentException] {
-        Similarity.appendToSemanticIndex(big, "embedding", "vec_id",
+        Similarity.appendToIndex(big, "embedding", "vec_id",
           java.nio.file.Files.createTempDirectory("nosem").toString)
       }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
@@ -647,10 +647,10 @@ class OpsSpec extends SparkSpec {
       for (d <- Seq(frozen, auto))
         Similarity.buildIvfIndex(trained, "embedding", "vec_id", d,
           dims = 4, nlist = 3)
-      Similarity.appendToIvfIndex(batch, "embedding", "vec_id", frozen,
+      Similarity.appendToIndex(batch, "embedding", "vec_id", frozen,
         retrainAt = Double.MaxValue)
       // 150 appended > 0.5 x 200 trained -> auto-retrains inside append
-      Similarity.appendToIvfIndex(batch, "embedding", "vec_id", auto)
+      Similarity.appendToIndex(batch, "embedding", "vec_id", auto)
       val (rFrozen, rAuto) = (recall(frozen), recall(auto))
       assert(rAuto > rFrozen,
         s"retrain did not improve recall: frozen=$rFrozen auto=$rAuto")
@@ -703,7 +703,7 @@ class OpsSpec extends SparkSpec {
     try {
       Similarity.buildIvfIndex(trained, "embedding", "vec_id", dir,
         dims = 4, nlist = 2)
-      Similarity.appendToIvfIndex(batchA, "embedding", "vec_id", dir,
+      Similarity.appendToIndex(batchA, "embedding", "vec_id", dir,
         retrainAt = Double.MaxValue)
       // the happy path cleans up after itself
       assert(journals().isEmpty, journals().map(_.getName))
@@ -729,7 +729,7 @@ class OpsSpec extends SparkSpec {
       // reopen + append 2 rows at retrainAt = 0.6: journal 20 + batch 2
       // = 22 > 0.6 x 30 trained, while 2 alone would never cross — the
       // retrain firing proves the crashed delta was folded back in
-      Similarity.appendToIvfIndex(batchB, "embedding", "vec_id", dir,
+      Similarity.appendToIndex(batchB, "embedding", "vec_id", dir,
         retrainAt = 0.6)
       assert(meta().get("trainedCount").toString.toLong == 52L, metaText())
       assert(meta().get("appendedCounts")
@@ -767,6 +767,48 @@ class OpsSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir + "__old")): Unit
     }
+  }
+
+  test("leading null vector: appends, probes and semantic builds size from the first non-null row") {
+    // with ANSI off Spark sizes a null array as -1, so sizing a batch
+    // from its FIRST row read a leading null as "-1 dims"
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vec_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("embedding",
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.FloatType))))
+    def vdf(rows: Seq[(Long, Seq[Float])]) = s.createDataFrame(
+      rows.map(r => org.apache.spark.sql.Row(r._1, r._2)).asJava, schema)
+    val corpus = vdf((0 until 10).map(i => (i.toLong, Seq(1f, 0.01f * i, 0f, 0f))) ++
+      (0 until 10).map(i => (100L + i, Seq(0.01f * i, 1f, 0f, 0f))))
+    val withNull = vdf(Seq((500L, null), (501L, Seq(0f, 0f, 1f, 0f))))
+    val (ivf, sem) = (java.nio.file.Files.createTempDirectory("nullivf").toString,
+      java.nio.file.Files.createTempDirectory("nullsem").toString)
+    try {
+      Similarity.buildIvfIndex(corpus, "embedding", "vec_id", ivf, dims = 4,
+        nlist = 2)
+      Similarity.appendToIndex(withNull, "embedding", "vec_id", ivf,
+        retrainAt = Double.MaxValue)
+      // the null row carries nothing to index; the vector row lands
+      assert(s.read.parquet(ivf).count() == 21L)
+      // a semantic build from a frame led by a null records the real
+      // width, and a probe with a leading null sizes the same way
+      Similarity.buildSemanticIndex(withNull.unionByName(corpus), "embedding",
+        "vec_id", sem, k = 2)
+      assert(graft.ops.IndexDir.readAs[graft.ops.IndexDir.SemanticMeta](s,
+        sem, "semantic").dims == 4)
+      assert(rows(Similarity.semanticDedupAgainstIndex(
+        vdf(Seq((600L, null), (601L, Seq(1f, 0f, 0f, 0f)))), "embedding",
+        "vec_id", sem, threshold = 0.99)).map(_.head) == Seq(600L))
+      // an empty or all-null frame has no width to record
+      for (df <- Seq(corpus.limit(0), withNull.limit(1))) {
+        val e = intercept[IllegalArgumentException](Similarity
+          .buildSemanticIndex(df, "embedding", "vec_id", sem + "x", k = 2))
+        assert(e.getMessage.contains("no non-null"), e.getMessage)
+      }
+    } finally for (d <- Seq(ivf, sem))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d))
   }
 
   test("IVF ANN: probes read only nprobe centroid partitions, recall holds") {
@@ -1282,10 +1324,10 @@ class OpsSpec extends SparkSpec {
       for (d <- Seq(frozen, auto))
         Similarity.buildIvfPqIndex(trained, "embedding", "vec_id", d,
           dims = 4, nlist = 3, m = 2, codeK = 8)
-      Similarity.appendToIvfPqIndex(batch, "embedding", "vec_id", frozen,
+      Similarity.appendToIndex(batch, "embedding", "vec_id", frozen,
         retrainAt = Double.MaxValue)
       // 150 appended > 0.5 x 200 trained -> auto-retrains inside append
-      Similarity.appendToIvfPqIndex(batch, "embedding", "vec_id", auto)
+      Similarity.appendToIndex(batch, "embedding", "vec_id", auto)
       val (rFrozen, rAuto) = (recall(frozen), recall(auto))
       // frozen: the probed cell holds exactly one tilt parity -> 0.5
       assert(rFrozen == 0.5, s"frozen nprobe=1 rerank recall $rFrozen != 0.5")
@@ -1411,6 +1453,53 @@ class OpsSpec extends SparkSpec {
         "embedding", "vec_id", k = 5))
     assert(e.getMessage.contains("lsh/ivf/ivfpq/semantic") &&
       e.getMessage.contains("mystery"), e.getMessage)
+    // meta text written by earlier builds still opens, probes and
+    // appends: a pre-kind LSH meta (no "kind"), an IVF meta from before
+    // drift tallies, and a centroid value snakeyaml types as a String
+    // (1.23E7: no signed exponent)
+    def writeMeta(dir: String, text: String): Unit = {
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(dir, "_graft_index_meta.json"), text.getBytes)
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(dir, "._graft_index_meta.json.crc"))
+    }
+    val extra = s.createDataFrame(Seq(org.apache.spark.sql.Row(900L,
+      Seq.fill(8)(1.0f))).asJava, schema)
+    def ids(dir: String) = s.read.parquet(dir).select("vec_id").distinct()
+      .collect().map(_.getLong(0)).toSet
+    writeMeta(base + "/lsh",
+      """{"dims": 8, "numPlanes": 64, "bandBits": 16, "buckets": 16, "seed": 42}""")
+    assert(lshRecall(1).forall(_ == 1.0))
+    graft.ops.Similarity.appendToIndex(extra, "embedding", "vec_id", base + "/lsh")
+    assert(ids(base + "/lsh").contains(900L))
+    val cents = graft.ops.IndexDir.readAs[graft.ops.IndexDir.IvfMeta](s,
+      base + "/ivf", "ivf").centroids
+    def ivfMeta(cs: Seq[Seq[Any]]) = """{"kind": "ivf", "dims": 8, "nlist": 2, """ +
+      s""""seed": 42, "centroids": ${cs.map(_.mkString("[", ", ", "]"))
+        .mkString("[", ", ", "]")}}"""
+    writeMeta(base + "/ivf", ivfMeta(cents.map(_.toSeq)))
+    val pre = rows(graft.ops.Similarity.recallAtK(s, base + "/ivf", corpus,
+      "embedding", "vec_id", k = 10, nQueries = 6, nprobe = 2))
+    assert(pre.forall(_(1) == 1.0), pre)
+    graft.ops.Similarity.appendToIndex(extra, "embedding", "vec_id", base + "/ivf")
+    val tallied = graft.ops.IndexDir.readAs[graft.ops.IndexDir.IvfMeta](s,
+      base + "/ivf", "ivf")
+    // no trained baseline: the append is tallied but never retrains
+    assert(tallied.trainedCount == 0L && tallied.appendedCounts.sum == 1L)
+    assert(ids(base + "/ivf").contains(900L))
+    // the far value goes into the (-1)-cluster's centroid, so the
+    // (+1)-cluster cell keeps drawing the all-ones vectors
+    val far = if (cents(0).sum > 0) 1 else 0
+    writeMeta(base + "/ivf", ivfMeta(cents.indices.map(i =>
+      if (i == far) "1.23E7" +: cents(i).toSeq.tail else cents(i).toSeq)))
+    assert(graft.ops.IndexDir.readAs[graft.ops.IndexDir.IvfMeta](s,
+      base + "/ivf", "ivf").centroids(far)(0) == 1.23e7)
+    graft.ops.Similarity.appendToIndex(extra.select((col("vec_id") + 1)
+      .as("vec_id"), col("embedding")), "embedding", "vec_id", base + "/ivf")
+    // both appended rows sit in the one probed cell
+    val hits = rows(graft.ops.Similarity.ivfTopK(s, base + "/ivf", "embedding",
+      "vec_id", Seq.fill(8)(1.0f), 25, nprobe = 1)).map(_.head).toSet
+    assert(hits(900L) && hits(901L), hits)
   }
 
   test("Diff: added/removed/changed verdicts; null-shape changes detected") {

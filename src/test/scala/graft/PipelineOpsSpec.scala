@@ -992,6 +992,45 @@ class PipelineOpsSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
+  test("curateEmbeddings index_update heals an index a crashed retrain left aside") {
+    import graft.ops.{Pipeline, Similarity}
+    val vschema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vec_id",
+        org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("embedding",
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.FloatType))))
+    def mk(rows: Seq[(Long, Seq[Float])]) = s.createDataFrame(rows.map(r =>
+      org.apache.spark.sql.Row(r._1, r._2)).asJava, vschema)
+    val dir = java.nio.file.Files.createTempDirectory("heal-vcurate-")
+    val idx = dir.resolve("semidx")
+    try {
+      val corpus = mk((0 until 5).map(i =>
+        (i.toLong, Seq(1f, 0.01f * i, 0f, 0f))) ++
+        (0 until 5).map(i => (100L + i, Seq(0.01f * i, 1f, 0f, 0f))))
+      Similarity.buildSemanticIndex(corpus, "embedding", "vec_id",
+        idx.toString, k = 2)
+      // a retrain swap that crashed between its two renames: the whole
+      // corpus index sits at idx__old, nothing at idx
+      val aside = dir.resolve("semidx__old")
+      java.nio.file.Files.move(idx, aside)
+      val batch = mk(Seq((200L, Seq(0f, 0f, 1f, 0f)),
+        (201L, Seq(0f, 0f, 0f, 1f))))
+      val (out, _) = Pipeline.run(batch, Pipeline.curateEmbeddings("vec_id",
+        "embedding", dims = 4, semanticK = 2, corpusIndex = Some(idx.toString)),
+        dir.resolve("s1").toString)
+      val kept = rows(out.select("vec_id")).map(_.head.asInstanceOf[Long])
+      assert(kept.toSet == Set(200L, 201L), kept)
+      // the recipe appended to the healed corpus instead of rebuilding
+      // the index from this one batch
+      assert(!java.nio.file.Files.exists(aside))
+      val indexed = rows(s.read.parquet(idx.toString).select("vec_id"))
+        .map(_.head.asInstanceOf[Long]).toSet
+      assert(indexed == ((0L until 5L) ++ (100L until 105L) ++ kept).toSet,
+        indexed)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("Pipeline.resume over kept spills equals the uninterrupted run") {
     import graft.ops.Pipeline
     val env = Testbed.env(spark, "/root/testdata/sf0.001")

@@ -509,34 +509,62 @@ class TxnSpec extends SparkSpec {
       bad.resolve("_graft_index_meta.json"), """{"kind": "hnsw"}""")
     assert(env.warehouse.fsck().exists(i =>
       i.kind == "index-meta" && i.detail.contains("unknown index kind")))
+    // meta text from earlier builds is clean: a pre-kind LSH meta, an
+    // IVF meta without drift tallies, a centroid value snakeyaml types
+    // as a String (1.23E7: no signed exponent)
+    for (text <- Seq(
+        """{"dims": 4, "numPlanes": 8, "bandBits": 4, "buckets": 16, "seed": 42}""",
+        """{"kind": "ivf", "dims": 2, "nlist": 2, "seed": 42,
+          |"centroids": [[0.5, 1.23E7], [1, 0]]}""".stripMargin)) {
+      java.nio.file.Files.writeString(bad.resolve("_graft_index_meta.json"), text)
+      val found = env.warehouse.fsck()
+      assert(!found.exists(_.kind == "index-meta"), s"$text: $found")
+    }
   }
 
   test("fsck reclaims crashed incremental index-refresh staging dirs") {
     val env = freshEnv()
     env.view("country", Seq("name")).write(Seq(Seq("Italy")))
     val root = java.nio.file.Paths.get(env.warehouse.root.stripPrefix("file:"))
-    // a refresh that died between the staged copy and the rename swap
-    // leaves a .inc-tmp sibling (holding a meta sidecar of its own);
-    // a crash between the two renames leaves a .inc-old retiree
-    val tmp = root.resolve("myidx.inc-tmp-42")
-    val old = root.resolve("myidx.inc-old-43")
-    for (d <- Seq(tmp, old)) {
+    val (live, scratch, aside) = (root.resolve("myidx"),
+      root.resolve("myidx__retrain"), root.resolve("myidx__old"))
+    def plant(d: java.nio.file.Path, meta: Boolean): Unit = {
       java.nio.file.Files.createDirectories(d)
-      java.nio.file.Files.writeString(d.resolve("_graft_index_meta.json"),
-        """{"kind": "lsh", "dims": 4, "numPlanes": 8}""")
-      java.nio.file.Files.write(d.resolve("part-0.parquet"),
-        new Array[Byte](32))
+      if (meta) java.nio.file.Files.writeString(d.resolve("_graft_index_meta.json"),
+        """{"kind": "lsh", "dims": 4, "numPlanes": 8, "bandBits": 4,
+          |"buckets": 16, "seed": 42}""".stripMargin)
+      java.nio.file.Files.write(d.resolve("part-0.parquet"), new Array[Byte](32))
     }
+    def exists(d: java.nio.file.Path) = java.nio.file.Files.exists(d)
+    // live index present: a retrain or refresh that died before its
+    // install leaves the scratch (no meta yet), one that died after it
+    // leaves the retired aside
+    plant(live, meta = true); plant(scratch, meta = false); plant(aside, meta = true)
+    // a table whose name merely ends in a sibling suffix is no sibling
+    java.nio.file.Files.createDirectories(root.resolve("notes__old"))
     // mid-swap state must NOT read as a live index (backup --indexes
-    // would otherwise copy the torn staging dir as an index)
-    assert(env.warehouse.discoverIndexDirs().isEmpty)
-    val found = env.warehouse.fsck().filter(i =>
-      i.kind == "stale-tmp" && i.detail.contains("index-refresh"))
-    assert(found.size == 2, found.toString)
-    assert(found.forall(_.bytes > 0), found.toString)
+    // would otherwise copy the torn scratch as an index)
+    assert(env.warehouse.discoverIndexDirs().map(_.getName) == Seq("myidx"))
+    val found = env.warehouse.fsck()
+    assert(found.map(_.kind) == Seq("stale-tmp", "stale-tmp") &&
+      found.forall(_.bytes > 0), found.toString)
     env.warehouse.fsck(reclaim = true)
-    assert(!java.nio.file.Files.exists(tmp) &&
-      !java.nio.file.Files.exists(old))
+    assert(exists(live) && !exists(scratch) && !exists(aside))
+    assert(env.warehouse.fsck().isEmpty)
+    // live missing: a crash between the swap's two renames leaves the
+    // complete old index aside and the complete new one in the scratch.
+    // The aside is the index: fsck reports it, --reclaim heals it and
+    // never deletes it
+    java.nio.file.Files.move(live, aside)
+    plant(scratch, meta = true)
+    assert(env.warehouse.discoverIndexDirs().isEmpty)
+    val torn = env.warehouse.fsck()
+    assert(torn.map(_.kind).sorted == Seq("interrupted-swap", "stale-tmp"),
+      torn.toString)
+    assert(exists(aside) && !exists(live), "the audit must not mutate")
+    env.warehouse.fsck(reclaim = true)
+    assert(exists(live) && !exists(scratch) && !exists(aside))
+    assert(env.warehouse.discoverIndexDirs().map(_.getName) == Seq("myidx"))
     assert(env.warehouse.fsck().isEmpty)
   }
 }
