@@ -3,7 +3,11 @@ package graft.store
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{col, expr, hash, lit, pmod}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types.{StringType, StructType}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import graft.ops.IndexDir
@@ -42,6 +46,14 @@ import graft.view.Json
   *
   * Tables declared `external` read a driver-provided parquet path
   * directly and are never written.
+  *
+  * Reads resolve each file relation once per snapshot: a committed
+  * snapshot directory is immutable, so the relation (file listing and
+  * schema) a read set resolved to is memoized by path and reused with
+  * fresh attribute ids; an external path is memoized against its file
+  * listing and re-resolved when that changes. Pointers buffered in a
+  * transaction are never memoized, and gc drops the entries of the
+  * snapshots it deletes (see `relations`).
   */
 final class Warehouse(val spark: SparkSession, val root: String, val registry: Registry) {
 
@@ -328,22 +340,110 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     registry(t).external.isDefined || readPointer(t).isDefined
 
   /** Key-hash bucket id expression for a bucketed table. */
-  def bucketExpr(td: TableDef): Column =
-    pmod(hash(td.key.map(k => col("`" + k + "`")): _*), lit(td.buckets))
+  def bucketExpr(td: TableDef): Column = bucketOf(td, td.key.map(k => col("`" + k + "`")))
+
+  private def bucketOf(td: TableDef, keys: Seq[Column]): Column =
+    pmod(hash(keys: _*), lit(td.buckets))
+
+  // ------------------------------------------------- relation memo
+
+  /** Resolved file relations, one per read set: the parquet paths a
+    * read names plus the schema it reads them with (None = inferred,
+    * for external tables). Resolving a relation lists its files and,
+    * without a schema, infers one with a Spark job; a memoized
+    * relation is reused through [[Bridge.frame]] with fresh attribute
+    * ids, so later reads of the same set cost neither.
+    *
+    * The keys are exact:
+    *  - a committed snapshot directory never changes (writers build
+    *    the next `snap-<n+1>` and swap the pointer), so its read set
+    *    is keyed by path alone;
+    *  - an external path can change under us, so its entry carries the
+    *    fingerprint (name, length, mtime of every file) it was resolved
+    *    at; each read lists the path once, no Spark job, and a changed
+    *    fingerprint replaces the entry;
+    *  - a pointer buffered inside [[transaction]] is never memoized: a
+    *    rolled-back `snap-<n>` name is reused by the next write.
+    *
+    * An entry leaves when [[gc]] deletes a snapshot it reads or when
+    * its fingerprint changes; there is no size bound beyond that. */
+  private final case class Resolved(fingerprint: Seq[(String, Long, Long)], rel: BaseRelation)
+  private val relations = mutable.HashMap[(Seq[String], Option[StructType]), Resolved]()
+
+  /** Read sets the memo holds (for tests). */
+  private[graft] def memoizedReadSets: Seq[Seq[String]] =
+    relations.synchronized(relations.keys.map(_._1).toSeq)
+
+  /** Every file under `paths` (globs expanded, as the parquet reader
+    * does) with its length and mtime: one recursive listing. */
+  private def fingerprint(paths: Seq[String]): Seq[(String, Long, Long)] =
+    paths.flatMap { p =>
+      val path = new Path(p)
+      val fsys = fs(path)
+      val out = mutable.Buffer[(String, Long, Long)]()
+      Option(fsys.globStatus(path)).toSeq.flatten.foreach { root =>
+        val it = fsys.listFiles(root.getPath, true)
+        while (it.hasNext) {
+          val st = it.next()
+          out += ((st.getPath.toString, st.getLen, st.getModificationTime))
+        }
+      }
+      out.sorted
+    }
+
+  /** A frame over `paths` read with `schema` (None = infer), through
+    * the memo unless `memo` is false. The fingerprint is taken before
+    * the relation is resolved, so a change racing the resolve makes
+    * the next read re-resolve, never reuse a stale listing. */
+  private def scan(paths: Seq[String], schema: Option[StructType], memo: Boolean): DataFrame = {
+    def resolve(): DataFrame = schema match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+    if (!memo) return resolve()
+    val key = (paths, schema)
+    val fp = if (schema.isEmpty) fingerprint(paths) else Nil
+    relations.synchronized(relations.get(key)) match {
+      case Some(r) if r.fingerprint == fp => Bridge.frame(spark, r.rel)
+      case _ =>
+        val df = resolve()
+        Bridge.fileRelation(df).foreach(rel =>
+          relations.synchronized(relations(key) = Resolved(fp, rel)))
+        df
+    }
+  }
+
+  /** A frame over snapshot directories of `t` (relative to its table
+    * dir), memoized unless `t`'s pointer is buffered in this thread's
+    * transaction. */
+  private def scanSnapshot(t: String, dirs: Seq[String]): DataFrame = {
+    val txn = txnLocal.get()
+    scan(dirs.map(d => qualified(new Path(tableDir(t), d))),
+      Some(registry(t).sparkSchema), memo = (txn eq null) || !txn.contains(t))
+  }
+
+  private def qualified(p: Path): String = fs(p).makeQualified(p).toString
+
+  /** Drop memo entries that read anything under a deleted directory. */
+  private def forgetUnder(dir: Path): Unit = {
+    val prefix = qualified(dir)
+    relations.synchronized(relations.filterInPlace { case ((paths, _), _) =>
+      !paths.exists(p => p == prefix || p.startsWith(prefix + "/"))
+    })
+  }
 
   /** Read the live snapshot of a table (schema-correct empty frame if
     * the table has never been written). */
   def read(t: String): DataFrame = {
     val td = registry(t)
     td.external match {
-      case Some(path) => alignExternal(td, spark.read.parquet(path))
+      case Some(path) =>
+        alignExternal(td, scan(Seq(qualified(new Path(path))), None, memo = true))
       case None if td.buckets > 0 => readBuckets(t, None)
       case None if td.useIndex.equalsIgnoreCase("brin") => readZones(t, None)
       case None =>
         currentSnap(t) match {
-          case Some(snap) =>
-            spark.read.schema(td.sparkSchema)
-              .parquet(new Path(tableDir(t), snap).toString)
+          case Some(snap) => scanSnapshot(t, Seq(snap))
           case None => empty(td)
         }
     }
@@ -363,20 +463,19 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
           case None => m.buckets
         }
         if (entries.isEmpty) empty(td)
-        else spark.read.schema(td.sparkSchema)
-          .parquet(entries.values.map(rel =>
-            new Path(tableDir(t), rel).toString).toSeq: _*)
+        else scanSnapshot(t, entries.values.toSeq.sorted)
     }
   }
 
   /** Bucket ids of every combination of the given per-key-column
-    * point sets (ordered like `td.key`), evaluated through the SAME
-    * [[bucketExpr]] Catalyst expression the writer clusters with —
-    * one local one-row-per-combo job, so driver-side arithmetic can
-    * never drift from the executor hash. The read-side analogue of
-    * the write path's bucket pruning: a point read on a 1024-bucket
-    * table opens ONE bucket directory instead of 1024. Callers cap
-    * the combination count ([[graft.view.View]] uses 64). */
+    * point sets (ordered like `td.key`), evaluated on the driver over
+    * typed literals through the SAME bucket expression the writer
+    * clusters with ([[bucketExpr]]: Murmur3 `hash` modulo the bucket
+    * count), so the ids can never drift from the executor hash and no
+    * Spark job runs. The read-side analogue of the write path's bucket
+    * pruning: a point read on a 1024-bucket table opens ONE bucket
+    * directory instead of 1024. Callers cap the combination count
+    * ([[graft.view.View]] uses 64). */
   def bucketIds(t: String, keyPoints: Seq[Seq[Any]]): Set[Int] = {
     val td = registry(t)
     require(td.buckets > 0, s"Table '$t' is not bucketed")
@@ -386,14 +485,10 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       acc.flatMap(c => ps.map(c :+ _)))
     if (combos.isEmpty || keyPoints.exists(_.isEmpty)) Set.empty
     else {
-      val schema = org.apache.spark.sql.types.StructType(td.key.map(k =>
-        org.apache.spark.sql.types.StructField(k,
-          td.columnMap(k).ctype.spark.getOrElse(
-            org.apache.spark.sql.types.StringType), true)))
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(combos.map(Row.fromSeq), 1), schema)
-      df.select(bucketExpr(td).cast("int").as("b"))
-        .collect().map(_.getInt(0)).toSet
+      val types = td.key.map(k => td.columnMap(k).ctype.spark.getOrElse(StringType))
+      Bridge.evalConstants(spark, combos.map(combo => bucketOf(td,
+        combo.zip(types).map { case (v, dt) => Bridge.column(Literal.create(v, dt)) })))
+        .map(_.asInstanceOf[Int]).toSet
     }
   }
 
@@ -536,9 +631,12 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
     val acc = mutable.Map[String, (Any, Any)]()
+    // plain read options: building them from the Hadoop conf copies
+    // every property, which cost more than the footer read itself
+    val opts = org.apache.parquet.ParquetReadOptions.builder().build()
     for (f <- files) {
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hadoopConf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hadoopConf), opts)
       try {
         for (b <- rd.getFooter.getBlocks.asScala; c <- cols) {
           val cc = b.getColumns.asScala.find(_.getPath.toDotString == c)
@@ -642,8 +740,8 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * column falls inside the batch's range for that column, so the
     * disjoint carried zones cannot duplicate a merged key. */
   def writeZones(t: String, df: DataFrame,
-      replaced: Map[String, Brin.Bounds], newMaxId: Long): Unit =
-    writeZonedImpl(t, df, Some(replaced), Some(newMaxId))
+      replaced: Map[String, Brin.Bounds], knownMaxId: Option[Long]): Unit =
+    writeZonedImpl(t, df, Some(replaced), knownMaxId)
 
   /** `cluster`: optional clustering expression overriding the default
     * leading-key order (the z-order compaction path); `setZOrder`:
@@ -797,8 +895,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       case None => empty(td)
       case Some(m) if m.zones.isEmpty =>
         // empty table (no zones written) or legacy plain snapshot
-        spark.read.schema(td.sparkSchema)
-          .parquet(new Path(tableDir(t), m.snap).toString)
+        scanSnapshot(t, Seq(m.snap))
       case Some(m) =>
         val selected = bounds match {
           case Some(b) if b.exists(_._2.isEmpty) => Nil // provably empty
@@ -806,16 +903,18 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
           case None => m.zones
         }
         if (selected.isEmpty) empty(td)
-        else spark.read.schema(td.sparkSchema)
-          .parquet(selected.map(z => new Path(tableDir(t), z.dir).toString): _*)
+        else scanSnapshot(t, selected.map(_.dir))
     }
   }
 
   /** Partial write of a bucketed table: `df` holds the new content of
     * `affected` buckets only; all other buckets carry over by
-    * reference. `newMaxId` advances the id high-water mark. */
-  def writeBuckets(t: String, df: DataFrame, affected: Set[Int], newMaxId: Long): Unit =
-    writeBucketed(t, df, Some(affected), Some(newMaxId))
+    * reference. `knownMaxId` advances the id high-water mark (None =
+    * read it from the written files; it never goes below the previous
+    * mark). */
+  def writeBuckets(t: String, df: DataFrame, affected: Set[Int],
+      knownMaxId: Option[Long]): Unit =
+    writeBucketed(t, df, Some(affected), knownMaxId)
 
   private def writeBucketed(t: String, df: DataFrame, affected: Option[Set[Int]],
       knownMaxId: Option[Long]): Unit = {
@@ -963,7 +1062,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         .filter(_.getName.startsWith("snap-"))
         .sortBy(_.getName.stripPrefix("snap-").toLong)
       val doomed = snaps.dropRight(2).filterNot(p => keep(p.getName))
-      doomed.foreach(p => fsys.delete(p, true))
+      doomed.foreach { p => forgetUnder(p); fsys.delete(p, true) }
     }
   }
 
@@ -1511,7 +1610,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
             issues += FsckIssue(t, "orphan-snapshot", p.toString,
               "referenced by nothing (crashed write or suppressed gc)",
               tfs.getContentSummary(p).getLength)
-            if (reclaim) tfs.delete(p, true)
+            if (reclaim) { forgetUnder(p); tfs.delete(p, true) }
           }
         }
         entries.filter(_.getName.startsWith("_CURRENT.tmp-")).foreach { p =>

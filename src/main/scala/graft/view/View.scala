@@ -153,9 +153,9 @@ final class View(val env: Env, tableName: String, fieldSpecs: Seq[(String, Strin
           else {
             val sets = pts.map(_.get)
             if (sets.map(_.size.toLong).product > 64L) None
-            // pruning is IO elision: any evaluation hiccup (an exotic
-            // key type the local Row build can't represent) must widen
-            // the read, never break it
+            // pruning is IO elision: any evaluation hiccup (a key value
+            // its column's literal type can't represent) must widen the
+            // read, never break it
             else try Some(env.warehouse.bucketIds(table.name, sets))
             catch { case scala.util.control.NonFatal(_) => None }
           }

@@ -10,6 +10,7 @@ import graft.Env
 import graft.expr.{Args, QueryBuilder}
 import graft.ops.Scope
 import graft.schema.{ColType, ColumnDef}
+import org.apache.spark.sql.graft.Bridge
 
 /** The write path: normalization → coercion → FK resolution → merge
   * (insert/update toggles, write filters with new-vs-old semantics,
@@ -50,9 +51,13 @@ object Write {
       case m: ColType.M2O => Some(m)
       case _ => None
     }
-    /** Single non-dotted field on an M2O column = write fk by id
-      * (tanker view.py:233-236). */
-    def byId: Boolean = items.size == 1 && !items.head._1.desc.contains(".")
+    /** A single field naming the M2O column itself, or its dotted
+      * path to the FK target column (`cust.c_custkey` for an M2O on
+      * `c_custkey`), writes the fk by id (tanker view.py:233-236). */
+    def byId: Boolean = items.size == 1 && m2o.exists { m =>
+      val d = items.head._1.desc
+      !d.contains(".") || d.split("\\.", 2)(1) == m.col
+    }
   }
 
   private def c(name: String): Column = col("`" + name + "`")
@@ -124,7 +129,11 @@ object Write {
           s"Row has ${r.size} values for ${fields.size} fields")
         Row.fromSeq(r.zip(types).map { case (value, t) => Coerce.to(value, t) } :+ idx.toLong)
       }
-      env.spark.createDataFrame(coerced.asJava, schema)
+      // a local batch has a known size: one partition per
+      // [[RowsPerTask]] rows, so a small batch resolves and dedupes in
+      // one task with no shuffle (a single partition is already
+      // clustered on any key)
+      env.spark.createDataFrame(coerced.asJava, schema).coalesce(tasksFor(rows.size))
     }
 
     data match {
@@ -192,14 +201,14 @@ object Write {
           df = df.drop(tails.indices.map(kName): _*)
           out += fkName -> g.col.name
         case Some(m2o) => // fk given by id: emulate the FK constraint
+          // an existence (semi) join against the parent's column: no
+          // distinct over the parent, and a row never multiplies
           val (_, i) = g.items.head
-          val refName = s"__ref$gi"
-          val remote = env.warehouse.read(m2o.table)
-            .select(c(m2o.col).as(refName)).distinct()
-          df = df.join(remote, c(s"__f$i") === c(refName), "left")
-          checks += ((anyNonNull && c(refName).isNull, sample,
+          val known = c(s"__f$i").isin(env.warehouse.read(m2o.table).select(c(m2o.col)))
+          val unknown = s"__unknown$gi"
+          df = df.withColumn(unknown, anyNonNull && !(known <=> lit(true)))
+          checks += ((c(unknown), sample,
             s"""are not known in table "${m2o.table}""""))
-          df = df.drop(refName)
           out += s"__f$i" -> g.col.name
         case None =>
           out += s"__f${g.items.head._2}" -> g.col.name
@@ -219,34 +228,42 @@ object Write {
     (withSamples, checks.toSeq)
   }
 
-  /** Normalized, coerced, FK-resolved, key-checked, key-deduped batch.
-    * All violations (unknown FK values, null key columns) surface via
-    * a single Spark action. The resolved frame behind it is cached in
-    * the caller's [[graft.ops.Scope]], so the staging+FK-resolve
-    * subplan is computed ONCE: the validation probe below is the cache's
-    * materializing action, and the dedupe plus every downstream
-    * reference (bucket set, write filters, merge join, insert
-    * anti-join) read from the cache instead of re-running staging
-    * (previously the validation action ran the full resolve subplan
-    * and the batch's first consumer ran it AGAIN — two passes over
-    * the raw batch per write; guide §1.2). */
-  private def prepare(v: View, groups: Seq[Group], data: Any): DataFrame = {
+  /** Normalized, coerced, FK-resolved, key-checked, key-deduped batch,
+    * cached in the caller's [[graft.ops.Scope]]. All violations
+    * (unknown FK values, null key columns) surface via one Spark
+    * action, and that action is also what materializes the cache.
+    *
+    * Validation is PRE-dedupe, as in the reference: a bad row raises
+    * even when a later row with the same key would supersede it. The
+    * dedupe aggregate therefore carries, per key, the flags of the last
+    * bad row next to the winning payload, and the probe looks for a
+    * key with such a sample — one cache instead of a cached pre-dedupe
+    * frame plus a cached deduped one. */
+  private def prepare(v: View, groups: Seq[Group], data: Any): (DataFrame, Option[Long]) = {
     val env = v.env
     val keyCols = v.keyCols
-    val (resolved0, checks) = resolve(env, v, groups, stage(env, v, data))
-    val resolved = Scope.cache(resolved0)
+    val (resolved, checks) = resolve(env, v, groups, stage(env, v, data))
     // Violations: unknown FKs (view.py:700-711) + null key values (tmp
-    // key columns are NOT NULL, view.py:306-318) — one action for all
-    // (validation is PRE-dedupe, as in the reference: a bad row raises
-    // even when a later row with the same key would supersede it).
+    // key columns are NOT NULL, view.py:306-318)
     val nullKey = keyCols.map(k => c(k).isNull).reduce(_ || _)
-    val bad = resolved
-      .filter(nullKey || (if (checks.isEmpty) lit(false)
-        else expr("exists(__vflags, f -> f = 'true')")))
-      .select(c("__vflags") +: c("__vsamples") +: keyCols.map(c): _*)
-      .limit(1).collect()
-    if (bad.nonEmpty) {
-      val row = bad.head
+    val bad = nullKey || (if (checks.isEmpty) lit(false)
+      else expr("exists(__vflags, f -> f = 'true')"))
+    // Dedupe on key, last occurrence wins (one row per key per batch):
+    // max_by on the unique `__seq`, a partial-aggregable hash aggregate.
+    val payload = resolved.columns
+      .filter(cn => cn != "__vflags" && cn != "__vsamples" && cn != "__seq")
+    val deduped = Scope.cache(resolved
+      .groupBy(keyCols.map(c): _*)
+      .agg(max_by(struct(payload.map(c): _*), c("__seq")).as("__r"),
+        max_by(struct(c("__vflags"), c("__vsamples")), when(bad, c("__seq")))
+          .as("__bad"))
+      .select(payload.map(cn => col(s"__r.`$cn`").as(cn)) :+ c("__bad"): _*))
+    // one job over every partition, at most one sample from each (a
+    // limit would scan one partition first and then the rest)
+    val badRow = deduped.filter(c("__bad").isNotNull)
+      .select(col("__bad.__vflags"), col("__bad.__vsamples"))
+      .rdd.mapPartitions(_.take(1)).collect()
+    badRow.headOption.foreach { row =>
       val flags = row.getSeq[String](0)
       val samples = row.getSeq[String](1)
       val fkHit = flags.indexWhere(_ == "true")
@@ -255,16 +272,7 @@ object Write {
       throw new IllegalArgumentException(
         s"Null value in key column when writing on table '${v.table.name}'")
     }
-    // Dedupe on key, last occurrence wins (one row per key per batch):
-    // max_by on the unique `__seq` — same winner as the previous
-    // row_number window (order by __seq desc, rn = 1) but a partial-
-    // aggregable hash aggregate instead of a shuffle + full sort.
-    val payload = resolved.columns
-      .filter(cn => cn != "__vflags" && cn != "__vsamples" && cn != "__seq")
-    resolved
-      .groupBy(keyCols.map(c): _*)
-      .agg(max_by(struct(payload.map(c): _*), c("__seq")).as("__r"))
-      .select(payload.map(cn => col(s"__r.`$cn`").as(cn)): _*)
+    (deduped.drop("__bad"), Bridge.cachedRows(deduped))
   }
 
   // -------------------------------------------------------- write filters
@@ -302,6 +310,15 @@ object Write {
     b.join(failing, keyCols, "left_anti")
   }
 
+  /** Rows a write hands one task: a local batch is staged in one
+    * partition per this many rows, and [[assignIds]] sorts one key
+    * range per this many rows. A batch this small is one partition
+    * and one range, which needs no dedupe shuffle, no range sampling
+    * job and no per-range counts job. */
+  private val RowsPerTask = 100000L
+
+  private def tasksFor(rows: Long): Int = ((rows + RowsPerTask - 1) / RowsPerTask).max(1L).toInt
+
   /** Deterministic surrogate ids without a single-task window.
     *
     * `Window.orderBy(key)` with no partition funnels the whole insert
@@ -312,26 +329,43 @@ object Write {
     * `maxId + partitionOffset + localRank` per partition. A row's id
     * is its global key-rank regardless of where the range boundaries
     * fall, so ids are deterministic across runs and retries (keys are
-    * unique after the batch dedupe). Returns the frame and the new id
-    * high-water mark (maxId + batch size).
+    * unique after the batch dedupe).
+    *
+    * The number of ranges follows the measured batch size
+    * (`batchRows`, an upper bound on `df`'s rows; None = unknown):
+    * one range per [[RowsPerTask]] rows, at most the shuffle
+    * partition count. One range has offset 0 and needs no counts, so
+    * its ids are assigned in the same pass that consumes them and the
+    * new high-water mark is left to the store, which reads it from
+    * the written files. Returns the frame and the new high-water mark
+    * (maxId + inserted rows) when it is known.
     */
   private def assignIds(env: Env, df: DataFrame, keyCols: Seq[String],
-      maxId: Long): (DataFrame, Long) = {
-    // cache the sorted RDD: it is consumed twice (count pass + assign
-    // pass) and the range-partition shuffle + sort should run once
-    val rdd = Scope.cache(df.repartitionByRange(keyCols.map(c): _*)
-      .sortWithinPartitions(keyCols.map(c): _*).rdd)
-    val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-      Iterator((i, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
+      maxId: Long, batchRows: Option[Long]): (DataFrame, Option[Long]) = {
+    val maxRanges = env.spark.conf.get("spark.sql.shuffle.partitions").toLong
+    val ranges = batchRows.fold(maxRanges)(n => tasksFor(n).toLong.min(maxRanges)).toInt
+    val sorted = df.repartitionByRange(ranges, keyCols.map(c): _*)
+      .sortWithinPartitions(keyCols.map(c): _*).rdd
+    val (rdd, offsets, hwm) =
+      if (ranges == 1) (sorted, Array(0L), None)
+      else {
+        // cache the sorted RDD: it is consumed twice (count pass +
+        // assign pass) and the range-partition shuffle + sort should
+        // run once
+        val rdd = Scope.cache(sorted)
+        val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
+          Iterator((i, it.size.toLong))
+        }.collect().sortBy(_._1).map(_._2)
+        val offsets = counts.scanLeft(0L)(_ + _)
+        (rdd, offsets, Some(maxId + offsets.last))
+      }
     val withIds = rdd.mapPartitionsWithIndex { case (i, it) =>
       var n = maxId + offsets(i)
       it.map { row => n += 1; Row.fromSeq(row.toSeq :+ n) }
     }
     val schema = StructType(df.schema.fields :+
       StructField("id", LongType, nullable = false))
-    (env.spark.createDataFrame(withIds, schema), maxId + offsets.last)
+    (env.spark.createDataFrame(withIds, schema), hwm)
   }
 
   /** Encoded [min, max] of every batch key column, or None for an
@@ -369,7 +403,8 @@ object Write {
     val keyCols = v.keyCols
     val argv = Args(env, args, kwargs)
 
-    var b = Scope.cache(prepare(v, groups, data))
+    val (prepared, batchRows) = prepare(v, groups, data)
+    var b = prepared
 
     // Bucket pruning: when the table is key-hash bucketed and the
     // merge is keyed on the natural key (and purge doesn't need the
@@ -451,8 +486,9 @@ object Write {
     // (max(id) + rank in key order: deterministic, no
     // monotonically_increasing_id in stored data) and column defaults.
     // The high-water mark comes from Warehouse.maxId — manifest-
-    // tracked, so no full scan per batch.
-    var newMaxId = -1L
+    // tracked, so no full scan per batch. When the new one is not
+    // known here, the store derives it from the written files.
+    var newMaxId: Option[Long] = None
     val result =
       if (!insert) updated
       else {
@@ -461,7 +497,7 @@ object Write {
           if (mapped("id")) newRows0
           else {
             val maxId = env.warehouse.maxId(t.name)
-            val (assigned, hwm) = assignIds(env, newRows0, keyCols, maxId)
+            val (assigned, hwm) = assignIds(env, newRows0, keyCols, maxId, batchRows)
             newMaxId = hwm
             assigned
           }
@@ -476,18 +512,13 @@ object Write {
       }
 
     (affected, zoneBounds) match {
-      case (Some(bs), _) =>
-        val hwm = if (newMaxId >= 0) newMaxId else env.warehouse.maxId(t.name)
-        env.warehouse.writeBuckets(t.name, result, bs, hwm)
-      case (None, Some(zb)) =>
-        val hwm = if (newMaxId >= 0) newMaxId else env.warehouse.maxId(t.name)
-        env.warehouse.writeZones(t.name, result, zb, hwm)
+      case (Some(bs), _) => env.warehouse.writeBuckets(t.name, result, bs, newMaxId)
+      case (None, Some(zb)) => env.warehouse.writeZones(t.name, result, zb, newMaxId)
       case _ =>
         // maxId is exact (old max + inserts) unless purge may have
         // removed the previous max row — then let the store re-derive
         // it from the written snapshot (id-column-only read).
-        val hwm = if (newMaxId >= 0 && deleted == 0) Some(newMaxId) else None
-        env.warehouse.write(t.name, result, hwm)
+        env.warehouse.write(t.name, result, newMaxId.filter(_ => deleted == 0))
     }
     WriteResult(filtered, deleted)
   }
@@ -522,7 +553,7 @@ object Write {
         val groups = groupFields(v)
         validateKey(v, groups.map(_.col.name).toSet)
         val keyCols = v.keyCols
-        val bKeys = prepare(v, groups, data).select(keyCols.map(c): _*)
+        val bKeys = prepare(v, groups, data)._1.select(keyCols.map(c): _*)
         // bucket-pruned delete: only buckets holding batch keys can
         // lose rows (not with swap — that deletes everywhere else)
         if (t.buckets > 0 && !swap && keyCols == t.key) {
@@ -532,7 +563,7 @@ object Write {
           val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
           val removed = slice.count() - keptSlice.count()
           env.warehouse.writeBuckets(t.name, keptSlice, bs,
-            env.warehouse.maxId(t.name))
+            Some(env.warehouse.maxId(t.name)))
           return removed
         }
         // zone-pruned delete: only zones overlapping the batch's key
@@ -545,7 +576,7 @@ object Write {
               val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
               val removed = slice.count() - keptSlice.count()
               env.warehouse.writeZones(t.name, keptSlice, zb,
-                env.warehouse.maxId(t.name))
+                Some(env.warehouse.maxId(t.name)))
               return removed
             case None => return 0L // empty batch deletes nothing
           }

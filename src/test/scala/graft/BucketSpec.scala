@@ -116,6 +116,50 @@ class BucketSpec extends SparkSpec {
     assert(rows(pt).size == 1)
   }
 
+  test("bucket ids hash on the driver exactly like the writer, for every key type") {
+    import java.time.{Instant, LocalDate, LocalDateTime}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{StructField, StructType}
+    val cases: Seq[(String, Seq[Any])] = Seq(
+      "varchar" -> Seq("c7", "", "ü€", "x" * 40),
+      "bigint" -> Seq(0L, 7L, -3L, Long.MaxValue),
+      "integer" -> Seq(0, 7, -3, Int.MinValue),
+      "float" -> Seq(0.0, 1.5, -2.25, 1e300),
+      "bool" -> Seq(true, false),
+      "date" -> Seq(LocalDate.of(1970, 1, 1), LocalDate.of(2024, 2, 29)),
+      "timestamp" -> Seq(LocalDateTime.of(2024, 2, 29, 12, 30, 1, 5000)),
+      "timestamptz" -> Seq(Instant.parse("2024-02-29T12:30:01.000005Z")))
+    for ((decl, values) <- cases) {
+      val yaml = s"- table: k\n  columns:\n    key: $decl\n    n: bigint\n" +
+        s"    other: integer\n  key: [key, other]\n  buckets: 16\n"
+      val env = Env(spark, Registry.fromYaml(yaml),
+        Files.createTempDirectory("graft-bkt-").toString)
+      env.createTables()
+      val td = env.registry("k")
+      // the ids the old one-job-per-read path computed
+      val schema = StructType(td.key.map(k => StructField(k, td.columnMap(k).ctype.spark.get)))
+      val combos = values.flatMap(v => Seq(Seq(v, 1), Seq(v, -9)))
+      val viaJob = combos.map(c => spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row.fromSeq(c)), 1), schema)
+        .select(env.warehouse.bucketExpr(td).cast("int")).head().getInt(0)).toSet
+      val (viaDriver, jobs) = jobsDuring(
+        env.warehouse.bucketIds("k", Seq(values, Seq(1, -9))))
+      assert(viaDriver == viaJob, decl)
+      assert(jobs == 0, s"$decl: bucketIds ran $jobs jobs")
+      // and a point read finds each row in the bucket the writer chose
+      val v = env.view("k", Seq("key", "other", "n"))
+      v.write(values.zipWithIndex.map { case (x, i) => Seq(x, 1, i.toLong) })
+      values.zipWithIndex.foreach { case (x, i) =>
+        val (df, buildJobs) = jobsDuring(
+          v.read(Seq(graft.view.FilterEq(Map("key" -> x, "other" -> 1)))))
+        assert(buildJobs == 0, s"$decl: building a pruned point read ran $buildJobs jobs")
+        assert(rows(df).map(_(2)) == Seq(i.toLong), s"$decl $x")
+        assert(df.inputFiles.map(_.replaceAll(".*/__b=(\\d+)/.*", "$1")).toSet.size == 1,
+          s"$decl $x: a point read opens one bucket")
+      }
+    }
+  }
+
   test("schema yaml round-trips buckets") {
     val (env, root) = bEnv()
     val env2 = Env.introspect(spark, root)

@@ -153,4 +153,84 @@ class ReadSpec extends SparkSpec {
     check(Seq(Seq("Blue"), Seq("Blue"), Seq("Red")),
       env.view("team", Seq("name")).read(disableAcl = true))
   }
+
+  // ------------------------------------------------- relation memo
+
+  /** External nation/customer parquet tables plus a managed account
+    * table with an fk into customer (the tanker crud shape). */
+  private def externalEnv(): (Env, java.nio.file.Path) = {
+    import graft.schema.{ColumnDef, Registry, TableDef}
+    import graft.schema.ColType._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ext-")
+    val nation = dir.resolve("nation").toString
+    val customer = dir.resolve("customer").toString
+    spark.createDataFrame(Seq(Row(1, "France"), Row(2, "Peru")).asJava,
+      StructType(Seq(StructField("n_nationkey", IntegerType), StructField("n_name", StringType))))
+      .write.parquet(nation)
+    spark.createDataFrame(Seq(Row(10L, "Ann", 1), Row(11L, "Bob", 2)).asJava,
+      StructType(Seq(StructField("c_custkey", LongType), StructField("c_name", StringType),
+        StructField("c_nationkey", IntegerType)))).write.parquet(customer)
+    val reg = Registry(
+      TableDef("nation", Seq(ColumnDef("n_nationkey", IntegerT), ColumnDef("n_name", VarcharT)),
+        key = Seq("n_nationkey"), external = Some(nation)),
+      TableDef("customer", Seq(ColumnDef("c_custkey", BigIntT), ColumnDef("c_name", VarcharT),
+        ColumnDef("c_nationkey", M2O("nation", "n_nationkey", IntegerType))),
+        key = Seq("c_custkey"), external = Some(customer)),
+      TableDef.normalized("account", Seq(ColumnDef("acct", BigIntT),
+        ColumnDef("cust", M2O("customer", "c_custkey", LongType))), key = Seq("acct")))
+    val env = Env(spark, reg, dir.resolve("wh").toString)
+    env.createTables()
+    env.view("account", Seq("acct", "cust.c_name")).write(Seq(Seq(1L, "Ann"), Seq(2L, "Bob")))
+    (env, dir)
+  }
+
+  test("a repeated read over two external tables infers no schema again") {
+    val (env, _) = externalEnv()
+    val fields = Seq("acct", "cust.c_name", "cust.c_nationkey.n_name")
+    // a fresh warehouse instance: building the frame resolves (and
+    // infers the schema of) both external tables once
+    val fresh = Env(spark, env.registry, env.warehouse.root)
+    val (_, first) = jobsDuring(fresh.view("account", fields).read())
+    assert(first == 2, s"first build ran $first jobs")
+    val (df, again) = jobsDuring(
+      fresh.view("account", fields).read(Seq("(= acct {})"), args = Seq(2L)))
+    assert(again == 0, s"a repeated build ran $again jobs")
+    check(Seq(Seq(2L, "Bob", "Peru")), df)
+  }
+
+  test("an external table rewritten in place is read anew") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val (env, dir) = externalEnv()
+    val v = env.view("nation", Seq("n_nationkey", "n_name"))
+    check(Seq(Seq(1, "France"), Seq(2, "Peru")), v.read())
+    val byName = env.view("customer", Seq("c_name", "c_nationkey.n_name"))
+    check(Seq(Seq("Bob", "Peru")), byName.read(Seq("(= c_custkey 11)")))
+    spark.createDataFrame(Seq(Row(1, "France"), Row(2, "Chile"), Row(3, "Chad")).asJava,
+      StructType(Seq(StructField("n_nationkey", IntegerType), StructField("n_name", StringType))))
+      .write.mode("overwrite").parquet(dir.resolve("nation").toString)
+    check(Seq(Seq(1, "France"), Seq(2, "Chile"), Seq(3, "Chad")), v.read())
+    check(Seq(Seq("Bob", "Chile")), byName.read(Seq("(= c_custkey 11)")))
+  }
+
+  test("a table joined twice, and an external table joined to itself, read exactly") {
+    val env = freshEnv()
+    // licensee joins country twice: directly and through member.team
+    env.view("licensee", Seq("country.name", "member.registration_code"))
+      .write(Seq(Seq("Belgium", "003")))
+    val fields = Seq("country.name", "member.name", "member.team.country.name")
+    for (_ <- 1 to 2)
+      check(Seq(Seq("Belgium", "Trudy", "France")), env.view("licensee", fields).read())
+    val (ext, _) = externalEnv()
+    val c = ext.warehouse.read("customer")
+    val same = ext.warehouse.read("customer")
+    val pairs = c.as("a").join(same.as("b"),
+      org.apache.spark.sql.functions.col("a.c_nationkey") === org.apache.spark.sql.functions.col("b.c_nationkey"))
+      .select("a.c_name", "b.c_name")
+    check(Seq(Seq("Ann", "Ann"), Seq("Bob", "Bob")), pairs)
+  }
 }

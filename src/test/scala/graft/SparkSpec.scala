@@ -80,6 +80,30 @@ abstract class SparkSpec extends AnyFunSuite {
 
   def rows(df: DataFrame): Seq[Seq[Any]] = df.collect().map(_.toSeq).toSeq
 
+  /** Run `body` and count the Spark jobs it started: they carry a job
+    * group of their own (Spark hands it to the threads that run query
+    * stages), and the listener bus is drained before counting. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, n.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Run `op` and assert it left nothing materialized: no persistent
     * RDD created while it ran survives it, and the SQL CacheManager is
     * empty. RDDs are compared by id, because the suites of one test

@@ -286,6 +286,54 @@ class TxnSpec extends SparkSpec {
     assert(Set[Any]("Italy", "Spain", "Malta").subsetOf(got), got.toString)
   }
 
+  test("a rolled-back snapshot name reused by the next write reads the new rows") {
+    val env = freshEnv(seedTeams = false)
+    val v = env.view("country", Seq("name"))
+    var buffered = ""
+    intercept[RuntimeException] {
+      env.transaction {
+        v.write(Seq(Seq("Ghost")))
+        buffered = env.warehouse.currentManifest("country").get.snap
+        assert(rows(v.read()).map(_.head).contains("Ghost"))
+        throw new RuntimeException("boom")
+      }
+    }
+    v.write(Seq(Seq("Italy")))
+    assert(env.warehouse.currentManifest("country").get.snap == buffered,
+      "the next write reuses the rolled-back snapshot name")
+    val got = rows(v.read()).map(_.head).toSet
+    assert(got.contains("Italy") && !got.contains("Ghost"), got.toString)
+  }
+
+  test("gc leaves no memoized relation over a deleted snapshot") {
+    val yaml =
+      """- table: plain
+        |  columns:
+        |    k: varchar
+        |  key: [k]
+        |- table: bk
+        |  columns:
+        |    k: varchar
+        |  key: [k]
+        |  buckets: 4
+        |""".stripMargin
+    val root = java.nio.file.Files.createTempDirectory("graft-memo-gc-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(yaml), root)
+    env.createTables()
+    for (t <- Seq("plain", "bk"); i <- 1 to 5) {
+      env.view(t, Seq("k")).write(Seq(Seq(s"k$i")))
+      assert(rows(env.view(t, Seq("k")).read()).size == i)
+    }
+    val sets = env.warehouse.memoizedReadSets
+    assert(sets.nonEmpty)
+    val fsys = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (set <- sets; p <- set)
+      assert(fsys.exists(new org.apache.hadoop.fs.Path(p)), s"memo entry over deleted $p")
+    // the live state is what the memo serves
+    for (t <- Seq("plain", "bk"))
+      assert(sets.exists(_.exists(_.contains(s"/$t/snap-"))), t)
+  }
+
   test("backup: the copy is a functional warehouse with the txn's cut") {
     val env = freshEnv()
     // multi-table txn first: the pinned catalog must carry BOTH sides

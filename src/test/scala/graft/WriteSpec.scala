@@ -104,13 +104,86 @@ class WriteSpec extends SparkSpec {
 
   test("null key rejected") { // write_test.py:276-291
     val env = freshEnv()
-    for (bogus <- Seq(null, Long.box(0L), "", "0")) {
-      intercept[Exception] {
-        env.view("team", Seq("name", "country")).write(Seq(Seq("Pink", bogus)))
+    def rejects(fields: Seq[String], bogus: Any, why: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        env.view("team", fields).write(Seq(Seq("Pink", bogus)))
       }
-      intercept[Exception] {
-        env.view("team", Seq("name", "country.name")).write(Seq(Seq("Pink", bogus)))
+      assert(e.getMessage.contains(why), s"$fields <- $bogus: ${e.getMessage}")
+    }
+    val nullKey = "Null value in key column"
+    val unknown = "not known in table"
+    // by id: a null fk is a null key column, 0 names no country, and
+    // "" is no number at all
+    rejects(Seq("name", "country"), null, nullKey)
+    rejects(Seq("name", "country"), Long.box(0L), unknown)
+    rejects(Seq("name", "country"), "0", unknown)
+    rejects(Seq("name", "country"), "", "For input string")
+    // through the dotted path: an all-null tuple resolves to a null fk
+    for (bogus <- Seq(Long.box(0L), "", "0")) rejects(Seq("name", "country.name"), bogus, unknown)
+    rejects(Seq("name", "country.name"), null, nullKey)
+    assert(rows(env.view("team", Seq("name")).read(Seq("""(= name "Pink")"""))).isEmpty)
+  }
+
+  test("write fk by id: a known id lands and reads back through the dotted path") {
+    val env = freshEnv()
+    val holland = env.view("country", Seq("id"))
+      .readOne(Seq("""(= name "Holland")""")).get.getLong(0)
+    env.view("team", Seq("name", "country")).write(Seq(Seq("Orange", holland)))
+    check(Seq(Seq("Orange", "Holland")),
+      env.view("team", Seq("name", "country.name")).read(Seq("""(= name "Orange")""")))
+    // an update by id moves the row's fk and keeps its identity
+    val id = env.view("team", Seq("id")).readOne(Seq("""(= name "Red")""")).get.getLong(0)
+    val france = env.view("country", Seq("id"))
+      .readOne(Seq("""(= name "France")""")).get.getLong(0)
+    val belgium = env.view("country", Seq("id"))
+      .readOne(Seq("""(= name "Belgium")""")).get.getLong(0)
+    env.view("team", Seq("id", "country")).write(Seq(Seq(id, france)))
+    check(Seq(Seq(id, "Red", "France")),
+      env.view("team", Seq("id", "name", "country.name")).read(Seq("""(= name "Red")""")))
+    assert(belgium != france)
+  }
+
+  test("write fk by id: an unknown id raises") {
+    val env = freshEnv()
+    val e = intercept[IllegalArgumentException] {
+      env.view("team", Seq("name", "country")).write(Seq(Seq("Orange", 424242L)))
+    }
+    assert(e.getMessage.contains("not known in table"), e.getMessage)
+    assert(e.getMessage.contains("424242"), e.getMessage)
+    assert(rows(env.view("team", Seq("name")).read(Seq("""(= name "Orange")"""))).isEmpty)
+  }
+
+  test("a dotted write whose tail is the fk target column writes by id") {
+    // the fixture's fks target `id`; this schema's fk targets a natural key
+    val yaml =
+      """- table: customer
+        |  columns:
+        |    c_custkey: bigint
+        |    c_name: varchar
+        |  key: [c_custkey]
+        |- table: account
+        |  columns:
+        |    acct: bigint
+        |    cust: m2o customer.c_custkey
+        |    tier: integer
+        |  key: [acct]
+        |""".stripMargin
+    val root = java.nio.file.Files.createTempDirectory("graft-fkid-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(yaml), root)
+    env.createTables()
+    env.view("customer", Seq("c_custkey", "c_name"))
+      .write(Seq(Seq(7L, "Ann"), Seq(8L, "Bob")))
+    env.view("account", Seq("acct", "cust.c_custkey", "tier"))
+      .write(Seq(Seq(1L, 7L, 1), Seq(2L, 8L, 2)))
+    // the raw m2o column takes the same remote key
+    env.view("account", Seq("acct", "cust", "tier")).write(Seq(Seq(3L, 7L, 3)))
+    check(Seq(Seq(1L, "Ann", 1), Seq(2L, "Bob", 2), Seq(3L, "Ann", 3)),
+      env.view("account", Seq("acct", "cust.c_name", "tier")).read())
+    for (fk <- Seq("cust", "cust.c_custkey")) {
+      val e = intercept[IllegalArgumentException] {
+        env.view("account", Seq("acct", fk, "tier")).write(Seq(Seq(4L, 99L, 4)))
       }
+      assert(e.getMessage.contains("not known in table"), s"$fk: ${e.getMessage}")
     }
   }
 
@@ -237,6 +310,24 @@ class WriteSpec extends SparkSpec {
         .map(r => r.head -> r(1)).toMap
     }
     assert(idMap() == idMap())
+  }
+
+  test("surrogate ids follow the key rank across several id ranges") {
+    // a batch past one task's worth of rows is range-partitioned and
+    // counted per range; ids must still be maxId + global key rank
+    val root = java.nio.file.Files.createTempDirectory("graft-ids-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      "- table: big\n  columns:\n    k: bigint\n  key: [k]\n"), root)
+    env.createTables()
+    val v = env.view("big", Seq("k"))
+    v.write(Seq(Seq(-1L), Seq(-2L)))
+    val n = 250000L
+    // keys arrive scrambled: rank order is not input order
+    v.write(spark.range(n).selectExpr("(id * 7919) % 250000 as k"))
+    assert(env.warehouse.maxId("big") == n + 2)
+    val bad = env.view("big", Seq("k", "id")).read(Seq("(>= k 0)"))
+      .filter("id != k + 3").count()
+    assert(bad == 0)
   }
 
   test("maxId comes from the manifest, not a table scan") {
