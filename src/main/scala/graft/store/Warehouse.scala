@@ -13,6 +13,7 @@ import scala.jdk.CollectionConverters._
 import graft.ops.IndexDir
 import graft.schema.{ColType, ColumnDef, Registry, TableDef}
 import graft.view.Json
+import Warehouse.{Manifest, Zone}
 
 /** Parquet-snapshot storage: one dataset per table under a warehouse
   * root, with atomic snapshot swap on write.
@@ -21,28 +22,28 @@ import graft.view.Json
   * Layout per managed table:
   *
   * {{{
-  *   <root>/_ROOT                       root catalog: table -> pointer
+  *   <root>/_ROOT                       root catalog: table -> manifest
   *   <root>/<table>/snap-<n>/           parquet (immutable once current)
   *   <root>/<table>/snap-<n>/__b=<k>/   key-hash bucket dirs (bucketed)
-  *   <root>/<table>/_CURRENT            per-table mirror (see below)
+  *   <root>/<table>/snap-<n>/__z=<k>/   range-cluster zone dirs (brin)
   * }}}
   *
-  * Unbucketed `_CURRENT` holds the live snap name. Bucketed tables
-  * (`buckets: N` in the schema) hold a JSON manifest instead:
-  * `{"snap": ..., "maxId": ..., "buckets": {"3": "snap-7/__b=3", ...}}`
-  * — each bucket points at the snapshot that last rewrote it, so a
-  * merge touching 2 of 1024 buckets writes 2 directories and reuses
-  * the other 1022 by reference. That is the 100-TB merge path: write
-  * cost scales with the batch's key footprint, not the table size.
+  * `_ROOT` is the only pointer file. It maps each table to a JSON
+  * manifest: `{"snap": ..., "maxId": ..., "buckets": {"3": "snap-7/__b=3",
+  * ...}}`, plus `zones` for brin tables. A bucketed table's manifest
+  * points each bucket at the snapshot that last rewrote it, so a merge
+  * touching 2 of 1024 buckets writes 2 directories and reuses the
+  * other 1022 by reference. That is the 100-TB merge path: write cost
+  * scales with the batch's key footprint, not the table size.
   *
   * Writers build the next `snap-<n+1>` in full, then install its
-  * pointer into `_ROOT` — a single-file swap, so readers see either
+  * manifest into `_ROOT` — a single-file replace, so readers see either
   * the old or the new state, never a mix (object-store friendly: no
   * directory rename). Matches the reference's per-write transaction
   * boundary, and [[transaction]] gives the cross-write
   * commit/rollback analogue (tanker/context.py:238-248): buffered
-  * pointers applied as ONE root swap behind a roll-forward journal —
-  * atomic multi-table visibility.
+  * manifests applied as ONE root replace behind a roll-forward journal
+  * — atomic multi-table visibility.
   *
   * Tables declared `external` read a driver-provided parquet path
   * directly and are never written.
@@ -57,41 +58,24 @@ import graft.view.Json
   */
 final class Warehouse(val spark: SparkSession, val root: String, val registry: Registry) {
 
-  /** One range-cluster of a brin table's snapshot: directory (relative
-    * to the table dir) + encoded min/max of the leading key column
-    * ([[Brin.encode]]; None = the zone holds only null keys), plus
-    * `extra` — min/max of the remaining key columns and the surrogate
-    * `id` (postgres BRIN indexes the whole key; in an append-mostly
-    * table id correlates with the leading key, so id-bounded reads
-    * prune too). */
-  final case class Zone(dir: String, lo: Option[Any], hi: Option[Any],
-      extra: Map[String, (Option[Any], Option[Any])] = Map())
-
-  /** Bucketed-table manifest: per-bucket pointers + the id high-water
-    * mark (so surrogate-id assignment never scans the full table).
-    * Brin tables instead carry `zones` — the range-cluster zone map. */
-  final case class Manifest(snap: String, maxId: Long, buckets: Map[Int, String],
-      zones: Seq[Zone] = Nil, zorder: Seq[String] = Nil)
+  type Manifest = Warehouse.Manifest
 
   private val hadoopConf = spark.sparkContext.hadoopConfiguration
 
   private def fs(p: Path): FileSystem = p.getFileSystem(hadoopConf)
   private def tableDir(t: String) = new Path(root, t)
-  private def currentFile(t: String) = new Path(tableDir(t), "_CURRENT")
 
-  /** Root catalog: ONE file mapping table -> pointer content, swapped
+  /** Root catalog: ONE file mapping table -> manifest, replaced
     * atomically on every commit — so a multi-table transaction becomes
-    * visible in a single swap and a concurrent reader can never
-    * observe a partial commit (the prefix-visibility window the
-    * per-table-pointer design had). Per-table `_CURRENT` files remain
-    * as MIRRORS: written after each root swap for legacy layouts and
-    * catalog-less introspection, never authoritative once `_ROOT`
-    * exists. Root read-modify-write is serialized by a JVM-wide
-    * per-root lock — correct for any single-driver deployment (all
-    * Warehouse writes are driver-coordinated). A SECOND driver
-    * process attempting to write the same root is refused loudly by
-    * the `_LEASE` writer lease ([[ensureLease]]) instead of losing
-    * updates; read-only processes are unaffected. */
+    * visible in a single replace and a concurrent reader can never
+    * observe a partial commit. It is the only pointer store: every
+    * reader resolves a table through it ([[currentManifest]]). Root
+    * read-modify-write is serialized by a JVM-wide per-root lock —
+    * correct for any single-driver deployment (all Warehouse writes
+    * are driver-coordinated). A SECOND driver process attempting to
+    * write the same root is refused loudly by the `_LEASE` writer
+    * lease ([[ensureLease]]) instead of losing updates; read-only
+    * processes are unaffected. */
   private def rootFile = new Path(root, "_ROOT")
   private def rootLock: Object = Warehouse.lockFor(root)
 
@@ -113,10 +97,11 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * catalog stays memoized). */
   private def rootMemo = Warehouse.memoFor(root)
 
-  /** table -> pointer content from the root catalog; empty when the
-    * warehouse predates the catalog (readers then fall back to the
-    * per-table mirrors, which ARE authoritative for a legacy layout). */
-  private def readRoot(): Map[String, String] = {
+  /** table -> manifest from the root catalog, each manifest parsed
+    * once per catalog read; empty only when no `_ROOT` exists yet. A
+    * catalog that does not parse raises, naming the file: read as
+    * empty, it would make every table look unwritten. */
+  private def readRoot(): Map[String, Manifest] = {
     val f = rootFile
     val fsys = fs(f)
     val status =
@@ -137,47 +122,33 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
                 (exact || System.currentTimeMillis - seen >
                   Warehouse.RootFreshnessMs) => m
           case _ =>
-            try {
-              val in = fsys.open(f)
-              val text = try new String(
-                org.apache.commons.io.IOUtils.toByteArray(in),
-                StandardCharsets.UTF_8) finally in.close()
-              val y = new org.yaml.snakeyaml.Yaml()
-                .load[java.util.Map[String, Object]](text)
-              val parsed =
-                if (y == null) Map[String, String]()
-                else y.asScala.map { case (k, v) => k -> v.toString }.toMap
-              // a re-read that finds the SAME (mtime, length) keeps the
-              // original install time, so the entry ages into
-              // servability even under sustained sub-freshness-interval
-              // reads (resetting `seen` would re-parse forever)
-              val seen0 = rootMemo.get() match {
-                case Some((mt0, len0, _, _, s0))
-                    if mt0 == st.getModificationTime &&
-                      len0 == st.getLen => s0
-                case _ => System.currentTimeMillis
-              }
-              rootMemo.set(Some((st.getModificationTime, st.getLen, parsed,
-                false, seen0)))
-              parsed
-            } catch { case scala.util.control.NonFatal(_) => Map() }
+            val parsed = Warehouse.parseCatalog(fsys, f)
+            // a re-read that finds the SAME (mtime, length) keeps the
+            // original install time, so the entry ages into
+            // servability even under sustained sub-freshness-interval
+            // reads (resetting `seen` would re-parse forever)
+            val seen0 = rootMemo.get() match {
+              case Some((mt0, len0, _, _, s0))
+                  if mt0 == st.getModificationTime &&
+                    len0 == st.getLen => s0
+              case _ => System.currentTimeMillis
+            }
+            rootMemo.set(Some((st.getModificationTime, st.getLen, parsed,
+              false, seen0)))
+            parsed
         }
     }
   }
 
-  /** Install `entries` into the root catalog as ONE atomic swap, then
-    * refresh the touched `_CURRENT` mirrors. The root swap is the
-    * commit point; a crash mid-mirror is healed by the transaction
-    * journal replay ([[recoverTransactions]]) or simply ignored
-    * (readers resolve through the root first). */
-  private def commitPointers(entries: collection.Seq[(String, String)]): Unit =
+  /** Install `entries` into the root catalog as ONE atomic replace —
+    * the commit point, and the only pointer file a commit writes. */
+  private def commitPointers(entries: collection.Seq[(String, Manifest)]): Unit =
     rootLock.synchronized {
       val f = rootFile
       val fsys = fs(f)
       ensureLease(fsys)
       val merged = readRoot() ++ entries
-      atomicWrite(fsys, f,
-        Json.write(merged).getBytes(StandardCharsets.UTF_8))
+      replaceFile(fsys, f, Warehouse.catalogBytes(merged))
       // refresh the memo under the lock: same-process readers see the
       // new catalog without re-parsing (and never a stale one)
       try {
@@ -185,7 +156,6 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         rootMemo.set(Some((st.getModificationTime, st.getLen, merged, true,
           System.currentTimeMillis)))
       } catch { case scala.util.control.NonFatal(_) => rootMemo.set(None) }
-      entries.foreach { case (t, content) => writeMirror(t, content) }
     }
 
   /** Writer lease: `_LEASE` under the root names the ONE process
@@ -207,9 +177,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     def readHolder(): Option[(String, Long)] =
       try {
         val st = fsys.getFileStatus(f)
-        val in = fsys.open(f)
-        val h = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          StandardCharsets.UTF_8).trim finally in.close()
+        val h = Warehouse.readText(fsys, f).trim
         Some((h, System.currentTimeMillis - st.getModificationTime))
       } catch { case _: java.io.FileNotFoundException => None }
     def refuse(h: String, age: Long): Nothing = throw new IllegalStateException(
@@ -258,86 +226,20 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     }
   }
 
-  private def writeMirror(t: String, content: String): Unit = {
-    val f = currentFile(t)
-    atomicWrite(fs(f), f, content.getBytes(StandardCharsets.UTF_8))
-  }
-
-  private def readPointer(t: String): Option[String] = {
-    // in-txn reads see the buffered (uncommitted) pointer first —
-    // read-your-writes inside graft.store.Warehouse.transaction
+  /** A table's live manifest: the one buffered in this thread's
+    * [[transaction]] (read-your-writes), else the root catalog's. A
+    * table the catalog lacks is unwritten — unless it still has a
+    * pre-catalog pointer, which [[createTables]] must migrate first. */
+  def currentManifest(t: String): Option[Manifest] = {
     val txn = txnLocal.get()
     if ((txn ne null) && txn.contains(t)) return Some(txn(t))
-    readRoot().get(t).orElse {
-      // legacy layout or table not yet written through the catalog
-      val f = currentFile(t)
-      val fsys = fs(f)
-      if (!fsys.exists(f)) None
-      else {
-        val in = fsys.open(f)
-        try Some(new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          StandardCharsets.UTF_8).trim)
-        finally in.close()
-      }
-    }
+    val m = readRoot().get(t)
+    if (m.isEmpty) Warehouse.refuseLegacy(fs(tableDir(t)), tableDir(t))
+    m
   }
-
-  private def currentSnap(t: String): Option[String] =
-    readPointer(t).map { p =>
-      if (p.startsWith("{")) parseManifest(p).snap else p
-    }
-
-  def currentManifest(t: String): Option[Manifest] =
-    readPointer(t).map { p =>
-      if (p.startsWith("{")) parseManifest(p)
-      else Manifest(p, -1L, Map())
-    }
-
-  private def parseManifest(text: String): Manifest = {
-    val y = new org.yaml.snakeyaml.Yaml()
-    val m = y.load[java.util.Map[String, Object]](text).asScala
-    val buckets = m.get("buckets").map(
-      _.asInstanceOf[java.util.Map[String, Object]].asScala.map {
-        case (k, v) => k.toInt -> v.toString
-      }.toMap).getOrElse(Map[Int, String]())
-    // yaml numbers load as Integer/Long/Double; normalize to the
-    // Brin encoding families (Long | Double | String)
-    def bound(v: Object): Option[Any] = Option(v).map {
-      case i: java.lang.Integer => i.longValue()
-      case l: java.lang.Long => l.longValue()
-      case d: java.lang.Double => d.doubleValue()
-      case other => other.toString
-    }
-    val zones = m.get("zones").map(
-      _.asInstanceOf[java.util.List[java.util.Map[String, Object]]].asScala
-        .map { z =>
-          val extra = Option(z.get("cols")).map(
-            _.asInstanceOf[java.util.Map[String, java.util.List[Object]]]
-              .asScala.map { case (c, lh) =>
-                c -> (bound(lh.get(0)), bound(lh.get(1)))
-              }.toMap).getOrElse(Map[String, (Option[Any], Option[Any])]())
-          Zone(z.get("dir").toString, bound(z.get("lo")), bound(z.get("hi")),
-            extra)
-        }.toSeq).getOrElse(Nil)
-    val zorder = m.get("zorder").map(
-      _.asInstanceOf[java.util.List[Object]].asScala.map(_.toString).toSeq)
-      .getOrElse(Nil)
-    Manifest(m("snap").toString, m("maxId").toString.toLong, buckets, zones,
-      zorder)
-  }
-
-  private def manifestJson(m: Manifest): String =
-    Json.write(Map("snap" -> m.snap, "maxId" -> m.maxId,
-      "buckets" -> m.buckets.map { case (k, v) => k.toString -> v }) ++
-      (if (m.zones.isEmpty) Map() else Map("zones" -> m.zones.map(z =>
-        Map("dir" -> z.dir, "lo" -> z.lo.orNull, "hi" -> z.hi.orNull) ++
-          (if (z.extra.isEmpty) Map() else Map("cols" -> z.extra.map {
-            case (c, (lo, hi)) => c -> Seq(lo.orNull, hi.orNull)
-          }))))) ++
-      (if (m.zorder.isEmpty) Map() else Map("zorder" -> m.zorder)))
 
   def exists(t: String): Boolean =
-    registry(t).external.isDefined || readPointer(t).isDefined
+    registry(t).external.isDefined || currentManifest(t).isDefined
 
   /** Key-hash bucket id expression for a bucketed table. */
   def bucketExpr(td: TableDef): Column = bucketOf(td, td.key.map(k => col("`" + k + "`")))
@@ -442,8 +344,8 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       case None if td.buckets > 0 => readBuckets(t, None)
       case None if td.useIndex.equalsIgnoreCase("brin") => readZones(t, None)
       case None =>
-        currentSnap(t) match {
-          case Some(snap) => scanSnapshot(t, Seq(snap))
+        currentManifest(t) match {
+          case Some(m) => scanSnapshot(t, Seq(m.snap))
           case None => empty(td)
         }
     }
@@ -492,19 +394,8 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     }
   }
 
-  /** Surrogate-id high-water mark: manifest-tracked (no scan);
-    * max-scan only for a legacy plain-string pointer. */
-  def maxId(t: String): Long = {
-    val td = registry(t)
-    currentManifest(t) match {
-      case Some(m) if m.maxId >= 0 => m.maxId
-      case None => 0L
-      case Some(_) => // legacy plain pointer: derive once by scan
-        if (!td.columnMap.contains("id")) 0L
-        else Option(read(t).agg(org.apache.spark.sql.functions.max(col("id")))
-          .head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    }
-  }
+  /** Surrogate-id high-water mark, tracked by the manifest (no scan). */
+  def maxId(t: String): Long = currentManifest(t).map(_.maxId).getOrElse(0L)
 
   /** External files keep their own schema, with one repair: columns a
     * registry declares as timestamps but the file stores as INT64
@@ -531,8 +422,8 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       spark.sparkContext.emptyRDD[Row], td.sparkSchema)
 
   private def nextSnapName(t: String): String =
-    "snap-" + (currentSnap(t) match {
-      case Some(s) => s.stripPrefix("snap-").toLong + 1
+    "snap-" + (currentManifest(t) match {
+      case Some(m) => m.snap.stripPrefix("snap-").toLong + 1
       case None => 0L
     })
 
@@ -578,8 +469,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         else maxIdOfWritten(fs(dir), Seq(dir),
           spark.read.schema(td.sparkSchema).parquet(dir.toString))
       }
-      swapPointer(t, manifestJson(Manifest(next, maxIdNow, Map())))
-      gc(t, keep = Set(next))
+      install(t, Manifest(next, maxIdNow, Map()))
     }
   }
 
@@ -694,6 +584,20 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         .getOrElse((None, None))).toMap)
   }
 
+  /** Rows in `t`'s live state, summed from the parquet footers of the
+    * leaf directories a read of the whole table scans: no Spark job and
+    * no data read. */
+  def liveRows(t: String): Long = currentManifest(t).fold(0L) { m =>
+    val leaves = (m.buckets.values ++ m.zones.map(_.dir)).toSeq
+    val opts = org.apache.parquet.ParquetReadOptions.builder().build()
+    (if (leaves.isEmpty) Seq(m.snap) else leaves).map(new Path(tableDir(t), _))
+      .flatMap(d => partFiles(fs(d), d)).map { f =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hadoopConf), opts)
+        try rd.getRecordCount finally rd.close()
+      }.sum
+  }
+
   /** Data part files directly under `dir` (no recursion). */
   private def partFiles(fsys: FileSystem, dir: Path): Seq[Path] =
     fsys.listStatus(dir).map(_.getPath).filter { p =>
@@ -783,7 +687,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     val nZones = replaced match {
       case None => fullZones
       case Some(b) => currentManifest(t).map(_.zones) match {
-        // legacy/empty zone list: the "slice" was the whole table
+        // no zones yet (empty table): the "slice" was the whole table
         case None => fullZones
         case Some(zs) if zs.isEmpty => fullZones
         case Some(zs) => math.max(1, zs.count(z => zoneOverlaps(z, zkey, b)))
@@ -861,9 +765,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       case None => knownMaxId.getOrElse(statMaxId)
     }
     val zorder = setZOrder.getOrElse(prev.map(_.zorder).getOrElse(Nil))
-    swapPointer(t, manifestJson(Manifest(next, maxIdNow, Map(), allZones,
-      zorder)))
-    gc(t, keep = allZones.map(_.dir.split("/")(0)).toSet + next)
+    install(t, Manifest(next, maxIdNow, Map(), allZones, zorder))
     // auto-compaction: every narrow merge adds ~1 zone (and pins its
     // snap dir against gc), so a long-lived append-mostly table would
     // otherwise fragment without bound and rely on a MANUAL compact().
@@ -894,7 +796,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     currentManifest(t) match {
       case None => empty(td)
       case Some(m) if m.zones.isEmpty =>
-        // empty table (no zones written) or legacy plain snapshot
+        // empty table: no zones written
         scanSnapshot(t, Seq(m.snap))
       case Some(m) =>
         val selected = bounds match {
@@ -948,15 +850,14 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
           new Path(tableDir(t), rel)),
         spark.read.schema(td.sparkSchema).parquet(dir.toString))
     }.max(prev.map(_.maxId).getOrElse(0L))
-    swapPointer(t, manifestJson(Manifest(next, maxIdNow, buckets)))
-    gc(t, keep = buckets.values.map(_.split("/")(0)).toSet + next)
+    install(t, Manifest(next, maxIdNow, buckets))
   }
 
   // ------------------------------------------------- cross-write txn
 
-  /** Thread-local buffer of pending pointer swaps: table -> manifest
-    * content. Non-null only inside [[transaction]]. */
-  private val txnLocal = new ThreadLocal[mutable.LinkedHashMap[String, String]]()
+  /** Thread-local buffer of pending commits: table -> manifest.
+    * Non-null only inside [[transaction]]. */
+  private val txnLocal = new ThreadLocal[mutable.LinkedHashMap[String, Manifest]]()
 
   /** Is the CURRENT thread inside [[transaction]]? Sinks that commit
     * on other threads (streaming foreachBatch) guard on this: a write
@@ -980,7 +881,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * commit. Nested transactions raise. */
   def transaction[A](body: => A): A = {
     require(txnLocal.get() == null, "Nested transactions are not supported")
-    val buf = mutable.LinkedHashMap[String, String]()
+    val buf = mutable.LinkedHashMap[String, Manifest]()
     txnLocal.set(buf)
     val res =
       try body
@@ -990,8 +891,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       val j = new Path(root, s"_TXN-${System.nanoTime()}")
       val fsys = fs(j)
       val out = fsys.create(j, true)
-      try out.write(Json.write(buf.toMap).getBytes(StandardCharsets.UTF_8))
-      finally out.close()
+      try out.write(Warehouse.catalogBytes(buf)) finally out.close()
       commitPointers(buf.toSeq) // ONE atomic root swap for all tables
       fsys.delete(j, false)
       buf.keys.foreach(gcCurrent)
@@ -1000,7 +900,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
   }
 
   /** Roll forward transactions that journaled but crashed before the
-    * root swap (or mirror refresh) applied. Idempotent (re-applying a
+    * root replace applied. Idempotent (re-applying a
     * commit writes the same content); called from [[createTables]] so
     * any session that opens the warehouse heals it, and callable
     * directly. A torn or empty journal — a crash DURING the journal
@@ -1014,38 +914,31 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     fsys.listStatus(rootPath).map(_.getPath)
       .filter(_.getName.startsWith("_TXN-"))
       .sortBy(_.getName).foreach { j =>
-        val in = fsys.open(j)
-        val text = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
         val parsed =
-          try Option(new org.yaml.snakeyaml.Yaml()
-            .load[java.util.Map[String, Object]](text))
+          try Some(Warehouse.parseEntries(Warehouse.readText(fsys, j)))
           catch { case scala.util.control.NonFatal(_) => None }
         parsed match {
           case None => // torn/empty journal = uncommitted txn: discard
             fsys.delete(j, false)
-          case Some(m) =>
-            val entries = m.asScala.toSeq.map { case (t, c) => t -> c.toString }
-            commitPointers(entries)
+          case Some(entries) =>
+            commitPointers(entries.toSeq)
             fsys.delete(j, false)
-            entries.foreach { case (t, _) => gcCurrent(t) }
+            entries.keys.foreach(gcCurrent)
         }
       }
   }
 
   /** gc a table against its CURRENT manifest's references (used after
     * a transactional commit, where per-write gc was suppressed). */
-  private def gcCurrent(t: String): Unit = currentManifest(t).foreach { m =>
-    gc(t, keep = Set(m.snap) ++
-      m.buckets.values.map(_.split("/")(0)) ++
-      m.zones.map(_.dir.split("/")(0)))
-  }
+  private def gcCurrent(t: String): Unit =
+    currentManifest(t).foreach(m => gc(t, m.snapDirs))
 
-  private def swapPointer(t: String, content: String): Unit = {
+  /** Commit `m` as `t`'s manifest (buffered inside a [[transaction]]),
+    * then gc the snapshots it no longer references. */
+  private def install(t: String, m: Manifest): Unit = {
     val txn = txnLocal.get()
-    if (txn ne null) { txn(t) = content; return }
-    commitPointers(Seq(t -> content))
+    if (txn ne null) txn(t) = m else commitPointers(Seq(t -> m))
+    gc(t, m.snapDirs)
   }
 
   /** Drop snapshots that are neither referenced by the manifest nor
@@ -1226,10 +1119,10 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * destination file already present under the same relative path
     * with the same length IS the same bytes and is skipped — a
     * nightly refresh copies only the snapshots the day added. The
-    * destination `_ROOT` (and each `_CURRENT` mirror) is written to a
-    * tmp name and RENAMED over the target, so a standby reader
-    * resolving the catalog mid-refresh sees the old consistent cut or
-    * the new one, never a truncated file. Snapshots the refresh
+    * destination `_ROOT` is written to a tmp name and RENAMED over the
+    * target ([[replaceFile]]), so a standby reader resolving the
+    * catalog mid-refresh sees the old consistent cut or the new one,
+    * never a truncated or missing file. Snapshots the refresh
     * strands (no longer referenced) are exactly what
     * `fsck(reclaim = true)` on the standby deletes.
     *
@@ -1252,20 +1145,12 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
       s"'$destRoot' already holds a warehouse root " +
         "(incremental refresh is opt-in)")
     dfs.mkdirs(destP)
-    val cat = readRoot()
-    // legacy (pre-catalog) layouts fall back to per-table mirrors:
-    // each read is atomic but the cross-table cut is then only
-    // per-table consistent — exactly the guarantee such layouts have
-    val pinned: Map[String, String] =
-      if (cat.nonEmpty) cat
-      else registry.names.flatMap(t => readPointer(t).map(t -> _)).toMap
-    val snapDirs: Seq[(Path, Path)] = pinned.toSeq.flatMap { case (t, ptr) =>
-      val m = if (ptr.startsWith("{")) parseManifest(ptr)
-        else Manifest(ptr, -1L, Map())
-      val snaps = (Seq(m.snap) ++
-        m.buckets.values.map(_.split("/")(0)) ++
-        m.zones.map(_.dir.split("/")(0))).distinct
-      snaps.map(s => (new Path(tableDir(t), s), new Path(new Path(destP, t), s)))
+    val pinned = readRoot()
+    registry.names.filterNot(pinned.contains)
+      .foreach(t => Warehouse.refuseLegacy(fs(tableDir(t)), tableDir(t)))
+    val snapDirs: Seq[(Path, Path)] = pinned.toSeq.flatMap { case (t, m) =>
+      m.snapDirs.toSeq.sorted
+        .map(s => (new Path(tableDir(t), s), new Path(new Path(destP, t), s)))
     }
     val idxDirs = discoverIndexDirs()
     val idxCopied = if (includeIndexes) idxDirs else Nil
@@ -1348,16 +1233,11 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         throw new java.io.IOException(s"backup copy failed: $s")
     }
     idxSwaps.foreach { case (_, dst) => IndexDir.install(dfs, dst) }
-    pinned.foreach { case (t, ptr) =>
-      atomicWrite(dfs, new Path(new Path(destP, t), "_CURRENT"),
-        ptr.getBytes(StandardCharsets.UTF_8))
-    }
     val sf = new Path(root, "_SCHEMA.yaml")
     if (fs(sf).exists(sf))
       org.apache.hadoop.fs.FileUtil.copy(fs(sf), sf, dfs,
         new Path(destP, "_SCHEMA.yaml"), false, hadoopConf)
-    atomicWrite(dfs, new Path(destP, "_ROOT"),
-      Json.write(pinned).getBytes(StandardCharsets.UTF_8))
+    replaceFile(dfs, new Path(destP, "_ROOT"), Warehouse.catalogBytes(pinned))
     (idxDirs diff idxCopied).map(_.toString)
   }
 
@@ -1393,20 +1273,27 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     buf.toSeq
   }
 
-  /** Write `bytes` to `f` atomically: tmp sibling + rename, the same
-    * old-or-new (never truncated-in-place) swap as [[commitPointers]]
-    * — a concurrent reader of `f` sees the previous content or the
-    * new one, never a torn file. */
-  private def atomicWrite(fsys: FileSystem, f: Path,
-      bytes: Array[Byte]): Unit = {
+  /** Replace `f` with `bytes` by ONE rename of a tmp sibling onto the
+    * live file: a concurrent reader of `f` sees the previous content
+    * or the new one, never a torn file and never no file. On a
+    * checksummed file system (the local one) the bytes go through the
+    * raw file system, whose rename is rename(2) and replaces the
+    * target; the checksummed rename refuses an existing target. The
+    * target's checksum sidecar is not part of the swap: it is dropped
+    * before the rename, so a reader never verifies the new bytes
+    * against the old sum. */
+  private def replaceFile(fsys: FileSystem, f: Path, bytes: Array[Byte]): Unit = {
+    val raw = fsys match {
+      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
+        c.getRawFileSystem.delete(c.getChecksumFile(f), false)
+        c.getRawFileSystem
+      case other => other
+    }
     val tmp = new Path(f.getParent, f.getName + s".tmp-${System.nanoTime()}")
-    val out = fsys.create(tmp, true)
+    val out = raw.create(tmp, true)
     try out.write(bytes) finally out.close()
-    // HDFS/local rename onto an existing file: delete-then-rename is
-    // the portable swap; the tiny window only exposes old-or-new.
-    if (fsys.exists(f)) fsys.delete(f, false)
-    if (!fsys.rename(tmp, f))
-      throw new java.io.IOException(s"Failed to swap $f")
+    if (!raw.rename(tmp, f))
+      throw new java.io.IOException(s"Failed to replace $f")
   }
 
   /** `child`'s path relative to `base` (both resolved through their
@@ -1490,7 +1377,8 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
 
   /** One [[fsck]] finding. `kind`: `missing-snapshot` / `missing-bucket`
     * / `missing-zone` / `unparseable-pointer` (broken references —
-    * reads WILL fail), `orphan-snapshot` / `stale-tmp` (reclaimable
+    * reads WILL fail; an unparseable `_ROOT` is reported with table
+    * ""), `orphan-snapshot` / `stale-tmp` (reclaimable
     * garbage, `bytes` = its size), `unapplied-journal` (a crash before
     * the root swap; the next open rolls it forward), `foreign-lease`
     * (another live writer), `index-meta` (an index meta that does not
@@ -1505,7 +1393,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * an existing snapshot / bucket / zone directory, reports snapshot
     * dirs NOTHING references (crashed writes, or gc a crash
     * suppressed) with their reclaimable bytes, and surfaces torn
-    * `_CURRENT.tmp-*` mirror swaps, lease-steal tombstones, unapplied
+    * `_ROOT.tmp-*` catalog replaces, lease-steal tombstones, unapplied
     * `_TXN-*` journals and a live foreign `_LEASE` holder. Read-only
     * by default — it REPORTS unapplied journals rather than folding
     * them, so auditing never mutates a warehouse it may not own.
@@ -1562,47 +1450,36 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     val leaseF = new Path(rootP, "_LEASE")
     try {
       val st = rfs.getFileStatus(leaseF)
-      val in = rfs.open(leaseF)
-      val h = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8).trim finally in.close()
+      val h = Warehouse.readText(rfs, leaseF).trim
       val age = System.currentTimeMillis - st.getModificationTime
       if (h != Warehouse.processId && age <= Warehouse.LeaseTtlMs)
         issues += FsckIssue("", "foreign-lease", leaseF.toString,
           s"write-leased by process '$h' (heartbeat $age ms ago)", 0L)
     } catch { case _: java.io.FileNotFoundException => }
-    val cat = readRoot()
-    val pinned: Map[String, String] =
-      if (cat.nonEmpty) cat
-      else registry.names.flatMap(t => readPointer(t).map(t -> _)).toMap
-    pinned.toSeq.sortBy(_._1).foreach { case (t, ptr) =>
+    // without a catalog nothing is provably unreferenced: report it
+    // and skip the per-table walk, which would call live data orphaned
+    val cat =
+      try readRoot()
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          issues += FsckIssue("", "unparseable-pointer", rootFile.toString,
+            e.getMessage, 0L)
+          Map.empty[String, Manifest]
+      }
+    cat.toSeq.sortBy(_._1).foreach { case (t, m) =>
       val td = tableDir(t)
       val tfs = fs(td)
-      val keep = scala.collection.mutable.Set.empty[String]
-      val parsed =
-        try Some(
-          if (ptr.startsWith("{")) parseManifest(ptr)
-          else Manifest(ptr, -1L, Map()))
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            issues += FsckIssue(t, "unparseable-pointer", td.toString,
-              s"catalog pointer does not parse: ${e.getMessage}", 0L)
-            None
-        }
-      parsed.foreach { m =>
-        def need(rel: String, kind: String): Unit =
-          if (!tfs.exists(new Path(td, rel)))
-            issues += FsckIssue(t, kind, new Path(td, rel).toString,
-              "referenced by the live catalog but missing on storage", 0L)
-        need(m.snap, "missing-snapshot")
-        m.buckets.values.foreach(need(_, "missing-bucket"))
-        m.zones.foreach(z => need(z.dir, "missing-zone"))
-        keep += m.snap
-        keep ++= m.buckets.values.map(_.split("/")(0))
-        keep ++= m.zones.map(_.dir.split("/")(0))
-      }
+      def need(rel: String, kind: String): Unit =
+        if (!tfs.exists(new Path(td, rel)))
+          issues += FsckIssue(t, kind, new Path(td, rel).toString,
+            "referenced by the live catalog but missing on storage", 0L)
+      need(m.snap, "missing-snapshot")
+      m.buckets.values.foreach(need(_, "missing-bucket"))
+      m.zones.foreach(z => need(z.dir, "missing-zone"))
+      val keep = m.snapDirs
       if (tfs.exists(td)) {
-        val entries = tfs.listStatus(td).map(_.getPath)
-        val snaps = entries.filter(_.getName.startsWith("snap-"))
+        val snaps = tfs.listStatus(td).map(_.getPath)
+          .filter(_.getName.startsWith("snap-"))
           .sortBy(_.getName.stripPrefix("snap-").toLong)
         val newest = snaps.takeRight(2).map(_.getName).toSet
         snaps.foreach { p =>
@@ -1612,11 +1489,6 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
               tfs.getContentSummary(p).getLength)
             if (reclaim) { forgetUnder(p); tfs.delete(p, true) }
           }
-        }
-        entries.filter(_.getName.startsWith("_CURRENT.tmp-")).foreach { p =>
-          issues += FsckIssue(t, "stale-tmp", p.toString,
-            "torn mirror swap leftover", tfs.getFileStatus(p).getLen)
-          if (reclaim) tfs.delete(p, false)
         }
       }
     }
@@ -1656,11 +1528,47 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * [[graft.Env.createTables]] (they may use dotted FK fields). */
   def createTables(): Unit = {
     recoverTransactions() // heal a crash mid-commit before any reads
+    migrateLegacy()
+    val cat = readRoot()
     registry.names.foreach { t =>
-      if (registry(t).external.isEmpty && readPointer(t).isEmpty)
+      if (registry(t).external.isEmpty && !cat.contains(t))
         write(t, empty(registry(t)))
     }
     persistRegistry()
+  }
+
+  /** Migrate a pre-catalog layout, once, under the writer lease: each
+    * managed table absent from `_ROOT` adopts its per-table `_CURRENT`
+    * pointer (a plain snapshot name becomes a manifest whose id
+    * high-water mark is read from the snapshot's footers), all in one
+    * catalog commit; then every `_CURRENT` file and its tmp and
+    * checksum siblings is deleted. A crash in between is finished by
+    * the next call. On a migrated root this costs one listing per
+    * table directory. */
+  private def migrateLegacy(): Unit = rootLock.synchronized {
+    val legacy = registry.names.filter(registry(_).external.isEmpty).flatMap { t =>
+      val dir = tableDir(t)
+      try fs(dir).listStatus(dir).map(_.getPath)
+        .filter(_.getName.startsWith("_CURRENT")).map(t -> _).toSeq
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+    if (legacy.isEmpty) return
+    // a JSON pointer is a manifest; a plain one names the snapshot
+    def adopt(t: String, text: String): Manifest =
+      if (text.startsWith("{")) Warehouse.parseManifest(text)
+      else {
+        val (td, dir) = (registry(t), new Path(tableDir(t), text))
+        Manifest(text, if (!td.columnMap.contains("id")) 0L
+          else maxIdOfWritten(fs(dir), Seq(dir),
+            spark.read.schema(td.sparkSchema).parquet(dir.toString)), Map())
+      }
+    val cat = readRoot()
+    val adopted = legacy.collect {
+      case (t, f) if f.getName == "_CURRENT" && !cat.contains(t) =>
+        t -> adopt(t, Warehouse.readText(fs(f), f).trim)
+    }
+    if (adopted.nonEmpty) commitPointers(adopted) else ensureLease(fs(rootFile))
+    legacy.foreach { case (_, f) => fs(f).delete(f, false) }
   }
 
   /** Persist the registry as `<root>/_SCHEMA.yaml` (reference schema
@@ -1677,6 +1585,109 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
 }
 
 object Warehouse {
+  /** One range-cluster of a brin table's snapshot: directory (relative
+    * to the table dir) + encoded min/max of the leading key column
+    * ([[Brin.encode]]; None = the zone holds only null keys), plus
+    * `extra` — min/max of the remaining key columns and the surrogate
+    * `id` (postgres BRIN indexes the whole key; in an append-mostly
+    * table id correlates with the leading key, so id-bounded reads
+    * prune too). */
+  final case class Zone(dir: String, lo: Option[Any], hi: Option[Any],
+      extra: Map[String, (Option[Any], Option[Any])] = Map())
+
+  /** A table's catalog entry: its newest snapshot, the id high-water
+    * mark (so surrogate-id assignment never scans the full table), and
+    * for a bucketed table the per-bucket pointers; brin tables instead
+    * carry `zones` — the range-cluster zone map. */
+  final case class Manifest(snap: String, maxId: Long, buckets: Map[Int, String],
+      zones: Seq[Zone] = Nil, zorder: Seq[String] = Nil) {
+    /** The snapshot directories this manifest references. */
+    def snapDirs: Set[String] =
+      Set(snap) ++ (buckets.values ++ zones.map(_.dir)).map(_.split("/")(0))
+  }
+
+
+  private[store] def parseManifest(text: String): Manifest = {
+    val y = new org.yaml.snakeyaml.Yaml()
+    val m = y.load[java.util.Map[String, Object]](text).asScala
+    val buckets = m.get("buckets").map(
+      _.asInstanceOf[java.util.Map[String, Object]].asScala.map {
+        case (k, v) => k.toInt -> v.toString
+      }.toMap).getOrElse(Map[Int, String]())
+    // yaml numbers load as Integer/Long/Double; normalize to the
+    // Brin encoding families (Long | Double | String)
+    def bound(v: Object): Option[Any] = Option(v).map {
+      case i: java.lang.Integer => i.longValue()
+      case l: java.lang.Long => l.longValue()
+      case d: java.lang.Double => d.doubleValue()
+      case other => other.toString
+    }
+    val zones = m.get("zones").map(
+      _.asInstanceOf[java.util.List[java.util.Map[String, Object]]].asScala
+        .map { z =>
+          val extra = Option(z.get("cols")).map(
+            _.asInstanceOf[java.util.Map[String, java.util.List[Object]]]
+              .asScala.map { case (c, lh) =>
+                c -> (bound(lh.get(0)), bound(lh.get(1)))
+              }.toMap).getOrElse(Map[String, (Option[Any], Option[Any])]())
+          Zone(z.get("dir").toString, bound(z.get("lo")), bound(z.get("hi")),
+            extra)
+        }.toSeq).getOrElse(Nil)
+    val zorder = m.get("zorder").map(
+      _.asInstanceOf[java.util.List[Object]].asScala.map(_.toString).toSeq)
+      .getOrElse(Nil)
+    Manifest(m("snap").toString, m("maxId").toString.toLong, buckets, zones,
+      zorder)
+  }
+
+  private def manifestJson(m: Manifest): String =
+    Json.write(Map("snap" -> m.snap, "maxId" -> m.maxId,
+      "buckets" -> m.buckets.map { case (k, v) => k.toString -> v }) ++
+      (if (m.zones.isEmpty) Map() else Map("zones" -> m.zones.map(z =>
+        Map("dir" -> z.dir, "lo" -> z.lo.orNull, "hi" -> z.hi.orNull) ++
+          (if (z.extra.isEmpty) Map() else Map("cols" -> z.extra.map {
+            case (c, (lo, hi)) => c -> Seq(lo.orNull, hi.orNull)
+          }))))) ++
+      (if (m.zorder.isEmpty) Map() else Map("zorder" -> m.zorder)))
+
+  /** The file form of the root catalog and of a transaction journal:
+    * one JSON object, table -> manifest JSON text. */
+  private[store] def catalogBytes(entries: collection.Map[String, Manifest]): Array[Byte] =
+    Json.write(entries.map { case (t, m) => t -> manifestJson(m) }.toMap)
+      .getBytes(StandardCharsets.UTF_8)
+
+  /** Inverse of [[catalogBytes]]; throws on any malformed entry. */
+  private[store] def parseEntries(text: String): Map[String, Manifest] =
+    new org.yaml.snakeyaml.Yaml().load[java.util.Map[String, Object]](text)
+      .asScala.map { case (t, v) => t -> parseManifest(v.toString) }.toMap
+
+  /** The root catalog at `f`, parsed; raises, naming `f`, when it does
+    * not parse. */
+  private[store] def parseCatalog(fsys: FileSystem, f: Path): Map[String, Manifest] = {
+    val text = readText(fsys, f)
+    try parseEntries(text)
+    catch {
+      case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+        s"root catalog $f does not parse: ${e.getMessage}", e)
+    }
+  }
+
+  private[store] def readText(fsys: FileSystem, f: Path): String = {
+    val in = fsys.open(f)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      StandardCharsets.UTF_8) finally in.close()
+  }
+
+  /** Refuse a table that still has a pre-catalog `_CURRENT` pointer:
+    * read through the catalog alone, it would look empty. */
+  private[store] def refuseLegacy(fsys: FileSystem, tableDir: Path): Unit = {
+    val f = new Path(tableDir, "_CURRENT")
+    if (fsys.exists(f)) throw new IllegalStateException(
+      s"$f is a pointer of the pre-catalog layout, which this warehouse " +
+        "no longer reads: run `tk init` (Env.createTables) once with write " +
+        "access to migrate it into _ROOT")
+  }
+
   /** Per-root lock serializing root-catalog read-modify-write within
     * this JVM — the single-driver commit coordinator. Keyed by the
     * root string (all Warehouse instances over one root share it). */
@@ -1692,9 +1703,9 @@ object Warehouse {
     * sibling instance's commit as a foreign swap. */
   private val rootMemos = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.atomic.AtomicReference[
-      Option[(Long, Long, Map[String, String], Boolean, Long)]]]()
+      Option[(Long, Long, Map[String, Manifest], Boolean, Long)]]]()
   private[store] def memoFor(root: String): java.util.concurrent.atomic
-      .AtomicReference[Option[(Long, Long, Map[String, String], Boolean, Long)]] =
+      .AtomicReference[Option[(Long, Long, Map[String, Manifest], Boolean, Long)]] =
     rootMemos.computeIfAbsent(root,
       _ => new java.util.concurrent.atomic.AtomicReference(None))
 
@@ -1728,12 +1739,8 @@ object Warehouse {
     val rootPath = new Path(root)
     val fsys = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val schemaFile = new Path(rootPath, "_SCHEMA.yaml")
-    if (fsys.exists(schemaFile)) {
-      val in = fsys.open(schemaFile)
-      val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        StandardCharsets.UTF_8) finally in.close()
-      Registry.fromYaml(text)
-    } else {
+    if (fsys.exists(schemaFile)) Registry.fromYaml(readText(fsys, schemaFile))
+    else {
       def colType(dt: DataType): ColType = dt match {
         case LongType => ColType.BigIntT
         case IntegerType => ColType.IntegerT
@@ -1746,25 +1753,17 @@ object Warehouse {
         case ArrayType(e, _) => ColType.Arr(colType(e), 1)
         case _ => ColType.VarcharT
       }
-      val defs = fsys.listStatus(rootPath).filter(_.isDirectory).map(_.getPath)
-        .filter(d => fsys.exists(new Path(d, "_CURRENT"))).map { d =>
-          val name = d.getName
-          val cur = {
-            val in = fsys.open(new Path(d, "_CURRENT"))
-            try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-              StandardCharsets.UTF_8).trim finally in.close()
-          }
-          val snap =
-            if (cur.startsWith("{")) { // bucketed manifest
-              val y = new org.yaml.snakeyaml.Yaml()
-              y.load[java.util.Map[String, Object]](cur)
-                .get("snap").toString
-            } else cur
-          val schema = spark.read.parquet(new Path(d, snap).toString).schema
-          val cols = schema.fields.filterNot(_.name == "__b")
-            .map(f => ColumnDef(f.name, colType(f.dataType)))
-          TableDef(name, cols.toSeq, key = Seq("id"))
-        }
+      val rootFile = new Path(rootPath, "_ROOT")
+      val cat = if (fsys.exists(rootFile)) parseCatalog(fsys, rootFile) else Map()
+      val defs = cat.toSeq.sortBy(_._1).map { case (name, m) =>
+        // one referenced leaf dir carries the data schema; the bucket
+        // and zone partition columns are storage, not table columns
+        val leaf = (m.buckets.values ++ m.zones.map(_.dir)).headOption.getOrElse(m.snap)
+        val schema = spark.read.parquet(new Path(new Path(rootPath, name), leaf).toString).schema
+        val cols = schema.fields.filterNot(f => f.name == "__b" || f.name == "__z")
+          .map(f => ColumnDef(f.name, colType(f.dataType)))
+        TableDef(name, cols.toSeq, key = Seq("id"))
+      }
       new Registry(defs.toSeq)
     }
   }

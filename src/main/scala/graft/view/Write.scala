@@ -537,10 +537,9 @@ object Write {
     val env = v.env
     val t = v.table
     require(t.external.isEmpty, s"Table '${t.name}' is external (read-only)")
-    val cur = Scope.cache(env.warehouse.read(t.name))
-    val total = cur.count()
     if (data == null && filters.isEmpty) {
       // delete all (tanker view.py:257-259)
+      val total = env.warehouse.liveRows(t.name)
       env.warehouse.write(t.name, env.warehouse.empty(t))
       return total
     }
@@ -548,41 +547,50 @@ object Write {
       throw new IllegalArgumentException(
         "Deletion by both data and filter not supported")
 
-    val remaining =
-      if (data != null) {
+    val keyCols = v.keyCols
+    val bKeys =
+      if (data == null) null
+      else {
         val groups = groupFields(v)
         validateKey(v, groups.map(_.col.name).toSet)
-        val keyCols = v.keyCols
-        val bKeys = prepare(v, groups, data)._1.select(keyCols.map(c): _*)
-        // bucket-pruned delete: only buckets holding batch keys can
-        // lose rows (not with swap — that deletes everywhere else)
-        if (t.buckets > 0 && !swap && keyCols == t.key) {
-          val bs = bKeys.select(env.warehouse.bucketExpr(t).as("__bk"))
-            .distinct().collect().map(_.getInt(0)).toSet
-          val slice = Scope.cache(env.warehouse.readBuckets(t.name, Some(bs)))
-          val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
-          val removed = slice.count() - keptSlice.count()
-          env.warehouse.writeBuckets(t.name, keptSlice, bs,
-            Some(env.warehouse.maxId(t.name)))
-          return removed
+        prepare(v, groups, data)._1.select(keyCols.map(c): _*)
+      }
+    if (data != null && !swap && keyCols == t.key) {
+      // bucket-pruned delete: only buckets holding batch keys can
+      // lose rows (not with swap — that deletes everywhere else)
+      if (t.buckets > 0) {
+        val bs = bKeys.select(env.warehouse.bucketExpr(t).as("__bk"))
+          .distinct().collect().map(_.getInt(0)).toSet
+        val slice = Scope.cache(env.warehouse.readBuckets(t.name, Some(bs)))
+        val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
+        val removed = slice.count() - keptSlice.count()
+        env.warehouse.writeBuckets(t.name, keptSlice, bs,
+          Some(env.warehouse.maxId(t.name)))
+        return removed
+      }
+      // zone-pruned delete: only zones overlapping the batch's key
+      // range can lose rows
+      if (t.useIndex.equalsIgnoreCase("brin")) {
+        batchKeyBounds(bKeys, t.key) match {
+          case Some(zb) =>
+            val slice = Scope.cache(env.warehouse.readZones(t.name, Some(zb)))
+            val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
+            val removed = slice.count() - keptSlice.count()
+            env.warehouse.writeZones(t.name, keptSlice, zb,
+              Some(env.warehouse.maxId(t.name)))
+            return removed
+          case None => return 0L // empty batch deletes nothing
         }
-        // zone-pruned delete: only zones overlapping the batch's key
-        // range can lose rows (not with swap — that deletes the rest)
-        if (t.useIndex.equalsIgnoreCase("brin") && t.buckets == 0 &&
-            !swap && keyCols == t.key) {
-          batchKeyBounds(bKeys, t.key) match {
-            case Some(zb) =>
-              val slice = Scope.cache(env.warehouse.readZones(t.name, Some(zb)))
-              val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
-              val removed = slice.count() - keptSlice.count()
-              env.warehouse.writeZones(t.name, keptSlice, zb,
-                Some(env.warehouse.maxId(t.name)))
-              return removed
-            case None => return 0L // empty batch deletes nothing
-          }
-        }
-        cur.join(bKeys, keyCols, if (swap) "left_semi" else "left_anti")
-      } else {
+      }
+    }
+
+    // the whole table is rewritten; the rows removed are the footer
+    // row counts of the snapshot `cur` reads minus those of the new one
+    val cur = env.warehouse.read(t.name)
+    val before = env.warehouse.liveRows(t.name)
+    val remaining =
+      if (data != null) cur.join(bKeys, keyCols, if (swap) "left_semi" else "left_anti")
+      else {
         val qb = QueryBuilder(env, t, v.fieldEnv)
         val argv = Args(env, args, kwargs)
         val cond = filters.map(f => v.compileFilter(qb, f, argv)).reduce(_ && _)
@@ -590,9 +598,7 @@ object Write {
           .select(col(s"${t.name}.id").as("id")).distinct()
         cur.join(doomedIds, Seq("id"), if (swap) "left_semi" else "left_anti")
       }
-    val rem = Scope.cache(remaining)
-    val kept = rem.count()
-    env.warehouse.write(t.name, rem)
-    total - kept
+    env.warehouse.write(t.name, remaining)
+    before - env.warehouse.liveRows(t.name)
   }
 }

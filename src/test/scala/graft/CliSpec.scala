@@ -979,7 +979,7 @@ class CliSpec extends SparkSpec {
     val orphan = wh.resolve("country/snap-0")
     Files.createDirectories(orphan)
     Files.write(orphan.resolve("junk.parquet"), new Array[Byte](64))
-    Files.createFile(wh.resolve("country/_CURRENT.tmp-7"))
+    Files.createFile(wh.resolve("_ROOT.tmp-7"))
     val rep = run(conf, "fsck")
     assert(rep.contains("orphan-snapshot") && rep.contains("stale-tmp") &&
       rep.contains("reclaimable"), rep)

@@ -128,22 +128,34 @@ class TxnSpec extends SparkSpec {
     assert(rows(env.view("t_zone", Seq("seq")).read()).size == 20)
   }
 
+  /** The root catalog's entries: table -> manifest JSON text. */
+  private def catalog(root: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    new org.yaml.snakeyaml.Yaml().load[java.util.Map[String, Object]](
+      java.nio.file.Files.readString(java.nio.file.Paths.get(root, "_ROOT")))
+      .asScala.map { case (t, m) => t -> m.toString }.toMap
+  }
+
+  /** Replace the root catalog by hand, as a crash would leave it. */
+  private def plantCatalog(root: String, entries: Map[String, String]): Unit =
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_ROOT"),
+      graft.view.Json.write(entries).getBytes("UTF-8"))
+
   test("journal roll-forward applies a crashed commit") {
     val env = freshEnv()
     val root = env.warehouse.root
-    // capture the pointer a committed write WOULD install, then undo
-    // it manually to simulate a crash after journaling, before swap
+    // capture the pointer a committed write installed, then undo it
+    // manually to simulate a crash after journaling, before the replace
     env.view("country", Seq("name")).write(Seq(Seq("Italy")))
-    val cur = java.nio.file.Paths.get(root, "country", "_CURRENT")
-    val committed = new String(java.nio.file.Files.readAllBytes(cur), "UTF-8")
-    // journal claiming the commit, pointer rolled back to an older snap
+    val committed = catalog(root)("country")
+    // journal claiming the commit, root rolled back to an older snap
     val stale = committed.replaceAll(
       "\"snap\":\\s*\"snap-(\\d+)\"", "\"snap\": \"snap-0\"")
-    java.nio.file.Files.write(cur, stale.getBytes("UTF-8"))
+    plantCatalog(root, catalog(root) + ("country" -> stale))
     java.nio.file.Files.write(java.nio.file.Paths.get(root, "_TXN-1"),
       graft.view.Json.write(Map("country" -> committed)).getBytes("UTF-8"))
     env.warehouse.recoverTransactions()
-    val healed = new String(java.nio.file.Files.readAllBytes(cur), "UTF-8")
+    val healed = catalog(root)("country")
     assert(healed == committed, s"roll-forward did not apply: $healed")
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "_TXN-1")), "journal not cleared")
@@ -173,11 +185,16 @@ class TxnSpec extends SparkSpec {
       .map(_.snap.stripPrefix("snap-").toLong).getOrElse(-1L)
     @volatile var done = false
     val torn = new java.util.concurrent.atomic.AtomicReference[String](null)
+    // both tables exist from createTables on: a table seen missing
+    // means a reader met the catalog absent or unreadable mid-commit
     val reader = new Thread(() => {
       while (!done && torn.get == null) {
-        val a = snapNum("t_a") // t_a is committed first in the buffer order
-        val b = snapNum("t_b")
-        if (b < a) torn.set(s"t_a at snap-$a but t_b at snap-$b")
+        try {
+          val a = snapNum("t_a") // t_a is committed first in the buffer order
+          val b = snapNum("t_b")
+          if (a == -1 || b == -1) torn.set(s"table missing: t_a $a, t_b $b")
+          else if (b < a) torn.set(s"t_a at snap-$a but t_b at snap-$b")
+        } catch { case e: Exception => torn.set(s"catalog read failed: $e") }
       }
     })
     reader.start()
@@ -215,23 +232,18 @@ class TxnSpec extends SparkSpec {
   test("journal roll-forward heals a stale root catalog") {
     // Crash simulated at the root level: the journal claims a commit
     // the _ROOT catalog never received. Recovery must re-install the
-    // journaled pointers into the root (and the mirrors).
+    // journaled pointers into the root.
     val env = freshEnv(seedTeams = false)
     val root = env.warehouse.root
     env.view("country", Seq("name")).write(Seq(Seq("Italy")))
-    val cur = java.nio.file.Paths.get(root, "country", "_CURRENT")
-    val committed = new String(java.nio.file.Files.readAllBytes(cur), "UTF-8")
+    val committed = catalog(root)("country")
     // snap-1 is the retained seed snapshot (snap-0 is gc'd)
     val stale = committed.replaceAll(
       "\"snap\":\\s*\"snap-(\\d+)\"", "\"snap\": \"snap-1\"")
-    // roll the ROOT back to the stale pointer (other tables drop to
-    // their mirror fallback — also part of the contract). The local
-    // filesystem is checksummed: drop the crc so the hand-written
-    // root is readable, like a real crash artifact would be.
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(root, "._ROOT.crc"))
-    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_ROOT"),
-      graft.view.Json.write(Map("country" -> stale)).getBytes("UTF-8"))
+    // roll the ROOT back to the stale pointer. The catalog is written
+    // without a checksum sidecar, so the hand-written root is read as is
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root, "._ROOT.crc")))
+    plantCatalog(root, Map("country" -> stale))
     assert(!rows(env.view("country", Seq("name")).read())
       .map(_.head).contains("Italy"), "stale root not authoritative")
     java.nio.file.Files.write(java.nio.file.Paths.get(root, "_TXN-7"),
@@ -239,8 +251,6 @@ class TxnSpec extends SparkSpec {
     env.warehouse.recoverTransactions()
     assert(rows(env.view("country", Seq("name")).read())
       .map(_.head).contains("Italy"), "root not rolled forward")
-    val healedMirror = new String(java.nio.file.Files.readAllBytes(cur), "UTF-8")
-    assert(healedMirror == committed, "mirror not refreshed")
   }
 
   test("streaming merge sinks refuse to run inside an ambient transaction") {
@@ -382,7 +392,7 @@ class TxnSpec extends SparkSpec {
     fs.mkdirs(orphan)
     val of = fs.create(new Path(orphan, "part-junk.parquet"), true)
     of.write(new Array[Byte](128)); of.close()
-    fs.create(new Path(root, "country/_CURRENT.tmp-1"), true).close()
+    fs.create(new Path(root, "_ROOT.tmp-1"), true).close()
     val jf = fs.create(new Path(root, "_TXN-999"), true)
     jf.write("~garbage".getBytes("UTF-8")); jf.close()
     val found = env.warehouse.fsck()
@@ -614,5 +624,107 @@ class TxnSpec extends SparkSpec {
     assert(exists(live) && !exists(scratch) && !exists(aside))
     assert(env.warehouse.discoverIndexDirs().map(_.getName) == Seq("myidx"))
     assert(env.warehouse.fsck().isEmpty)
+  }
+
+  private val legacyYaml =
+    """- table: t_plain
+      |  columns: {name: varchar, v: bigint}
+      |  key: [name]
+      |- table: t_bucket
+      |  columns: {code: varchar, v: bigint}
+      |  key: [code]
+      |  buckets: 4
+      |""".stripMargin
+
+  /** Every file under `root` whose name mentions the pre-catalog
+    * pointer (the pointer, its tmp files, their checksum sidecars). */
+  private def legacyFiles(root: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
+      .map(_.toString).filter(_.contains("_CURRENT")).toSeq
+  }
+
+  test("a pre-catalog layout is refused read-only and migrated by createTables") {
+    import graft.schema.Registry
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft-legacy-").toString
+    val src = Env(spark, Registry.fromYaml(legacyYaml), root)
+    src.createTables()
+    src.view("t_plain", Seq("name", "v")).write((1 to 30).map(i => Seq(s"n$i", i.toLong)))
+    src.view("t_bucket", Seq("code", "v")).write((1 to 40).map(i => Seq(s"c$i", i.toLong)))
+    def contents(e: Env, t: String, k: String) =
+      rows(e.view(t, Seq("id", k, "v")).read()).toSet
+    val planted = Map("t_plain" -> contents(src, "t_plain", "name"),
+      "t_bucket" -> contents(src, "t_bucket", "code"))
+    val maxIds = Seq("t_plain", "t_bucket").map(t => t -> src.warehouse.maxId(t)).toMap
+    assert(maxIds == Map("t_plain" -> 30L, "t_bucket" -> 40L), maxIds)
+    // rewrite the pointers as the pre-catalog layout: no _ROOT, a plain
+    // snapshot name for the plain table, a JSON manifest for the
+    // bucketed one, each in its table's _CURRENT
+    val cat = catalog(root)
+    val plainSnap = "\"snap\":\\s*\"(snap-\\d+)\"".r
+      .findFirstMatchIn(cat("t_plain")).get.group(1)
+    Files.writeString(Paths.get(root, "t_plain", "_CURRENT"), plainSnap)
+    Files.writeString(Paths.get(root, "t_bucket", "_CURRENT"), cat("t_bucket"))
+    Files.delete(Paths.get(root, "_ROOT"))
+    // opened without writing, the layout is refused, never read as empty
+    val ro = Env(spark, Registry.fromYaml(legacyYaml), root)
+    for (t <- Seq("t_plain", "t_bucket")) {
+      val e = intercept[IllegalStateException](ro.view(t, Seq("v")).read().collect())
+      assert(e.getMessage.contains("tk init") && e.getMessage.contains(t), e.getMessage)
+    }
+    val e = intercept[IllegalStateException](ro.warehouse.maxId("t_plain"))
+    assert(e.getMessage.contains("tk init"), e.getMessage)
+    // createTables adopts both pointers in one catalog and deletes the files
+    val env = Env(spark, Registry.fromYaml(legacyYaml), root)
+    env.createTables()
+    assert(contents(env, "t_plain", "name") == planted("t_plain"))
+    assert(contents(env, "t_bucket", "code") == planted("t_bucket"))
+    assert(Seq("t_plain", "t_bucket").map(t => t -> env.warehouse.maxId(t)).toMap == maxIds)
+    assert(catalog(root).keySet == Set("t_plain", "t_bucket"))
+    assert(legacyFiles(root).isEmpty, legacyFiles(root).toString)
+    // the migrated tables take writes; new ids continue the mark
+    env.view("t_plain", Seq("name", "v")).write(Seq(Seq("n31", 31L)))
+    assert(rows(env.view("t_plain", Seq("id")).read(Seq("(= name \"n31\")"))) == Seq(Seq(31L)))
+  }
+
+  test("no commit path writes a per-table pointer file") {
+    val env = freshEnv()
+    val root = env.warehouse.root
+    env.view("country", Seq("name")).write(Seq(Seq("Italy")))
+    env.view("country", Seq("name")).delete(data = Seq(Seq("Italy")))
+    env.transaction {
+      env.view("country", Seq("name")).write(Seq(Seq("Spain")))
+      env.view("member", Seq("registration_code", "name")).write(Seq(Seq("099", "Ann")))
+    }
+    java.nio.file.Files.write(java.nio.file.Paths.get(root, "_TXN-5"),
+      graft.view.Json.write(Map("country" -> catalog(root)("country"))).getBytes("UTF-8"))
+    env.createTables() // recovers the journal
+    env.warehouse.compact("country")
+    val dest = java.nio.file.Files.createTempDirectory("graft-onefile-").toString + "/wh"
+    env.warehouse.backup(dest)
+    env.warehouse.backup(dest, incremental = true)
+    for (r <- Seq(root, dest))
+      assert(legacyFiles(r).isEmpty, legacyFiles(r).toString)
+    assert(catalog(dest) == catalog(root))
+  }
+
+  test("an unparseable root catalog raises on read and is reported by fsck") {
+    val env = freshEnv(seedTeams = false)
+    val root = env.warehouse.root
+    env.view("country", Seq("name")).write(Seq(Seq("Italy")))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "_ROOT"),
+      "{\"country\": \"{unterminated")
+    val e = intercept[IllegalStateException](
+      env.view("country", Seq("name")).read().collect())
+    assert(e.getMessage.contains("_ROOT"), e.getMessage)
+    // createTables must not paper over it with empty snapshots
+    intercept[IllegalStateException](env.createTables())
+    val snaps = env.warehouse.snapshots("country")
+    val found = env.warehouse.fsck(reclaim = true)
+    assert(found.exists(i => i.kind == "unparseable-pointer" && i.table == "" &&
+      i.path.endsWith("_ROOT")), found.toString)
+    assert(!found.exists(_.kind == "orphan-snapshot"), found.toString)
+    assert(env.warehouse.snapshots("country") == snaps, "reclaim deleted live state")
   }
 }

@@ -128,4 +128,31 @@ class TypesSpec extends SparkSpec {
       .write(Seq(Seq("Red", "Belgium")))
     assert(rows(env2.view("team").read()).size == 2)
   }
+
+  test("introspection without _SCHEMA.yaml reads each table from _ROOT") {
+    val root = Files.createTempDirectory("graft-introspect-root-").toString
+    val env = Env(spark, Registry.fromYaml(
+      """- table: plain
+        |  columns: {name: varchar, v: bigint}
+        |  key: [name]
+        |- table: bucketed
+        |  columns: {code: varchar, v: float}
+        |  key: [code]
+        |  buckets: 4
+        |- table: zoned
+        |  columns: {seq: bigint, v: bigint}
+        |  key: [seq]
+        |  use-index: brin
+        |""".stripMargin), root)
+    env.createTables()
+    env.view("plain", Seq("name", "v")).write(Seq(Seq("a", 1L), Seq("b", 2L)))
+    env.view("bucketed", Seq("code", "v")).write(Seq(Seq("x", 1.0), Seq("y", 2.0)))
+    env.view("zoned", Seq("seq", "v")).write((1L to 10L).map(i => Seq(i, i)))
+    Files.delete(java.nio.file.Paths.get(root, "_SCHEMA.yaml"))
+    val auto = Env.introspect(spark, root)
+    assert(auto.registry.names.sorted == Seq("bucketed", "plain", "zoned"))
+    for (t <- env.registry.names)
+      assert(auto.registry(t).columns.map(_.name) ==
+        env.registry(t).sparkSchema.fieldNames.toSeq, t)
+  }
 }

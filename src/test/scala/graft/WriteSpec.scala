@@ -277,6 +277,83 @@ class WriteSpec extends SparkSpec {
     check(Nil, v.read())
   }
 
+  /** Root paths of every file scan in the queries `body` ran, cached
+    * plans included: what the queries read, by directory. */
+  private def scannedDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def scans(p: SparkPlan): Seq[String] = p match {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.toString)
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case o => (o.children ++ o.subqueries).flatMap(scans)
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        scans(qe.executedPlan).foreach(seen.add)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (out, seen.toArray.toSeq.map(_.toString))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a one-key delete on a bucketed table reads only its key's bucket") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bdel-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: fact
+        |  columns: {code: varchar, v: bigint}
+        |  key: [code]
+        |  buckets: 8
+        |""".stripMargin), root)
+    env.createTables()
+    val v = env.view("fact", Seq("code", "v"))
+    v.write((1 to 40).map(i => Seq(s"c$i", i.toLong)))
+    val bucket = env.warehouse.bucketIds("fact", Seq(Seq("c7"))).head
+    val (n, scanned) = scannedDuring(
+      env.view("fact", Seq("code")).delete(data = Seq(Seq("c7"))))
+    assert(n == 1)
+    val tableScans = scanned.filter(_.contains("/fact/"))
+    assert(tableScans.nonEmpty && tableScans.forall(_.endsWith(s"/__b=$bucket")),
+      s"bucket $bucket: $scanned")
+    assert(rows(v.read()).size == 39)
+  }
+
+  test("every delete form returns the rows it removed, on every layout") {
+    val root = java.nio.file.Files.createTempDirectory("graft-delcount-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: p
+        |  columns: {k: bigint, v: bigint}
+        |  key: [k]
+        |- table: b
+        |  columns: {k: bigint, v: bigint}
+        |  key: [k]
+        |  buckets: 4
+        |- table: z
+        |  columns: {k: bigint, v: bigint}
+        |  key: [k]
+        |  use-index: brin
+        |""".stripMargin), root)
+    env.createTables()
+    for (t <- Seq("p", "b", "z")) {
+      val v = env.view(t, Seq("k", "v"))
+      val byKey = env.view(t, Seq("k"))
+      v.write((1 to 20).map(i => Seq(i.toLong, i.toLong)))
+      assert(byKey.delete(data = Seq(Seq(3L), Seq(4L), Seq(99L))) == 2, t)
+      assert(v.delete(filters = Seq("(> v 15)")) == 5, t)
+      assert(byKey.delete(data = Seq(Seq(1L), Seq(2L), Seq(5L)), swap = true) == 10, t)
+      assert(rows(v.read()).map(_.head).toSet == Set[Any](1L, 2L, 5L), t)
+      assert(v.delete() == 3, t)
+      assert(rows(v.read()).isEmpty, t)
+    }
+  }
+
   test("fetch and save") { // base_test.py:172-178, view.py:714-727
     val env = freshEnv()
     env.save("country", Map("name" -> "Italy"))
