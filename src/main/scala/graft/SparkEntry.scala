@@ -580,10 +580,7 @@ object SparkEntry {
       val e = env(s, dir)
       val corpus = e.view("documents", Seq("doc_id", "text")).read()
       val idxDir = scratchDir("mhidx-" + Integer.toHexString(dir.hashCode))
-      // buckets sized to the corpus: 64 dirs keep local-fs commit cost
-      // sane at this SF; the 100-TB default (256) only pays off once
-      // probe sets are small relative to the bucket count
-      Dedup.buildMinhashIndex(corpus, "doc_id", "text", idxDir, buckets = 64)
+      Dedup.buildMinhashIndex(corpus, "doc_id", "text", idxDir)
       val near = corpus.filter(col("doc_id") < 5).select(
         (col("doc_id") + 5000L).as("doc_id"),
         concat(col("text"), lit(" zzz")).as("text"))

@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.view.Write
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Deduplication operators for training-data pipelines: exact,
   * content-hash, MinHash+LSH, SimHash — all bucketed (candidate pairs
@@ -499,10 +501,10 @@ object Dedup {
     * (the 100-TB pipeline shape — per-batch cost scales with the
     * batch, never the corpus). Layout under `path`:
     *
-    *  - `bands/` — one (id, band, bandHash) row per (doc, band),
-    *    parquet-partitioned by `__bp = bandHash mod buckets`, so a
-    *    probe reads only the partitions the batch's band hashes land
-    *    in;
+    *  - `bands/` — one (id, band, bandHash) row per (doc, band) in flat
+    *    parquet files, which a probe joins on (band, bandHash). A
+    *    batch's band hashes cover every hash range, so bucketing them
+    *    would let no probe skip a file;
     *  - `docs/`  — (id, shingle-hash set) for the verify stage, read
     *    column-pruned and semi-joined to candidates only;
     *  - the [[IndexDir]] meta — the LSH parameters, so probes can
@@ -510,48 +512,51 @@ object Dedup {
     */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
       path: String, numHashes: Int = 128, numBands: Int = 32,
-      shingleSize: Int = 3, buckets: Int = 256): Unit = {
-    // Shingle-hash each doc ONCE: the hash sets feed both the docs/
-    // store (written verbatim) and the banded signatures (derived by
-    // exploding them) — without the persist the corpus is parsed and
-    // hashed twice, the single most expensive map stage of the build.
-    Scope {
-      val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
-        shingleHashes(col(textCol), shingleSize).as("__hs")))
-      docsH.write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(path, "docs").toString)
-      val banded = bandedFromHashSets(docsH, numHashes, numBands)
-        .withColumn("__bp", pmod(col("__bsig"), lit(buckets.toLong)))
-        .repartition(col("__bp"))
-      banded.write.mode("overwrite").partitionBy("__bp")
-        .parquet(new org.apache.hadoop.fs.Path(path, "bands").toString)
-      IndexDir.write(df.sparkSession, path,
-        IndexDir.MinhashMeta(numHashes, numBands, shingleSize, buckets))
-    }
+      shingleSize: Int = 3): Unit = {
+    val meta = IndexDir.MinhashMeta(numHashes, numBands, shingleSize)
+    writeMinhashRows(df, idCol, textCol, path, meta, "overwrite")
+    IndexDir.write(df.sparkSession, path, meta)
   }
 
   /** Incrementally add documents to a [[buildMinhashIndex]] corpus
     * index (through [[Similarity.appendToIndex]], which reads the meta):
-    * signatures are computed with the INDEX's stored parameters,
-    * appended into the same bucket-partition layout — no rebuild, cost
-    * scales with the batch. The caller owns id-uniqueness across
-    * batches; appends are at-least-once safe (a replayed append
-    * duplicates signature rows, which costs bytes but never changes a
-    * dedup decision — candidates dedupe on id). */
+    * signatures are computed with the INDEX's stored parameters and
+    * appended as new files — no rebuild, cost scales with the batch.
+    * The caller owns id-uniqueness across batches; appends are
+    * at-least-once safe (a replayed append duplicates signature rows,
+    * which costs bytes but never changes a dedup decision — candidates
+    * dedupe on id). An index built with `__bp`-partitioned bands is
+    * first rewritten flat, once, through the [[IndexDir.rebuild]] swap:
+    * a flat file next to partition directories is invisible to a read
+    * of `bands/`. */
   private[ops] def appendToMinhashIndex(df: DataFrame, idCol: String,
       textCol: String, path: String, meta: IndexDir.MinhashMeta): Unit = {
-    val IndexDir.MinhashMeta(numHashes, numBands, shingleSize, buckets) = meta
-    Scope {
-      val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
-        shingleHashes(col(textCol), shingleSize).as("__hs")))
-      docsH.write.mode("append")
-        .parquet(new org.apache.hadoop.fs.Path(path, "docs").toString)
-      bandedFromHashSets(docsH, numHashes, numBands)
-        .withColumn("__bp", pmod(col("__bsig"), lit(buckets.toLong)))
-        .repartition(col("__bp"))
-        .write.mode("append").partitionBy("__bp")
-        .parquet(new org.apache.hadoop.fs.Path(path, "bands").toString)
+    val spark = df.sparkSession
+    if (meta.legacyBuckets.isDefined) IndexDir.rebuild(spark, path) { scratch =>
+      for (set <- Seq("docs", "bands"))
+        spark.read.parquet(new org.apache.hadoop.fs.Path(path, set).toString)
+          .drop("__bp").write
+          .parquet(new org.apache.hadoop.fs.Path(scratch, set).toString)
+      IndexDir.write(spark, scratch, meta.copy(legacyBuckets = None))
     }
+    writeMinhashRows(df, idCol, textCol, path, meta, "append")
+  }
+
+  /** Shingle-hash each doc ONCE into a cache that feeds both the
+    * `docs/` rows and the banded signatures, and write both, one file
+    * per [[Write.tasksFor]] share of their rows. */
+  private def writeMinhashRows(df: DataFrame, idCol: String, textCol: String,
+      path: String, meta: IndexDir.MinhashMeta, mode: String): Unit = Scope {
+    val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
+      shingleHashes(col(textCol), meta.shingleSize).as("__hs")))
+    // build the cache on every partition before the writes coalesce,
+    // so the hashing stays parallel and the cache counts the rows
+    docsH.foreachPartition((_: Iterator[Row]) => ())
+    def write(f: DataFrame, set: String, rowsPerDoc: Int): Unit =
+      Bridge.cachedRows(docsH).fold(f)(n => f.coalesce(Write.tasksFor(n * rowsPerDoc)))
+        .write.mode(mode).parquet(new org.apache.hadoop.fs.Path(path, set).toString)
+    write(docsH, "docs", 1)
+    write(bandedFromHashSets(docsH, meta.numHashes, meta.numBands), "bands", meta.numBands)
   }
 
   /** The banded-signature frame `(__id, __band, __bsig)` shared by
@@ -601,27 +606,20 @@ object Dedup {
   /** Dedup a new batch AGAINST a [[buildMinhashIndex]] corpus index:
     * drops batch docs whose n-gram Jaccard with some indexed doc is >=
     * `threshold`; batch-internal duplicates are untouched (compose
-    * with [[minhashDedup]] for those). Reads only the band partitions
-    * the batch's band hashes bucket into, joins candidates on
-    * (band, bandHash), and verifies against the corpus hash sets
-    * semi-joined to candidate ids — batch-proportional cost.
+    * with [[minhashDedup]] for those). Joins the batch's bands with
+    * all of `bands/` on (band, bandHash) (either layout: the select
+    * drops a partitioned index's `__bp`), and verifies against the
+    * corpus hash sets semi-joined to candidate ids.
     */
   def dedupAgainstIndex(newDf: DataFrame, idCol: String, textCol: String,
       path: String, threshold: Double = 0.8): DataFrame = {
     val spark = newDf.sparkSession
-    val IndexDir.MinhashMeta(numHashes, numBands, shingleSize, buckets) =
+    val IndexDir.MinhashMeta(numHashes, numBands, shingleSize, _) =
       IndexDir.readAs[IndexDir.MinhashMeta](spark, path, "a minhash corpus index")
-    val newBanded = Scope.checkpoint(
+    val newBanded =
       bandedSignatures(newDf, idCol, textCol, numHashes, numBands, shingleSize)
-        .withColumn("__bp", pmod(col("__bsig"), lit(buckets.toLong))))
-    // driver-side bucket pruning: ≤`buckets` longs
-    val probed = newBanded.select("__bp").distinct()
-      .collect().map(_.getLong(0)).toSet
-    val dirs = IndexDir.partitions(spark,
-      new org.apache.hadoop.fs.Path(path, "bands").toString, "__bp",
-      probed.toSeq.sorted)
-    if (dirs.isEmpty) return newDf
-    val idx = spark.read.parquet(dirs: _*)
+    val idx = spark.read.parquet(
+      new org.apache.hadoop.fs.Path(path, "bands").toString)
     // the candidate frame is referenced by the verify's pair set and
     // both hash-set semi-joins (and counted for the adaptive verify) —
     // materialize it; the hash-set frames are left lazy, the verify

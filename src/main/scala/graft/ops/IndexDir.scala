@@ -14,7 +14,7 @@ import scala.util.Try
   *
   * Layout of an index at `path`:
   *  - the family's parquet rows (`__bp=` / `__c=` partitions, or the
-  *    minhash `bands/` + `docs/` trees);
+  *    minhash index's flat `bands/` and `docs/` file sets);
   *  - `_graft_index_meta.json`, the typed [[Meta]]: build parameters
   *    and, for the centroid families, centroids, codebooks and drift
   *    tallies, so no probe or append ever runs with parameters the
@@ -63,12 +63,16 @@ object IndexDir {
     def fields: Seq[(String, Any)]
   }
 
+  /** `legacyBuckets` is set only when the meta was read from an index
+    * built before flat bands, whose `bands/` is Hive-partitioned into
+    * that many `__bp=` directories (the meta's `buckets` key). No build
+    * writes that layout; the first append rewrites it flat. */
   final case class MinhashMeta(numHashes: Int, numBands: Int,
-      shingleSize: Int, buckets: Int) extends Meta {
+      shingleSize: Int, legacyBuckets: Option[Int] = None) extends Meta {
     def kind = "minhash"
     def fields = Seq("kind" -> kind, "numHashes" -> numHashes,
-      "numBands" -> numBands, "shingleSize" -> shingleSize,
-      "buckets" -> buckets)
+      "numBands" -> numBands, "shingleSize" -> shingleSize) ++
+      legacyBuckets.map("buckets" -> _)
   }
 
   final case class LshMeta(dims: Int, numPlanes: Int, bandBits: Int,
@@ -207,7 +211,7 @@ object IndexDir {
     def meta: Either[Seq[String], Meta] = {
       val built: Option[Meta] = m.get("kind").fold("lsh")(_.toString) match {
         case "minhash" => Some(MinhashMeta(pos("numHashes"), pos("numBands"),
-          pos("shingleSize"), pos("buckets")))
+          pos("shingleSize"), m.get("buckets").map(_ => pos("buckets"))))
         case "lsh" => Some(LshMeta(pos("dims"), pos("numPlanes"),
           pos("bandBits"), pos("buckets"), long("seed")))
         case "ivf" =>

@@ -294,7 +294,7 @@ object Similarity {
     * ([[Dedup.buildMinhashIndex]]; `vecCol` names the TEXT column), lsh
     * ([[buildIndex]]) or a centroid index (ivf, ivfpq, semantic).
     * Signatures and assignments use the INDEX's stored parameters, never
-    * the caller's, and rows land in the existing partition layout: no
+    * the caller's, and rows land in the index's own layout: no
     * rebuild, cost scales with the batch. The caller owns id-uniqueness
     * across batches (duplicate ids surface as duplicate candidates;
     * queries dedupe on id, so recall is unaffected but bytes are

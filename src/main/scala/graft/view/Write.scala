@@ -314,10 +314,11 @@ object Write {
     * partition per this many rows, and [[assignIds]] sorts one key
     * range per this many rows. A batch this small is one partition
     * and one range, which needs no dedupe shuffle, no range sampling
-    * job and no per-range counts job. */
+    * job and no per-range counts job. The minhash corpus index writes
+    * one file per this many rows too. */
   private val RowsPerTask = 100000L
 
-  private def tasksFor(rows: Long): Int = ((rows + RowsPerTask - 1) / RowsPerTask).max(1L).toInt
+  private[graft] def tasksFor(rows: Long): Int = ((rows + RowsPerTask - 1) / RowsPerTask).max(1L).toInt
 
   /** Deterministic surrogate ids without a single-task window.
     *

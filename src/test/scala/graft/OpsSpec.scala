@@ -156,6 +156,92 @@ class OpsSpec extends SparkSpec {
     } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
+  /** An index as builds before flat bands wrote it: `bands/`
+    * Hive-partitioned by `__bp = bandHash mod buckets`, the meta
+    * carrying `buckets`. */
+  private def partitionedIndex(corpus: org.apache.spark.sql.DataFrame,
+      dir: String, buckets: Int): Unit = {
+    corpus.select(col("doc_id").as("__id"),
+        Dedup.shingleHashes(col("text"), 3).as("__hs"))
+      .write.parquet(s"$dir/docs")
+    Dedup.bandedSignatures(corpus, "doc_id", "text", 128, 32, 3)
+      .withColumn("__bp", pmod(col("__bsig"), lit(buckets.toLong)))
+      .repartition(col("__bp"))
+      .write.partitionBy("__bp").parquet(s"$dir/bands")
+    java.nio.file.Files.writeString(
+      java.nio.file.Path.of(dir, "_graft_index_meta.json"),
+      s"""{"kind":"minhash","numHashes":128,"numBands":32,""" +
+        s""""shingleSize":3,"buckets":$buckets}""")
+  }
+
+  private def partitionDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir, "bands").listFiles()).toSeq.flatten
+      .filter(f => f.isDirectory && f.getName.startsWith("__bp=")).map(_.getName)
+
+  test("a partitioned-bands index is rewritten flat before its first append") {
+    val corpus = docsDf(Seq(
+      (1L, "the quick brown fox jumps over the lazy dog and runs far away " * 5),
+      (2L, "completely different content about spark query engines " * 5)))
+    val added = "a freshly appended document about warehouse compaction cycles " * 5
+    val dir = java.nio.file.Files.createTempDirectory("mhlegacy").toString
+    try {
+      partitionedIndex(corpus, dir, buckets = 8)
+      assert(partitionDirs(dir).nonEmpty)
+      assert(graft.ops.IndexDir.readAs[graft.ops.IndexDir.MinhashMeta](s, dir,
+        "minhash").legacyBuckets == Some(8))
+      Similarity.appendToIndex(docsDf(Seq((3L, added))), "text", "doc_id", dir)
+      // a near-copy of the APPENDED doc must find it: appended files
+      // next to partition directories would be invisible to the probe
+      val probe = docsDf(Seq((10L, added + " zzz"),
+        (11L, "nothing like any indexed text at all, just cooking pasta " * 5)))
+      val kept = Scope(rows(Dedup.dedupAgainstIndex(probe, "doc_id", "text", dir,
+        threshold = 0.5)).map(_.head))
+      assert(kept == Seq(11L), kept)
+      assert(partitionDirs(dir).isEmpty, partitionDirs(dir))
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(s.sparkContext.hadoopConfiguration)
+      assert(graft.ops.IndexDir.problems(fs, new org.apache.hadoop.fs.Path(dir)).isEmpty)
+      assert(graft.ops.IndexDir.readAs[graft.ops.IndexDir.MinhashMeta](s, dir,
+        "minhash").legacyBuckets.isEmpty)
+      assert(!java.nio.file.Files.readString(java.nio.file.Path.of(dir,
+        "_graft_index_meta.json")).contains("buckets"))
+      assert(s.read.parquet(s"$dir/docs").count() == 3L)
+      assert(s.read.parquet(s"$dir/bands").columns.toSet ==
+        Set("__id", "__band", "__bsig"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("dedupAgainstIndex keeps the same survivors on partitioned and flat bands") {
+    val rnd = new scala.util.Random(7)
+    val corpus = docsDf(Seq.tabulate(200)(i =>
+      (i.toLong, Seq.fill(40)(s"w${rnd.nextInt(500)}").mkString(" "))))
+    // near-copies (one token appended), token-reversed copies (fresh
+    // at any threshold) and exact copies of corpus docs
+    val batch = corpus.filter(col("doc_id") < 60).select(
+        (col("doc_id") + 5000L).as("doc_id"),
+        when(col("doc_id") % 3 === 0, concat(col("text"), lit(" zzz")))
+          .when(col("doc_id") % 3 === 1,
+            concat_ws(" ", reverse(split(col("text"), "\\s+"))))
+          .otherwise(col("text")).as("text"))
+    val legacy = java.nio.file.Files.createTempDirectory("mhlegacy").toString
+    val flat = java.nio.file.Files.createTempDirectory("mhflat").toString
+    def kept(dir: String) = Scope(rows(Dedup.dedupAgainstIndex(batch, "doc_id",
+      "text", dir, threshold = 0.5)).map(_.head.asInstanceOf[Long]).toSet)
+    try {
+      partitionedIndex(corpus, legacy, buckets = 16)
+      Dedup.buildMinhashIndex(corpus, "doc_id", "text", flat)
+      val onLegacy = kept(legacy)
+      assert(onLegacy.nonEmpty && onLegacy.size < 60, onLegacy)
+      assert(kept(flat) == onLegacy)
+      // the one-time rewrite (an append of a doc far from the batch)
+      Similarity.appendToIndex(docsDf(Seq((9999L,
+        "unrelated words about nothing in particular here " * 5))),
+        "text", "doc_id", legacy)
+      assert(partitionDirs(legacy).isEmpty)
+      assert(kept(legacy) == onLegacy)
+    } finally Seq(legacy, flat).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
   test("simhash banding is exact for hamming <= 3 on real docs") {
     // 4 bands x 16 bits pigeonhole: hamming <= 3 forces one identical
     // band, so simhashPairs(maxHamming=3) must equal the brute-force

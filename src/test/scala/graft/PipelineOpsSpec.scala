@@ -935,6 +935,11 @@ class PipelineOpsSpec extends SparkSpec {
       assert(out1.count() == 2L)
       val indexed1 = s.read.parquet(s"$idx/docs").count()
       assert(indexed1 == 2L)
+      // flat bands, one file per row set for a small build or append
+      def files(set: String) = new java.io.File(idx, set).listFiles().toSeq
+      def parts(set: String) = files(set).count(_.getName.endsWith(".parquet"))
+      assert(parts("docs") == 1 && parts("bands") == 1,
+        (files("docs") ++ files("bands")).map(_.getName))
       // batch 2: a near-copy of doc 1 plus a fresh doc — cross_dedup
       // drops the near-copy against the index; only the fresh doc
       // appends
@@ -947,6 +952,9 @@ class PipelineOpsSpec extends SparkSpec {
         rep2)
       assert(rows(out2.select("doc_id")).map(_.head) == Seq(11L))
       assert(s.read.parquet(s"$idx/docs").count() == 3L)
+      assert(parts("docs") == 2 && parts("bands") == 2)
+      assert(!(files("docs") ++ files("bands")).exists(_.isDirectory),
+        files("bands").map(_.getName))
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 

@@ -130,7 +130,7 @@ class StreamingSpec extends SparkSpec {
       val third = "yet another topic entirely about warehouse compaction cycles " * 5
       // seed corpus: one doc, indexed
       val seed = Seq((100L, base)).toDF("doc_id", "text")
-      graft.ops.Dedup.buildMinhashIndex(seed, "doc_id", "text", idx, buckets = 8)
+      graft.ops.Dedup.buildMinhashIndex(seed, "doc_id", "text", idx)
 
       val mem = MemoryStream[(Long, String)]
       val stream = mem.toDF().toDF("doc_id", "text")
@@ -233,7 +233,7 @@ class StreamingSpec extends SparkSpec {
       val other = "completely different content about spark streaming engines " * 5
       val third = "yet another topic entirely about warehouse compaction cycles " * 5
       val seed = Seq((100L, base)).toDF("doc_id", "text")
-      graft.ops.Dedup.buildMinhashIndex(seed, "doc_id", "text", idx, buckets = 8)
+      graft.ops.Dedup.buildMinhashIndex(seed, "doc_id", "text", idx)
       // shard set 1: written by the exporter (gzipped + sidecar)
       graft.sources.Corpus.exportJsonl(
         Seq((1L, base.replace("lazy", "sleepy")), (2L, other))
