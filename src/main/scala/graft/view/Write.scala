@@ -229,17 +229,22 @@ object Write {
   }
 
   /** Normalized, coerced, FK-resolved, key-checked, key-deduped batch,
-    * cached in the caller's [[graft.ops.Scope]]. All violations
-    * (unknown FK values, null key columns) surface via one Spark
-    * action, and that action is also what materializes the cache.
+    * cached in the caller's [[graft.ops.Scope]], and its exact row
+    * count. Validation and caching are one pass: the job that fills
+    * the cache also counts the rows and finds the first violation
+    * (unknown FK values, null key columns), so the batch is computed
+    * once and checked before any data file is written. That pass is
+    * one tracked SQL execution ([[Bridge.cachedPass]]), and the
+    * returned frame carries the exact count in its statistics.
     *
     * Validation is PRE-dedupe, as in the reference: a bad row raises
     * even when a later row with the same key would supersede it. The
     * dedupe aggregate therefore carries, per key, the flags of the last
-    * bad row next to the winning payload, and the probe looks for a
-    * key with such a sample — one cache instead of a cached pre-dedupe
-    * frame plus a cached deduped one. */
-  private def prepare(v: View, groups: Seq[Group], data: Any): (DataFrame, Option[Long]) = {
+    * bad row (`__bad`, null for a good key) next to the winning
+    * payload, and the pass looks for a key with such a sample — one
+    * cache instead of a cached pre-dedupe frame plus a cached deduped
+    * one. */
+  private def prepare(v: View, groups: Seq[Group], data: Any): (DataFrame, Long) = {
     val env = v.env
     val keyCols = v.keyCols
     val (resolved, checks) = resolve(env, v, groups, stage(env, v, data))
@@ -252,27 +257,24 @@ object Write {
     // max_by on the unique `__seq`, a partial-aggregable hash aggregate.
     val payload = resolved.columns
       .filter(cn => cn != "__vflags" && cn != "__vsamples" && cn != "__seq")
-    val deduped = Scope.cache(resolved
+    val deduped = resolved
       .groupBy(keyCols.map(c): _*)
       .agg(max_by(struct(payload.map(c): _*), c("__seq")).as("__r"),
         max_by(struct(c("__vflags"), c("__vsamples")), when(bad, c("__seq")))
           .as("__bad"))
-      .select(payload.map(cn => col(s"__r.`$cn`").as(cn)) :+ c("__bad"): _*))
-    // one job over every partition, at most one sample from each (a
-    // limit would scan one partition first and then the rest)
-    val badRow = deduped.filter(c("__bad").isNotNull)
-      .select(col("__bad.__vflags"), col("__bad.__vsamples"))
-      .rdd.mapPartitions(_.take(1)).collect()
-    badRow.headOption.foreach { row =>
-      val flags = row.getSeq[String](0)
-      val samples = row.getSeq[String](1)
+      .select(payload.map(cn => col(s"__r.`$cn`").as(cn)) :+ c("__bad"): _*)
+    val pass = Bridge.cachedPass(deduped, "validate", "__bad")(Scope.cache(_))
+    pass.marked.headOption.foreach { row =>
+      val bad = row.getAs[Row]("__bad")
+      val flags = bad.getSeq[String](0)
+      val samples = bad.getSeq[String](1)
       val fkHit = flags.indexWhere(_ == "true")
       if (fkHit >= 0) throw new IllegalArgumentException(
         s"Values (${samples(fkHit)}) ${checks(fkHit)._3}")
       throw new IllegalArgumentException(
         s"Null value in key column when writing on table '${v.table.name}'")
     }
-    (deduped.drop("__bad"), Bridge.cachedRows(deduped))
+    (pass.frame.drop("__bad"), pass.rows)
   }
 
   // -------------------------------------------------------- write filters
@@ -313,60 +315,61 @@ object Write {
   /** Rows a write hands one task: a local batch is staged in one
     * partition per this many rows, and [[assignIds]] sorts one key
     * range per this many rows. A batch this small is one partition
-    * and one range, which needs no dedupe shuffle, no range sampling
-    * job and no per-range counts job. The minhash corpus index writes
+    * and one range: it needs no dedupe shuffle, and its ids are
+    * numbered inside the write query. The minhash corpus index writes
     * one file per this many rows too. */
   private val RowsPerTask = 100000L
 
   private[graft] def tasksFor(rows: Long): Int = ((rows + RowsPerTask - 1) / RowsPerTask).max(1L).toInt
 
-  /** Deterministic surrogate ids without a single-task window.
+  /** Deterministic surrogate ids: `maxId` + the row's rank in key
+    * order (keys are unique after the batch dedupe, so ids are the
+    * same across runs and retries). Returns the frame and the new
+    * high-water mark (maxId + inserted rows) when it is known here.
     *
-    * `Window.orderBy(key)` with no partition funnels the whole insert
-    * batch through ONE task — the classic global-row_number scale
-    * killer. Instead: range-partition on the key and sort within
-    * partitions (now globally sorted), collect per-partition counts
-    * (a few bytes per partition), then assign
-    * `maxId + partitionOffset + localRank` per partition. A row's id
-    * is its global key-rank regardless of where the range boundaries
-    * fall, so ids are deterministic across runs and retries (keys are
-    * unique after the batch dedupe).
+    * The number of key ranges follows the batch's exact size
+    * (`batchRows`, an upper bound on `df`'s rows): one range per
+    * [[RowsPerTask]] rows, at most the shuffle partition count.
     *
-    * The number of ranges follows the measured batch size
-    * (`batchRows`, an upper bound on `df`'s rows; None = unknown):
-    * one range per [[RowsPerTask]] rows, at most the shuffle
-    * partition count. One range has offset 0 and needs no counts, so
-    * its ids are assigned in the same pass that consumes them and the
-    * new high-water mark is left to the store, which reads it from
-    * the written files. Returns the frame and the new high-water mark
-    * (maxId + inserted rows) when it is known.
+    *  - One range (every tanker-sized write): the rows are numbered
+    *    inside the write query itself, `maxId + row_number()` over
+    *    the key order. One range is one task anyway, so the window
+    *    costs no parallelism, and there is no separate query, job or
+    *    RDD round trip. The new high-water mark is left to the store,
+    *    which reads it from the written files.
+    *  - Several ranges: `Window.orderBy(key)` with no partition would
+    *    funnel the whole batch through ONE task. Instead the batch is
+    *    range-partitioned on the key and sorted within partitions (now
+    *    globally sorted), the per-partition counts are collected (a few
+    *    bytes per partition), and each partition assigns
+    *    `maxId + partitionOffset + localRank`. A row's id is its global
+    *    key rank wherever the range boundaries fall.
     */
   private def assignIds(env: Env, df: DataFrame, keyCols: Seq[String],
-      maxId: Long, batchRows: Option[Long]): (DataFrame, Option[Long]) = {
+      maxId: Long, batchRows: Long): (DataFrame, Option[Long]) = {
     val maxRanges = env.spark.conf.get("spark.sql.shuffle.partitions").toLong
-    val ranges = batchRows.fold(maxRanges)(n => tasksFor(n).toLong.min(maxRanges)).toInt
-    val sorted = df.repartitionByRange(ranges, keyCols.map(c): _*)
-      .sortWithinPartitions(keyCols.map(c): _*).rdd
-    val (rdd, offsets, hwm) =
-      if (ranges == 1) (sorted, Array(0L), None)
-      else {
-        // cache the sorted RDD: it is consumed twice (count pass +
-        // assign pass) and the range-partition shuffle + sort should
-        // run once
-        val rdd = Scope.cache(sorted)
-        val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
-          Iterator((i, it.size.toLong))
-        }.collect().sortBy(_._1).map(_._2)
-        val offsets = counts.scanLeft(0L)(_ + _)
-        (rdd, offsets, Some(maxId + offsets.last))
+    val ranges = tasksFor(batchRows).toLong.min(maxRanges).toInt
+    if (ranges == 1)
+      (df.withColumn("id", lit(maxId) + row_number().over(Window.orderBy(keyCols.map(c): _*))),
+        None)
+    else {
+      // cache the sorted RDD: it is consumed twice (count pass +
+      // assign pass) and the range-partition shuffle + sort should run
+      // once
+      val rdd = Scope.cache(df.repartitionByRange(ranges, keyCols.map(c): _*)
+        .sortWithinPartitions(keyCols.map(c): _*).rdd)
+      val counts = rdd.mapPartitionsWithIndex { case (i, it) =>
+        Iterator((i, it.size.toLong))
+      }.collect().sortBy(_._1).map(_._2)
+      val offsets = counts.scanLeft(0L)(_ + _)
+      val withIds = rdd.mapPartitionsWithIndex { case (i, it) =>
+        var n = maxId + offsets(i)
+        it.map { row => n += 1; Row.fromSeq(row.toSeq :+ n) }
       }
-    val withIds = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var n = maxId + offsets(i)
-      it.map { row => n += 1; Row.fromSeq(row.toSeq :+ n) }
+      val schema = StructType(df.schema.fields :+
+        StructField("id", LongType, nullable = false))
+      (env.spark.createDataFrame(withIds, schema), Some(maxId + offsets.last))
     }
-    val schema = StructType(df.schema.fields :+
-      StructField("id", LongType, nullable = false))
-    (env.spark.createDataFrame(withIds, schema), hwm)
   }
 
   /** Encoded [min, max] of every batch key column, or None for an
@@ -441,11 +444,10 @@ object Write {
 
     var filtered = 0L
     if (allFilters.nonEmpty) {
-      val total = b.count()
       val kept = Scope.cache(oldPass(v,
         newPass(v, b, cur, mapped, keyCols, allFilters, argv),
         cur, keyCols, allFilters, argv))
-      filtered = total - kept.count()
+      filtered = batchRows - kept.count()
       b = kept
     }
 

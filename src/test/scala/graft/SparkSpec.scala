@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.schema.Registry
 
 /** Shared local SparkSession + fixture helpers for all suites. */
@@ -84,20 +85,28 @@ abstract class SparkSpec extends AnyFunSuite {
     * group of their own (Spark hands it to the threads that run query
     * stages), and the listener bus is drained before counting. */
   def jobsDuring[T](body: => T): (T, Int) = {
+    val (out, jobs) = jobExecutionsDuring(body)
+    (out, jobs.size)
+  }
+
+  /** [[jobsDuring]], naming each job's SQL execution: its
+    * `spark.sql.execution.id`, None for a job run outside any tracked
+    * SQL execution. */
+  def jobExecutionsDuring[T](body: => T): (T, Seq[Option[String]]) = {
     val sc = spark.sparkContext
     val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(Option(p.getProperty("spark.sql.execution.id"))))
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, group)
     try {
       val out = body
       org.apache.spark.TestBus.drain(sc)
-      (out, n.get)
+      (out, seen.asScala.toSeq)
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)

@@ -3,6 +3,7 @@ package graft
 /** Ported golden write tests (reference tests/write_test.py,
   * delete_test.py). */
 class WriteSpec extends SparkSpec {
+  import WriteSpec.Shape
 
   test("no insert") { // write_test.py:10-21
     val env = freshEnv()
@@ -207,12 +208,69 @@ class WriteSpec extends SparkSpec {
   test("a rejected write releases everything it cached") {
     val env = freshEnv()
     val v = env.view("team", Seq("name", "country.name"))
-    val fk = assertReleases("unknown-FK write")(
-      intercept[IllegalArgumentException](v.write(Seq(Seq("Pink", "Narnia")))))
+    val rootFile = java.nio.file.Paths.get(env.warehouse.root, "_ROOT")
+    def snaps(): Set[String] = new java.io.File(env.warehouse.root, "team").list()
+      .filter(_.startsWith("snap-")).toSet
+    // the batch is rejected before any data file is written: no new
+    // snapshot directory, and the catalog is the same bytes
+    def rejected(what: String)(op: => Unit): IllegalArgumentException = {
+      val (snapsBefore, rootBefore) = (snaps(), java.nio.file.Files.readAllBytes(rootFile))
+      val e = assertReleases(what)(intercept[IllegalArgumentException](op))
+      assert(snaps() == snapsBefore, s"$what left ${snaps() -- snapsBefore}")
+      assert(java.util.Arrays.equals(java.nio.file.Files.readAllBytes(rootFile), rootBefore),
+        s"$what changed _ROOT")
+      e
+    }
+    val fk = rejected("unknown-FK write")(v.write(Seq(Seq("Pink", "Narnia"))))
     assert(fk.getMessage.contains("not known in table"), fk.getMessage)
-    val nk = assertReleases("null-key write")(
-      intercept[IllegalArgumentException](v.write(Seq(Seq("Pink", null)))))
+    val nk = rejected("null-key write")(v.write(Seq(Seq("Pink", null))))
     assert(nk.getMessage.contains("Null value in key column"), nk.getMessage)
+  }
+
+  /** The jobs `body` ran, how many of them ran outside any tracked SQL
+    * execution, the distinct executions the others ran in, and the SQL
+    * executions a `QueryExecutionListener` saw. */
+  private def shapeOf[T](body: => T): (T, Shape) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val tracked = new java.util.concurrent.atomic.AtomicInteger()
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = tracked.incrementAndGet()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = tracked.incrementAndGet()
+    }
+    spark.listenerManager.register(queries)
+    try {
+      val (out, jobs) = jobExecutionsDuring(body)
+      (out, Shape(jobs.size, jobs.count(_.isEmpty), jobs.flatten.distinct.size, tracked.get))
+    } finally spark.listenerManager.unregister(queries)
+  }
+
+  test("a local-batch upsert validates in one pass and commits in one query") {
+    val root = java.nio.file.Files.createTempDirectory("graft-shape-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: customer
+        |  columns: {c_custkey: bigint, c_name: varchar}
+        |  key: [c_custkey]
+        |- table: account
+        |  columns: {acct: bigint, cust: m2o customer.id, bal: bigint}
+        |  key: [acct]
+        |""".stripMargin), root)
+    env.createTables()
+    env.view("customer", Seq("c_custkey", "c_name"))
+      .write((1 to 20).map(i => Seq(i.toLong, s"cust-$i")))
+    val v = env.view("account", Seq("acct", "cust.c_name", "bal"))
+    v.write((1 to 100).map(i => Seq(i.toLong, s"cust-${i % 20 + 1}", i.toLong)))
+    // half updates, half new keys, in no key order
+    val batch = (51 to 150).reverse.map(i => Seq(i.toLong, s"cust-${i % 7 + 1}", 2L * i))
+    val (_, shape) = shapeOf(v.write(batch))
+    // one pass resolves the FK, dedupes, validates and caches the
+    // batch; one query numbers the new rows and writes the snapshot
+    assert(shape.jobs <= 6, s"$shape")
+    assert(shape.untracked == 0, s"$shape")
+    assert(shape.executions == 2 && shape.tracked == 2, s"$shape")
+    check((1 to 150).map { i =>
+      val (name, bal) = if (i > 50) (s"cust-${i % 7 + 1}", 2L * i) else (s"cust-${i % 20 + 1}", i.toLong)
+      Seq(i.toLong, name, bal, i.toLong)
+    }, env.view("account", Seq("acct", "cust.c_name", "bal", "id")).read())
   }
 
   test("write from maps and single map") { // view.py:398-416
@@ -402,9 +460,16 @@ class WriteSpec extends SparkSpec {
     // keys arrive scrambled: rank order is not input order
     v.write(spark.range(n).selectExpr("(id * 7919) % 250000 as k"))
     assert(env.warehouse.maxId("big") == n + 2)
+    // one range: a small scrambled batch, numbered inside the write
+    // query; its stored keys keep their ids, its new keys follow on
+    v.write(((0 until 500).map(i => n + (i * 37) % 500) ++ Seq(5L, 0L, 17L)).map(Seq(_)))
+    assert(env.warehouse.maxId("big") == n + 502)
+    check(Seq(Seq(-2L, 1L), Seq(-1L, 2L)),
+      env.view("big", Seq("k", "id")).read(Seq("(< k 0)")))
     val bad = env.view("big", Seq("k", "id")).read(Seq("(>= k 0)"))
       .filter("id != k + 3").count()
     assert(bad == 0)
+    assert(v.read().count() == n + 502)
   }
 
   test("maxId comes from the manifest, not a table scan") {
@@ -535,4 +600,9 @@ class WriteSpec extends SparkSpec {
     check(Seq(Seq("a", 1, "hello"), Seq("b", 2, null)),
       auto.view("gadget", Seq("name", "qty", "note")).read())
   }
+}
+
+object WriteSpec {
+  /** What a write ran (`shapeOf`). */
+  final case class Shape(jobs: Int, untracked: Int, executions: Int, tracked: Int)
 }
