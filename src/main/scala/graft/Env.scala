@@ -76,9 +76,9 @@ final class Env(
     * last write change" call. `summary = true` rolls the verdicts up
     * to per-kind counts (the release gate). A storage-level audit
     * surface like introspection: it reads snapshot directories
-    * directly, so view ACL read filters do NOT apply; bucketed tables
-    * refuse loudly (snapshot dirs are per-bucket deltas, not full
-    * states — readSnapshot's guard). */
+    * directly, so view ACL read filters do NOT apply; a snapshot that
+    * is a per-bucket or per-zone delta, not a full state, refuses
+    * loudly (readSnapshot's guard). */
   def diffSnapshots(table: String, from: Option[String] = None,
       to: Option[String] = None, summary: Boolean = false): DataFrame = {
     val (b, a) = snapshotPair(table, from, to)
@@ -92,7 +92,7 @@ final class Env(
     * ([[graft.ops.Profile.compare]] — before/after rows, nulls,
     * distinct counts, min/max, deltas) between two retained snapshots
     * of a managed table. Same snapshot resolution, same storage-level
-    * (ACL-free, bucketed-refusal) contract. */
+    * (ACL-free, delta-refusal) contract. */
   def compareSnapshots(table: String, from: Option[String] = None,
       to: Option[String] = None): DataFrame = {
     val (b, a) = snapshotPair(table, from, to)
@@ -125,13 +125,9 @@ final class Env(
 
   /** Shared snapshot resolution for the audit surfaces: `to` defaults
     * to the newest retained snapshot, `from` to the one just before
-    * `to`; bucketed tables refuse up front (their snapshot dirs are
-    * per-bucket deltas, not full states). Returns (before, after). */
+    * `to`. Returns (before, after). */
   private def snapshotPair(table: String, from: Option[String],
       to: Option[String]): (DataFrame, DataFrame) = {
-    require(registry(table).buckets == 0,
-      s"Table '$table' is bucketed; snapshots are per-bucket deltas, not " +
-        "full states, so there is nothing to audit")
     val snaps = warehouse.snapshots(table)
     val toSnap = to.getOrElse {
       require(snaps.nonEmpty, s"No retained snapshots for '$table'")

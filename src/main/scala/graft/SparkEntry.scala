@@ -1186,7 +1186,7 @@ object SparkEntry {
 
     // S1 extension: READ-SIDE BUCKET PRUNING — an IN-list pinning the
     // full key of a bucketed table hashes to its bucket ids
-    // driver-side (Warehouse.bucketIds, the same Catalyst bucketExpr
+    // driver-side (Warehouse.read, the same Catalyst bucketExpr
     // the writer clusters with) and the read opens only those bucket
     // dirs; rows must match the oracle's plain scan exactly (pruning
     // is IO elision — BucketSpec proves the file counts).

@@ -44,7 +44,7 @@ object Pipeline {
   final case class Stage(name: String, f: DataFrame => DataFrame)
 
   /** Per-stage audit row: survivors after the stage and wall-clock
-    * seconds (transformation + spill + count). */
+    * seconds (transformation + spill + footer count). */
   final case class StageReport(stage: String, rowsOut: Long, seconds: Double)
 
   /** Run `stages` over `input`, spilling between stages under
@@ -67,12 +67,17 @@ object Pipeline {
     stages.zipWithIndex.foreach { case (st, i) =>
       val t0 = System.nanoTime()
       val dir = new Path(scratch, f"stage-${base + i}%02d-${st.name}")
-      Scope(st.f(cur).write.mode("overwrite").parquet(dir.toString))
-      val spilled = spark.read.parquet(dir.toString)
-      // footer-count over the spill just written: cheap, and it IS the
-      // audit number (count of the materialized survivors, not of a
-      // replayed plan)
-      reports += StageReport(st.name, spilled.count(),
+      val schema = Scope {
+        val out = st.f(cur)
+        out.write.mode("overwrite").parquet(dir.toString)
+        out.schema
+      }
+      // read back with the stage's own schema (no inference job); the
+      // audit count comes from the spill's parquet footers (no job):
+      // the materialized survivors, not a replayed plan
+      val spilled = spark.read.schema(schema).parquet(dir.toString)
+      reports += StageReport(st.name,
+        graft.store.Warehouse.footerRows(spark.sparkContext.hadoopConfiguration, Seq(dir)),
         (System.nanoTime() - t0) / 1e9)
       if (!keepSpills) prevSpill.foreach(p => fs.delete(p, true))
       prevSpill = Some(dir)

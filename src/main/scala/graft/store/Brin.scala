@@ -88,7 +88,7 @@ object Brin {
     * CONTAINING a point (not the whole min-max span), an empty
     * surviving set is provably empty, and a bucketed read can hash
     * the exact key tuples to their bucket ids driver-side
-    * ([[Warehouse.bucketIds]]). Range-only conjuncts leave `points`
+    * ([[Warehouse.read]]). Range-only conjuncts leave `points`
     * `None` — same conservative envelope behavior as before. */
   final case class Bounds(lo: Option[Any], hi: Option[Any],
       points: Option[Seq[Any]] = None) {

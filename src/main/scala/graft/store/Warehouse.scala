@@ -1,6 +1,7 @@
 package graft.store
 
 import java.nio.charset.StandardCharsets
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -242,7 +243,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     registry(t).external.isDefined || currentManifest(t).isDefined
 
   /** Key-hash bucket id expression for a bucketed table. */
-  def bucketExpr(td: TableDef): Column = bucketOf(td, td.key.map(k => col("`" + k + "`")))
+  private[graft] def bucketExpr(td: TableDef): Column = bucketOf(td, td.key.map(k => col("`" + k + "`")))
 
   private def bucketOf(td: TableDef, keys: Seq[Column]): Column =
     pmod(hash(keys: _*), lit(td.buckets))
@@ -334,39 +335,70 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     })
   }
 
-  /** Read the live snapshot of a table (schema-correct empty frame if
-    * the table has never been written). */
-  def read(t: String): DataFrame = {
+  // ------------------------------------------------- layouts
+  //
+  // A managed table is stored in one of three layouts, and only this
+  // class knows which:
+  //  - plain: one snapshot directory;
+  //  - bucketed (`buckets: n`): `__b=<k>` key-hash bucket directories;
+  //  - zoned (`use-index: brin`): `__z=<k>` range-cluster zone
+  //    directories, with per-zone key stats in the manifest.
+  // The directories holding live rows are the table's leaves. A read
+  // opens the leaves its key bounds can match ([[read]]); a write
+  // replaces the leaves its batch keys can touch ([[slice]],
+  // [[replace]]) and carries the others over by reference.
+
+  private def bucketed(td: TableDef): Boolean = td.buckets > 0
+  private def zoned(td: TableDef): Boolean =
+    !bucketed(td) && td.useIndex.equalsIgnoreCase("brin")
+
+  /** Leaf directories (relative to the table dir) holding `m`'s rows. */
+  private def leaves(td: TableDef, m: Manifest): Seq[String] =
+    if (bucketed(td)) m.buckets.values.toSeq.sorted
+    else if (m.zones.nonEmpty) m.zones.map(_.dir)
+    else Seq(m.snap)
+
+  /** A frame over leaf directories of `t` (schema-correct empty frame
+    * when there are none). */
+  private def scanLeaves(t: String, dirs: Seq[String]): DataFrame =
+    if (dirs.isEmpty) empty(registry(t)) else scanSnapshot(t, dirs)
+
+  /** Read the live state of a table (schema-correct empty frame if the
+    * table has never been written), opening only the leaves `bounds`
+    * can match: the buckets its point sets hash into, or the zones
+    * overlapping every bound. `bounds` ([[graft.view.ZonePrune]]'s
+    * per-column key bounds) is evaluated only for a bucketed or zoned
+    * table. The caller's filter still applies in full: pruning only
+    * elides IO. */
+  def read(t: String, bounds: => Map[String, Brin.Bounds] = Map.empty): DataFrame = {
     val td = registry(t)
     td.external match {
       case Some(path) =>
         alignExternal(td, scan(Seq(qualified(new Path(path))), None, memo = true))
-      case None if td.buckets > 0 => readBuckets(t, None)
-      case None if td.useIndex.equalsIgnoreCase("brin") => readZones(t, None)
-      case None =>
-        currentManifest(t) match {
-          case Some(m) => scanSnapshot(t, Seq(m.snap))
-          case None => empty(td)
-        }
+      case None => currentManifest(t) match {
+        case None => empty(td)
+        case Some(m) if !bucketed(td) && m.zones.isEmpty => scanLeaves(t, leaves(td, m))
+        case Some(m) =>
+          val b = bounds
+          scanLeaves(t,
+            if (b.exists(_._2.isEmpty)) Nil // provably empty
+            else if (bucketed(td)) pointBuckets(td, b).fold(leaves(td, m))(ids =>
+              m.buckets.view.filterKeys(ids).values.toSeq.sorted)
+            else m.zones.filter(z => zoneOverlaps(z, td.key.head, b)).map(_.dir))
+      }
     }
   }
 
-  /** Pruned read of a bucketed table: only the named buckets (None =
-    * all). The merge path reads just the buckets its batch keys hash
-    * into. */
-  def readBuckets(t: String, which: Option[Set[Int]]): DataFrame = {
-    val td = registry(t)
-    require(td.buckets > 0, s"Table '$t' is not bucketed")
-    currentManifest(t) match {
-      case None => empty(td)
-      case Some(m) =>
-        val entries = which match {
-          case Some(bs) => m.buckets.view.filterKeys(bs).toMap
-          case None => m.buckets
-        }
-        if (entries.isEmpty) empty(td)
-        else scanSnapshot(t, entries.values.toSeq.sorted)
-    }
+  /** Bucket ids of the key tuples `b` pins EVERY key column of a
+    * bucketed table to, when there are at most 64 of them; None = read
+    * every bucket. A point read on a 1024-bucket table opens one
+    * bucket directory. A point that its column's literal type cannot
+    * hash widens the read instead of failing it. */
+  private def pointBuckets(td: TableDef, b: Map[String, Brin.Bounds]): Option[Set[Int]] = {
+    val pts = td.key.map(k => b.get(k).flatMap(_.points))
+    if (pts.exists(_.isEmpty) || pts.map(_.get.size.toLong).product > 64L) None
+    else try Some(bucketIds(td.name, pts.map(_.get)))
+    catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Bucket ids of every combination of the given per-key-column
@@ -374,13 +406,10 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * typed literals through the SAME bucket expression the writer
     * clusters with ([[bucketExpr]]: Murmur3 `hash` modulo the bucket
     * count), so the ids can never drift from the executor hash and no
-    * Spark job runs. The read-side analogue of the write path's bucket
-    * pruning: a point read on a 1024-bucket table opens ONE bucket
-    * directory instead of 1024. Callers cap the combination count
-    * ([[graft.view.View]] uses 64). */
-  def bucketIds(t: String, keyPoints: Seq[Seq[Any]]): Set[Int] = {
+    * Spark job runs. */
+  private[graft] def bucketIds(t: String, keyPoints: Seq[Seq[Any]]): Set[Int] = {
     val td = registry(t)
-    require(td.buckets > 0, s"Table '$t' is not bucketed")
+    require(bucketed(td), s"Table '$t' is not bucketed")
     require(keyPoints.size == td.key.size,
       s"need one point set per key column (${td.key.size}), got ${keyPoints.size}")
     val combos = keyPoints.foldLeft(Seq(Seq.empty[Any]))((acc, ps) =>
@@ -392,6 +421,50 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         combo.zip(types).map { case (v, dt) => Bridge.column(Literal.create(v, dt)) })))
         .map(_.asInstanceOf[Int]).toSet
     }
+  }
+
+  /** The part of `t`'s live state a write keyed on `keys` can change:
+    * the buckets `keys` hash into, the zones their key range overlaps,
+    * or the whole table. `keys` holds the table key columns of a
+    * batch; a write that may change rows outside its keys (purge,
+    * swap, a merge not keyed on the table key) passes None. A stored
+    * row outside the slice cannot share a key with the batch, so a
+    * merge or delete against the slice's frame is exact. A plain
+    * table's slice, and any whole slice, runs no job; a pruned slice
+    * runs one. */
+  def slice(t: String, keys: Option[DataFrame]): Warehouse.Slice = {
+    val td = registry(t)
+    require(td.external.isEmpty, s"Table '$t' is external (read-only)")
+    val base = currentManifest(t)
+    val part = for {
+      k <- keys
+      m <- base if m.buckets.nonEmpty || m.zones.nonEmpty
+    } yield
+      if (bucketed(td)) {
+        val ids = k.select(bucketExpr(td)).distinct().collect().map(_.getInt(0)).toSet
+        m.buckets.view.filterKeys(ids).values.toSeq.sorted
+      } else batchKeyBounds(k, td.key) match {
+        case Some(b) => m.zones.filter(z => zoneOverlaps(z, td.key.head, b)).map(_.dir)
+        case None => Nil // an empty batch touches no zone
+      }
+    val dirs = part.getOrElse(base.map(leaves(td, _)).getOrElse(Nil))
+    new Warehouse.Slice(t, base, dirs, whole = part.isEmpty, scanLeaves(t, dirs),
+      Warehouse.footerRows(hadoopConf, dirs.map(new Path(tableDir(t), _))))
+  }
+
+  /** Encoded [min, max] of every key column of `keys`, or None for an
+    * empty batch. A stored key can only collide with a batch key when
+    * EVERY key column falls inside the batch's range for that column,
+    * so each bound prunes independently. */
+  private def batchKeyBounds(keys: DataFrame, key: Seq[String])
+      : Option[Map[String, Brin.Bounds]] = {
+    import org.apache.spark.sql.functions.{max => fmax, min => fmin}
+    val aggs = key.flatMap(k => Seq(fmin(col("`" + k + "`")), fmax(col("`" + k + "`"))))
+    val r = keys.agg(aggs.head, aggs.tail: _*).head()
+    if (r.isNullAt(0)) None
+    else Some(key.zipWithIndex.map { case (k, i) =>
+      k -> Brin.Bounds(Some(Brin.encode(r.get(2 * i))), Some(Brin.encode(r.get(2 * i + 1))))
+    }.toMap)
   }
 
   /** Surrogate-id high-water mark, tracked by the manifest (no scan). */
@@ -431,12 +504,6 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     df.select(td.sparkSchema.fields.map(f =>
       col("`" + f.name + "`").cast(f.dataType)).toSeq: _*)
 
-  /** Atomically replace a table's contents with `df` (all buckets for
-    * bucketed tables). `knownMaxId` lets a caller that already knows
-    * the post-write max(id) (the merge path: old max + insert count)
-    * skip the read-back; otherwise the id column of the just-written
-    * snapshot is re-read (column-pruned, fresh files — cheap, and
-    * never the pre-existing table). */
   /** DataFrameWriter for a table's snapshot files, carrying the
     * table's STORAGE properties: `compression:` picks the parquet
     * codec (zstd buys ~25-35% over snappy on text corpora — at 100 TB
@@ -453,42 +520,142 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     w
   }
 
-  def write(t: String, df: DataFrame, knownMaxId: Option[Long] = None): Unit = {
+  /** Atomically commit `df` as the new content of slice `s` of its
+    * table ([[slice]]); leaves outside the slice carry over by
+    * reference. Returns the rows written, from the new files' parquet
+    * footers, so a delete's count is the slice's [[Warehouse.Slice.rows]]
+    * minus this.
+    *
+    * The id high-water mark is `knownMaxId` when the caller knows it
+    * (the merge path: old mark + inserts), else the written files'
+    * max(id) from their footers. A partial slice never lowers it (rows
+    * outside the slice keep their ids); a whole slice sets it, so
+    * delete-all restarts ids at 1 on every layout. */
+  def replace(s: Warehouse.Slice, df: DataFrame, knownMaxId: Option[Long] = None): Long =
+    commit(s, df, knownMaxId)
+
+  /** [[replace]], plus the zoned layout's compaction controls:
+    * `cluster` overrides the leading-key order (the z-order path);
+    * `setZOrder` = Some(cols) records cols as the table's z-order
+    * property (empty = clear), None inherits the previous manifest's —
+    * the property survives every write and steers [[compact]]. */
+  private def commit(s: Warehouse.Slice, df: DataFrame, knownMaxId: Option[Long],
+      cluster: Option[Column] = None, setZOrder: Option[Seq[String]] = None): Long = {
+    val t = s.table
     val td = registry(t)
-    require(td.external.isEmpty, s"Table '$t' is external (read-only)")
-    if (td.buckets > 0) writeBucketed(t, df, affected = None, knownMaxId = knownMaxId)
-    else if (td.useIndex.equalsIgnoreCase("brin")) writeZoned(t, df, knownMaxId)
-    else {
-      val next = nextSnapName(t)
-      val dir = new Path(tableDir(t), next)
-      snapWriter(td, aligned(td, df)).parquet(dir.toString)
-      // id high-water mark from parquet FOOTERS (r14, guide §6 — see
-      // [[footerMinMax]]); the column-pruned scan stays as fallback
-      val maxIdNow = knownMaxId.getOrElse {
-        if (!td.columnMap.contains("id")) 0L
-        else maxIdOfWritten(fs(dir), Seq(dir),
-          spark.read.schema(td.sparkSchema).parquet(dir.toString))
+    val next = nextSnapName(t)
+    val dir = new Path(tableDir(t), next)
+    val out = aligned(td, df)
+    // the base manifest's leaves the slice does not cover carry over
+    val carried = s.base.filterNot(_ => s.whole)
+    val (m, newLeaves) =
+      if (bucketed(td)) {
+        snapWriter(td, out.withColumn("__b", bucketExpr(td)))
+          .partitionBy("__b").parquet(dir.toString)
+        val fsys = fs(dir)
+        val ws = if (!fsys.exists(dir)) Nil
+          else fsys.listStatus(dir).map(_.getPath.getName)
+            .filter(_.startsWith("__b=")).sorted.map(n => s"$next/$n").toSeq
+        val kept = carried.map(_.buckets.filterNot(b => s.leaves.contains(b._2)))
+          .getOrElse(Map())
+        (Manifest(next, 0L, kept ++ ws.map(d => d.split("=").last.toInt -> d)), ws)
+      } else if (zoned(td)) {
+        val zs = writeZoned(td, out, dir,
+          if (s.whole) fullZones(df) else math.max(1, s.leaves.size), cluster)
+        val kept = carried.map(_.zones.filterNot(z => s.leaves.contains(z.dir)))
+          .getOrElse(Nil)
+        (Manifest(next, 0L, Map(), kept ++ zs,
+          setZOrder.getOrElse(s.base.map(_.zorder).getOrElse(Nil))), zs.map(_.dir))
+      } else {
+        snapWriter(td, out).parquet(dir.toString)
+        (Manifest(next, 0L, Map()), Seq(next))
       }
-      install(t, Manifest(next, maxIdNow, Map()))
-    }
+    val dirs = newLeaves.map(new Path(tableDir(t), _))
+    val (rows, writtenMax) = rowsAndMaxId(td, dirs)
+    val mark = knownMaxId.getOrElse(writtenMax)
+    install(t, m.copy(maxId =
+      if (s.whole) mark else mark.max(s.base.map(_.maxId).getOrElse(0L))))
+    // auto-compaction: every narrow zoned merge adds ~1 zone (and pins
+    // its snap dir against gc), so once the zone list exceeds
+    // [[Warehouse.CompactFactor]] x the configured zone count, the
+    // live state is reclustered into one fresh snapshot (a whole
+    // rewrite, so it never triggers itself)
+    if (zoned(td) && !s.whole && m.zones.size > Warehouse.CompactFactor * confZones.getOrElse(32))
+      compact(t)
+    rows
   }
 
-  /** Snapshot write of a `use-index: brin` table: the Spark-native
-    * BRIN ([[Brin]]). Rows are range-clustered on the LEADING key
-    * column — `repartitionByRange` (sampling range partitioner, any
-    * orderable type) + in-partition sort — and land in one `__z=<k>`
-    * zone directory per range, so parquet row-group stats are tight
-    * AND the manifest's per-zone min/max lets [[readZones]] prune
-    * whole directories driver-side. Write amplification is unchanged
-    * from a plain snapshot (one extra range shuffle) — BRIN is a
-    * read-side structure, exactly like the reference's
-    * (tanker/context.py:657-676).
-    *
-    * Zone count: `spark.graft.brin.zones` (default 32, matched to
-    * local[32]; a cluster deployment sizes it so a zone ≈ one
-    * executor's worth of scan). */
-  private def writeZoned(t: String, df: DataFrame, knownMaxId: Option[Long]): Unit =
-    writeZonedImpl(t, df, replaced = None, knownMaxId)
+  /** The configured zone count of a whole zoned write, if any. */
+  private def confZones: Option[Int] =
+    spark.conf.getOption("spark.graft.brin.zones").map(_.toInt)
+
+  /** Zone count of a whole zoned write: `spark.graft.brin.zones` when
+    * set, else sized by data volume — ~[[Warehouse.ZoneTargetBytes]]
+    * per zone, since a zone is the unit of scan parallelism, of merge
+    * rewrite and of footer stats. A 2 MB table is one zone; a 100-TB
+    * table gets proportionally many. Optimizer size estimates can
+    * overshoot after joins, so the estimate is capped at 1024 zones. */
+  private def fullZones(df: DataFrame): Int =
+    confZones.getOrElse {
+      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      (est / Warehouse.ZoneTargetBytes).max(BigInt(1)).min(BigInt(1024)).toInt
+    }
+
+  /** Write a zoned (`use-index: brin`) snapshot: the Spark-native BRIN
+    * ([[Brin]]). Rows are range-clustered on the leading key column
+    * (`repartitionByRange` + in-partition sort, or on `cluster` then
+    * the leading key) into `nZones` ranges, each landing in one
+    * `__z=<k>` directory, so parquet row-group stats are tight AND the
+    * manifest's per-zone min/max lets [[read]] prune whole directories
+    * driver-side — BRIN is a read-side structure, exactly like the
+    * reference's (tanker/context.py:657-676). A partial rewrite
+    * reclusters its slice into as many zones as it replaces (min 1),
+    * so a narrow merge does not splinter; a pure append adds one zone.
+    * Returns the written zones with their stats. */
+  private def writeZoned(td: TableDef, out: DataFrame, dir: Path, nZones: Int,
+      cluster: Option[Column]): Seq[Zone] = {
+    val zc = col("`" + td.key.head + "`")
+    // z-order cluster key first, leading key second: within one
+    // z-value run the leading-key stats stay as tight as possible
+    val ck: Seq[Column] = cluster.map(c => Seq(c, zc)).getOrElse(Seq(zc))
+    snapWriter(td, out.repartitionByRange(nZones, ck: _*).sortWithinPartitions(ck: _*)
+      .withColumn("__z", expr("spark_partition_id()")))
+      .partitionBy("__z").parquet(dir.toString)
+    // zone stats from the WRITTEN files' footers: exact, no Spark job
+    // and no data read. Stat types whose footer statistics are not
+    // trustworthy (float/double keys, INT96 timestamps, oversized
+    // strings) fall back to a column-pruned scan of the new files.
+    val fsys = fs(dir)
+    val next = dir.getName
+    val zoneDirs =
+      if (!fsys.exists(dir)) Seq.empty[Path]
+      else fsys.listStatus(dir).map(_.getPath)
+        .filter(_.getName.startsWith("__z=")).toSeq
+    if (zoneDirs.isEmpty) return Nil
+    val statCols = zoneStatCols(td)
+    val per = zoneDirs.map(zd => Warehouse.footerStats(hadoopConf,
+      Warehouse.partFiles(fsys, zd), statCols)._2.map(zd.getName -> _))
+    if (!per.contains(None))
+      per.flatten.map { case (zn, m) =>
+        val (lo, hi) = m(statCols.head)
+        Zone(s"$next/$zn", lo, hi, statCols.tail.map(c => c -> m(c)).toMap)
+      }.sortBy(_.dir)
+    else {
+      import org.apache.spark.sql.functions.{max => fmax, min => fmin}
+      val aggs = statCols.flatMap(c => Seq(
+        fmin(col("`" + c + "`")).as(s"__lo_$c"),
+        fmax(col("`" + c + "`")).as(s"__hi_$c")))
+      val rows = spark.read.parquet(dir.toString)
+        .groupBy(col("__z")).agg(aggs.head, aggs.tail: _*).collect()
+      def enc(r: Row, i: Int): Option[Any] = Option(r.get(i)).map(Brin.encode)
+      rows.map { r =>
+        val extra = statCols.tail.zipWithIndex.map { case (c, j) =>
+          c -> (enc(r, 3 + 2 * j), enc(r, 4 + 2 * j))
+        }.toMap
+        Zone(s"$next/__z=${r.get(0)}", enc(r, 1), enc(r, 2), extra)
+      }.toSeq.sortBy(_.dir)
+    }
+  }
 
   /** Columns a brin table's zone map tracks: the FULL key (postgres
     * BRIN indexes every key column) plus the surrogate `id` (which
@@ -498,125 +665,23 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     td.key ++ (if (td.columnMap.contains("id") && !td.key.contains("id"))
       Seq("id") else Nil)
 
-  /** Combined per-column (lo, hi) — already [[Brin.encode]]d — of a
-    * set of freshly-written parquet part files, from FOOTER statistics
-    * only (r14 optimization, guide §6: the zone-stat and max-id
-    * read-backs used to re-SCAN every just-written snapshot with a
-    * min/max aggregate job; the writer already recorded exact column
-    * min/max in each footer, so the same numbers come from pure
-    * metadata — at 100 TB the difference between re-reading a table
-    * and reading a few KB per file).
-    *
-    * Exactness guard: returns None — callers fall back to the scan —
-    * unless every stat is of a type whose parquet statistics are
-    * trustworthy and map 1:1 onto the [[Brin.encode]] domain: INT32 /
-    * INT64 (plain, date, timestamp MILLIS/MICROS) and UTF8 binary
-    * (unsigned byte order, matching [[Brin.cmp]]; parquet drops
-    * oversized binary stats, which lands in the fallback). Float /
-    * double (NaN-unsafe stats), INT96 timestamps and anything exotic
-    * fall back. All-null chunks contribute nothing, so an all-null
-    * column yields (None, None) exactly like the scan's null min/max. */
-  private def footerMinMax(files: Seq[Path], cols: Seq[String])
-      : Option[Map[String, (Option[Any], Option[Any])]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    val acc = mutable.Map[String, (Any, Any)]()
-    // plain read options: building them from the Hadoop conf copies
-    // every property, which cost more than the footer read itself
-    val opts = org.apache.parquet.ParquetReadOptions.builder().build()
-    for (f <- files) {
-      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hadoopConf), opts)
-      try {
-        for (b <- rd.getFooter.getBlocks.asScala; c <- cols) {
-          val cc = b.getColumns.asScala.find(_.getPath.toDotString == c)
-            .getOrElse(return None)
-          val st = cc.getStatistics
-          if (st == null) return None
-          if (st.getNumNulls != b.getRowCount) {
-            if (!st.hasNonNullValue) return None // dropped/oversized stats
-            val pt = cc.getPrimitiveType
-            val bounds: Option[(Any, Any)] = pt.getPrimitiveTypeName match {
-              case INT64 => pt.getLogicalTypeAnnotation match {
-                case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
-                  ts.getUnit match {
-                    case LogicalTypeAnnotation.TimeUnit.MICROS =>
-                      Some((st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                        st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-                    case LogicalTypeAnnotation.TimeUnit.MILLIS =>
-                      Some((st.genericGetMin.asInstanceOf[java.lang.Long] * 1000L,
-                        st.genericGetMax.asInstanceOf[java.lang.Long] * 1000L))
-                    case _ => None // nanos: not the Brin micros domain
-                  }
-                case _ =>
-                  Some((st.genericGetMin.asInstanceOf[java.lang.Long].longValue,
-                    st.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-              }
-              case INT32 => // plain ints and DATE (epoch days) both
-                // encode as Long, exactly Brin.encode's Int/LocalDate
-                Some((st.genericGetMin.asInstanceOf[java.lang.Integer].toLong,
-                  st.genericGetMax.asInstanceOf[java.lang.Integer].toLong))
-              case BINARY if pt.getLogicalTypeAnnotation
-                  .isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation] =>
-                Some((new String(st.genericGetMin
-                    .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-                    StandardCharsets.UTF_8),
-                  new String(st.genericGetMax
-                    .asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-                    StandardCharsets.UTF_8)))
-              case _ => None // float/double (NaN), INT96, others: scan
-            }
-            bounds match {
-              case None => return None
-              case Some((lo, hi)) => acc.get(c) match {
-                case None => acc(c) = (lo, hi)
-                case Some((alo, ahi)) => acc(c) = (
-                  if (Brin.cmp(lo, alo) < 0) lo else alo,
-                  if (Brin.cmp(hi, ahi) > 0) hi else ahi)
-              }
-            }
-          }
-        }
-      } finally rd.close()
-    }
-    Some(cols.map(c =>
-      c -> acc.get(c).map { case (l, h) => (Some(l), Some(h)) }
-        .getOrElse((None, None))).toMap)
-  }
-
-  /** Rows in `t`'s live state, summed from the parquet footers of the
-    * leaf directories a read of the whole table scans: no Spark job and
-    * no data read. */
-  def liveRows(t: String): Long = currentManifest(t).fold(0L) { m =>
-    val leaves = (m.buckets.values ++ m.zones.map(_.dir)).toSeq
-    val opts = org.apache.parquet.ParquetReadOptions.builder().build()
-    (if (leaves.isEmpty) Seq(m.snap) else leaves).map(new Path(tableDir(t), _))
-      .flatMap(d => partFiles(fs(d), d)).map { f =>
-        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, hadoopConf), opts)
-        try rd.getRecordCount finally rd.close()
-      }.sum
-  }
-
-  /** Data part files directly under `dir` (no recursion). */
-  private def partFiles(fsys: FileSystem, dir: Path): Seq[Path] =
-    fsys.listStatus(dir).map(_.getPath).filter { p =>
-      val n = p.getName
-      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-    }.toSeq
-
-  /** max(id) of a just-written snapshot from parquet footers, or the
-    * exact column-pruned scan when footer stats are unusable. `dirs`
-    * are the leaf directories holding the snapshot's part files. */
-  private def maxIdOfWritten(fsys: FileSystem, dirs: Seq[Path],
-      readBack: => DataFrame): Long = {
-    val files = dirs.flatMap(partFiles(fsys, _))
-    footerMinMax(files, Seq("id")) match {
-      case Some(m) => m("id")._2.map(_.asInstanceOf[Long]).getOrElse(0L)
+  /** Rows and max(id) of just-written leaf directories, from one pass
+    * over their parquet footers; max(id) falls back to an exact
+    * column-pruned scan when footer stats are unusable, and is 0 for a
+    * table without `id`. */
+  private def rowsAndMaxId(td: TableDef, dirs: Seq[Path]): (Long, Long) = {
+    val files = dirs.flatMap(d => Warehouse.partFiles(fs(d), d))
+    val idCol = if (td.columnMap.contains("id")) Seq("id") else Nil
+    val (rows, stats) = Warehouse.footerStats(hadoopConf, files, idCol)
+    val maxId = stats match {
+      case _ if idCol.isEmpty => 0L
+      case Some(st) => st("id")._2.map(_.asInstanceOf[Long]).getOrElse(0L)
       case None =>
-        Option(readBack.agg(org.apache.spark.sql.functions.max(col("id")))
-          .head().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
+        Option(spark.read.schema(td.sparkSchema).parquet(dirs.map(_.toString): _*)
+          .agg(org.apache.spark.sql.functions.max(col("id"))).head().get(0))
+          .map(_.asInstanceOf[Long]).getOrElse(0L)
     }
+    (rows, maxId)
   }
 
   /** Multi-column zone overlap: a zone survives pruning iff EVERY
@@ -632,226 +697,6 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
         case None => true
       }
     }
-
-  /** Partial rewrite of a brin table: `df` is the new content of every
-    * zone whose stats overlap `replaced` (per-column batch key
-    * ranges); zones outside it carry over by reference — the zoned
-    * analogue of [[writeBuckets]]. An append-mostly table (the BRIN
-    * use case) merges a recent-key batch by rewriting the last zone
-    * or two. The caller MUST have merged against exactly the
-    * overlapping-zone slice (`readZones(t, Some(replaced))`): a
-    * stored key can only collide with a batch key if every key
-    * column falls inside the batch's range for that column, so the
-    * disjoint carried zones cannot duplicate a merged key. */
-  def writeZones(t: String, df: DataFrame,
-      replaced: Map[String, Brin.Bounds], knownMaxId: Option[Long]): Unit =
-    writeZonedImpl(t, df, Some(replaced), knownMaxId)
-
-  /** `cluster`: optional clustering expression overriding the default
-    * leading-key order (the z-order compaction path); `setZOrder`:
-    * Some(cols) records cols as the table's z-order property (empty =
-    * clear), None inherits the previous manifest's — the property
-    * survives every write and steers [[compact]]'s re-clustering. */
-  private def writeZonedImpl(t: String, df: DataFrame,
-      replaced: Option[Map[String, Brin.Bounds]], knownMaxId: Option[Long],
-      cluster: Option[Column] = None,
-      setZOrder: Option[Seq[String]] = None): Unit = {
-    val td = registry(t)
-    val zkey = td.key.head
-    val next = nextSnapName(t)
-    val dir = new Path(tableDir(t), next)
-    val confZones = spark.conf.getOption("spark.graft.brin.zones").map(_.toInt)
-    // Scale-adaptive zone count for FULL writes (guide §2.2/§6): a
-    // zone is both a unit of scan parallelism and of merge/rewrite +
-    // footer-stat granularity, so size it by data volume —
-    // ~`spark.graft.brin.zoneTargetBytes` (default 64 MB) per zone —
-    // instead of a constant matched to local[32]. A 2 MB table
-    // collapses to one zone (1 file + 1 footer read instead of 32);
-    // a 100-TB table gets proportionally many. Optimizer size
-    // estimates can overshoot after joins, so the adaptive value is
-    // capped (estimates only ever make zones too MANY, which is the
-    // old behavior); an explicit `spark.graft.brin.zones` wins.
-    val fullZones = confZones.getOrElse {
-      val target = spark.conf.getOption("spark.graft.brin.zoneTargetBytes")
-        .map(_.toLong).getOrElse(64L << 20)
-      val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      ((est / target).max(BigInt(1)).min(BigInt(1024))).toInt
-    }
-    // A partial rewrite reclusters only its slice — into ~as many
-    // zones as it replaces (min 1), NOT the full-table zone count:
-    // otherwise every narrow merge would splinter its small slice
-    // into `fullZones` fragments and the zone list would balloon by
-    // 32× per merge. A pure append (overlapping nothing) adds one
-    // zone per batch — BRIN ranges grow with the data; compact()
-    // consolidates when fragmentation accumulates.
-    val nZones = replaced match {
-      case None => fullZones
-      case Some(b) => currentManifest(t).map(_.zones) match {
-        // no zones yet (empty table): the "slice" was the whole table
-        case None => fullZones
-        case Some(zs) if zs.isEmpty => fullZones
-        case Some(zs) => math.max(1, zs.count(z => zoneOverlaps(z, zkey, b)))
-      }
-    }
-    val zc = col("`" + zkey + "`")
-    // z-order cluster key first, leading key second: within one
-    // z-value run the leading-key stats stay as tight as possible
-    val ck: Seq[Column] = cluster.map(c => Seq(c, zc)).getOrElse(Seq(zc))
-    snapWriter(td, aligned(td, df)
-      .repartitionByRange(nZones, ck: _*).sortWithinPartitions(ck: _*)
-      .withColumn("__z", expr("spark_partition_id()")))
-      .partitionBy("__z").parquet(dir.toString)
-    // zone stats from the WRITTEN files: exact, and immune to any plan
-    // re-evaluation. Footer-only by default ([[footerMinMax]] — the
-    // writer already recorded each column's min/max, so no Spark job
-    // and no data read); the column-pruned scan read-back remains as
-    // the fallback for stat types whose footer statistics are not
-    // trustworthy (float/double keys, INT96 timestamps, oversized
-    // string stats).
-    val fsys = fs(dir)
-    val zoneDirs =
-      if (!fsys.exists(dir)) Seq.empty[Path]
-      else fsys.listStatus(dir).map(_.getPath)
-        .filter(_.getName.startsWith("__z=")).toSeq
-    val statCols = zoneStatCols(td)
-    var zones: Seq[Zone] = Nil
-    var statMaxId = 0L
-    if (zoneDirs.nonEmpty) {
-      val viaFooter: Option[Seq[Zone]] = {
-        val per = zoneDirs.map(zd =>
-          footerMinMax(partFiles(fsys, zd), statCols).map(zd.getName -> _))
-        if (per.contains(None)) None
-        else Some(per.flatten.map { case (zn, m) =>
-          val (lo, hi) = m(statCols.head)
-          val extra = statCols.tail.map(c => c -> m(c)).toMap
-          Zone(s"$next/$zn", lo, hi, extra)
-        }.sortBy(_.dir))
-      }
-      zones = viaFooter.getOrElse {
-        import org.apache.spark.sql.functions.{max => fmax, min => fmin}
-        val back = spark.read.parquet(dir.toString)
-        val aggs = statCols.flatMap(c => Seq(
-          fmin(col("`" + c + "`")).as(s"__lo_$c"),
-          fmax(col("`" + c + "`")).as(s"__hi_$c")))
-        val rows = back.groupBy(col("__z")).agg(aggs.head, aggs.tail: _*).collect()
-        def enc(r: org.apache.spark.sql.Row, i: Int): Option[Any] =
-          Option(r.get(i)).map(Brin.encode)
-        rows.map { r =>
-          val extra = statCols.tail.zipWithIndex.map { case (c, j) =>
-            c -> (enc(r, 3 + 2 * j), enc(r, 4 + 2 * j))
-          }.toMap
-          Zone(s"$next/__z=${r.get(0)}", enc(r, 1), enc(r, 2), extra)
-        }.toSeq.sortBy(_.dir)
-      }
-      if (statCols.contains("id"))
-        statMaxId = zones.flatMap { z =>
-          (if (statCols.head == "id") z.hi else z.extra.get("id").flatMap(_._2))
-            .map(_.asInstanceOf[Long])
-        }.foldLeft(0L)(_ max _)
-    }
-    val prev = currentManifest(t)
-    // carry-over: zones provably disjoint from the batch key range
-    // (same overlap test the slice read used, so reads and carries
-    // partition the old zone set exactly)
-    val carried = replaced match {
-      case Some(b) => prev.map(_.zones).getOrElse(Nil)
-        .filterNot(z => zoneOverlaps(z, zkey, b))
-      case None => Nil
-    }
-    val allZones = carried ++ zones
-    val maxIdNow = replaced match {
-      case Some(_) => // partial: the id high-water mark never regresses
-        knownMaxId.getOrElse(statMaxId).max(prev.map(_.maxId).getOrElse(0L))
-      case None => knownMaxId.getOrElse(statMaxId)
-    }
-    val zorder = setZOrder.getOrElse(prev.map(_.zorder).getOrElse(Nil))
-    install(t, Manifest(next, maxIdNow, Map(), allZones, zorder))
-    // auto-compaction: every narrow merge adds ~1 zone (and pins its
-    // snap dir against gc), so a long-lived append-mostly table would
-    // otherwise fragment without bound and rely on a MANUAL compact().
-    // Once the zone list exceeds `compactFactor` x the configured
-    // count, recluster the live state into one fresh snapshot — the
-    // swap happens after the full rebuild, so readers never block, and
-    // the rebuild dispatches back through writeZoned with
-    // replaced=None (no recursion: a full write never triggers this).
-    val factor = spark.conf.getOption("spark.graft.brin.compactFactor")
-      .map(_.toDouble).getOrElse(2.0)
-    // fragmentation trigger against the CONFIGURED full count (a
-    // partial write's adaptive fullZones reflects only its slice and
-    // would make the trigger hyperactive on small merges)
-    val triggerZones = confZones.getOrElse(32)
-    if (replaced.isDefined && factor > 0 && allZones.size > factor * triggerZones)
-      compact(t)
-  }
-
-  /** Zone-pruned read of a brin table: only the zone directories whose
-    * per-column stats overlap every bound in `bounds` (None = all
-    * zones — still the canonical read path for brin tables, since
-    * their snapshots are `__z=`-partitioned). The caller's filter
-    * still applies in full; pruning is pure IO elision, like the
-    * reference's BRIN scan. */
-  def readZones(t: String, bounds: Option[Map[String, Brin.Bounds]]): DataFrame = {
-    val td = registry(t)
-    val zkey = td.key.head
-    currentManifest(t) match {
-      case None => empty(td)
-      case Some(m) if m.zones.isEmpty =>
-        // empty table: no zones written
-        scanSnapshot(t, Seq(m.snap))
-      case Some(m) =>
-        val selected = bounds match {
-          case Some(b) if b.exists(_._2.isEmpty) => Nil // provably empty
-          case Some(b) => m.zones.filter(z => zoneOverlaps(z, zkey, b))
-          case None => m.zones
-        }
-        if (selected.isEmpty) empty(td)
-        else scanSnapshot(t, selected.map(_.dir))
-    }
-  }
-
-  /** Partial write of a bucketed table: `df` holds the new content of
-    * `affected` buckets only; all other buckets carry over by
-    * reference. `knownMaxId` advances the id high-water mark (None =
-    * read it from the written files; it never goes below the previous
-    * mark). */
-  def writeBuckets(t: String, df: DataFrame, affected: Set[Int],
-      knownMaxId: Option[Long]): Unit =
-    writeBucketed(t, df, Some(affected), knownMaxId)
-
-  private def writeBucketed(t: String, df: DataFrame, affected: Option[Set[Int]],
-      knownMaxId: Option[Long]): Unit = {
-    val td = registry(t)
-    val next = nextSnapName(t)
-    val dir = new Path(tableDir(t), next)
-    val out = aligned(td, df).withColumn("__b", bucketExpr(td))
-    snapWriter(td, out).partitionBy("__b").parquet(dir.toString)
-    // which bucket dirs did this snapshot produce?
-    val fsys = fs(dir)
-    val written: Map[Int, String] =
-      if (!fsys.exists(dir)) Map()
-      else fsys.listStatus(dir).map(_.getPath.getName)
-        .filter(_.startsWith("__b=")).map { n =>
-          n.stripPrefix("__b=").toInt -> s"$next/$n"
-        }.toMap
-    val prev = currentManifest(t)
-    val prevBuckets = prev.map(_.buckets).getOrElse(Map())
-    val buckets = affected match {
-      case Some(bs) => (prevBuckets -- bs) ++ written // carry-over + new
-      case None => written // full rewrite
-    }
-    // id high-water mark from the WRITTEN files' parquet footers (r14,
-    // guide §6 — see [[footerMinMax]]): the old `out.agg(max(id))`
-    // re-evaluated the whole merge PLAN a second time; the fallback
-    // reads the written files column-pruned, still never re-running
-    // the merge
-    val maxIdNow = knownMaxId.getOrElse {
-      if (!td.columnMap.contains("id")) 0L
-      else maxIdOfWritten(fsys, written.values.toSeq.map(rel =>
-          new Path(tableDir(t), rel)),
-        spark.read.schema(td.sparkSchema).parquet(dir.toString))
-    }.max(prev.map(_.maxId).getOrElse(0L))
-    install(t, Manifest(next, maxIdNow, buckets))
-  }
 
   // ------------------------------------------------- cross-write txn
 
@@ -972,23 +817,20 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * mark are unchanged. */
   def compact(t: String): Unit = {
     val td = registry(t)
-    require(td.external.isEmpty, s"Table '$t' is external (read-only)")
+    val s = slice(t, None)
     val keepMax = Some(maxId(t))
-    if (td.buckets > 0) {
+    if (bucketed(td))
       // cluster by bucket id before the partitioned write: one file
       // per bucket dir instead of (tasks × buckets) small files
-      val full = read(t).repartition(td.buckets, bucketExpr(td))
-      writeBucketed(t, full, affected = None, knownMaxId = keepMax)
-    } else if (td.useIndex.equalsIgnoreCase("brin") &&
-        currentManifest(t).exists(_.zorder.size >= 2)) {
+      commit(s, s.frame.repartition(td.buckets, bucketExpr(td)), keepMax)
+    else s.base.map(_.zorder).filter(_.size >= 2) match {
       // the table carries a z-order property ([[compactZOrder]]):
       // re-cluster on the interleaved key, not the leading key, so
       // auto-compaction keeps multi-column pruning tight
-      val zcols = currentManifest(t).get.zorder
-      val full = read(t)
-      writeZonedImpl(t, full, replaced = None, knownMaxId = keepMax,
-        cluster = zValueColumn(full, zcols))
-    } else write(t, read(t), knownMaxId = keepMax)
+      case Some(zcols) if zoned(td) =>
+        commit(s, s.frame, keepMax, cluster = zValueColumn(s.frame, zcols))
+      case _ => commit(s, s.frame, keepMax)
+    }
   }
 
   /** Z-ORDER compaction of a brin table: rewrite the live state with
@@ -996,7 +838,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     * (the Morton / Z-curve order of the lakehouse OPTIMIZE ZORDER
     * command) instead of the leading key alone — every listed
     * column's per-zone min/max tightens to ~a √-fraction of its
-    * domain, so [[readZones]] prunes on ANY of them, not just the
+    * domain, so [[read]] prunes on ANY of them, not just the
     * leading key. `cols` must be zone-tracked (the full table key
     * plus `id` — stats machinery and [[graft.view.ZonePrune]] are
     * unchanged; only the physical clustering moves). The choice is
@@ -1017,7 +859,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
   def compactZOrder(t: String, cols: Seq[String]): Unit = {
     val td = registry(t)
     require(td.external.isEmpty, s"Table '$t' is external (read-only)")
-    require(td.useIndex.equalsIgnoreCase("brin"),
+    require(zoned(td),
       s"Table '$t' has use-index '${td.useIndex}'; z-order needs brin")
     require(cols.size != 1,
       "z-order needs at least two columns (Nil clears the property; " +
@@ -1027,30 +869,27 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     val tracked = zoneStatCols(td)
     cols.foreach(c => require(tracked.contains(c),
       s"Column '$c' carries no zone stats (tracked: ${tracked.mkString(", ")})"))
-    val keepMax = Some(maxId(t))
-    val full = read(t)
-    val cluster = if (cols.size >= 2) zValueColumn(full, cols) else None
-    writeZonedImpl(t, full, replaced = None, knownMaxId = keepMax,
-      cluster = cluster, setZOrder = Some(cols))
+    val s = slice(t, None)
+    commit(s, s.frame, Some(maxId(t)),
+      cluster = if (cols.size >= 2) zValueColumn(s.frame, cols) else None,
+      setZOrder = Some(cols))
   }
 
   /** Bit-interleaved z-value over `cols` as a Column, or None when the
     * frame is empty. Per column: sample ~20k rows once (all columns in
     * one job), sort driver-side in zone-map order ([[Brin.cmp]] over
     * [[Brin.encode]] — matches Spark's binary string comparison), take
-    * `2^zorderBits − 1` evenly-spaced cut points, and bucket each row
+    * `2^ZOrderBits − 1` evenly-spaced cut points, and bucket each row
     * by counting cuts at or below its value (array HOF over the
     * literal cut list — order-preserving for any orderable type,
     * codegen'd, no per-row driver call). Nulls bucket to 0 (zone-map
     * order puts them nowhere; stats over them stay conservative).
     * Buckets then interleave bit-by-bit, column i contributing bit b
     * at position `b × nCols + i` — the Morton code. Bit budget:
-    * `zorderBits × nCols ≤ 62` (signed-long safe);
-    * `spark.graft.brin.zorderBits` (default 6 → 64 buckets/column). */
+    * [[Warehouse.ZOrderBits]] × nCols ≤ 62 (signed-long safe). */
   private def zValueColumn(df: DataFrame, cols: Seq[String]): Option[Column] = {
     import org.apache.spark.sql.functions.{array, filter, shiftleft, shiftright, size}
-    val nBits = spark.conf.getOption("spark.graft.brin.zorderBits")
-      .map(_.toInt).getOrElse(6)
+    val nBits = Warehouse.ZOrderBits
     require(nBits >= 1 && nBits * cols.size <= 62,
       s"zorderBits $nBits × ${cols.size} columns exceeds the 62-bit budget")
     val n = df.count()
@@ -1503,23 +1342,30 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     issues.toSeq
   }
 
-  /** Time travel: read one retained snapshot of an unbucketed table.
+  /** Time travel: read one retained snapshot of a table, as the full
+    * table state it committed. Every snapshot of a plain table is one.
+    * A bucketed or zoned write carries the leaves it did not rewrite by
+    * reference, so its snapshot directory holds only a per-bucket or
+    * per-zone delta; such a snapshot is a full state only while it is
+    * the live one and every live leaf lies under it (a whole write, or
+    * a merge into an empty table). Any other snapshot refuses: the
+    * manifests that would rebuild its state are not retained.
     * Snapshot dirs are immutable once written, but NOT immortal: gc on
     * a concurrent write may delete all but the two newest, so
-    * materialize (or act on) the returned frame promptly — a lazy read
-    * held across later writes can hit a deleted directory. Bucketed
-    * tables are excluded (a snapshot dir holds only the buckets
-    * rewritten at that version — reconstructing an old full state
-    * needs the manifest history, which is not retained). */
+    * materialize (or act on) the returned frame promptly. */
   def readSnapshot(t: String, snap: String): DataFrame = {
     val td = registry(t)
     require(td.external.isEmpty, s"Table '$t' is external (no snapshots)")
-    require(td.buckets == 0,
-      s"Table '$t' is bucketed; snapshots are per-bucket deltas, not full states")
     require(snapshots(t).contains(snap), s"No retained snapshot '$snap' for '$t'")
-    spark.read.schema(td.sparkSchema)
-      .parquet(new Path(tableDir(t), snap).toString)
-      .drop("__z") // brin snapshots are zone-partitioned
+    if (!bucketed(td) && !zoned(td)) scanLeaves(t, Seq(snap))
+    else {
+      val live = currentManifest(t).filter(_.snap == snap).map(leaves(td, _))
+        .filter(_.forall(d => d == snap || d.startsWith(snap + "/")))
+      val (kind, leaf) = if (bucketed(td)) ("bucketed", "bucket") else ("brin", "zone")
+      require(live.isDefined, s"Table '$t' is $kind: snapshot '$snap' holds a " +
+        s"per-$leaf delta (the ${leaf}s its write rewrote), not a full state")
+      scanLeaves(t, live.get)
+    }
   }
 
   /** Create empty snapshots for every managed table that doesn't exist
@@ -1532,7 +1378,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     val cat = readRoot()
     registry.names.foreach { t =>
       if (registry(t).external.isEmpty && !cat.contains(t))
-        write(t, empty(registry(t)))
+        replace(slice(t, None), empty(registry(t)))
     }
     persistRegistry()
   }
@@ -1556,12 +1402,7 @@ final class Warehouse(val spark: SparkSession, val root: String, val registry: R
     // a JSON pointer is a manifest; a plain one names the snapshot
     def adopt(t: String, text: String): Manifest =
       if (text.startsWith("{")) Warehouse.parseManifest(text)
-      else {
-        val (td, dir) = (registry(t), new Path(tableDir(t), text))
-        Manifest(text, if (!td.columnMap.contains("id")) 0L
-          else maxIdOfWritten(fs(dir), Seq(dir),
-            spark.read.schema(td.sparkSchema).parquet(dir.toString)), Map())
-      }
+      else Manifest(text, rowsAndMaxId(registry(t), Seq(new Path(tableDir(t), text)))._2, Map())
     val cat = readRoot()
     val adopted = legacy.collect {
       case (t, f) if f.getName == "_CURRENT" && !cat.contains(t) =>
@@ -1604,6 +1445,125 @@ object Warehouse {
     /** The snapshot directories this manifest references. */
     def snapDirs: Set[String] =
       Set(snap) ++ (buckets.values ++ zones.map(_.dir)).map(_.split("/")(0))
+  }
+
+  /** A part of a table's live state that a write replaces
+    * ([[Warehouse.slice]], [[Warehouse.replace]]). `frame` reads its
+    * rows; `leaves` are the leaf directories it covers, relative to the
+    * table dir; `whole` = it is the whole table; `base` = the manifest
+    * it was cut from. `frame` resolves its files on first use, so a
+    * delete-all never does; `rows` sums the leaves' parquet footers on
+    * first use. */
+  final class Slice private[store] (val table: String,
+      private[store] val base: Option[Manifest], private[store] val leaves: Seq[String],
+      private[store] val whole: Boolean, frameOf: => DataFrame, footRows: => Long) {
+    lazy val frame: DataFrame = frameOf
+    lazy val rows: Long = footRows
+  }
+
+  /** Bytes of data a whole zoned write puts in one zone. */
+  private val ZoneTargetBytes = 64L << 20
+
+  /** A partial zoned write compacts the table once its zone count
+    * exceeds this many times the configured full-write zone count. */
+  private val CompactFactor = 2
+
+  /** Bits per column of a z-order compaction's bucket rank (64 buckets
+    * per column). */
+  private val ZOrderBits = 6
+
+  /** Data part files directly under `dir` (no recursion). */
+  private[graft] def partFiles(fsys: FileSystem, dir: Path): Seq[Path] =
+    fsys.listStatus(dir).map(_.getPath).filter { p =>
+      val n = p.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq
+
+  /** Rows in the parquet part files directly under `dirs`, summed from
+    * their footers: no Spark job and no data read. */
+  private[graft] def footerRows(conf: Configuration, dirs: Seq[Path]): Long =
+    footerStats(conf, dirs.flatMap(d => partFiles(d.getFileSystem(conf), d)), Nil)._1
+
+  /** Row count of `files`, and their combined per-column (lo, hi) —
+    * already [[Brin.encode]]d — from parquet FOOTER statistics only:
+    * the writer already recorded exact column min/max in each footer,
+    * so zone stats and id high-water marks need no re-scan of the
+    * files just written.
+    *
+    * Exactness guard: the stats are None — callers fall back to a scan
+    * — unless every stat is of a type whose parquet statistics are
+    * trustworthy and map 1:1 onto the [[Brin.encode]] domain: INT32 /
+    * INT64 (plain, date, timestamp MILLIS/MICROS) and UTF8 binary
+    * (unsigned byte order, matching [[Brin.cmp]]; parquet drops
+    * oversized binary stats, which lands in the fallback). Float /
+    * double (NaN-unsafe stats), INT96 timestamps and anything exotic
+    * fall back. All-null chunks contribute nothing, so an all-null
+    * column yields (None, None) exactly like the scan's null min/max. */
+  private def footerStats(conf: Configuration, files: Seq[Path], cols: Seq[String])
+      : (Long, Option[Map[String, (Option[Any], Option[Any])]]) = {
+    import org.apache.parquet.hadoop.metadata.BlockMetaData
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{StringLogicalTypeAnnotation,
+      TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    // (lo, hi) of one column chunk: None = unusable stats, Some(None) =
+    // all nulls
+    def chunk(b: BlockMetaData, c: String): Option[Option[(Any, Any)]] =
+      b.getColumns.asScala.find(_.getPath.toDotString == c).flatMap { cc =>
+        val st = cc.getStatistics
+        if (st == null) None
+        else if (st.getNumNulls == b.getRowCount) Some(None)
+        else if (!st.hasNonNullValue) None // dropped/oversized stats
+        else {
+          def long(v: Any) = v.asInstanceOf[java.lang.Long].longValue
+          def str(v: Any) = new String(v.asInstanceOf[Binary].getBytes, StandardCharsets.UTF_8)
+          val pt = cc.getPrimitiveType
+          val bounds: Option[(Any, Any)] = pt.getPrimitiveTypeName match {
+            case INT64 => pt.getLogicalTypeAnnotation match {
+              case ts: TimestampLogicalTypeAnnotation => ts.getUnit match {
+                case TimeUnit.MICROS => Some((long(st.genericGetMin), long(st.genericGetMax)))
+                case TimeUnit.MILLIS =>
+                  Some((long(st.genericGetMin) * 1000L, long(st.genericGetMax) * 1000L))
+                case _ => None // nanos: not the Brin micros domain
+              }
+              case _ => Some((long(st.genericGetMin), long(st.genericGetMax)))
+            }
+            case INT32 => // plain ints and DATE (epoch days) both
+              // encode as Long, exactly Brin.encode's Int/LocalDate
+              Some((st.genericGetMin.asInstanceOf[java.lang.Integer].toLong,
+                st.genericGetMax.asInstanceOf[java.lang.Integer].toLong))
+            case BINARY if pt.getLogicalTypeAnnotation.isInstanceOf[StringLogicalTypeAnnotation] =>
+              Some((str(st.genericGetMin), str(st.genericGetMax)))
+            case _ => None // float/double (NaN), INT96, others: scan
+          }
+          bounds.map(Some(_))
+        }
+      }
+    val acc = mutable.Map[String, (Any, Any)]()
+    var exact = true
+    var rows = 0L
+    // plain read options: building them from the Hadoop conf copies
+    // every property, which cost more than the footer read itself
+    val opts = org.apache.parquet.ParquetReadOptions.builder().build()
+    for (f <- files) {
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf), opts)
+      try {
+        rows += rd.getRecordCount
+        for (b <- rd.getFooter.getBlocks.asScala; c <- cols if exact) chunk(b, c) match {
+          case None => exact = false
+          case Some(None) => ()
+          case Some(Some((lo, hi))) => acc(c) = acc.get(c) match {
+            case None => (lo, hi)
+            case Some((alo, ahi)) =>
+              (if (Brin.cmp(lo, alo) < 0) lo else alo, if (Brin.cmp(hi, ahi) > 0) hi else ahi)
+          }
+        }
+      } finally rd.close()
+    }
+    (rows, if (!exact) None else Some(cols.map(c =>
+      c -> acc.get(c).map { case (l, h) => (Some(l), Some(h)) }
+        .getOrElse((None, None))).toMap))
   }
 
 

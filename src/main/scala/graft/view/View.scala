@@ -110,64 +110,31 @@ final class View(val env: Env, tableName: String, fieldSpecs: Seq[(String, Strin
       distinct: Boolean = false,
       disableAcl: Boolean = false): DataFrame = {
 
-    // brin tables: extract conservative key bounds from the filters
-    // (incl. ACL) and zone-prune the base scan — pure IO elision, the
-    // compiled filter below still applies in full. A FRESH Args
-    // instance resolves params here so the main compile's
+    val aclFilters: Seq[Filter] =
+      if (disableAcl) Nil
+      else env.aclRead.getOrElse(table.name, Nil).map(FilterExpr.apply)
+    // key bounds of the filters (incl. ACL), for the store to prune
+    // the base scan by; computed only if the table's layout prunes. A
+    // FRESH Args instance resolves params here so the main compile's
     // positional-{} cursor is untouched; bare {} filters resolve
     // because the select fields' pop count is threaded through
     // (ZonePrune.countPops) and filters compile after fields in
-    // exactly the pruneFilters order below.
-    val pruneFilters: Seq[Filter] = filters ++
-      (if (disableAcl) Nil
-       else env.aclRead.getOrElse(table.name, Nil).map(FilterExpr.apply))
-    val zoneBounds =
-      if ((table.useIndex.equalsIgnoreCase("brin") || table.buckets > 0) &&
-          table.external.isEmpty) {
-        val fieldPops =
-          try ZonePrune.countPops(table, fieldEnv, fields.flatMap { f =>
-            f.kind match {
-              case ViewField.Expr => Seq(Parser.parse(f.desc))
-              case ViewField.AliasRef =>
-                Seq(Ast.param(f.desc.substring(1, f.desc.length - 1)))
-              case _ => Nil
-            }
-          })
-          catch { case _: Exception => None }
-        Some(ZonePrune.bounds(table, pruneFilters, Args(env, args, kwargs),
-          fieldEnv, fieldPops))
-          .filter(_.nonEmpty)
-      } else None
-    // bucketed tables: when the filters pin EVERY key column to an
-    // exact point set (=, in, equality map), hash the key tuples to
-    // their bucket ids driver-side — the read-side analogue of the
-    // merge path's bucket pruning; a point read opens one bucket dir.
-    // Combination count capped (a huge IN-list reads all buckets,
-    // same as before). Like zone pruning this is pure IO elision —
-    // the compiled filter still applies in full.
-    val bucketIds: Option[Set[Int]] =
-      if (table.buckets > 0)
-        zoneBounds.flatMap { b =>
-          val pts = table.key.map(k => b.get(k).flatMap(_.points))
-          if (pts.exists(_.isEmpty)) None
-          else {
-            val sets = pts.map(_.get)
-            if (sets.map(_.size.toLong).product > 64L) None
-            // pruning is IO elision: any evaluation hiccup (a key value
-            // its column's literal type can't represent) must widen the
-            // read, never break it
-            else try Some(env.warehouse.bucketIds(table.name, sets))
-            catch { case scala.util.control.NonFatal(_) => None }
+    // exactly this order below.
+    lazy val bounds = {
+      val fieldPops =
+        try ZonePrune.countPops(table, fieldEnv, fields.flatMap { f =>
+          f.kind match {
+            case ViewField.Expr => Seq(Parser.parse(f.desc))
+            case ViewField.AliasRef =>
+              Seq(Ast.param(f.desc.substring(1, f.desc.length - 1)))
+            case _ => Nil
           }
-        }
-      else None
+        })
+        catch { case _: Exception => None }
+      ZonePrune.bounds(table, filters ++ aclFilters, Args(env, args, kwargs), fieldEnv, fieldPops)
+    }
     val qb = QueryBuilder(env, table, fieldEnv,
-      baseRead =
-        if (table.buckets > 0)
-          bucketIds.map(ids =>
-            () => env.warehouse.readBuckets(table.name, Some(ids)))
-        else zoneBounds.map(b =>
-          () => env.warehouse.readZones(table.name, Some(b))))
+      baseRead = Some(() => env.warehouse.read(table.name, bounds)))
     val argv = Args(env, args, kwargs)
 
     // 1. compile select fields (before filters: join-alias order mirrors
@@ -188,9 +155,6 @@ final class View(val env: Env, tableName: String, fieldSpecs: Seq[(String, Strin
     qb.allowGenerators = false
 
     // 2. filters (+ACL, view.py:144-146)
-    val aclFilters: Seq[Filter] =
-      if (disableAcl) Nil
-      else env.aclRead.getOrElse(table.name, Nil).map(FilterExpr.apply)
     val conds = (filters ++ aclFilters).map(compileFilter(qb, _, argv))
 
     // 3. group-by list: explicit, or auto when aggregates are present

@@ -38,9 +38,11 @@ import org.apache.spark.sql.graft.Bridge
   *  - Purge (view.py:554-631): stored rows absent from the batch (and
   *    matching the filters, when given) are deleted, counted.
   *
-  * At 100-TB scale the full-snapshot rewrite becomes a partition-pruned
-  * rewrite (only partitions containing batch keys); the key-based merge
-  * here is already shaped for that (SURVEY §4).
+  * Every write and delete merges against one slice of the table
+  * ([[graft.store.Warehouse.slice]]) and commits it with one replace:
+  * the store alone decides, from the batch keys and the table's
+  * layout, whether the slice is some buckets, some zones or the whole
+  * table (SURVEY §4).
   */
 object Write {
 
@@ -372,24 +374,6 @@ object Write {
     }
   }
 
-  /** Encoded [min, max] of every batch key column, or None for an
-    * empty batch (caller falls back to the full-table path). A stored
-    * key can only collide with a batch key when EVERY key column
-    * falls inside the batch's range for that column, so each bound
-    * prunes independently. Key nulls were already rejected by
-    * [[prepare]]. */
-  private def batchKeyBounds(b: DataFrame, keyCols: Seq[String])
-      : Option[Map[String, graft.store.Brin.Bounds]] = {
-    val aggs = keyCols.flatMap(k => Seq(min(c(k)), max(c(k))))
-    val r = b.agg(aggs.head, aggs.tail: _*).head()
-    if (r.isNullAt(0)) None
-    else Some(keyCols.zipWithIndex.map { case (k, i) =>
-      k -> graft.store.Brin.Bounds(
-        Some(graft.store.Brin.encode(r.get(2 * i))),
-        Some(graft.store.Brin.encode(r.get(2 * i + 1))))
-    }.toMap)
-  }
-
   // --------------------------------------------------------------- write
 
   /** Upsert `data` into `v`'s table. Every intermediate the write
@@ -410,33 +394,13 @@ object Write {
     val (prepared, batchRows) = prepare(v, groups, data)
     var b = prepared
 
-    // Bucket pruning: when the table is key-hash bucketed and the
-    // merge is keyed on the natural key (and purge doesn't need the
-    // whole table), only the buckets the batch keys hash into are
-    // read and rewritten — write cost scales with the batch, not the
-    // table (SURVEY §4 100-TB merge path).
-    val affected: Option[Set[Int]] =
-      if (t.buckets > 0 && !purge && keyCols == t.key)
-        Some(b.select(env.warehouse.bucketExpr(t).as("__bk")).distinct()
-          .collect().map(_.getInt(0)).toSet)
-      else None
-    // Zone pruning (brin tables): a stored key can only collide with a
-    // batch key if its leading-key value falls inside the batch's key
-    // range, so the merge reads and rewrites just the overlapping
-    // zones; disjoint zones carry over by reference. The append-mostly
-    // table brin targets merges its recent-key batch into 1-2 zones.
-    val zoneBounds: Option[Map[String, graft.store.Brin.Bounds]] =
-      if (affected.isEmpty && t.useIndex.equalsIgnoreCase("brin") &&
-          t.buckets == 0 && !purge && keyCols == t.key)
-        batchKeyBounds(b, t.key)
-      else None
-    val cur = affected match {
-      case Some(bs) => env.warehouse.readBuckets(t.name, Some(bs))
-      case None => zoneBounds match {
-        case Some(zb) => env.warehouse.readZones(t.name, Some(zb))
-        case None => env.warehouse.read(t.name)
-      }
-    }
+    // A merge keyed on the natural key can only touch stored rows
+    // with a batch key, so it reads and rewrites just the slice those
+    // keys can reach — write cost scales with the batch, not the table
+    // (SURVEY §4 100-TB merge path). Purge needs the whole table.
+    val slice = env.warehouse.slice(t.name,
+      if (!purge && keyCols == t.key) Some(b.select(keyCols.map(c): _*)) else None)
+    val cur = slice.frame
 
     val allFilters: Seq[Filter] = filters ++
       (if (disableAcl) Nil
@@ -514,15 +478,10 @@ object Write {
         updated.unionByName(withId.select(insCols: _*))
       }
 
-    (affected, zoneBounds) match {
-      case (Some(bs), _) => env.warehouse.writeBuckets(t.name, result, bs, newMaxId)
-      case (None, Some(zb)) => env.warehouse.writeZones(t.name, result, zb, newMaxId)
-      case _ =>
-        // maxId is exact (old max + inserts) unless purge may have
-        // removed the previous max row — then let the store re-derive
-        // it from the written snapshot (id-column-only read).
-        env.warehouse.write(t.name, result, newMaxId.filter(_ => deleted == 0))
-    }
+    // maxId is exact (old max + inserts) unless purge may have removed
+    // the previous max row — then the store re-derives it from the
+    // written files' footers
+    env.warehouse.replace(slice, result, newMaxId.filter(_ => deleted == 0))
     WriteResult(filtered, deleted)
   }
 
@@ -540,16 +499,9 @@ object Write {
     val env = v.env
     val t = v.table
     require(t.external.isEmpty, s"Table '${t.name}' is external (read-only)")
-    if (data == null && filters.isEmpty) {
-      // delete all (tanker view.py:257-259)
-      val total = env.warehouse.liveRows(t.name)
-      env.warehouse.write(t.name, env.warehouse.empty(t))
-      return total
-    }
     if (data != null && filters.nonEmpty)
       throw new IllegalArgumentException(
         "Deletion by both data and filter not supported")
-
     val keyCols = v.keyCols
     val bKeys =
       if (data == null) null
@@ -558,50 +510,24 @@ object Write {
         validateKey(v, groups.map(_.col.name).toSet)
         prepare(v, groups, data)._1.select(keyCols.map(c): _*)
       }
-    if (data != null && !swap && keyCols == t.key) {
-      // bucket-pruned delete: only buckets holding batch keys can
-      // lose rows (not with swap — that deletes everywhere else)
-      if (t.buckets > 0) {
-        val bs = bKeys.select(env.warehouse.bucketExpr(t).as("__bk"))
-          .distinct().collect().map(_.getInt(0)).toSet
-        val slice = Scope.cache(env.warehouse.readBuckets(t.name, Some(bs)))
-        val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
-        val removed = slice.count() - keptSlice.count()
-        env.warehouse.writeBuckets(t.name, keptSlice, bs,
-          Some(env.warehouse.maxId(t.name)))
-        return removed
-      }
-      // zone-pruned delete: only zones overlapping the batch's key
-      // range can lose rows
-      if (t.useIndex.equalsIgnoreCase("brin")) {
-        batchKeyBounds(bKeys, t.key) match {
-          case Some(zb) =>
-            val slice = Scope.cache(env.warehouse.readZones(t.name, Some(zb)))
-            val keptSlice = Scope.cache(slice.join(bKeys, keyCols, "left_anti"))
-            val removed = slice.count() - keptSlice.count()
-            env.warehouse.writeZones(t.name, keptSlice, zb,
-              Some(env.warehouse.maxId(t.name)))
-            return removed
-          case None => return 0L // empty batch deletes nothing
-        }
-      }
-    }
-
-    // the whole table is rewritten; the rows removed are the footer
-    // row counts of the snapshot `cur` reads minus those of the new one
-    val cur = env.warehouse.read(t.name)
-    val before = env.warehouse.liveRows(t.name)
+    // a delete by key can only remove rows in the slice its keys reach;
+    // swap keeps them and deletes everywhere else. The rows removed are
+    // the slice's footer rows minus those written in its place.
+    val slice = env.warehouse.slice(t.name,
+      if (data != null && !swap && keyCols == t.key) Some(bKeys) else None)
     val remaining =
-      if (data != null) cur.join(bKeys, keyCols, if (swap) "left_semi" else "left_anti")
+      if (data == null && filters.isEmpty) env.warehouse.empty(t) // delete all (view.py:257-259)
+      else if (data != null)
+        slice.frame.join(bKeys, keyCols, if (swap) "left_semi" else "left_anti")
       else {
         val qb = QueryBuilder(env, t, v.fieldEnv)
         val argv = Args(env, args, kwargs)
         val cond = filters.map(f => v.compileFilter(qb, f, argv)).reduce(_ && _)
         val doomedIds = qb.wideFrame().filter(strictTrue(cond))
           .select(col(s"${t.name}.id").as("id")).distinct()
-        cur.join(doomedIds, Seq("id"), if (swap) "left_semi" else "left_anti")
+        slice.frame.join(doomedIds, Seq("id"), if (swap) "left_semi" else "left_anti")
       }
-    env.warehouse.write(t.name, remaining)
-    before - env.warehouse.liveRows(t.name)
+    val before = slice.rows // before the replace, whose gc may drop the slice
+    before - env.warehouse.replace(slice, remaining)
   }
 }

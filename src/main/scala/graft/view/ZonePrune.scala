@@ -4,11 +4,11 @@ import graft.expr.{Args, Ast, Parser}
 import graft.schema.TableDef
 import graft.store.Brin
 
-/** Extracts conservative per-column key bounds from read filters so
-  * brin-table reads can prune zone directories
-  * ([[graft.store.Warehouse.readZones]]) and bucketed-table reads can
-  * prune bucket dirs ([[graft.store.Warehouse.bucketIds]] — used by
-  * [[View.read]] when every key column lands on an exact point set).
+/** Extracts conservative per-column key bounds from read filters.
+  * [[View.read]] hands them to [[graft.store.Warehouse.read]], which
+  * prunes a brin table's zone directories by them and a bucketed
+  * table's bucket dirs when every key column lands on an exact point
+  * set.
   * Bounds are collected for every zone-tracked column — the full
   * table key plus the surrogate `id` — and a zone must overlap ALL
   * of them to be read. Equality shapes (`=`, `in`, equality maps)

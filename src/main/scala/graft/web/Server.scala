@@ -169,8 +169,8 @@ final class Server(env: Env, port: Int = 0) {
     * per-column data-card drift ([[graft.Env.compareSnapshots]]).
     * Storage-level surface: view ACL read filters CANNOT apply
     * (snapshots predate the view layer), so tables with an `aclRead`
-    * entry refuse with 403 before reaching here; bucketed tables
-    * refuse (400). */
+    * entry refuse with 403 before reaching here; a snapshot that is a
+    * per-bucket or per-zone delta refuses (400). */
   private def diff(table: String, ps: Seq[(String, String)]): String = {
     val get = ps.toMap
     val df = get.get("psi").filter(_.nonEmpty) match {

@@ -551,4 +551,19 @@ class BrinSpec extends SparkSpec {
     assert(!df.columns.contains("__z"))
     assert(df.count() == 10)
   }
+
+  test("time travel refuses a zone merge's snapshot: it holds only the rewritten zones") {
+    val env = bEnv()
+    val v = env.view("reading", Seq("seq", "val"))
+    v.write((1 to 10).map(i => Seq(i.toLong, i.toDouble)))
+    // a disjoint key range rewrites no zone: batch 1's zones carry over
+    // by reference and the new snapshot holds batch 2 only
+    v.write((11 to 20).map(i => Seq(i.toLong, i.toDouble)))
+    assert(rows(v.read()).size == 20)
+    val last = env.warehouse.snapshots("reading").last
+    val e1 = intercept[IllegalArgumentException](env.warehouse.readSnapshot("reading", last))
+    assert(e1.getMessage.contains("per-zone delta"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](env.diffSnapshots("reading"))
+    assert(e2.getMessage.contains("per-zone delta"), e2.getMessage)
+  }
 }

@@ -58,32 +58,39 @@ class PropertySpec extends SparkSpec {
   }
 
   test("bucketed and unbucketed merges converge to identical states") {
-    // the 100-TB pruned-merge path must be observationally equivalent
-    // to the simple full-rewrite path for any batch sequence
-    val yaml = (buckets: String) =>
+    // the pruned-merge paths must be observationally equivalent to the
+    // simple full-rewrite path for any batch sequence, ids included
+    val yaml = (layout: String) =>
       s"""- table: acc
          |  columns:
          |    k: varchar
          |    v: integer
          |  key: [k]
-         |$buckets""".stripMargin
-    val kGen = Gen.oneOf((1 to 12).map("k" + _))
+         |$layout""".stripMargin
+    val keys = (1 to 12).map("k" + _)
+    val kGen = Gen.oneOf(keys)
     val bGen = Gen.listOfN(6, Gen.zip(kGen, Gen.chooseNum(0, 99)))
     for (seed <- 30L to 33L) {
-      val roots = Seq("", "  buckets: 8\n").map { b =>
+      val states = Seq("", "  buckets: 8\n", "  use-index: brin\n").map { layout =>
         val root = java.nio.file.Files.createTempDirectory("graft-eq-").toString
-        val env = Env(spark, graft.schema.Registry.fromYaml(yaml(b)), root)
+        val env = Env(spark, graft.schema.Registry.fromYaml(yaml(layout)), root)
         env.createTables()
         val v = env.view("acc", Seq("k", "v"))
         for (step <- 0 to 2) {
           val batch = sample(bGen, seed * 10 + step)
           v.write(batch.map(r => Seq(r._1, r._2)))
         }
-        // delete one known key through both paths too
+        // delete one known key through every path too
         v.delete(data = Seq(Seq("k1", 0)))
-        rows(env.view("acc", Seq("k", "v")).read()).sortBy(_.mkString("|"))
+        val kvId = env.view("acc", Seq("k", "v", "id"))
+        val full = rows(kvId.read()).sortBy(_.mkString("|"))
+        // one pruned point read per key
+        val points = keys.map(k => rows(kvId.read(Seq(s"""(= k "$k")"""))))
+        assert(points == keys.map(k => full.filter(_.head == k)), s"seed=$seed $layout")
+        (full, points)
       }
-      assert(roots(0) == roots(1), s"seed=$seed plain=${roots(0)} bucketed=${roots(1)}")
+      assert(states(1) == states(0), s"seed=$seed plain=${states(0)._1} bucketed=${states(1)._1}")
+      assert(states(2) == states(0), s"seed=$seed plain=${states(0)._1} brin=${states(2)._1}")
     }
   }
 

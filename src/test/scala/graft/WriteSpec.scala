@@ -487,19 +487,34 @@ class WriteSpec extends SparkSpec {
   }
 
   test("ids monotone across writes, reset by delete-all") {
-    val env = freshEnv()
-    val v = env.view("country", Seq("name"))
-    v.write(Seq(Seq("Italy")))
-    v.write(Seq(Seq("Spain")))
-    val ids = rows(env.view("country", Seq("name", "id")).read())
-      .map(r => r.head.toString -> r(1).asInstanceOf[Long]).toMap
-    assert(ids("Spain") > ids("Italy"))
-    // reference semantics: max(id) of the live table seeds the next
-    // insert, so delete-all restarts ids from 1
-    env.view("country").delete()
-    v.write(Seq(Seq("Portugal")))
-    val fresh = rows(env.view("country", Seq("id")).read()).map(_.head)
-    assert(fresh == Seq(1L))
+    // the same id high-water rule on every layout: the fixture's plain
+    // `country`, and a bucketed and a brin table of the same shape
+    val root = java.nio.file.Files.createTempDirectory("graft-ids-").toString
+    val layouts = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: b
+        |  columns: {name: varchar}
+        |  key: [name]
+        |  buckets: 4
+        |- table: z
+        |  columns: {name: varchar}
+        |  key: [name]
+        |  use-index: brin
+        |""".stripMargin), root)
+    layouts.createTables()
+    for ((env, t) <- Seq(freshEnv() -> "country", layouts -> "b", layouts -> "z")) {
+      val v = env.view(t, Seq("name"))
+      v.write(Seq(Seq("Italy")))
+      v.write(Seq(Seq("Spain")))
+      val ids = rows(env.view(t, Seq("name", "id")).read())
+        .map(r => r.head.toString -> r(1).asInstanceOf[Long]).toMap
+      assert(ids("Spain") > ids("Italy"), t)
+      // reference semantics: max(id) of the live table seeds the next
+      // insert, so delete-all restarts ids from 1
+      env.view(t).delete()
+      v.write(Seq(Seq("Portugal")))
+      val fresh = rows(env.view(t, Seq("id")).read()).map(_.head)
+      assert(fresh == Seq(1L), t)
+    }
   }
 
   test("writeResult counts update vs insert") {
