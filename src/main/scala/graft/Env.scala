@@ -196,6 +196,11 @@ object Env {
       // Driver testdata events.ts is TIMESTAMP(NANOS); read as long and
       // convert in Warehouse.read (Spark has no nanos timestamp).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // a limit's collect scans this many partitions in its first job
+      // (Spark's default is 1, then a second job for the rest)
+      .config("spark.sql.limit.initialNumPartitions", shufflePartitions.toString)
+      // permissions through java.nio, not a process per file
+      .config("spark.hadoop.fs.file.impl", classOf[graft.store.LocalFs].getName)
       .getOrCreate()
 
   /** One harness query (Bench, Verify, Plans, Profile): `body` runs

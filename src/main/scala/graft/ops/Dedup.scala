@@ -1,10 +1,10 @@
 package graft.ops
 
 import graft.view.Write
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines: exact,
   * content-hash, MinHash+LSH, SimHash — all bucketed (candidate pairs
@@ -105,12 +105,12 @@ object Dedup {
     * longs total (hash groupBy, hash join back). */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
       n: Int = 8): DataFrame = {
-    // `g` feeds the dup-gram aggregate AND the join back — the same
-    // two-reference shape as [[bucketPairs]]: an explicit repartition
-    // on the join key plants ONE exchange that both references share
-    // via AQE's ReusedExchange, so the tokenize+hash+explode subplan
-    // runs ONCE (it re-ran in full for the join side before — measured
-    // ~2x on the 10x-corpus span probe; guide §2.4)
+    // `g` feeds the dup-gram aggregate AND the join back: an explicit
+    // repartition on the join key plants ONE exchange that both
+    // references share via AQE's ReusedExchange, so the
+    // tokenize+hash+explode subplan runs ONCE (it re-ran in full for
+    // the join side before — measured ~2x on the 10x-corpus span
+    // probe; guide §2.4)
     val g = spanGrams(df, idCol, textCol, n).repartition(col("__h"))
     val dup = g.groupBy(col("__h"))
       .agg(min(col(idCol)).as("__mn"), max(col(idCol)).as("__mx"))
@@ -209,8 +209,9 @@ object Dedup {
     graft.functions.MiningKernels.minhashMins(
       shingleHashes(text, shingleSize), minhashCoefs(numHashes))
 
-  /** Candidate pairs from LSH buckets, shared by [[minhashPairs]] and
-    * [[Similarity.cosinePairs]]. `banded` holds one `__id` per bucket
+  /** Candidate pairs from LSH buckets, shared by [[minhashPairs]],
+    * [[simhashPairs]], [[Similarity.cosinePairs]] and
+    * [[Similarity.semanticPairs]]. `banded` holds one `__id` per bucket
     * row; `bucketCols` name the bucket key.
     *
     * Normal buckets (2..maxBucket members) emit all in-bucket pairs
@@ -219,41 +220,59 @@ object Dedup {
     * policy would silently lose exactly the densest duplicates —
     * degrade to star pairs against the bucket's min id: linear output
     * that still links every member to a canonical representative for
-    * dedup. The per-bucket stats aggregate keeps `collect_list`
-    * bounded at maxBucket (no unbounded in-memory bucket arrays). */
-  private[graft] def bucketPairs(banded0: DataFrame, bucketCols: Seq[String],
+    * dedup.
+    *
+    * Scale shape: ONE exchange on the bucket key, so the `banded`
+    * subplan (a signature kernel) runs once, then a sort of each
+    * partition on (bucket, id) and a streaming per-partition emitter
+    * ([[bucketEmitter]]) that holds at most `maxBucket` ids at a time,
+    * however large a bucket is (semantic clusters are corpus-sized).
+    * A stats aggregate joined back to `banded` twice would plan three
+    * exchanges over `banded`, and AQE reuses none of them: column
+    * pruning gives the references different columns. */
+  private[graft] def bucketPairs(banded: DataFrame, bucketCols: Seq[String],
       maxBucket: Int): DataFrame = {
-    // `banded` is referenced three times below (stats + two joins) but
-    // needs no persist: an explicit repartition on the bucket key
-    // plants ONE exchange that every reference shares via AQE's
-    // ReusedExchange — the signature subplan computes once — and the
-    // stats groupBy plus both bucket-key joins then need NO further
-    // shuffle (guide §2.4: operations keyed the same way share one
-    // exchange). Before r14 the signature pipelines ended in their own
-    // aggregation exchange which played this role implicitly; the
-    // map-only kernel signatures (see [[bandedSignatures]]) removed
-    // it, and without this repartition each reference re-ran the
-    // whole scan+signature subplan (measured 3× recompute).
     val keys = bucketCols.map(col)
-    val banded = banded0.repartition(keys: _*)
-    val stats = banded.groupBy(keys: _*)
-      .agg(count(lit(1)).as("__n"), min(col("__id")).as("__min"))
-    val small = banded
-      .join(stats.filter(col("__n").between(2, maxBucket)), bucketCols)
-      .groupBy(keys: _*).agg(sort_array(collect_list(col("__id"))).as("__ids"))
-      .select(explode(expr(
-        """flatten(transform(__ids, (x, i) ->
-             transform(slice(__ids, i + 2, size(__ids) - i - 1), y ->
-               struct(x AS a, y AS b))))""")).as("__p"))
-      .select(col("__p.a").as("idA"), col("__p.b").as("idB"))
-    val big = banded.join(stats.filter(col("__n") > maxBucket), bucketCols)
-      .filter(col("__id") =!= col("__min"))
-      .select(col("__min").as("idA"), col("__id").as("idB"))
-    // defense-in-depth: callers are documented to feed at most one
-    // (__id, bucket) row per id, but a duplicate would make sort_array
-    // neighbours of the copies and emit a self-pair that then passes
-    // any verify stage at similarity 1.0 — drop them here.
-    small.unionByName(big).filter(col("idA") =!= col("idB")).distinct()
+    // a null bucket key pairs with nothing, as in an equi-join
+    val sorted = banded.select(keys :+ col("__id"): _*)
+      .filter((keys :+ col("__id")).map(_.isNotNull).reduce(_ && _))
+      .repartition(keys: _*).sortWithinPartitions(keys :+ col("__id"): _*)
+    val idType = sorted.schema("__id").dataType
+    val pairSchema = StructType(Seq("idA", "idB").map(StructField(_, idType, nullable = false)))
+    val nKeys = keys.size
+    // a pair lands in every bucket its ids share (up to one per band)
+    sorted.mapPartitions((rows: Iterator[Row]) => bucketEmitter(rows, nKeys, maxBucket))(
+        Encoders.row(pairSchema))
+      .distinct()
+  }
+
+  /** The pairs of `rows`, sorted by (bucket key in the first `nKeys`
+    * fields, id): every pair of distinct ids inside a bucket of at most
+    * `maxBucket` rows, and (first id, id) for every other id of a
+    * larger bucket. The first id of a sorted bucket is its minimum. A
+    * bucket is buffered only up to `maxBucket` ids; past that it
+    * streams. */
+  private def bucketEmitter(rows: Iterator[Row], nKeys: Int,
+      maxBucket: Int): Iterator[Row] = {
+    val in = rows.buffered
+    def same(a: Row, b: Row) = (0 until nKeys).forall(i => a.get(i) == b.get(i))
+    val buf = scala.collection.mutable.ArrayBuffer[Any]()
+    Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+      val first = in.next()
+      buf.clear()
+      buf += first.get(nKeys)
+      while (buf.size < maxBucket && in.hasNext && same(in.head, first))
+        buf += in.next().get(nKeys)
+      val ids = buf.toArray
+      if (in.hasNext && same(in.head, first)) {
+        val rest = Iterator.continually(in).takeWhile(i => i.hasNext && same(i.head, first))
+          .map(_.next().get(nKeys))
+        (ids.iterator.drop(1) ++ rest).filter(_ != ids(0)).map(Row(ids(0), _))
+      } else for {
+        i <- ids.indices.iterator
+        j <- (i + 1 until ids.length).iterator if ids(i) != ids(j)
+      } yield Row(ids(i), ids(j))
+    }
   }
 
   /** Exact Jaccard for CANDIDATE pairs via collision counting: the
@@ -264,9 +283,12 @@ object Dedup {
     * ~2.5x on the minhash verify at sf0.1; the array kernels were
     * the dominant cost of every near-dup verify stage).
     *
-    * `pairs` is (idA, idB); `left`/`right` are (idA, __ha) /
-    * (idB, __hb) FULL hash-set frames, already restricted to
-    * candidate docs by the caller. Hashes hotter than `maxDf` across
+    * `pairs` is (idA, idB), a [[Scope.checkpoint]] (or a projection of
+    * one), so its row count is known without a job; `left`/`right` are
+    * (idA, __ha) / (idB, __hb) hash-set frames covering the pairs' ids
+    * (more rows are fine: the verify restricts them to the candidates,
+    * and materializes the restriction only on the big-candidate path,
+    * where it is read more than once). Hashes hotter than `maxDf` across
     * the candidate postings are excluded from the counting join (a
     * bucket that hot only happens inside a dense near-identical
     * cluster); pairs where BOTH ends carry an excluded hash re-verify
@@ -284,19 +306,20 @@ object Dedup {
     // latency dominates at this size. The counting join takes over
     // when candidates are too many to ship arrays for (its volume is
     // bounded by the df cap, not the pair count).
-    val nPairs = pairs.count()
-    if (nPairs <= 100000)
+    if (Scope.rows(pairs).getOrElse(pairs.count()) <= 100000)
       return pairs.join(left, Seq("idA")).join(right, Seq("idB"))
         .withColumn("jaccard",
           size(array_intersect(col("__ha"), col("__hb"))).cast("double") /
             size(array_union(col("__ha"), col("__hb"))))
         .filter(col("jaccard") >= threshold)
         .select(col("idA"), col("idB"), col("jaccard"))
-    // big-candidate path only: materialize the hash-set frames, which
-    // fan out into the posting, taint and fallback branches below
+    // big-candidate path only: materialize the candidates' hash sets,
+    // which fan out into the posting, taint and fallback branches below
     // (the array path above reads each exactly once)
-    val leftCp = Scope.checkpoint(left)
-    val rightCp = Scope.checkpoint(right)
+    val leftCp = Scope.checkpoint(
+      left.join(pairs.select(col("idA")).distinct(), Seq("idA"), "left_semi"))
+    val rightCp = Scope.checkpoint(
+      right.join(pairs.select(col("idB")).distinct(), Seq("idB"), "left_semi"))
     val pa = leftCp.select(col("idA"), explode(col("__ha")).as("__h"),
       size(col("__ha")).as("__szA"))
     val pb = rightCp.select(col("idB"), explode(col("__hb")).as("__h"),
@@ -341,38 +364,29 @@ object Dedup {
     * with true n-gram Jaccard. Returns (idA, idB, jaccard) with
     * idA < idB and jaccard >= threshold.
     *
-    * Scale shape: explode shingles → one groupBy(id) with 128 simple
-    * `min` aggregates (map-side partial combine, codegen-friendly) →
-    * explode to numBands rows/doc → shuffle on (band, bandHash) →
-    * pairs only within buckets ([[bucketPairs]]: skew-guarded, dense
-    * overflow buckets degrade to star pairs) → verify joins on
-    * candidate ids only. Never an all-pairs product.
+    * Scale shape: each doc is shingle-hashed ONCE into a materialized
+    * `(__id, __hs)` frame ([[hashSets]]) that both the banding and the
+    * verify read → one in-row kernel pass for the 128 permutation mins
+    * → numBands rows/doc → one shuffle on (band, bandHash) → pairs only
+    * within buckets ([[bucketPairs]]: skew-guarded, dense overflow
+    * buckets degrade to star pairs) → verify joins of the candidate
+    * pairs with the hash sets. Never an all-pairs product.
     */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.8, numHashes: Int = 128, numBands: Int = 32,
-      shingleSize: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    val banded = bandedSignatures(df, idCol, textCol, numHashes, numBands,
-      shingleSize)
-    // checkpointed: referenced by the verify join AND by the candidate-id
-    // semi-join below — without it each reference re-executes
-    // the whole mining subplan (Spark plans share no common subtrees)
-    val pairs = Scope.checkpoint(
-      bucketPairs(banded, Seq("__band", "__bsig"), maxBucket))
-    // verify with true jaccard over per-doc precomputed hash sets,
-    // hashed only for docs that appear in a candidate pair (semi-join
-    // first): verify cost scales with the candidate set, not the
-    // corpus — at 100 TB candidates are a vanishing fraction
-    val candIds = pairs.select(col("idA").as(idCol))
-      .unionByName(pairs.select(col("idB").as(idCol))).distinct()
-    // cached: the count verify references the candidate hash sets from
-    // its posting, taint and array-fallback branches
-    val docsH = Scope.checkpoint(
-      df.join(candIds, Seq(idCol), "left_semi")
-        .select(col(idCol).as("__vid"),
-          shingleHashes(col(textCol), shingleSize).as("__hs")))
+      shingleSize: Int = 3, maxBucket: Int = 1000): DataFrame =
+    pairsOfHashSets(hashSets(df, idCol, textCol, shingleSize, carried = None),
+      threshold, numHashes, numBands, maxBucket)
+
+  /** [[minhashPairs]] over a materialized `(__id, __hs)` frame. */
+  private def pairsOfHashSets(docsH: DataFrame, threshold: Double,
+      numHashes: Int, numBands: Int, maxBucket: Int): DataFrame = {
+    // checkpointed: the verify counts it and joins it to the hash sets
+    val pairs = Scope.checkpoint(bucketPairs(
+      bandedFromHashSets(docsH, numHashes, numBands), Seq("__band", "__bsig"), maxBucket))
     verifyPairsByCount(pairs,
-      docsH.select(col("__vid").as("idA"), col("__hs").as("__ha")),
-      docsH.select(col("__vid").as("idB"), col("__hs").as("__hb")),
+      docsH.select(col("__id").as("idA"), col("__hs").as("__ha")),
+      docsH.select(col("__id").as("idB"), col("__hs").as("__hb")),
       threshold, maxDf = maxBucket, ordered = true)
   }
 
@@ -380,11 +394,40 @@ object Dedup {
     * verified near-duplicate pair (greedy canonical-smallest — one
     * anti-join, no connected components needed for dedup purposes). */
   def minhashDedup(df: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.8): DataFrame = {
-    val doomed = minhashPairs(df, idCol, textCol, threshold)
+      threshold: Double = 0.8): DataFrame =
+    hashedDedup(df, idCol, textCol, threshold, shingleSize = 3).drop(HashCol)
+
+  /** [[minhashDedup]]'s survivors with their shingle-hash sets in
+    * [[HashCol]]: the rows are hashed once into a checkpoint that the
+    * pair mining and the survivor anti-join both read, so a caller that
+    * needs the sets later (the incremental curation recipe) hashes no
+    * document again. */
+  private[ops] def hashedDedup(df: DataFrame, idCol: String, textCol: String,
+      threshold: Double, shingleSize: Int): DataFrame = {
+    val h = Scope.checkpoint(Par.spread(df)
+      .withColumn(HashCol, shingleHashes(col(textCol), shingleSize)))
+    val doomed = pairsOfHashSets(h.select(col(idCol).as("__id"), col(HashCol)),
+      threshold, numHashes = 128, numBands = 32, maxBucket = 1000)
       .select(col("idB").as(idCol)).distinct()
-    df.join(doomed, Seq(idCol), "left_anti")
+    h.join(doomed, Seq(idCol), "left_anti")
   }
+
+  /** The column a frame carries its documents' shingle-hash sets in
+    * ([[shingleHashes]]), between the stages of the incremental
+    * curation recipe. */
+  private[ops] val HashCol = "__hs"
+
+  /** `(__id, __hs)` of `df`'s documents, hashed at `shingleSize`: the
+    * sets `df` already carries in [[HashCol]] when they were hashed at
+    * that size (`carried`), read as they are; otherwise hashed here
+    * once into a [[Scope.checkpoint]], since every caller reads them
+    * more than once. */
+  private def hashSets(df: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int, carried: Option[Int]): DataFrame =
+    if (carried.contains(shingleSize) && df.columns.contains(HashCol))
+      df.select(col(idCol).as("__id"), col(HashCol))
+    else Scope.checkpoint(Par.spread(df).select(col(idCol).as("__id"),
+      shingleHashes(col(textCol), shingleSize).as(HashCol)))
 
   /** EXACT n-gram Jaccard near-dup pairs — the deterministic
     * complement to [[minhashPairs]] (which trades a ~1e-14 LSH miss
@@ -505,16 +548,29 @@ object Dedup {
     *    parquet files, which a probe joins on (band, bandHash). A
     *    batch's band hashes cover every hash range, so bucketing them
     *    would let no probe skip a file;
-    *  - `docs/`  — (id, shingle-hash set) for the verify stage, read
-    *    column-pruned and semi-joined to candidates only;
+    *  - `docs/`  — (id, shingle-hash set) for the verify stage, joined
+    *    to the candidate pairs only;
     *  - the [[IndexDir]] meta — the LSH parameters, so probes can
     *    never silently mismatch the stored signatures.
+    *
+    * A probe takes the two file sets' schema from one `docs/` footer
+    * ([[graft.store.Warehouse.footerSchema]]): the id type is the
+    * index's own, and no read infers a schema in a job.
+    *
+    * `carried` is the shingle size of hash sets `df` already carries in
+    * [[HashCol]] (the incremental recipe's spills): at the index's size
+    * they are written as they are, otherwise the docs are hashed here.
     */
   def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
       path: String, numHashes: Int = 128, numBands: Int = 32,
-      shingleSize: Int = 3): Unit = {
+      shingleSize: Int = 3): Unit =
+    buildMinhashIndex(df, idCol, textCol, path, numHashes, numBands, shingleSize, None)
+
+  private[ops] def buildMinhashIndex(df: DataFrame, idCol: String, textCol: String,
+      path: String, numHashes: Int, numBands: Int, shingleSize: Int,
+      carried: Option[Int]): Unit = {
     val meta = IndexDir.MinhashMeta(numHashes, numBands, shingleSize)
-    writeMinhashRows(df, idCol, textCol, path, meta, "overwrite")
+    writeMinhashRows(df, idCol, textCol, path, meta, "overwrite", carried)
     IndexDir.write(df.sparkSession, path, meta)
   }
 
@@ -528,9 +584,10 @@ object Dedup {
     * dedupe on id). An index built with `__bp`-partitioned bands is
     * first rewritten flat, once, through the [[IndexDir.rebuild]] swap:
     * a flat file next to partition directories is invisible to a read
-    * of `bands/`. */
+    * of `bands/`. `carried` as in [[buildMinhashIndex]]. */
   private[ops] def appendToMinhashIndex(df: DataFrame, idCol: String,
-      textCol: String, path: String, meta: IndexDir.MinhashMeta): Unit = {
+      textCol: String, path: String, meta: IndexDir.MinhashMeta,
+      carried: Option[Int] = None): Unit = {
     val spark = df.sparkSession
     if (meta.legacyBuckets.isDefined) IndexDir.rebuild(spark, path) { scratch =>
       for (set <- Seq("docs", "bands"))
@@ -539,28 +596,28 @@ object Dedup {
           .parquet(new org.apache.hadoop.fs.Path(scratch, set).toString)
       IndexDir.write(spark, scratch, meta.copy(legacyBuckets = None))
     }
-    writeMinhashRows(df, idCol, textCol, path, meta, "append")
+    writeMinhashRows(df, idCol, textCol, path, meta, "append", carried)
   }
 
-  /** Shingle-hash each doc ONCE into a cache that feeds both the
-    * `docs/` rows and the banded signatures, and write both, one file
-    * per [[Write.tasksFor]] share of their rows. */
+  /** Write the `docs/` rows and the banded signatures of `df` from ONE
+    * hash-set frame ([[hashSets]]: the carried sets, or a checkpoint),
+    * one file per [[Write.tasksFor]] share of their rows. The row count
+    * comes from the checkpoint or the carried spill's footers. */
   private def writeMinhashRows(df: DataFrame, idCol: String, textCol: String,
-      path: String, meta: IndexDir.MinhashMeta, mode: String): Unit = Scope {
-    val docsH = Scope.cache(Par.spread(df).select(col(idCol).as("__id"),
-      shingleHashes(col(textCol), meta.shingleSize).as("__hs")))
-    // build the cache on every partition before the writes coalesce,
-    // so the hashing stays parallel and the cache counts the rows
-    docsH.foreachPartition((_: Iterator[Row]) => ())
+      path: String, meta: IndexDir.MinhashMeta, mode: String,
+      carried: Option[Int]): Unit = Scope {
+    val docsH = hashSets(df, idCol, textCol, meta.shingleSize, carried)
+    val rows = Scope.rows(docsH)
     def write(f: DataFrame, set: String, rowsPerDoc: Int): Unit =
-      Bridge.cachedRows(docsH).fold(f)(n => f.coalesce(Write.tasksFor(n * rowsPerDoc)))
+      rows.fold(f)(n => f.coalesce(Write.tasksFor(n * rowsPerDoc)))
         .write.mode(mode).parquet(new org.apache.hadoop.fs.Path(path, set).toString)
     write(docsH, "docs", 1)
     write(bandedFromHashSets(docsH, meta.numHashes, meta.numBands), "bands", meta.numBands)
   }
 
-  /** The banded-signature frame `(__id, __band, __bsig)` shared by
-    * [[minhashPairs]] and the corpus index. */
+  /** The banded-signature frame `(__id, __band, __bsig)` of a text
+    * column, as [[minhashPairs]] and the corpus index band their hash
+    * sets. */
   private[graft] def bandedSignatures(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, numBands: Int, shingleSize: Int): DataFrame =
     bandedFromHashSets(
@@ -568,9 +625,9 @@ object Dedup {
         shingleHashes(col(textCol), shingleSize).as("__hs")),
       numHashes, numBands)
 
-  /** Banding from a per-doc shingle-hash-SET frame `(__id, __hs)`
-    * (lets [[buildMinhashIndex]] reuse its persisted doc hash sets
-    * instead of re-parsing the corpus).
+  /** Banding from a per-doc shingle-hash-SET frame `(__id, __hs)`, so
+    * every minhash path bands the hash sets it already holds instead of
+    * re-parsing the corpus.
     *
     * Scale shape (r14 optimization, guide §2.4/§4): the previous
     * formulation exploded `__hs` and computed the 128 permutation
@@ -606,42 +663,48 @@ object Dedup {
   /** Dedup a new batch AGAINST a [[buildMinhashIndex]] corpus index:
     * drops batch docs whose n-gram Jaccard with some indexed doc is >=
     * `threshold`; batch-internal duplicates are untouched (compose
-    * with [[minhashDedup]] for those). Joins the batch's bands with
-    * all of `bands/` on (band, bandHash) (either layout: the select
-    * drops a partitioned index's `__bp`), and verifies against the
-    * corpus hash sets semi-joined to candidate ids.
+    * with [[minhashDedup]] for those). The batch is shingle-hashed once
+    * ([[hashSets]]); its bands join all of `bands/` on (band, bandHash)
+    * (either layout: the select drops a partitioned index's `__bp`),
+    * and the candidate pairs verify against the batch's hash sets and
+    * the corpus's `docs/` sets. Both index file sets are read with the
+    * schema of one `docs/` footer, so no read infers one in a job.
     */
   def dedupAgainstIndex(newDf: DataFrame, idCol: String, textCol: String,
-      path: String, threshold: Double = 0.8): DataFrame = {
+      path: String, threshold: Double = 0.8): DataFrame =
+    dedupAgainstIndex(newDf, idCol, textCol, path, threshold, None)
+
+  /** [[dedupAgainstIndex]] over a batch that may carry its hash sets
+    * (`carried` as in [[buildMinhashIndex]]); the survivors keep every
+    * column of `newDf`. */
+  private[ops] def dedupAgainstIndex(newDf: DataFrame, idCol: String, textCol: String,
+      path: String, threshold: Double, carried: Option[Int]): DataFrame = {
     val spark = newDf.sparkSession
     val IndexDir.MinhashMeta(numHashes, numBands, shingleSize, _) =
       IndexDir.readAs[IndexDir.MinhashMeta](spark, path, "a minhash corpus index")
-    val newBanded =
-      bandedSignatures(newDf, idCol, textCol, numHashes, numBands, shingleSize)
-    val idx = spark.read.parquet(
-      new org.apache.hadoop.fs.Path(path, "bands").toString)
-    // the candidate frame is referenced by the verify's pair set and
-    // both hash-set semi-joins (and counted for the adaptive verify) —
-    // materialize it; the hash-set frames are left lazy, the verify
-    // materializes them itself only on the big-candidate path
-    val cands = Scope.checkpoint(newBanded
-      .join(idx.select(col("__id").as("__cid"), col("__band"), col("__bsig")),
+    val docsDir = new org.apache.hadoop.fs.Path(path, "docs")
+    val docsSchema = graft.store.Warehouse.footerSchema(
+      spark.sparkContext.hadoopConfiguration, docsDir)
+    def read(set: String, schema: Option[StructType]): DataFrame =
+      schema.fold(spark.read)(spark.read.schema)
+        .parquet(new org.apache.hadoop.fs.Path(path, set).toString)
+    val bandsSchema = docsSchema.map(d => StructType(Seq(d("__id"),
+      StructField("__band", IntegerType), StructField("__bsig", LongType))))
+    val newH = hashSets(newDf, idCol, textCol, shingleSize, carried)
+    // the candidate frame is the verify's pair set: materialized, so
+    // its row count is known without a job
+    val cands = Scope.checkpoint(bandedFromHashSets(newH, numHashes, numBands)
+      .join(read("bands", bandsSchema)
+        .select(col("__id").as("__cid"), col("__band"), col("__bsig")),
         Seq("__band", "__bsig"))
       .select(col("__id"), col("__cid")).distinct())
-    val newH = newDf.join(cands.select(col("__id").as(idCol)).distinct(),
-        Seq(idCol), "left_semi")
-      .select(col(idCol).as("idA"),
-        shingleHashes(col(textCol), shingleSize).as("__ha"))
-    val corpusH = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(path, "docs").toString)
-      .withColumnRenamed("__id", "idB").withColumnRenamed("__hs", "__hb")
-      .join(cands.select(col("__cid").as("idB")).distinct(),
-        Seq("idB"), "left_semi")
     // bipartite count verify: batch ids vs corpus ids are separate
     // spaces, so ordered = false (equal values are distinct docs)
     val doomed = verifyPairsByCount(
       cands.select(col("__id").as("idA"), col("__cid").as("idB")),
-      newH, corpusH, threshold, maxDf = 1000, ordered = false)
+      newH.select(col("__id").as("idA"), col(HashCol).as("__ha")),
+      read("docs", docsSchema).select(col("__id").as("idB"), col(HashCol).as("__hb")),
+      threshold, maxDf = 1000, ordered = false)
       .select(col("idA").as(idCol)).distinct()
     newDf.join(doomed, Seq(idCol), "left_anti")
   }

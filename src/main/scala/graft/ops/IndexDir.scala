@@ -18,7 +18,10 @@ import scala.util.Try
   *  - `_graft_index_meta.json`, the typed [[Meta]]: build parameters
   *    and, for the centroid families, centroids, codebooks and drift
   *    tallies, so no probe or append ever runs with parameters the
-  *    stored rows were not built with;
+  *    stored rows were not built with. The rows' schema is not in the
+  *    meta: the parquet footers record it, and a minhash probe reads
+  *    its `docs/` and `bands/` with the schema of one `docs/` footer
+  *    (the id type is the index's own), read on the driver;
   *  - `_graft_tally_journal_<uuid>.json`, append tallies whose fold into
   *    the meta is not confirmed yet.
   * Underscore names are invisible to parquet readers. Two siblings exist

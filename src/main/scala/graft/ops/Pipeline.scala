@@ -28,7 +28,13 @@ import org.apache.spark.sql.functions.col
   *    [[Sample.writeShards]] or [[graft.sources.Corpus.exportJsonl]];
   *  - each stage runs in its own [[Scope]], so everything the stage's
   *    ops materialized is released once its spill is written (or the
-  *    stage throws).
+  *    stage throws);
+  *  - a spill may carry work a later stage reuses: in the incremental
+  *    [[curateDocuments]] recipe, the spills from `near_dedup` up to
+  *    `index_update` carry each document's shingle-hash set (`__hs`),
+  *    which `cross_dedup` and `index_update` read instead of hashing
+  *    the batch again; `index_update`'s spill, the recipe's output,
+  *    drops it.
   *
   * At 100 TB the spill is the safety trade: one extra sequential
   * write+read per stage (columnar, so narrow projections stay cheap)
@@ -46,6 +52,10 @@ object Pipeline {
   /** Per-stage audit row: survivors after the stage and wall-clock
     * seconds (transformation + spill + footer count). */
   final case class StageReport(stage: String, rowsOut: Long, seconds: Double)
+
+  /** The shingle size of the incremental [[curateDocuments]] recipe's
+    * near-dedup, whose hash sets its index stages reuse. */
+  private val NearShingles = 3
 
   /** Run `stages` over `input`, spilling between stages under
     * `scratch`. Returns the final survivors (lazy over the last spill
@@ -134,7 +144,9 @@ object Pipeline {
     * (C4 / RefinedWeb / FineWeb / CCNet shape): cheap exact passes
     * first so the expensive miners see an already-shrunk corpus.
     *
-    * `corpusIndex` turns the recipe INCREMENTAL: a `cross_dedup`
+    * `corpusIndex` turns the recipe INCREMENTAL: `near_dedup` keeps the
+    * shingle-hash sets it mined with (`__hs`, [[Dedup.hashedDedup]]) in
+    * its spill, a `cross_dedup`
     * stage (after the within-batch near-dedup) drops docs near-dup
     * with the already-released corpus via the persisted MinHash index
     * at that path, and a final `index_update` stage folds this run's
@@ -144,7 +156,10 @@ object Pipeline {
     * heals a swap a crash left half done, so an index sitting aside is
     * appended to, never rebuilt over from one batch. Batch cost scales
     * with the batch, never the corpus — the continuous-ingestion shape,
-    * batch twin of the streaming minhash-filtered sink. */
+    * batch twin of the streaming minhash-filtered sink. Both index
+    * stages read the carried hash sets when the index was built with
+    * the recipe's shingle size ([[NearShingles]]); an index built with
+    * another size makes them hash the batch at the index's size. */
   def curateDocuments(idCol: String = "doc_id", textCol: String = "text",
       urlCol: Option[String] = None, nearThreshold: Double = 0.2,
       minQuality: Double = 0.0, bench: Option[DataFrame] = None,
@@ -160,6 +175,9 @@ object Pipeline {
       corpusIndex: Option[String] = None,
       indexThreshold: Double = 0.8): Seq[Stage] = {
     val b = Seq.newBuilder[Stage]
+    // the shingle size of the hash sets near_dedup carries to the index
+    // stages
+    val carried = Some(NearShingles)
     // HTML extraction FIRST of all when the corpus is raw crawl
     // markup (Warc payloads): every later stage — normalize,
     // fingerprints, shingles, quality — must see visible text, not
@@ -187,7 +205,8 @@ object Pipeline {
     }
     b += Stage("exact_dedup", df => Dedup.byFingerprint(df, textCol, idCol))
     b += Stage("near_dedup", df =>
-      Dedup.minhashDedup(df, idCol, textCol, threshold = nearThreshold))
+      if (corpusIndex.isEmpty) Dedup.minhashDedup(df, idCol, textCol, threshold = nearThreshold)
+      else Dedup.hashedDedup(df, idCol, textCol, nearThreshold, NearShingles))
     // cross-corpus dedup against a persisted minhash index: the
     // incremental-ingest gate (batch cost ∝ batch, never the corpus).
     // On the FIRST run the index does not exist yet — the stage
@@ -196,7 +215,7 @@ object Pipeline {
     corpusIndex.foreach { p =>
       b += Stage("cross_dedup", df =>
         if (IndexDir.exists(df.sparkSession, p))
-          Dedup.dedupAgainstIndex(df, idCol, textCol, p, indexThreshold)
+          Dedup.dedupAgainstIndex(df, idCol, textCol, p, indexThreshold, carried)
         else df)
     }
     if (minQuality > 0)
@@ -227,13 +246,18 @@ object Pipeline {
     // The side effect runs while the stage materializes (the input is
     // the previous stage's spill, so a crash mid-append re-runs from
     // a durable point; appends are at-least-once safe by the
-    // minhash appendToIndex contract).
+    // minhash appendToIndex contract). The recipe's output drops the
+    // carried hash sets.
     corpusIndex.foreach { p =>
       b += Stage("index_update", df => {
-        if (IndexDir.exists(df.sparkSession, p))
-          Similarity.appendToIndex(df, textCol, idCol, p)
-        else Dedup.buildMinhashIndex(df, idCol, textCol, p)
-        df
+        val spark = df.sparkSession
+        if (IndexDir.exists(spark, p))
+          Dedup.appendToMinhashIndex(df, idCol, textCol, p,
+            IndexDir.readAs[IndexDir.MinhashMeta](spark, p, "a minhash corpus index"),
+            carried)
+        else Dedup.buildMinhashIndex(df, idCol, textCol, p, numHashes = 128,
+          numBands = 32, shingleSize = NearShingles, carried)
+        df.drop(Dedup.HashCol)
       })
     }
     b.result()

@@ -5,8 +5,9 @@ import scala.util.control.NonFatal
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.storage.StorageLevel
+import graft.store.Warehouse
 
 /** The one owner of materialized intermediates. A scope is opened with
   * `Scope { body }`; every [[checkpoint]] and [[cache]] made while it
@@ -65,11 +66,13 @@ object Scope {
       s"Scope.$what outside a Scope: the cached data would never be released"))
 
   /** Eager, lineage-severing materialization of `df`, released by the
-    * innermost scope. Outside any scope it is a plain unregistered
-    * `localCheckpoint`: Spark tracks those RDDs weakly, so the
-    * ContextCleaner reclaims it once the frame is unreachable. */
+    * innermost scope. The job that materializes it also counts its
+    * rows, so the frame carries its exact row count ([[rows]]). Outside
+    * any scope it is a plain unregistered local checkpoint: Spark
+    * tracks those RDDs weakly, so the ContextCleaner reclaims it once
+    * the frame is unreachable. */
   def checkpoint(df: DataFrame): DataFrame = stack.get.headOption match {
-    case None => df.localCheckpoint()
+    case None => Bridge.checkpoint(df, "checkpoint")(_.localCheckpoint())
     case Some(releases) =>
       val spark = df.sparkSession
       spark.conf.getOption("spark.graft.scratchDir") match {
@@ -81,13 +84,20 @@ object Scope {
           // explicit schema: a zero-row intermediate writes no part
           // files, and downstream still needs the columns
           spark.read.schema(df.schema).parquet(path.toString)
-        case None =>
-          val cp = df.localCheckpoint()
-          val rdd = cp.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-          rdd.foreach(r => releases += (() => r.unpersist(blocking = false): Unit))
-          cp
+        case None => Bridge.checkpoint(df, "checkpoint") { rdd =>
+          releases += (() => rdd.unpersist(blocking = false): Unit)
+          rdd.localCheckpoint()
+        }
       }
   }
+
+  /** The exact row count of `df`, known without a job: the count a
+    * [[checkpoint]] (or a write batch's cache pass) measured, or the
+    * footer rows of a plain parquet read, which a scratch-dir
+    * checkpoint is. Projections keep the count; any other frame is
+    * None. */
+  def rows(df: DataFrame): Option[Long] =
+    Bridge.measuredRows(df).orElse(Warehouse.fileReadRows(df))
 
   /** `persist(MEMORY_AND_DISK)`, released by the innermost scope. */
   def cache(df: DataFrame): DataFrame = {

@@ -1484,6 +1484,27 @@ object Warehouse {
   private[graft] def footerRows(conf: Configuration, dirs: Seq[Path]): Long =
     footerStats(conf, dirs.flatMap(d => partFiles(d.getFileSystem(conf), d)), Nil)._1
 
+  /** Rows of a plain parquet read ([[Bridge.plainReadFiles]]), summed
+    * from its files' footers: no Spark job. None for any other frame. */
+  private[graft] def fileReadRows(df: DataFrame): Option[Long] =
+    Bridge.plainReadFiles(df).map(files => footerStats(
+      df.sparkSession.sparkContext.hadoopConfiguration, files.map(new Path(_)), Nil)._1)
+
+  /** The Spark schema that Spark's parquet writer recorded in the footer
+    * of a part file directly under `dir`: one footer read on the
+    * driver, where `spark.read.parquet(dir)` would infer it in a job.
+    * None when `dir` holds no part file. */
+  private[graft] def footerSchema(conf: Configuration, dir: Path): Option[StructType] =
+    partFiles(dir.getFileSystem(conf), dir).headOption.flatMap { f =>
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf),
+        org.apache.parquet.ParquetReadOptions.builder().build())
+      try Option(rd.getFooter.getFileMetaData.getKeyValueMetaData
+          .get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(org.apache.spark.sql.types.DataType.fromJson(_).asInstanceOf[StructType])
+      finally rd.close()
+    }
+
   /** Row count of `files`, and their combined per-column (lo, hi) —
     * already [[Brin.encode]]d — from parquet FOOTER statistics only:
     * the writer already recorded exact column min/max in each footer,

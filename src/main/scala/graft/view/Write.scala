@@ -10,6 +10,7 @@ import graft.Env
 import graft.expr.{Args, QueryBuilder}
 import graft.ops.Scope
 import graft.schema.{ColType, ColumnDef}
+import graft.store.Warehouse
 import org.apache.spark.sql.graft.Bridge
 
 /** The write path: normalization → coercion → FK resolution → merge
@@ -150,7 +151,12 @@ object Write {
         val cols = fields.zipWithIndex.map { case (f, i) =>
           c(f.name).cast(types(i)).as(s"__f$i")
         }
-        ds.toDF().select(cols :+ monotonically_increasing_id().as("__seq"): _*)
+        // a plain parquet read has a known size too (its footers): it
+        // is staged in partitions of [[RowsPerTask]] rows, like a local
+        // batch
+        val df = ds.toDF()
+        Warehouse.fileReadRows(df).fold(df)(n => df.coalesce(tasksFor(n)))
+          .select(cols :+ monotonically_increasing_id().as("__seq"): _*)
       case null => fromRows(Nil)
       case m: Map[_, _] =>
         val mm = m.asInstanceOf[Map[String, Any]]

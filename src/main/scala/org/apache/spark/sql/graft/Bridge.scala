@@ -4,13 +4,15 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project,
+  Statistics, SubqueryAlias}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
 
 /** Column ⇄ Expression conversion and `Dataset.ofRows` live behind
@@ -18,10 +20,11 @@ import org.apache.spark.sql.sources.BaseRelation
   * `classic.Dataset`), so this one-file package bridge re-exports what
   * graft needs: its native Catalyst expressions
   * ([[graft.functions.VectorKernels]]), frames over a file relation
-  * resolved once ([[graft.store.Warehouse]]'s relation memo), a cached
-  * frame's row count, a frame cached and counted in one tracked pass
-  * ([[graft.view.Write]]'s batch) and driver-side evaluation of
-  * constant columns. No other private API is touched. */
+  * resolved once ([[graft.store.Warehouse]]'s relation memo), frames
+  * kept and counted in one tracked pass ([[graft.view.Write]]'s batch,
+  * [[graft.ops.Scope.checkpoint]]), the row count such a frame or a
+  * plain file read carries, and driver-side evaluation of constant
+  * columns. No other private API is touched. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -41,14 +44,36 @@ object Bridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
       LogicalRelation(rel, isStreaming = false))
 
-  /** Exact row count of a cached frame once its cache is fully built,
-    * read from the cache's own row counter (no job); None before. */
-  def cachedRows(df: DataFrame): Option[Long] = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
-      .map(_.cachedRepresentation)
-      .filter(_.cacheBuilder.isCachedColumnBuffersLoaded)
-      .flatMap(_.computeStats().rowCount).map(_.toLong)
+  /** The files of a plain parquet read: a frame that only projects the
+    * rows of one parquet file relation, so it holds exactly the files'
+    * rows. None for any other frame. */
+  def plainReadFiles(df: DataFrame): Option[Seq[String]] = rowSource(df) match {
+    case l: LogicalRelation => l.relation match {
+      case r: HadoopFsRelation if r.fileFormat.isInstanceOf[ParquetFileFormat] =>
+        Some(r.location.inputFiles.toSeq)
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** Exact row count of a frame over rows that [[checkpoint]] or
+    * [[cachedPass]] kept, projections included, read from the
+    * statistics the pass recorded (no job); None for any other frame.
+    * graft makes no other frame over an RDD with a row count. */
+  def measuredRows(df: DataFrame): Option[Long] = rowSource(df) match {
+    case r: LogicalRDD => r.computeStats().rowCount.map(_.toLong)
+    case _ => None
+  }
+
+  /** The leaf under `df`'s projections and aliases, which hold exactly
+    * the leaf's rows. */
+  private def rowSource(df: DataFrame): LogicalPlan = {
+    def down(p: LogicalPlan): LogicalPlan = p match {
+      case Project(_, child) => down(child)
+      case SubqueryAlias(_, child) => down(child)
+      case leaf => leaf
+    }
+    down(df.queryExecution.analyzed)
   }
 
   /** What [[cachedPass]] learned while it filled the cache: a frame
@@ -58,22 +83,52 @@ object Bridge {
 
   /** `df` computed once and kept, in one pass that also probes it.
     *
-    * The plan runs as ONE tracked SQL execution named `name`: it
-    * reaches every `QueryExecutionListener`, and its jobs carry
-    * `spark.sql.execution.id`. Its last job hands each partition's
-    * rows to `persist` (the caller's cache, which also releases them)
-    * and, while the cache fills, counts and sizes them and picks the
-    * partition's first row whose column `mark` is not null. The
-    * returned frame reads the cached rows through [[rowsFrame]], so a
-    * join plans it by its real size. */
+    * The plan runs as ONE tracked SQL execution named `name` (see
+    * [[keptPass]]), which also picks each partition's first row whose
+    * column `mark` is not null. The returned frame reads the cached
+    * rows through a plan that knows their real size, so a join plans
+    * it by that size. */
   def cachedPass(df: DataFrame, name: String, mark: String)(
       persist: RDD[InternalRow] => RDD[InternalRow]): Pass = {
-    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
-    val schema = df.schema
-    val markAt = schema.fieldIndex(mark)
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val (rdd, stats, marked) = keptPass(ds, name, df.schema.fieldIndex(mark))(persist)
+    // fresh attribute ids; the partition count is kept, so a
+    // one-partition batch stays one partition for the operators above
+    Pass(classic.Dataset.ofRows(ds.sparkSession,
+      LogicalRDD(ds.queryExecution.analyzed.output.map(_.newInstance()), rdd,
+        UnknownPartitioning(rdd.getNumPartitions))(ds.sparkSession, Some(stats))),
+      stats.rowCount.get.toLong, marked)
+  }
+
+  /** `df` computed once and kept by `keep` (a local checkpoint), in one
+    * tracked SQL execution named `name`: a frame over the kept rows
+    * with `df`'s output partitioning, ordering and constraints, as
+    * Spark's own checkpoint frames have, whose statistics carry the
+    * rows' exact count and size ([[measuredRows]]). */
+  def checkpoint(df: DataFrame, name: String)(
+      keep: RDD[InternalRow] => RDD[InternalRow]): DataFrame = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val (rdd, stats, _) = keptPass(ds, name, -1)(keep)
+    val l = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
+    classic.Dataset.ofRows(ds.sparkSession,
+      l.copy()(ds.sparkSession, Some(stats), Some(l.constraints)))
+  }
+
+  /** Run `ds`'s plan as ONE tracked SQL execution named `name`: it
+    * reaches every `QueryExecutionListener`, and its jobs carry
+    * `spark.sql.execution.id`. Its last job hands each partition's
+    * rows to `keep` (which caches or checkpoints them, and owns their
+    * release) and, while they are kept, counts and sizes them and
+    * picks the partition's first row whose field `markAt` is not null
+    * (no field when negative). Returns the kept RDD, statistics with
+    * the rows' exact count and size, and the marked rows. */
+  private def keptPass(ds: classic.Dataset[_], name: String, markAt: Int)(
+      keep: RDD[InternalRow] => RDD[InternalRow]): (RDD[InternalRow], Statistics, Seq[Row]) = {
+    val qe = ds.queryExecution
+    val schema = ds.schema
     val rowBytes = EstimationUtils.getSizePerRow(qe.analyzed.output).toLong
     SQLExecution.withNewExecutionId(qe, Some(name)) {
-      val rdd = persist(qe.toRdd.map(_.copy()))
+      val rdd = keep(qe.toRdd.map(_.copy()))
       val parts = rdd.mapPartitions { it =>
         var n, bytes = 0L
         var first: InternalRow = null
@@ -83,28 +138,15 @@ object Bridge {
             case u: UnsafeRow => u.getSizeInBytes.toLong
             case _ => rowBytes
           })
-          if (first == null && !r.isNullAt(markAt)) first = r
+          if (first == null && markAt >= 0 && !r.isNullAt(markAt)) first = r
         }
         val marked = Option(first).map(r =>
           CatalystTypeConverters.createToScalaConverter(schema)(r).asInstanceOf[Row])
         Iterator((n, bytes, marked))
       }.collect()
-      val rows = parts.map(_._1).sum
-      Pass(rowsFrame(df, rdd, rows, parts.map(_._2).sum), rows, parts.flatMap(_._3).toSeq)
+      (rdd, Statistics(sizeInBytes = BigInt(parts.map(_._2).sum.max(1L)),
+        rowCount = Some(BigInt(parts.map(_._1).sum))), parts.flatMap(_._3).toSeq)
     }
-  }
-
-  /** A frame over internal rows computed from `df`'s plan, with `df`'s
-    * columns (fresh attribute ids) and statistics that carry the rows'
-    * exact count and size. The partition count is kept, so a
-    * one-partition batch stays one partition for the operators above
-    * it. */
-  private def rowsFrame(df: DataFrame, rdd: RDD[InternalRow], rows: Long, bytes: Long): DataFrame = {
-    val ds = df.asInstanceOf[classic.Dataset[_]]
-    val stats = Statistics(sizeInBytes = BigInt(bytes.max(1L)), rowCount = Some(BigInt(rows)))
-    classic.Dataset.ofRows(ds.sparkSession,
-      LogicalRDD(ds.queryExecution.analyzed.output.map(_.newInstance()), rdd,
-        UnknownPartitioning(rdd.getNumPartitions))(ds.sparkSession, Some(stats)))
   }
 
   /** Evaluate columns that reference no input on the driver: analyze

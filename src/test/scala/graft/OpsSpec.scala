@@ -951,6 +951,36 @@ class OpsSpec extends SparkSpec {
     val mh = rows(Dedup.minhashPairs(docs, "doc_id", "text",
       threshold = 0.9, maxBucket = 5)).map(r => (r.head, r(1))).toSet
     assert(mh == (1L until 12L).map(i => (0L, i)).toSet, mh)
+    // and on the simhash path
+    val sh = rows(Dedup.simhashPairs(docs, "doc_id", "text",
+      maxBucket = 5)).map(r => (r.head, r(1))).toSet
+    assert(sh == (1L until 12L).map(i => (0L, i)).toSet, sh)
+  }
+
+  test("bucketPairs: all pairs up to maxBucket, star pairs past it, streamed") {
+    // buckets just under, at and past the cap, repeated ids, and ids of
+    // one bucket spread over many input partitions
+    val rnd = new scala.util.Random(3)
+    val maxBucket = 4
+    val members = (0 until 40).map(b => b -> Seq.fill(1 + rnd.nextInt(8))(
+      rnd.nextInt(30).toLong)).toMap
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("__b",
+        org.apache.spark.sql.types.IntegerType),
+      org.apache.spark.sql.types.StructField("__id",
+        org.apache.spark.sql.types.LongType)))
+    val banded = s.createDataFrame(rnd.shuffle(members.toSeq.flatMap { case (b, ids) =>
+      ids.map(i => org.apache.spark.sql.Row(b, i)) }).asJava, schema).repartition(7)
+    val want = members.values.flatMap { ids =>
+      val sorted = ids.sorted
+      if (ids.size <= maxBucket)
+        for (a <- sorted; b <- sorted if a < b) yield (a, b)
+      else sorted.filter(_ != sorted.head).map(i => (sorted.head, i))
+    }.toSet
+    val got = rows(Dedup.bucketPairs(banded, Seq("__b"), maxBucket))
+      .map(r => (r.head.asInstanceOf[Long], r(1).asInstanceOf[Long]))
+    assert(got.size == got.distinct.size, "pairs repeat")
+    assert(got.toSet == want, (got.toSet -- want, want -- got.toSet))
   }
 
   test("cosinePairs: planted dups found, candidate pairs ≪ n², cap bounds skew") {

@@ -1155,4 +1155,27 @@ class PipelineOpsSpec extends SparkSpec {
         new java.io.File(outDir).getParentFile)
     }
   }
+
+  test("an incremental curate batch keeps its survivors in at most 32 jobs") {
+    import graft.ops.Pipeline
+    val dir = java.nio.file.Files.createTempDirectory("inc-jobs-")
+    val stages = Pipeline.curateDocuments(minQuality = 0.5, nearThreshold = 0.2,
+      corpusIndex = Some(dir.resolve("idx").toString))
+    def run(b: Seq[(Long, String)], i: Int) =
+      Pipeline.run(CurateBatches.frame(s, b), stages, dir.resolve(s"s$i").toString)
+    def dropped(b: Seq[(Long, String)], out: org.apache.spark.sql.DataFrame) =
+      b.map(_._1).toSet -- rows(out.select("doc_id")).map(_.head.asInstanceOf[Long])
+    try {
+      val Seq(b0, b1) = CurateBatches(2, seed = 7)
+      val (out0, _) = run(b0, 0)
+      // the batch against the index the bootstrap batch built
+      val ((out1, rep1), jobs) = jobExecutionsDuring(run(b1, 1))
+      assert(jobs.size <= 32, s"${jobs.size} jobs")
+      assert(out1.columns.toSeq == Seq("doc_id", "text"))
+      assert(rep1.last.rowsOut == out1.count())
+      // the survivors the recipe kept when it hashed each doc five times
+      assert(dropped(b0, out0) == CurateGolden.dropped0, dropped(b0, out0).toSeq.sorted)
+      assert(dropped(b1, out1) == CurateGolden.dropped1, dropped(b1, out1).toSeq.sorted)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

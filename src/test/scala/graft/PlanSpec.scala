@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.{col, when}
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan audits: the properties that keep the engine fast at
   * 100 TB — filter pushdown to the parquet scan, column pruning,
@@ -409,5 +410,32 @@ class PlanSpec extends SparkSpec {
     assert(wins.nonEmpty, p)
     wins.foreach(l => assert(l.contains("__p#"),
       s"window not partition-stamp-bounded: $l"))
+  }
+
+  test("an incremental curate batch shingle-hashes its documents in one plan") {
+    import graft.ops.Pipeline
+    val dir = java.nio.file.Files.createTempDirectory("inc-plans-")
+    val stages = Pipeline.curateDocuments(minQuality = 0.5, nearThreshold = 0.2,
+      corpusIndex = Some(dir.resolve("idx").toString))
+    val Seq(b0, b1) = CurateBatches(2, seed = 7)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    try {
+      Pipeline.run(CurateBatches.frame(spark, b0), stages, dir.resolve("s0").toString)
+      spark.listenerManager.register(listener)
+      try {
+        Pipeline.run(CurateBatches.frame(spark, b1), stages, dir.resolve("s1").toString)
+        org.apache.spark.TestBus.drain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      // Dedup.shingleHashes: one xxhash64 per gram slice of the tokens
+      val hashing = plans.asScala.filter(_.contains("xxhash64(concat_ws( , slice("))
+      assert(plans.size > 5 && hashing.size == 1,
+        s"${hashing.size} of ${plans.size} plans hash shingles:\n${hashing.mkString("\n\n")}")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

@@ -399,4 +399,47 @@ class WebSpec extends SparkSpec {
       assert(code == 400 && body.contains("bogus"), s"$code $body")
     } finally srv.stop()
   }
+
+  test("an HTTP read of one key runs the jobs of the same View.read") {
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: acct
+        |  columns: {acct: bigint, bal: bigint}
+        |  key: [acct]
+        |  buckets: 4
+        |""".stripMargin),
+      java.nio.file.Files.createTempDirectory("graft-web-jobs-").toString)
+    env.createTables()
+    env.view("acct", Seq("acct", "bal")).write((1 to 40).map(i => Seq(i.toLong, 10L * i)))
+    val filter = "(= bal {b})"
+    val view = env.view("acct", Seq("acct", "bal"))
+      .read(Seq(graft.view.FilterExpr(filter)), kwargs = Map("b" -> "170"))
+    // a read over several partitions: Spark's limit takes its first
+    // partition alone, then the rest in a second job
+    assert(view.rdd.getNumPartitions > 1)
+    val sc = spark.sparkContext
+    def jobs[T](body: => T): (T, Int) = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.TestBus.drain(sc)
+      sc.addSparkListener(l)
+      try { val out = body; org.apache.spark.TestBus.drain(sc); (out, n.get) }
+      finally sc.removeSparkListener(l)
+    }
+    val (direct, viewJobs) = jobs(env.view("acct", Seq("acct", "bal"))
+      .read(Seq(graft.view.FilterExpr(filter)), kwargs = Map("b" -> "170"))
+      .collect().map(_.toSeq).toSeq)
+    assert(direct == Seq(Seq(17L, 170L)))
+    val srv = new graft.web.Server(env)
+    val port = srv.start()
+    try {
+      val ((code, body), httpJobs) = jobs(get(port, "/acct?fields=acct,bal&filter=" +
+        java.net.URLEncoder.encode(filter, "UTF-8") + "&b=170"))
+      assert(code == 200, body)
+      assert(parse(body)("rows").toString == "[[17, 170]]", body)
+      assert(httpJobs == viewJobs, s"HTTP read: $httpJobs jobs, View.read: $viewJobs")
+    } finally srv.stop()
+  }
 }

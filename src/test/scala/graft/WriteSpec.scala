@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
 /** Ported golden write tests (reference tests/write_test.py,
   * delete_test.py). */
 class WriteSpec extends SparkSpec {
@@ -271,6 +275,64 @@ class WriteSpec extends SparkSpec {
       val (name, bal) = if (i > 50) (s"cust-${i % 7 + 1}", 2L * i) else (s"cust-${i % 20 + 1}", i.toLong)
       Seq(i.toLong, name, bal, i.toLong)
     }, env.view("account", Seq("acct", "cust.c_name", "bal", "id")).read())
+  }
+
+  test("a file-read batch is staged by its footer rows, like a local batch") {
+    val yaml = """- table: doc
+      |  columns: {doc_id: bigint, text: varchar}
+      |  key: [doc_id]
+      |""".stripMargin
+    def fresh() = {
+      val env = Env(spark, graft.schema.Registry.fromYaml(yaml),
+        java.nio.file.Files.createTempDirectory("graft-fileread-").toString)
+      env.createTables()
+      env
+    }
+    val batch = (1 to 190).map(i => Seq(i.toLong * 7 % 191, s"text $i"))
+    val src = java.nio.file.Files.createTempDirectory("graft-src-").resolve("b").toString
+    spark.createDataFrame(batch.map(r => Row.fromSeq(r)).asJava, StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType))))
+      .repartition(4).write.parquet(src)
+    val file = spark.read.parquet(src)
+    assert(file.rdd.getNumPartitions > 1)
+    val (local, fromFile) = (fresh(), fresh())
+    val (_, seqJobs) = jobsDuring(local.view("doc", Seq("doc_id", "text")).write(batch))
+    // one partition, like the local batch: no dedupe shuffle, so no
+    // job more than the local batch (one more before footer sizing)
+    val (_, fileJobs) = jobsDuring(fromFile.view("doc", Seq("doc_id", "text")).write(file))
+    assert(fileJobs == seqJobs, s"file read: $fileJobs jobs, local batch: $seqJobs")
+    def stored(env: Env) = rows(env.view("doc", Seq("id", "doc_id", "text")).read())
+      .sortBy(_(1).asInstanceOf[Long])
+    assert(stored(fromFile) == stored(local))
+  }
+
+  test("a warehouse write and read start no process, and keep Hadoop's modes") {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[graft.store.LocalFs], fs.getClass)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val env = try {
+      val env = freshEnv()
+      assert(rows(env.view("member", Seq("name", "team.name")).read()).size == 3)
+      env
+    } finally rec.stop()
+    val jfr = java.nio.file.Files.createTempFile("graft-procs-", ".jfr")
+    try {
+      rec.dump(jfr)
+      val starts = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+      assert(starts.isEmpty, starts.mkString("\n"))
+    } finally { rec.close(); java.nio.file.Files.delete(jfr) }
+    // files rw-r--r--, directories rwxr-xr-x: Hadoop's defaults under
+    // its 022 umask, as its chmod processes set them
+    val walked = java.nio.file.Files.walk(java.nio.file.Path.of(env.warehouse.root))
+    try walked.iterator.asScala.filter(p => p.toString.contains("snap-")).foreach { p =>
+      val mode = java.nio.file.attribute.PosixFilePermissions.toString(
+        java.nio.file.Files.getPosixFilePermissions(p))
+      assert(mode == (if (java.nio.file.Files.isDirectory(p)) "rwxr-xr-x" else "rw-r--r--"),
+        s"$p: $mode")
+    } finally walked.close()
   }
 
   test("write from maps and single map") { // view.py:398-416
