@@ -408,37 +408,16 @@ object Bench {
     catch { case _: Exception => }
     }
 
-    // ---- output. The driver's capture records only the LAST ~2000
-    // chars of stdout (BENCH_r{N}.json "tail"), and sbt appends a
-    // ~70-char success banner after main returns — so the artifact of
-    // record is whatever fits in the final ~1900 bytes (rounds 8-9
-    // lost the ann_*..profile_* families to exactly this). Three
-    // layers, most complete first:
-    //  1. BENCH_FULL_LATEST.json (cwd = repo root under the driver):
-    //     every query, full precision — the complete record, picked up
-    //     by the round commit.
+    // ---- output. A capture of stdout may keep only its LAST ~2000
+    // chars, and sbt appends a ~70-char success banner after main
+    // returns, so the record that survives any capture is whatever fits
+    // in the final ~1900 bytes. Three layers, most complete first:
+    //  1. BENCH_FULL_LATEST.json and BENCH_FULL_<cpus>.json next to it
+    //     (cwd = repo root): every query, full precision.
     //  2. per-family full-precision lines: survive in full stdout
     //     captures and local runs.
-    //  3. ONE final compact line in the required
-    //     {"metric","value","unit","queries","sf"} format, kept under
-    //     the tail budget: every ops/pipeline/probe query per-query,
-    //     plus relational q* per-query when the median is >= 0.5s (the
-    //     write/txn roundtrips tracked round-over-round; at sf0.1 the
-    //     relational families split cleanly — writes 1.9-2.8s, reads
-    //     0.04-0.4s). The remaining fast relational reads roll into
-    //     "q_fast_sum" (per-query detail lives in layers 1-2). If
-    //     future growth overflows the budget anyway, the threshold
-    //     doubles until the line fits.
+    //  3. ONE final line ([[compactLine]]) kept under the budget.
     val total = results.values.filter(_ >= 0).sum
-    def fmt(v: Double): String =
-      if (v < 0) "-1"
-      else if (v >= 100) f"$v%.0f"
-      else if (v >= 10) f"$v%.1f"
-      else if (v >= 1) f"$v%.2f"
-      else f"$v%.3f"
-    def mapJson(m: Iterable[(String, String)]): String =
-      m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-
     val fullQs = mapJson(results.map { case (k, v) => k -> v.toString })
     // drift sentinel: queries whose median is >2x their best rep ran
     // slower than the same code can run in this very session — flag
@@ -512,37 +491,63 @@ object Bench {
         mapJson(drift)},"single_run":${
         singleRun.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir"${
         abBlock.map("," + _).getOrElse("")}}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL_LATEST.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      fullLine.getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
+    val outFile = java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_FULL_LATEST.json"))
+    // the same record under the core count, so a run at another width
+    // does not replace it
+    for (f <- Seq(outFile, outFile.resolveSibling(s"BENCH_FULL_$cpus.json")))
+      try java.nio.file.Files.write(f, fullLine.getBytes("UTF-8"))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $f: ${e.getMessage}") }
 
-    def family(name: String): String =
-      if (name.matches("^q\\d.*")) "relational" else name.split("_")(0)
     for ((fam, entries) <- results.toSeq.groupBy { case (k, _) => family(k) }
          .toSeq.sortBy(_._1))
       println(s"""{"metric":"family:$fam","unit":"sec","queries":${
         mapJson(entries.map { case (k, v) => k -> v.toString })}}""")
 
-    val sfShort = sfDir.split("/").last
-    def compactLine(relThreshold: Double): String = {
-      val (rel, ops) = results.partition { case (k, _) => family(k) == "relational" }
-      // failed queries (-1) always stay per-query — a failure hidden
-      // inside a rollup would read as a speedup
-      val kept = ops.map { case (k, v) => k -> fmt(v) } ++
-        rel.filter { case (_, v) => v >= relThreshold || v < 0 }
-          .map { case (k, v) => k -> fmt(v) } ++
-        Seq("q_fast_sum" -> fmt(rel.values.filter(v => v >= 0 && v < relThreshold).sum))
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${
-        mapJson(kept)},"sf":"$sfShort"}"""
-    }
-    var thresh = 0.5
-    var line = compactLine(thresh)
-    while (line.length > 1850 && thresh < 1e6) {
-      thresh *= 2; line = compactLine(thresh)
-    }
-    println(line)
+    println(compactLine(results.toSeq, sfDir.split("/").last))
     spark.stop()
+  }
+
+  def fmt(v: Double): String =
+    if (v < 0) "-1"
+    else if (v >= 100) f"$v%.0f"
+    else if (v >= 10) f"$v%.1f"
+    else if (v >= 1) f"$v%.2f"
+    else f"$v%.3f"
+
+  def mapJson(m: Iterable[(String, String)]): String =
+    m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+
+  def family(name: String): String =
+    if (name.matches("^q\\d.*")) "relational" else name.split("_")(0)
+
+  /** The final stdout line, `{"metric","value","unit","queries","sf"}`,
+    * at most `budget` chars. Failed queries (-1) are always itemized (a
+    * failure hidden inside a rollup would read as a speedup), and so
+    * are the `slowest` slowest queries. Every other query is itemized
+    * when its median is at least a threshold, and below it rolls into
+    * its family's `<family>_fast_sum` (`q_fast_sum` for the relational
+    * q* family). The threshold starts at 0.5 s and doubles until the
+    * line fits; if none fits, fewer slowest queries are itemized. */
+  def compactLine(results: Seq[(String, Double)], sf: String, budget: Int = 1850,
+      slowest: Int = 10): String = {
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val bySpeed = results.filter(_._2 >= 0).sortBy(-_._2).map(_._1)
+    def line(threshold: Double, n: Int): String = {
+      val top = bySpeed.take(n).toSet
+      val (kept, rolled) = results.partition { case (k, v) => v < 0 || v >= threshold || top(k) }
+      val sums = rolled.groupBy { case (k, _) => family(k) }.toSeq.sortBy(_._1).map {
+        case (fam, es) => (if (fam == "relational") "q" else fam) + "_fast_sum" -> fmt(es.map(_._2).sum)
+      }
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":${
+        mapJson(kept.map { case (k, v) => k -> fmt(v) } ++ sums)},"sf":"$sf"}"""
+    }
+    val longest = results.map(_._2).foldLeft(0.5)(_ max _)
+    val tries = for {
+      n <- (slowest to 0 by -1).iterator
+      t <- Iterator.iterate(0.5)(_ * 2).takeWhile(_ / 2 <= longest)
+    } yield line(t, n)
+    tries.find(_.length <= budget).getOrElse(line(Double.MaxValue, 0))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import scala.collection.mutable
 import graft.schema.Registry
 import graft.store.Warehouse
@@ -180,9 +181,16 @@ final class Env(
 
 object Env {
   /** Standard local session config; shuffle partitions sized for
-    * local[32], AQE on (coalesces them at runtime). */
-  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession =
-    SparkSession.builder()
+    * local[32], AQE on (coalesces them at runtime). The session binds
+    * filter and projection values outside generated code
+    * ([[org.apache.spark.sql.graft.BindValues]]), so a query shape
+    * compiles once whatever keys and thresholds it is read with.
+    *
+    * Extensions apply only when a session is created, and
+    * `getOrCreate` hands back a session started earlier as it is: one
+    * without the rule fails here rather than compiling every value. */
+  def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
+    val spark = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -201,7 +209,13 @@ object Env {
       .config("spark.sql.limit.initialNumPartitions", shufflePartitions.toString)
       // permissions through java.nio, not a process per file
       .config("spark.hadoop.fs.file.impl", classOf[graft.store.LocalFs].getName)
+      .withExtensions(Bridge.extensions)
       .getOrCreate()
+    if (!Bridge.bindsValues(spark)) throw new IllegalStateException(
+      "a SparkSession started before Env.session, without graft's session extensions, " +
+      "is still active; stop it (or build it through Env.session) first")
+    spark
+  }
 
   /** One harness query (Bench, Verify, Plans, Profile): `body` runs
     * in its own [[graft.ops.Scope]], so whatever it materialized is

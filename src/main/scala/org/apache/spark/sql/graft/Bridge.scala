@@ -1,19 +1,25 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression, Literal,
+  NamedExpression, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator,
+  ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project,
   Statistics, SubqueryAlias}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, LogicalRDD, ProjectExec,
+  SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types._
 
 /** Column ⇄ Expression conversion and `Dataset.ofRows` live behind
   * `private[sql]` in Spark 4 (`classic.ExpressionUtils`,
@@ -24,7 +30,19 @@ import org.apache.spark.sql.sources.BaseRelation
   * kept and counted in one tracked pass ([[graft.view.Write]]'s batch,
   * [[graft.ops.Scope.checkpoint]]), the row count such a frame or a
   * plain file read carries, and driver-side evaluation of constant
-  * columns. No other private API is touched. */
+  * columns.
+  *
+  * It also holds the session's one physical-plan rule, [[BindValues]],
+  * which [[graft.Env.session]] installs as a columnar rule
+  * (`SparkSessionExtensions.injectColumnar`, checked through the
+  * `private[sql]` `sessionState.columnarRules`). The rule swaps the
+  * numeric and datetime literals of filters and projections for
+  * [[BoundValue]], a codegen expression that reads its value from the
+  * generated class's `references`. Whole-stage codegen writes a
+  * primitive literal into the Java source, which is also the key of
+  * Spark's compiled-class cache, so without the rule every new key or
+  * threshold a view read binds compiles new classes. No other private
+  * API is touched. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -156,4 +174,70 @@ object Bridge {
   def evalConstants(spark: SparkSession, cols: Seq[Column]): Seq[Any] =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], OneRowRelation())
       .select(cols: _*).queryExecution.analyzed.expressions.map(_.eval())
+
+  /** The session extension [[graft.Env.session]] builds its session
+    * with: [[BindValues]] as a rule that runs on every physical plan
+    * (AQE stages too) before whole-stage codegen collapses it. */
+  val extensions: SparkSessionExtensions => Unit =
+    _.injectColumnar(_ => BindValuesRule)
+
+  /** Whether `spark` runs [[BindValues]]: false for a session built
+    * without [[extensions]]. */
+  def bindsValues(spark: SparkSession): Boolean =
+    spark.asInstanceOf[classic.SparkSession].sessionState.columnarRules.contains(BindValuesRule)
+
+  private object BindValuesRule extends ColumnarRule {
+    override def preColumnarTransitions: Rule[SparkPlan] = BindValues
+  }
+}
+
+/** Swaps every non-null numeric, date and timestamp literal in the
+  * conditions of filters and the lists of projections for a
+  * [[BoundValue]], so a query's generated code, and the compiled class
+  * Spark caches by that code, is the same whatever values it binds.
+  * Scans keep their literals: pushed filters, row-group skipping and
+  * file pruning see the real value. Booleans, strings and decimals are
+  * left alone: strings and decimals already reach generated code
+  * through `references`, and boolean literals steer plan rules. */
+object BindValues extends Rule[SparkPlan] {
+  def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case f: FilterExec =>
+      val c = bind(f.condition)
+      if (c eq f.condition) f else f.copy(condition = c)
+    case p: ProjectExec =>
+      val ps = p.projectList.map(bind(_).asInstanceOf[NamedExpression])
+      if (ps.corresponds(p.projectList)(_ eq _)) p else p.copy(projectList = ps)
+  }
+
+  private def bind(e: Expression): Expression = e.transformUp {
+    case l: Literal if l.value != null && bound(l.dataType) => BoundValue(l)
+  }
+
+  private def bound(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
+        DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+}
+
+/** A literal whose value generated code loads once, from the class's
+  * `references` into a field, instead of writing it into the source.
+  * Interpreted, it is the literal: foldable, the same value, the same
+  * `toString` and `sql` (plans print as before), and it equals another
+  * bound value only when their literals are equal (exchange reuse
+  * still tells two values apart). */
+case class BoundValue(literal: Literal) extends LeafExpression {
+  override def dataType: DataType = literal.dataType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = true
+  override def eval(input: InternalRow): Any = literal.value
+  override def toString: String = literal.toString
+  override def sql: String = literal.sql
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("bound", literal.value, CodeGenerator.boxedType(dataType))
+    val field = ctx.addMutableState(javaType, "bound", v => s"$v = $ref.${javaType}Value();")
+    ExprCode.forNonNullValue(JavaCode.global(field, dataType))
+  }
 }

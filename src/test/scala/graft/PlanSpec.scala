@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.{col, when}
+import org.apache.spark.sql.graft.{BoundValue, Bridge}
 import scala.jdk.CollectionConverters._
 
 /** Physical-plan audits: the properties that keep the engine fast at
@@ -437,5 +440,105 @@ class PlanSpec extends SparkSpec {
       assert(plans.size > 5 && hashing.size == 1,
         s"${hashing.size} of ${plans.size} plans hash shingles:\n${hashing.mkString("\n\n")}")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  // ------------------------------------------------- bound values
+
+  /** The filters of `df`'s executed plan, AQE stages included. */
+  private def filters(df: org.apache.spark.sql.DataFrame): Seq[FilterExec] =
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+      case f: FilterExec => f
+    }
+
+  test("a bound filter or projection value returns what its literal returned") {
+    import java.sql.{Date, Timestamp}
+    import java.time.LocalDateTime
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{lit, rand}
+    import org.apache.spark.sql.types.{DataType, StructField, StructType}
+    val dir = java.nio.file.Files.createTempDirectory("graft-bound-")
+    val cases: Seq[(String, Seq[Any])] = Seq(
+      "double" -> Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0, 0.0, 1.5),
+      "float" -> Seq(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity, -0.0f, 0.0f, 2.5f),
+      "bigint" -> Seq(Long.MinValue, Long.MaxValue, 0L),
+      "int" -> Seq(Int.MinValue, 7, 0),
+      "smallint" -> Seq(Short.MinValue, 3.toShort),
+      "tinyint" -> Seq(Byte.MinValue, 5.toByte),
+      "date" -> Seq(Date.valueOf("1969-12-31"), Date.valueOf("2024-02-29")),
+      "timestamp" -> Seq(Timestamp.valueOf("1969-12-31 23:59:59.999999"),
+        Timestamp.valueOf("2024-02-29 12:00:00")),
+      "timestamp_ntz" -> Seq(LocalDateTime.parse("1900-01-01T00:00:00.000001"),
+        LocalDateTime.parse("2024-02-29T12:00:00")))
+    /** Per value: the rows a filter on it keeps and a projection of
+      * it; first, a projection whose random seed is bound too. */
+    def run(): Seq[String] = {
+      val seeded = spark.read.parquet(dir.resolve("int").toString).select(rand(7), col("v") + 1)
+      s"rand: ${rows(seeded).mkString(",")}" +: cases.flatMap { case (t, vs) =>
+        val df = spark.read.parquet(dir.resolve(t).toString)
+        vs.map { v =>
+          val kept = df.filter(col("v") === lit(v))
+          val projected = df.select(col("v"), lit(v).as("b"), (col("v") === lit(v)).as("eq"))
+          val out = Seq(kept, projected).map(rows(_).map(_.mkString("|")).sorted.mkString(","))
+          assert(out.head.nonEmpty, s"$t $v kept no row")
+          s"$t $v: ${out.mkString(" / ")}"
+        }
+      }
+    }
+    try {
+      cases.foreach { case (t, vs) =>
+        spark.createDataFrame(spark.sparkContext.parallelize(vs.map(Row(_))),
+          StructType(Seq(StructField("v", DataType.fromDDL(t)))))
+          .write.parquet(dir.resolve(t).toString)
+      }
+      val compiled = run()
+      // the rule did bind values: a filter reads a BoundValue
+      val probe = spark.read.parquet(dir.resolve("bigint").toString).filter(col("v") === lit(7L))
+      probe.collect()
+      assert(filters(probe).exists(_.condition.exists(_.isInstanceOf[BoundValue])),
+        probe.queryExecution.executedPlan.toString)
+      val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+      val saved = keys.map(k => k -> spark.conf.getOption(k))
+      val interpreted = try {
+        spark.conf.set(keys(0), "false")
+        spark.conf.set(keys(1), "NO_CODEGEN")
+        run()
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      assert(compiled == interpreted,
+        compiled.zip(interpreted).filter(p => p._1 != p._2).mkString("\n"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a point read on a bloom table still pushes the real key to the scan") {
+    val root = java.nio.file.Files.createTempDirectory("graft-bloom-").toString
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: bfact
+        |  columns:
+        |    k: bigint
+        |    val: float
+        |  key: [k]
+        |  bloom: true
+        |""".stripMargin), root)
+    env.createTables()
+    val v = env.view("bfact", Seq("k", "val"))
+    v.write((1 to 50).map(i => Seq(i.toLong, i * 2.0)))
+    val df = v.read(Seq("(= k {})"), args = Seq(42L))
+    check(Seq(Seq(42L, 84.0)), df)
+    val p = plan(df)
+    assert(p.contains("PushedFilters: [IsNotNull(k), EqualTo(k,42)]"), p)
+    assert(filters(df).exists(_.condition.exists(_.isInstanceOf[BoundValue])), p)
+  }
+
+  test("an Env.session session binds values; a session without the rule fails loudly") {
+    assert(Bridge.bindsValues(spark))
+    val plain = org.apache.spark.sql.TestSessions.plain(spark)
+    assert(!Bridge.bindsValues(plain))
+    org.apache.spark.sql.SparkSession.setActiveSession(plain)
+    try {
+      val e = intercept[IllegalStateException](Env.session("local[4]", 4))
+      assert(e.getMessage.contains("without graft's session extensions"), e.getMessage)
+    } finally org.apache.spark.sql.SparkSession.setActiveSession(spark)
   }
 }

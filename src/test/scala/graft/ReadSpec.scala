@@ -180,7 +180,8 @@ class ReadSpec extends SparkSpec {
         ColumnDef("c_nationkey", M2O("nation", "n_nationkey", IntegerType))),
         key = Seq("c_custkey"), external = Some(customer)),
       TableDef.normalized("account", Seq(ColumnDef("acct", BigIntT),
-        ColumnDef("cust", M2O("customer", "c_custkey", LongType))), key = Seq("acct")))
+        ColumnDef("cust", M2O("customer", "c_custkey", LongType)),
+        ColumnDef("balance", FloatT), ColumnDef("tier", IntegerT)), key = Seq("acct")))
     val env = Env(spark, reg, dir.resolve("wh").toString)
     env.createTables()
     env.view("account", Seq("acct", "cust.c_name")).write(Seq(Seq(1L, "Ann"), Seq(2L, "Bob")))
@@ -232,5 +233,60 @@ class ReadSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("a.c_nationkey") === org.apache.spark.sql.functions.col("b.c_nationkey"))
       .select("a.c_name", "b.c_name")
     check(Seq(Seq("Ann", "Ann"), Seq("Bob", "Bob")), pairs)
+  }
+
+  // ------------------------------------------------- compiled code
+
+  test("a query shape compiles once, whatever values it binds") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (env, _) = externalEnv()
+    // the client's model of the account table: acct -> (customer, balance, tier)
+    val model = scala.collection.mutable.Map[Long, (String, Double, Int)](
+      1L -> ("Ann", 0.0, 0), 2L -> ("Bob", 0.0, 0))
+    val nation = Map("Ann" -> "France", "Bob" -> "Peru")
+    val upsertFields = Seq("acct", "cust.c_name", "balance", "tier")
+    def upsert(keys: Range): Unit = {
+      val batch = keys.map(k => k.toLong -> (if (k % 2 == 0) "Ann" else "Bob", k * 1.5, k % 3))
+      env.view("account", upsertFields).write(batch.map { case (k, (c, b, t)) => Seq(k, c, b, t) })
+      model ++= batch
+    }
+    upsert(1 to 40)
+    /** `body`'s result and the classes Janino compiled while it ran. */
+    def compiled[T](body: => T): (T, Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    /** One warm-up call of a shape, then each value must compile nothing. */
+    def compilesOnce[A, T](shape: String, warm: A, values: Seq[A])(op: A => T)(want: A => T): Unit = {
+      op(warm)
+      values.foreach { v =>
+        val (got, classes) = compiled(op(v))
+        assert(classes == 0, s"$shape with $v compiled $classes classes")
+        assert(got == want(v), s"$shape with $v: got $got, want ${want(v)}")
+      }
+    }
+    val readFields = Seq("acct", "cust.c_name", "cust.c_nationkey.n_name", "balance", "tier")
+    compilesOnce("2-hop fk point read", 3L, Seq(7L, 12L, 25L)) { k =>
+      rows(env.view("account", readFields).read(Seq("(= acct {})"), args = Seq(k)))
+    } { k =>
+      val (c, b, t) = model(k)
+      Seq(Seq(k, c, nation(c), b, t))
+    }
+    compilesOnce("grouped scan", 5.0, Seq(10.0, 31.5, 52.5)) { th =>
+      rows(env.view("account", Seq("tier", "(sum balance)", "(count)"))
+        .read(Seq("(>= balance {})"), args = Seq(th), groupby = Seq("tier"))).toSet
+    } { th =>
+      model.values.filter(_._2 >= th).groupBy(_._3)
+        .map { case (t, as) => Seq[Any](t, as.map(_._2).sum, as.size.toLong) }.toSet
+    }
+    compilesOnce("plain key lookup", 4L, Seq(9L, 17L, 33L)) { k =>
+      rows(env.view("account", Seq("acct", "balance", "tier")).read(Seq("(= acct {})"), args = Seq(k)))
+    } { k => Seq(Seq(k, model(k)._2, model(k)._3)) }
+    // every upsert inserts new keys, so its `maxId + row_number()`
+    // id base moves
+    compilesOnce("upsert of new keys", 41 to 50, Seq(51 to 60, 61 to 75))(upsert) { _ => () }
+    check(model.toSeq.map { case (k, (c, b, t)) => Seq(k, c, b, t) },
+      env.view("account", upsertFields).read())
   }
 }
