@@ -186,9 +186,13 @@ object Env {
     * ([[org.apache.spark.sql.graft.BindValues]]), so a query shape
     * compiles once whatever keys and thresholds it is read with.
     *
+    * Spark's compiled-class cache holds [[CodeCacheEntries]] classes.
+    *
     * Extensions apply only when a session is created, and
     * `getOrCreate` hands back a session started earlier as it is: one
-    * without the rule fails here rather than compiling every value. */
+    * without the rule fails here rather than compiling every value.
+    * Likewise Spark sizes its compiled-class cache once per JVM, so a
+    * smaller cache built before this session fails here too. */
   def session(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(master)
@@ -209,13 +213,40 @@ object Env {
       .config("spark.sql.limit.initialNumPartitions", shufflePartitions.toString)
       // permissions through java.nio, not a process per file
       .config("spark.hadoop.fs.file.impl", classOf[graft.store.LocalFs].getName)
+      .config(Bridge.CodeCacheConf, CodeCacheEntries.toString)
       .withExtensions(Bridge.extensions)
       .getOrCreate()
     if (!Bridge.bindsValues(spark)) throw new IllegalStateException(
       "a SparkSession started before Env.session, without graft's session extensions, " +
       "is still active; stop it (or build it through Env.session) first")
+    if (Bridge.codeCacheEntries < CodeCacheEntries) throw new IllegalStateException(
+      s"Spark's compiled-class cache holds ${Bridge.codeCacheEntries} classes, fewer than " +
+      s"graft's working set needs ($CodeCacheEntries): code was generated before " +
+      s"Env.session, by a session without ${Bridge.CodeCacheConf}=$CodeCacheEntries")
     spark
   }
+
+  /** Capacity of Spark's compiled-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, 100 by default). In local
+    * mode every whole-stage class is an entry twice, once per class
+    * loader that asks for it (the driver thread's and the executor task
+    * thread's). Distinct entries compiled, measured with an unbounded
+    * cache on local[4]:
+    *   - perfbench curate_stream (set-up, warm-up, 2 timed batches): 124
+    *   - perfbench crud_mix (3 cycles): 90; bulk_layouts (2 cycles): 109
+    *   - graft.Bench at sf0.1, one run of each query: 2,132 in all
+    *   - the `pipeline` test group (79 tests): 1,263 in all
+    * At 100 the curate loop missed on every batch: a 250-doc batch
+    * compiled 38–63 classes and its survivor upsert 14–23, where a
+    * cache that holds them compiles 2–3 and 0. The three perfbench
+    * loops together hold 323; Guava splits the bound over 4 segments
+    * that evict on their own, so the capacity leaves that working set
+    * room to land unevenly. An entry costs ~37 KB of metaspace
+    * (metaspace plus class space: 180 MB at 124 entries, 222 MB at
+    * 1,263) and its source on the heap (~5 KB: 658k characters over
+    * curate_stream's 127). After a curate_stream run the heap holds
+    * 131–133 MB and metaspace 160 MB, as at 100 entries. */
+  val CodeCacheEntries: Int = 1000
 
   /** One harness query (Bench, Verify, Plans, Profile): `body` runs
     * in its own [[graft.ops.Scope]], so whatever it materialized is

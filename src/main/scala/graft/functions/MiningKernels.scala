@@ -1,11 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression,
+  XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Native Catalyst expressions for the signature / assignment inner
   * loops of the mining and ANN operators.
@@ -71,6 +73,16 @@ object MiningKernels {
   def minhashMins(hashes: Column, coefs: Seq[(Long, Long)]): Column =
     Bridge.column(MinhashMinsExpr(Bridge.expression(hashes),
       coefs.map(_._1).toIndexedSeq, coefs.map(_._2).toIndexedSeq))
+
+  /** LSH band keys of a MinHash signature: band `b` packs mins
+    * `b × rowsPerBand + r` (r < rowsPerBand) as XXH64 (seed 42) of their
+    * decimal strings joined by commas, `numBands` keys per row. That is
+    * `xxhash64(concat_ws(",", element_at(mins, i).cast("string")…))`
+    * byte for byte (a null or missing element is skipped, as
+    * `concat_ws` skips it), so the keys of existing corpus indexes stay
+    * valid. Null when `mins` is null. */
+  def bandHashes(mins: Column, numBands: Int, rowsPerBand: Int): Column =
+    Bridge.column(BandHashesExpr(Bridge.expression(mins), numBands, rowsPerBand))
 
   /** SimHash over a token-hash array: per-bit majority vote
     * (bit b set iff `2 × ones_b > n`), the aggregate-pipeline rule. */
@@ -208,6 +220,51 @@ object MiningKernels {
       i += 1
     }
     if (!any) null else new GenericArrayData(mins)
+  }
+
+  /** Spark's `xxhash64` seed. */
+  private val HashSeed = 42L
+
+  def bandHashesOf(mins: ArrayData, numBands: Int, rowsPerBand: Int): ArrayData = {
+    val n = mins.numElements()
+    // a long is at most 20 characters, plus its comma
+    val buf = new Array[Byte](rowsPerBand * 21)
+    val out = new Array[Long](numBands)
+    var b = 0
+    while (b < numBands) {
+      var len = 0
+      var r = 0
+      while (r < rowsPerBand) {
+        val i = b * rowsPerBand + r
+        if (i < n && !mins.isNullAt(i)) {
+          if (len > 0) { buf(len) = ','.toByte; len += 1 }
+          len = putDecimal(buf, len, mins.getLong(i))
+        }
+        r += 1
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, HashSeed)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  /** Writes `v` in decimal (`Long.toString`'s ASCII bytes) at `at`;
+    * returns the position after it. Digits come from the non-positive
+    * magnitude, which also holds `Long.MinValue`. */
+  private def putDecimal(buf: Array[Byte], at: Int, v: Long): Int = {
+    var p = at
+    if (v < 0) { buf(p) = '-'.toByte; p += 1 }
+    var q = if (v < 0) v else -v
+    var digits = 1
+    var t = q / 10
+    while (t != 0) { digits += 1; t /= 10 }
+    var i = p + digits - 1
+    while (i >= p) {
+      buf(i) = ('0' - (q % 10)).toByte
+      q /= 10
+      i -= 1
+    }
+    p + digits
   }
 
   def simhashBitsOf(hashes: ArrayData, numBits: Int): Long = {
@@ -369,6 +426,27 @@ case class MinhashMinsExpr(child: Expression, coefA: IndexedSeq[Long],
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinhashMinsExpr =
+    copy(child = newChild)
+}
+
+/** See [[MiningKernels.bandHashes]]. */
+case class BandHashesExpr(child: Expression, numBands: Int, rowsPerBand: Int)
+    extends UnaryExpression {
+  require(numBands >= 1 && rowsPerBand >= 0,
+    s"bad banding: $numBands bands of $rowsPerBand rows")
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = child.nullable
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "band_hashes"
+
+  override def nullSafeEval(v: Any): Any =
+    MiningKernels.bandHashesOf(v.asInstanceOf[ArrayData], numBands, rowsPerBand)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.MiningKernels.bandHashesOf($c, $numBands, $rowsPerBand)")
+
+  override protected def withNewChildInternal(newChild: Expression): BandHashesExpr =
     copy(child = newChild)
 }
 

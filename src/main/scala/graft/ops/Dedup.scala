@@ -638,26 +638,20 @@ object Dedup {
     * computes all 128 mins in one in-row pass inside whole-stage
     * codegen: the signature stage is now map-only, and the first
     * exchange of every minhash path carries one narrow row per
-    * (doc, band). Band packing (xxhash64 over the comma-joined mins)
-    * is unchanged and stays in codegen, so `__bsig` values — and
-    * every downstream bucket/pair/verify result — are bit-identical. */
+    * (doc, band). Band packing is one more kernel,
+    * [[graft.functions.MiningKernels.bandHashes]]: its keys equal
+    * `xxhash64(concat_ws(",", …))` over the mins bit for bit, so
+    * `__bsig` values in existing `bands/` files, and every downstream
+    * bucket/pair/verify result, are unchanged, while the stage class
+    * stays small (as 32 such expressions it ran to ~5,700 lines, too
+    * large for the JIT, and took 0.1–0.26 s to compile). */
   private def bandedFromHashSets(docsH: DataFrame,
       numHashes: Int, numBands: Int): DataFrame = {
-    val rowsPerBand = numHashes / numBands
-    val coefs = minhashCoefs(numHashes)
-    val sig = docsH.select(col("__id"),
-        graft.functions.MiningKernels.minhashMins(col("__hs"), coefs)
-          .as("__mins"))
-      .filter(col("__mins").isNotNull)
-    val bandStructs = (0 until numBands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          (0 until rowsPerBand).map(r =>
-            element_at(col("__mins"), b * rowsPerBand + r + 1)
-              .cast("string")): _*)).as("sig"))
-    }
-    sig.select(col("__id"), explode(array(bandStructs: _*)).as("__b"))
-      .select(col("__id"), col("__b.band").as("__band"), col("__b.sig").as("__bsig"))
+    import graft.functions.MiningKernels.{bandHashes, minhashMins}
+    // a doc without shingles has null mins and no bands
+    docsH.select(col("__id"), posexplode(bandHashes(
+        minhashMins(col("__hs"), minhashCoefs(numHashes)), numBands, numHashes / numBands)))
+      .select(col("__id"), col("pos").as("__band"), col("col").as("__bsig"))
   }
 
   /** Dedup a new batch AGAINST a [[buildMinhashIndex]] corpus index:

@@ -14,10 +14,11 @@ import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, LogicalRDD, ProjectExec,
-  SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.{ColumnarRule, FilterExec, GlobalLimitExec,
+  LocalLimitExec, LogicalRDD, ProjectExec, SQLExecution, SparkPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.sources.BaseRelation
 import org.apache.spark.sql.types._
 
@@ -41,8 +42,11 @@ import org.apache.spark.sql.types._
   * generated class's `references`. Whole-stage codegen writes a
   * primitive literal into the Java source, which is also the key of
   * Spark's compiled-class cache, so without the rule every new key or
-  * threshold a view read binds compiles new classes. No other private
-  * API is touched. */
+  * threshold a view read binds compiles new classes. For the same
+  * reason the rule names limits' row counters per plan
+  * ([[NumberedLocalLimitExec]]). The bridge also reads the capacity of
+  * that cache ([[codeCacheEntries]]), which Spark keeps private. No
+  * other private API is touched. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -175,6 +179,29 @@ object Bridge {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], OneRowRelation())
       .select(cols: _*).queryExecution.analyzed.expressions.map(_.eval())
 
+  /** The static conf that sizes Spark's compiled-class cache. */
+  val CodeCacheConf: String = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+
+  /** How many compiled classes Spark's cache in this JVM holds. Spark
+    * builds that cache once per JVM, the first time any code is
+    * generated, with the [[CodeCacheConf]] of the session active then;
+    * a session started later with another value does not resize it.
+    * Read through private fields: Spark's `CodeGenerator.cache` (a
+    * `NonFateSharingCache`), its Guava cache, and that cache's
+    * `LocalCache.maxWeight`, which is its entry bound. */
+  def codeCacheEntries: Long = {
+    def field(o: AnyRef, name: String): AnyRef = {
+      val f = Iterator.iterate[Class[_]](o.getClass)(_.getSuperclass).takeWhile(_ != null)
+        .flatMap(_.getDeclaredFields.find(_.getName == name)).next()
+      f.setAccessible(true)
+      f.get(o)
+    }
+    val spark = CodeGenerator.getClass.getDeclaredMethod("cache")
+    spark.setAccessible(true)
+    val guava = field(spark.invoke(CodeGenerator), "cache")
+    field(field(guava, "localCache"), "maxWeight").asInstanceOf[Long]
+  }
+
   /** The session extension [[graft.Env.session]] builds its session
     * with: [[BindValues]] as a rule that runs on every physical plan
     * (AQE stages too) before whole-stage codegen collapses it. */
@@ -195,18 +222,35 @@ object Bridge {
   * conditions of filters and the lists of projections for a
   * [[BoundValue]], so a query's generated code, and the compiled class
   * Spark caches by that code, is the same whatever values it binds.
+  * For the same reason it numbers the plan's limits
+  * ([[NumberedLocalLimitExec]], [[NumberedGlobalLimitExec]]): Spark
+  * names each limit's row counter in generated code from a JVM-wide
+  * sequence, so every run of a limited read was new source.
   * Scans keep their literals: pushed filters, row-group skipping and
   * file pruning see the real value. Booleans, strings and decimals are
   * left alone: strings and decimals already reach generated code
   * through `references`, and boolean literals steer plan rules. */
 object BindValues extends Rule[SparkPlan] {
-  def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
-    case f: FilterExec =>
-      val c = bind(f.condition)
-      if (c eq f.condition) f else f.copy(condition = c)
-    case p: ProjectExec =>
-      val ps = p.projectList.map(bind(_).asInstanceOf[NamedExpression])
-      if (ps.corresponds(p.projectList)(_ eq _)) p else p.copy(projectList = ps)
+  def apply(plan: SparkPlan): SparkPlan = {
+    // one name per limit of the plan; a codegen stage lies within one
+    // plan this rule sees (a query, or an adaptive query's stage)
+    var limits = 0
+    def counter(): String = {
+      val name = s"_graft_limit_counter_$limits"
+      limits += 1
+      name
+    }
+    plan.transformUp {
+      case f: FilterExec =>
+        val c = bind(f.condition)
+        if (c eq f.condition) f else f.copy(condition = c)
+      case p: ProjectExec =>
+        val ps = p.projectList.map(bind(_).asInstanceOf[NamedExpression])
+        if (ps.corresponds(p.projectList)(_ eq _)) p else p.copy(projectList = ps)
+      case l: LocalLimitExec => new NumberedLocalLimitExec(l.limit, l.child)(counter())
+      case g: GlobalLimitExec =>
+        new NumberedGlobalLimitExec(g.limit, g.child, g.offset)(counter())
+    }
   }
 
   private def bind(e: Expression): Expression = e.transformUp {
@@ -240,4 +284,26 @@ case class BoundValue(literal: Literal) extends LeafExpression {
     val field = ctx.addMutableState(javaType, "bound", v => s"$v = $ref.${javaType}Value();")
     ExprCode.forNonNullValue(JavaCode.global(field, dataType))
   }
+}
+
+/** A [[LocalLimitExec]] whose row counter in generated code is named
+  * `counter`, which [[BindValues]] numbers per plan. It prints, equals
+  * and executes as the limit it replaces. */
+class NumberedLocalLimitExec(n: Int, in: SparkPlan)(counter: String)
+    extends LocalLimitExec(n, in) {
+  override protected lazy val countTerm: String = counter
+  override def nodeName: String = "LocalLimit"
+  override protected def otherCopyArgs: Seq[AnyRef] = Seq(counter)
+  override def withNewChildInternal(newChild: SparkPlan): LocalLimitExec =
+    new NumberedLocalLimitExec(limit, newChild)(counter)
+}
+
+/** [[NumberedLocalLimitExec]]'s twin for a [[GlobalLimitExec]]. */
+class NumberedGlobalLimitExec(n: Int, in: SparkPlan, skip: Int)(counter: String)
+    extends GlobalLimitExec(n, in, skip) {
+  override protected lazy val countTerm: String = counter
+  override def nodeName: String = "GlobalLimit"
+  override protected def otherCopyArgs: Seq[AnyRef] = Seq(counter)
+  override def withNewChildInternal(newChild: SparkPlan): GlobalLimitExec =
+    new NumberedGlobalLimitExec(limit, newChild, offset)(counter)
 }

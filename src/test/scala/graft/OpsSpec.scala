@@ -242,6 +242,74 @@ class OpsSpec extends SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
+  /** The band packing the minhash kernels replaced: per band, XXH64 of
+    * its mins' decimal strings joined by commas. */
+  private def packedBands(mins: org.apache.spark.sql.Column, numBands: Int,
+      rowsPerBand: Int): org.apache.spark.sql.Column =
+    array((0 until numBands).map(b => xxhash64(concat_ws(",", (0 until rowsPerBand).map(r =>
+      element_at(mins, b * rowsPerBand + r + 1).cast("string")): _*))): _*)
+
+  test("band hashes equal the comma-joined xxhash64 packing they replace") {
+    import graft.functions.MiningKernels
+    val rnd = new scala.util.Random(11)
+    val edge = Seq(Long.MinValue, Long.MaxValue, 0L, -1L, 1L, -10L, 10L,
+      Long.MinValue + 1, -999999999999L)
+    // (numHashes, numBands): 10 / 4 leaves two mins out, as the packing did
+    for ((numHashes, numBands) <- Seq((128, 32), (64, 16), (12, 3), (10, 4), (8, 8), (4, 1))) {
+      val seeded = Seq.fill(20)(Seq.fill(numHashes)(rnd.nextLong() >> rnd.nextInt(64))) :+
+        Seq.tabulate(numHashes)(i => edge(i % edge.size))
+      // a null mins array, and one with a null element and a short tail
+      val gaps = Seq(null,
+        (Seq[java.lang.Long](5L, null) ++ Seq.fill(numHashes / 2)(Long.box(-7L))).asJava)
+      val df = s.createDataFrame((seeded.map(_.map(Long.box).asJava) ++ gaps)
+          .map(org.apache.spark.sql.Row(_)).asJava,
+        org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField("m",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)))))
+      val rowsPerBand = numHashes / numBands
+      val got = rows(df.select(MiningKernels.bandHashes(col("m"), numBands, rowsPerBand)))
+      val want = rows(df.select(when(col("m").isNotNull, packedBands(col("m"), numBands,
+        rowsPerBand))))
+      assert(got == want, s"$numHashes hashes in $numBands bands")
+      assert(got.map(_.head == null) == Seq.fill(seeded.size)(false) ++ Seq(true, false))
+    }
+  }
+
+  test("an index whose bands were packed as strings probes with the same survivors") {
+    val rnd = new scala.util.Random(7)
+    val corpus = docsDf(Seq.tabulate(200)(i =>
+      (i.toLong, Seq.fill(40)(s"w${rnd.nextInt(500)}").mkString(" "))))
+    val batch = corpus.filter(col("doc_id") < 60).select(
+        (col("doc_id") + 5000L).as("doc_id"),
+        when(col("doc_id") % 3 === 0, concat(col("text"), lit(" zzz")))
+          .when(col("doc_id") % 3 === 1,
+            concat_ws(" ", reverse(split(col("text"), "\\s+"))))
+          .otherwise(col("text")).as("text"))
+    val packed = java.nio.file.Files.createTempDirectory("mhpacked").toString
+    val built = java.nio.file.Files.createTempDirectory("mhbuilt").toString
+    def kept(dir: String) = Scope(rows(Dedup.dedupAgainstIndex(batch, "doc_id",
+      "text", dir, threshold = 0.5)).map(_.head.asInstanceOf[Long]).toSet)
+    try {
+      // the index as the string packing wrote it
+      corpus.select(col("doc_id").as("__id"),
+          Dedup.shingleHashes(col("text"), 3).as("__hs"))
+        .write.parquet(s"$packed/docs")
+      corpus.select(col("doc_id").as("__id"), posexplode(packedBands(
+          Dedup.minhashSignature(col("text"), 128, 3), 32, 4)))
+        .select(col("__id"), col("pos").as("__band"), col("col").as("__bsig"))
+        .write.parquet(s"$packed/bands")
+      java.nio.file.Files.writeString(java.nio.file.Path.of(packed, "_graft_index_meta.json"),
+        """{"kind":"minhash","numHashes":128,"numBands":32,"shingleSize":3}""")
+      Dedup.buildMinhashIndex(corpus, "doc_id", "text", built)
+      val bands = Seq(packed, built).map(d => s.read.parquet(s"$d/bands"))
+      assert(bands.head.count() == 200L * 32)
+      assert(bands.head.exceptAll(bands(1)).isEmpty && bands(1).exceptAll(bands.head).isEmpty)
+      val onPacked = kept(packed)
+      assert(onPacked.nonEmpty && onPacked.size < 60, onPacked)
+      assert(kept(built) == onPacked)
+    } finally Seq(packed, built).foreach(d =>
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
   test("simhash banding is exact for hamming <= 3 on real docs") {
     // 4 bands x 16 bits pigeonhole: hamming <= 3 forces one identical
     // band, so simhashPairs(maxHamming=3) must equal the brute-force

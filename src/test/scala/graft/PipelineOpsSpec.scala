@@ -1178,4 +1178,43 @@ class PipelineOpsSpec extends SparkSpec {
       assert(dropped(b1, out1) == CurateGolden.dropped1, dropped(b1, out1).toSeq.sorted)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
+
+  test("a steady-state curate batch and its survivor upsert compile at most 4 classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.ops.Pipeline
+    val dir = java.nio.file.Files.createTempDirectory("inc-compile-")
+    val env = Env(s, graft.schema.Registry.fromYaml(
+      """- table: curated
+        |  columns: {doc_id: bigint, text: varchar}
+        |  key: [doc_id]
+        |""".stripMargin), dir.resolve("wh").toString)
+    env.createTables()
+    val stages = Pipeline.curateDocuments(minQuality = 0.5, nearThreshold = 0.2,
+      corpusIndex = Some(dir.resolve("idx").toString))
+    /** `body`'s result and the classes Janino compiled while it ran. */
+    def compiled[T](body: => T): (T, Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    var kept = 0L
+    /** One batch through the pipeline, then its survivors upserted:
+      * the classes each compiled. */
+    def batch(b: Seq[(Long, String)], i: Int): (Long, Long) = Scope {
+      val ((out, rep), curate) = compiled(Pipeline.run(CurateBatches.frame(s, b), stages,
+        dir.resolve(s"s$i").toString))
+      kept += rep.last.rowsOut
+      (curate, compiled(env.view("curated", Seq("doc_id", "text")).write(out))._2)
+    }
+    try {
+      val Seq(b0, b1, b2) = CurateBatches(3, seed = 7)
+      // the bootstrap batch builds the index; the next is the first
+      // deduped against it
+      batch(b0, 0)
+      batch(b1, 1)
+      val (curate, upsert) = batch(b2, 2)
+      assert(curate + upsert <= 4, s"the third batch compiled $curate classes, its upsert $upsert")
+      assert(env.view("curated", Seq("doc_id")).read().count() == kept)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
 }

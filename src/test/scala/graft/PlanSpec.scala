@@ -533,6 +533,8 @@ class PlanSpec extends SparkSpec {
 
   test("an Env.session session binds values; a session without the rule fails loudly") {
     assert(Bridge.bindsValues(spark))
+    // and its JVM's compiled-class cache is the size Env.session sets
+    assert(Bridge.codeCacheEntries == Env.CodeCacheEntries)
     val plain = org.apache.spark.sql.TestSessions.plain(spark)
     assert(!Bridge.bindsValues(plain))
     org.apache.spark.sql.SparkSession.setActiveSession(plain)

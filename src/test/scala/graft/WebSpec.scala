@@ -442,4 +442,50 @@ class WebSpec extends SparkSpec {
       assert(httpJobs == viewJobs, s"HTTP read: $httpJobs jobs, View.read: $viewJobs")
     } finally srv.stop()
   }
+
+  test("a repeated limited read compiles no class") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val env = Env(spark, graft.schema.Registry.fromYaml(
+      """- table: cust
+        |  columns: {name: varchar}
+        |  key: [name]
+        |- table: acct
+        |  columns: {acct: bigint, bal: bigint, cust: m2o cust.id}
+        |  key: [acct]
+        |""".stripMargin),
+      java.nio.file.Files.createTempDirectory("graft-web-limit-").toString)
+    env.createTables()
+    val fields = Seq("acct", "bal", "cust.name")
+    env.view("cust", Seq("name")).write(Seq(Seq("Ann"), Seq("Bob")))
+    env.view("acct", fields).write((1 to 40).map(i =>
+      Seq(i.toLong, 10L * i, if (i % 2 == 0) "Ann" else "Bob")))
+    def want(k: Long) = Seq(k, 10 * k, if (k % 2 == 0) "Ann" else "Bob")
+    /** `body`'s result and the classes Janino compiled while it ran. */
+    def compiled[T](body: => T): (T, Long) = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val out = body
+      (out, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+    }
+    val filter = "(= acct {k})"
+    val srv = new graft.web.Server(env)
+    val port = srv.start()
+    // the web read's default limit, and View.read's own; the FK join
+    // puts the limit inside a generated stage
+    def http(k: Long) = get(port, s"/acct?fields=${fields.mkString(",")}&filter=" +
+      java.net.URLEncoder.encode(filter, "UTF-8") + s"&k=$k")
+    def direct(k: Long) = rows(env.view("acct", fields)
+      .read(Seq(graft.view.FilterExpr(filter)), kwargs = Map("k" -> k), limit = Some(5L)))
+    try {
+      http(3); direct(3)
+      Seq(7L, 12L, 7L, 25L).foreach { k =>
+        val ((code, body), httpClasses) = compiled(http(k))
+        assert(code == 200, body)
+        assert(parse(body)("rows").toString == want(k).mkString("[[", ", ", "]]"), body)
+        assert(httpClasses == 0, s"HTTP read of $k compiled $httpClasses classes")
+        val (got, classes) = compiled(direct(k))
+        assert(got == Seq(want(k)))
+        assert(classes == 0, s"View.read of $k with a limit compiled $classes classes")
+      }
+    } finally srv.stop()
+  }
 }
